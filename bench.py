@@ -15,99 +15,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-
-
-
-# queries merged into tagged unions — a merged query's baseline is the
-# weighted sum of the parts it replaced (the surviving name may itself
-# be one of the parts), so the regression gate stays comparable ACROSS
-# the merge.  Each entry records the ROUND the merge landed: once the
-# baseline record (BENCH_SELF.json entry, or a driver artifact with
-# non-null parsed) is from that round or later, its recorded time
-# already includes every arm and the expansion would double-count (an
-# ever-laxer gate) — so the entry lapses and the name is compared
-# directly.
-_MERGED_BASELINES: dict[str, tuple[int, list]] = {
-    "q_anti_joins": (3, ["q_anti_join_parts", "q_anti_join_customers"]),
-    "q_order_limit": (3, ["q_topk_orders", "q_orderby_expr_limit"]),
-    "q_scalar_datetime_conditional": (3, ["q_scalar_datetime", "q_scalar_conditional"]),
-    "q_text_codes": (3, ["q_text_simhash", "q_doc_fingerprint"]),
-    "q_scalar_string": (3, ["q_scalar_string", "q_scalar_array_hof"]),
-    # r3 folded q_groupby_ordinal in; r14 folds the ROLLUP arm — the
-    # same exact-percentile aggregate at THREE grouping levels
-    # (status×priority / status / total) through Spark's Expand plan.
-    # Weight 1.0: the official in-bench sub-timing puts the rollup arm
-    # at ~0.8x the prior whole (0.202 s vs 0.243 s at sf0.1; the r14
-    # review corrected an initial 4.0 set from a cold-cache manual
-    # measurement — an over-weighted bridge would let a real Expand
-    # plan regression pass the gate silently).
-    "q_quantiles_by_status": (
-        14,
-        [
-            "q_quantiles_by_status",
-            "q_groupby_ordinal",
-            ("q_quantiles_by_status", 1.0),
-        ],
-    ),
-    # r5: PQ/ADC branch folded in — a third kernel branch over the same
-    # corpus scan + topk shape (the int8 fold happened in r4 and is
-    # already inside the r4 artifact); each prior branch was ~half the
-    # 2-arm whole, so the addition is ~0.5x the previous whole (encode
-    # is a bounded 16-centroid integer argmin per row, LUT build is
-    # per-query).
-    "q_similarity_topk": (5, ["q_similarity_topk", ("q_similarity_topk", 0.5)]),
-    # r5: bucketed arm folded in.  The arm re-runs the same logical plan
-    # over a bucketed round-trip, PLUS pays the bucketed write each run —
-    # weight 2x the direct arm (write ≈ one extra pass over orders).
-    "q_self_join_agg": (5, ["q_self_join_agg", ("q_self_join_agg", 2.0)]),
-    # r5: the LSH-candidates stage folded into the two-stage dedup query
-    # (it already ran inside it as stage 1; the union adds its output).
-    # The connected-components arm seeds from the checkpointed pairs —
-    # a few tiny star rounds on top of the one-materialization plan.
-    "q_dedup_ngram_jaccard": (
-        5,
-        [
-            "q_dedup_ngram_jaccard",
-            "q_dedup_minhash_lsh",
-            ("q_dedup_ngram_jaccard", 1.0),
-        ],
-    ),
-    # r5: domain-mixing + chunk arms folded in — roughly one more pass
-    # over documents each (q_train_prep is itself new in r5, so only
-    # q_corpus_split needs a bridge entry).
-    "q_corpus_split": (5, ["q_corpus_split", ("q_corpus_split", 1.0)]),
-    # r6: IVF-PQ arm folded in — a second index build (assignment, same
-    # cost as the ivf arm's) + map-only PQ encode + full-probe ADC scan.
-    # r6 folded the ivfpq arm (weight 1.0 of the prior whole); r8 folds
-    # the rerank arm — ADC nomination over the cached index (~the ivfpq
-    # arm's cost) + a candidate-bounded float rescore (~free).
-    "q_similarity_ivf_topk": (8, ["q_similarity_ivf_topk", ("q_similarity_ivf_topk", 0.7)]),
-    # r6: heavy-hitters arm folded into the distinct query — freqItems
-    # pass + count + filtered exact confirm ≈ 3 extra scans of orders
-    # next to distinct's one.
-    "q_distinct_status": (6, ["q_distinct_status", ("q_distinct_status", 3.0)]),
-    # r7: incremental-parity arm folded into the curation query — one
-    # more minhash chain over the full documents table (three id-range
-    # increments, banded joins against the growing in-plan index) ≈ the
-    # candidates stage ≈ 1x the prior whole query.
-    "q_corpus_curation": (7, ["q_corpus_curation", ("q_corpus_curation", 1.0)]),
-    # r9's two-arm fold lapsed with the r9 artifact.  r10: the flat
-    # k=16 full-corpus semantic arm RETIRED (2.45s arm + its share of
-    # the 10.5s _build in the r9 decomposition — subsumed by semantic2's
-    # two-level gate + sem_inc's serve gate, round-9 slot hygiene) and
-    # the takedown-policy arm folded in (one more inc2 cell join over
-    # sem_inc's shared bootstrap — cheap).  Net ≈ 0.85x the r9 whole;
-    # the gate floor SHRINKS with the union instead of coasting on the
-    # fatter r9 number.
-    "q_embed_near_dup_lsh": (10, [("q_embed_near_dup_lsh", 0.85)]),
-    # r9: PII hash-gate folded into the profile IN PLACE (not a new
-    # arm): one more map-only regex chain (7 counts + 7 replaces + md5)
-    # over the planted text ≈ one more profile-scale pass.
-    "q_text_profile": (9, ["q_text_profile", ("q_text_profile", 1.0)]),
-    "q_text_lang_rollup": (9, ["q_text_lang_rollup", ("q_text_lang_rollup", 0.2)]),
-}
-
-
 _HERE = os.path.dirname(os.path.abspath(__file__))
 
 # The bench's OWN per-round history.  The driver's BENCH_r{N}.json has
@@ -143,8 +50,8 @@ def _baseline_artifact(
     current_round: int | None = None,
 ) -> tuple[int, dict]:
     """(round, payload) of the newest usable BASELINE — ONE discovery
-    point so the gate's lapse round and its baseline timings provably
-    come from the same record.  Preference order:
+    point so the reported baseline round and its timings provably come
+    from the same record.  Preference order:
 
     1. ``BENCH_SELF.json`` entries from rounds strictly BEFORE the
        current one (an entry from THIS round — an earlier local run —
@@ -562,7 +469,6 @@ def _regressions(
     timings: dict[str, float],
     baseline: dict[str, float],
     host_speed_ratio: float = 1.0,
-    baseline_round: int = 0,
 ) -> dict[str, dict[str, float]]:
     """Queries >1.5x their previous-round time (with a 1 s absolute
     floor so sub-second scheduling jitter doesn't flag).  Baselines are
@@ -577,30 +483,16 @@ def _regressions(
     unusually fast round a 2x probe speedup would otherwise flag
     queries that are absolutely FASTER than before.
 
-    ``baseline_round`` is the round the baseline was recorded in —
-    drives the merged-baseline lapse logic (and is a parameter, not
-    re-discovered here, so the unit gate test can feed synthetic
-    histories)."""
-    artifact_round = baseline_round
+    A query that ran in the baseline and fails now (the -1.0 error
+    sentinel) is flagged with ``failed: True``: a crash must not drop
+    out of the comparison and read as a faster round."""
     out: dict[str, dict[str, float]] = {}
     for name, t in timings.items():
-        if t < 0:
-            continue
-        merge = _MERGED_BASELINES.get(name)
-        if merge is not None and artifact_round < merge[0]:
-            # the newest artifact predates the merge: expand into parts.
-            # drop -1.0 error sentinels: a failed prior-round part must not
-            # understate the base and flag a healthy merged query
-            parts = []
-            for n in merge[1]:
-                n, w = n if isinstance(n, tuple) else (n, 1.0)
-                p = baseline.get(n)
-                if p is not None and p >= 0:
-                    parts.append(p * w)
-            base = sum(parts) if parts else baseline.get(name)
-        else:
-            base = baseline.get(name)
+        base = baseline.get(name)
         if base is None or base <= 0:
+            continue
+        if t < 0:
+            out[name] = {"now": t, "baseline": base, "failed": True}
             continue
         raw_base = base
         # one-sided (see docstring): a throttled host (ratio > 1)
@@ -609,6 +501,17 @@ def _regressions(
         if t > 1.5 * base and t - base > 1.0 and t > raw_base:
             out[name] = {"now": t, "baseline": round(base, 3), "ratio": round(t / base, 2)}
     return out
+
+
+def _common_total(timings: dict[str, float], baseline: dict[str, float]) -> dict:
+    """Totals over the queries BOTH runs completed — the raw total drops
+    a crashed query, so only this pair compares across runs."""
+    both = [n for n, t in timings.items() if t >= 0 and baseline.get(n, -1.0) >= 0]
+    return {
+        "queries": len(both),
+        "now": round(sum(timings[n] for n in both), 3),
+        "baseline": round(sum(baseline[n] for n in both), 3),
+    }
 
 
 def main() -> None:
@@ -742,21 +645,25 @@ def main() -> None:
     prev_cal = _baseline_calibration(base)
     # >1 = this host is slower than last round's; scales the gate's baselines
     host_speed_ratio = round(calibration / prev_cal, 3) if prev_cal else 1.0
-    regressions = _regressions(
-        timings, dict(base.get("queries") or {}), host_speed_ratio, base_round
-    )
+    base_queries = dict(base.get("queries") or {})
+    regressions = _regressions(timings, base_queries, host_speed_ratio)
     regressions.update(
-        _regressions(
-            scale10, dict(base.get("scale10") or {}), host_speed_ratio, base_round
-        )
+        _regressions(scale10, dict(base.get("scale10") or {}), host_speed_ratio)
     )
     for name, r in regressions.items():
-        print(f"# bench REGRESSION {name}: {r['now']}s vs {r['baseline']}s ({r['ratio']}x)", file=sys.stderr)
+        if r.get("failed"):
+            print(f"# bench FAILED {name}: ran in the baseline at {r['baseline']}s", file=sys.stderr)
+        else:
+            print(f"# bench REGRESSION {name}: {r['now']}s vs {r['baseline']}s ({r['ratio']}x)", file=sys.stderr)
     total = round(sum(ok), 3)
     result = {
         "metric": "total_wall_clock_all_queries",
         "value": total,
         "unit": "sec",
+        # a crash is a failure: named here, and the raw total above
+        # (which drops it) sits next to the total over common queries
+        "failed": sorted(n for n, t in {**timings, **scale10}.items() if t < 0),
+        "common_total": _common_total(timings, base_queries),
         "queries": timings,
         "variants": variants,
         "scale10": scale10,

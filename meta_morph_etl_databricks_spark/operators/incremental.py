@@ -97,7 +97,7 @@ def _est(sig_a: str, sig_b: str, num_hashes: int) -> Column:
     Column operation is a py4j round-trip, and at 16 hashes the unrolled
     ``getItem/==/cast`` chain cost ~265 ms of pure DRIVER plan-assembly
     time per join site — over half the persisted-serve latency floor for
-    a small increment (r13 profiler, tools/profile_serve.py).  The
+    a small increment (r13 per-phase serve profile).  The
     parsed tree is identical (same GetArrayItem equality sum, same NULL
     propagation), so executor-side codegen is unchanged."""
     terms = " + ".join(

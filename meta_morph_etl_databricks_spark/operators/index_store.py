@@ -1393,9 +1393,8 @@ def serve_incremental_dedup(
 
     ``trace``: when a dict is passed, per-phase wall seconds are
     recorded into it (keys ``open_live / band_plan / band_touch /
-    tombstones / pruned_plan / policy_plan / append``) — the r13
-    serve-floor profiler's hook (tools/profile_serve.py); zero cost
-    when None."""
+    tombstones / pruned_plan / policy_plan / append``) — the hook
+    ``perfbench`` traces serve phases through; zero cost when None."""
     t = time.time if trace is not None else None
     spark = new_docs.sparkSession
     t0 = t and t()

@@ -656,44 +656,6 @@ def ivf_pq_index(
     return pq_encode(codes, codebooks, id_col=id_col, carry_cols=["centroid_id"])
 
 
-def ivf_pq_serve_state(
-    index: DataFrame,
-    queries: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    codebooks: list[list[list[int]]],
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """The ENTIRE per-query serve state of the IVF family as one frame —
-    every centroid ranked per query joined with the PQ ADC state:
-    ``(query_id_col, _qvec float vector, _n float norm, centroid_id,
-    _rnk rank by (round(sim,6) DESC, cid DESC), _qn int8-code norm,
-    _lut m×ksub ADC tables)``, nlist rows per query.
-
-    A serve layer answering a query batch from a persisted index builds
-    this ONCE, collects it (bounded: nlist rows × a few KB per query —
-    per-query state, corpus-size-free), and hands slices to the serve
-    calls' overrides: ``_rnk <= nprobe`` + (_qvec, _n→_qn) is
-    :func:`similarity.ivf_topk_indexed`'s ``_probes``; (centroid_id,
-    _qn, _lut) is :func:`ivf_pq_topk`'s ``_probe_state``; the
-    ``_rnk == 1`` rows are :func:`ivf_pq_topk_rerank`'s
-    ``_rescore_queries``.  Values are Spark-computed by the same
-    expressions the default subtrees use, so the slices are bit-exact
-    by construction; without the overrides each arm re-runs this
-    scan+window subtree inside every action (r15, guide §1.2/§5)."""
-    from .similarity import _codebook_df, _rank_centroids
-
-    ranked = _rank_centroids(
-        queries.select(query_id_col, F.col(vec_col).alias("_qvec")),
-        _codebook_df(index, centroids),
-        "_qvec",
-        keep=len(centroids),
-        key_cols=[query_id_col],
-    )
-    luts = _pq_query_luts(queries, codebooks, vec_col, query_id_col)
-    return ranked.join(luts, query_id_col)
-
-
 def ivf_pq_topk(
     index: DataFrame,
     queries: DataFrame,
@@ -705,8 +667,6 @@ def ivf_pq_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     exclude_self: bool = False,
-    _probe_state: DataFrame | None = None,
-    _keep_rank: bool = False,
 ) -> DataFrame:
     """Serve path over an IVF-PQ index: per query, rank the (broadcast)
     float codebook and keep ``nprobe`` lists; equi-join the inverted
@@ -718,36 +678,21 @@ def ivf_pq_topk(
     the bytes per touched row.  Recall lost to code collisions is
     recovered the standard way: raise k here and exact-re-rank the
     candidates (see pq_topk_rerank for the pattern).
-
-    ``_probe_state`` hands in the per-query ADC state — ``(query_id_col,
-    centroid_id, _qn, _lut)``, MUST equal the default subtree's output
-    for the SAME ``nprobe`` (the matching slice of
-    :func:`ivf_pq_serve_state`) — letting a multi-arm caller rank/LUT
-    once and serve from a broadcast local relation (r15, guide §1.2/§5).
-
-    ``_keep_rank`` retains the per-query ``rnk`` column (the window
-    rank this function already computes to cut at ``k``), so one
-    materialized k·factor nomination can be SLICED to any smaller k —
-    ``result(k')`` ≡ ``result(k).where(rnk <= k')`` because the window
-    order (cosine_sim DESC, id ASC) is total — instead of re-running
-    the ADC pass per k (r15, guide §5)."""
+    """
     from pyspark.sql import Window
 
     from .similarity import _codebook_df, _rank_centroids
 
-    if _probe_state is not None:
-        probe_state = F.broadcast(_probe_state)
-    else:
-        codebook = _codebook_df(index, centroids)
-        probes = _rank_centroids(
-            queries.select(query_id_col, F.col(vec_col).alias("_qvec")),
-            codebook,
-            "_qvec",
-            keep=nprobe,
-            key_cols=[query_id_col],
-        ).select(query_id_col, "centroid_id")
-        luts = _pq_query_luts(queries, codebooks, vec_col, query_id_col)
-        probe_state = F.broadcast(probes.join(luts, query_id_col))
+    codebook = _codebook_df(index, centroids)
+    probes = _rank_centroids(
+        queries.select(query_id_col, F.col(vec_col).alias("_qvec")),
+        codebook,
+        "_qvec",
+        keep=nprobe,
+        key_cols=[query_id_col],
+    ).select(query_id_col, "centroid_id")
+    luts = _pq_query_luts(queries, codebooks, vec_col, query_id_col)
+    probe_state = F.broadcast(probes.join(luts, query_id_col))
     adc = F.aggregate(
         F.zip_with(
             "pq_code", "_lut", lambda c, tbl: F.element_at(tbl, c.cast("int") + 1)
@@ -765,8 +710,7 @@ def ivf_pq_topk(
     if exclude_self:
         scored = scored.filter(F.col(id_col) != F.col(query_id_col))
     w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.asc(id_col))
-    topk = scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
-    return topk if _keep_rank else topk.drop("rnk")
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k).drop("rnk")
 
 
 def auto_rerank_factor(k: int, target_candidates: int = 500) -> int:
@@ -806,9 +750,6 @@ def ivf_pq_topk_rerank(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     exclude_self: bool = False,
-    _probe_state: DataFrame | None = None,
-    _rescore_queries: DataFrame | None = None,
-    _candidates: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-PQ serve with the retrieve→re-rank stage — the full FAISS
     deployment shape: the ADC pass over the probed inverted lists
@@ -832,49 +773,28 @@ def ivf_pq_topk_rerank(
     (default) sizes the candidate set by :func:`auto_rerank_factor` —
     ~500 per query, enough to out-span the identical-code blocks that
     near-duplicate groups form (factor 5 left recall at 0.52 on the
-    200k bench corpus; the auto dial reads 1.00 at the same cost).
-
-    ``_probe_state`` passes through to the nomination
-    (:func:`ivf_pq_topk`); ``_rescore_queries`` hands in the rescore
-    side — ``(query_id_col, _qvec, _qn float norm)``, MUST equal the
-    default subtree's values (:func:`ivf_pq_serve_state`'s ``_rnk == 1``
-    rows carry exactly these as ``_qvec``/``_n``) — so the serve reads
-    no query-source scan at all; ``_candidates`` hands in an already
-    materialized nomination — ``(query_id_col, id_col)`` rows that MUST
-    equal the inner :func:`ivf_pq_topk` call's output for the same
-    (k·rerank_factor, nprobe, exclude_self) — so one checkpointed
-    k·factor ADC pass can feed both a top-k slice (``_keep_rank``) and
-    this rescore without running twice (r15, guide §1.2/§5)."""
+    200k bench corpus; the auto dial reads 1.00 at the same cost)."""
     from pyspark.sql import Window
 
     from .similarity import cosine_with_norms, norm
 
     if rerank_factor is None:
         rerank_factor = auto_rerank_factor(k)
-    cands = (
-        _candidates
-        if _candidates is not None
-        else ivf_pq_topk(
-            index,
-            queries,
-            centroids,
-            codebooks,
-            k=k * rerank_factor,
-            nprobe=nprobe,
-            id_col=id_col,
-            vec_col=vec_col,
-            query_id_col=query_id_col,
-            exclude_self=exclude_self,
-            _probe_state=_probe_state,
-        ).select(query_id_col, id_col)
-    )
+    cands = ivf_pq_topk(
+        index,
+        queries,
+        centroids,
+        codebooks,
+        k=k * rerank_factor,
+        nprobe=nprobe,
+        id_col=id_col,
+        vec_col=vec_col,
+        query_id_col=query_id_col,
+        exclude_self=exclude_self,
+    ).select(query_id_col, id_col)
     corpus = embeddings.select(id_col, vec_col, norm(vec_col).alias("_n"))
-    q = (
-        _rescore_queries
-        if _rescore_queries is not None
-        else queries.select(
-            F.col(query_id_col), F.col(vec_col).alias("_qvec"), norm(vec_col).alias("_qn")
-        )
+    q = queries.select(
+        F.col(query_id_col), F.col(vec_col).alias("_qvec"), norm(vec_col).alias("_qn")
     )
     rescored = (
         cands.join(corpus, id_col)

@@ -66,6 +66,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..localrel import literal_frame
 from .quantize import quantize_int8
 from .similarity import cosine_with_norms, norm
 
@@ -125,8 +126,8 @@ def _shifted_codes(
 # k=66 700 index would spend ~a minute PER SERVE).  A persisted
 # assigner tree is immutable, and a streaming sink serves hundreds of
 # batches against the same tree — so the frames are built once
-# (Arrow-batched: pandas input is ~2× faster at 43k rows and ~30× at
-# millions) and reused for the life of the session.  Lloyd-loop
+# (from an Arrow table, ~0.1 s for 43k rows) and reused for the life
+# of the session.  Lloyd-loop
 # callers also pass through here with per-iteration centroids: each
 # iteration is a fresh key, used once — harmless, bounded by LRU
 # eviction (r12 review: the old clear-everything overflow policy let
@@ -138,7 +139,7 @@ from collections import OrderedDict as _OrderedDict
 _FRAME_CACHE: "_OrderedDict[tuple, DataFrame]" = _OrderedDict()
 
 
-def _cached_frame(spark, content, columns: list[str], schema: str) -> DataFrame:
+def _cached_frame(spark, content, schema: str) -> DataFrame:
     import hashlib
     import json as _json
 
@@ -153,30 +154,7 @@ def _cached_frame(spark, content, columns: list[str], schema: str) -> DataFrame:
     else:
         while len(_FRAME_CACHE) > 64:  # LRU bound — evict COLD keys only
             _FRAME_CACHE.popitem(last=False)
-        if len(content) <= 65536:
-            # r15: a VALUES literal (true LocalTableScan) — an RDD-backed
-            # createDataFrame literal costs ~0.3 s per ACTION over every
-            # consumer, paid per assignment pass per serve (localrel.py);
-            # None slots render as typed NULLs natively
-            from ..localrel import literal_frame
-
-            df = literal_frame(spark, content, schema)
-        else:
-            import pandas as pd
-
-            # big centroid tables keep the Arrow-batched pandas path
-            # (~2× faster to BUILD at 43k rows, ~30× at millions); the
-            # per-action scan tax is amortized by this cache.  None
-            # slots: object dtype, because a numeric pandas column
-            # coerces None to NaN, which the NON-Arrow converter (the
-            # driver harness's DEFAULT confs) rejects for long columns
-            # (caught by the portability check)
-            if any(x is None for row in content for x in row):
-                pdf = pd.DataFrame(content, columns=columns, dtype=object)
-            else:
-                pdf = pd.DataFrame(content, columns=columns)
-            df = spark.createDataFrame(pdf, schema)
-        _FRAME_CACHE[key] = df
+        df = _FRAME_CACHE[key] = literal_frame(spark, content, schema)
     return df
 
 
@@ -191,7 +169,7 @@ def _assign_int(codes: DataFrame, cents: list[tuple[int, list[int]]], id_col: st
     spark = codes.sparkSession
     flat = [(cid, pos, int(y)) for cid, mv in cents for pos, y in enumerate(mv)]
     flat_df = F.broadcast(
-        _cached_frame(spark, flat, ["cid", "_pos", "_y"], "cid int, _pos int, _y long")
+        _cached_frame(spark, flat, "cid int, _pos int, _y long")
     )
     mm = {cid: sum(y * y for y in mv) for cid, mv in cents}
     ex = codes.select(id_col, F.posexplode("_u").alias("_pos", "_x"))
@@ -363,9 +341,7 @@ def _grouped_assign(
         for pos, y in enumerate(mv)
     ]
     flat_df = F.broadcast(
-        _cached_frame(
-            spark, flat, ["_c1", "cid", "_pos", "_y"], "_c1 int, cid int, _pos int, _y long"
-        )
+        _cached_frame(spark, flat, "_c1 int, cid int, _pos int, _y long")
     )
     mm_rows = []
     for c1, cl in cents2.items():
@@ -373,9 +349,7 @@ def _grouped_assign(
         mm_rows.append(tuple([c1] + [mm.get(cid) for cid in range(k2)]))
     mm_schema = "_c1 int, " + ", ".join(f"_mm{c} long" for c in range(k2))
     mm_df = F.broadcast(
-        _cached_frame(
-            spark, mm_rows, ["_c1"] + [f"_mm{c}" for c in range(k2)], mm_schema
-        )
+        _cached_frame(spark, mm_rows, mm_schema)
     )
     ex = codes2.select(id_col, "_c1", F.posexplode("_u").alias("_pos", "_x"))
     # expr strings for the same reason as _assign_int (see there)
@@ -783,10 +757,7 @@ def _kmeans_dispatch(
                     StructField("_cl", IntegerType()),
                 ]
             )
-            # literal_frame, not createDataFrame: the RDD-backed literal
-            # costs ~0.3 s per action over every consumer (localrel.py)
-            from ..localrel import literal_frame
-
+            # Arrow input plans a LocalTableScan; list input, an RDD scan
             asg_df = literal_frame(
                 codes.sparkSession, [(i, asg_map[i]) for i in sorted(asg_map)], schema
             )

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..localrel import literal_frame
+
 
 def _dlit(v: float) -> str:
     """A Python float as a Spark SQL DOUBLE literal.  repr() round-trips
@@ -318,14 +320,11 @@ def _flat_codebook_df(embeddings: DataFrame, centroids: list[tuple[int, list[flo
     """The codebook flattened to (cid, _pos, _y, _cn) rows for the
     explode-scoring path — k×dims rows, broadcastable."""
     spark = embeddings.sparkSession
-    from ..localrel import literal_frame
-
     rows = []
     for cid, vec in centroids:
         cn = _seq_norm(vec)
         rows.extend((cid, pos, float(y), cn) for pos, y in enumerate(vec))
-    # literal_frame: a createDataFrame literal is an RDD scan costing
-    # ~0.3 s per ACTION over every plan that joins it (localrel.py)
+    # Arrow input plans a LocalTableScan; list input, an RDD scan
     return F.broadcast(literal_frame(spark, rows, "cid long, _pos int, _y double, _cn double"))
 
 
@@ -447,11 +446,8 @@ def _codebook_df(embeddings: DataFrame, centroids: list[tuple[int, list[float]]]
     centroid literals inflate every task closure by ~1 MiB and blow up
     codegen; a broadcast relation is the same map-only shape without
     the expression-tree cost."""
-    from ..localrel import literal_frame
-
     spark = embeddings.sparkSession
-    # literal_frame: a createDataFrame literal is an RDD scan costing
-    # ~0.3 s per ACTION over every plan that joins it (localrel.py)
+    # Arrow input plans a LocalTableScan; list input, an RDD scan
     cdf = literal_frame(
         spark, [(cid, vec) for cid, vec in centroids], "cid long, cvec array<double>"
     )
@@ -650,7 +646,6 @@ def ivf_topk_indexed(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     exclude_self: bool = False,
-    _probes: DataFrame | None = None,
 ) -> DataFrame:
     """The IVF serve path over a pre-built index (:func:`ivf_index`):
     rank the (broadcast) codebook per query, explode to ``nprobe`` probe
@@ -661,28 +656,17 @@ def ivf_topk_indexed(
     and a fixed probe FRACTION this is the sublinear serve path the
     scale bench measures — the O(n·nlist) assignment is the index's
     one-time build cost, not a per-query charge.
-
-    ``_probes`` hands in the per-query probe rows — ``(query_id_col,
-    _qvec, _qn, centroid_id)``, MUST equal the default subtree's output
-    (rank by (round(sim,6) DESC, cid DESC), top ``nprobe``, ``_qn`` the
-    float norm) — so a caller serving many arms can rank the codebook
-    once, collect the bounded nprobe-rows-per-query state, and hand each
-    arm a broadcast LOCAL relation instead of re-running the
-    scan+window subtree per action (r15, guide §1.2/§5).
     """
     from pyspark.sql import Window
 
-    if _probes is not None:
-        probes = F.broadcast(_probes)
-    else:
-        codebook = _codebook_df(index, centroids)
-        probes = _rank_centroids(
-            queries.select(query_id_col, F.col(vec_col).alias("_qvec")),
-            codebook,
-            "_qvec",
-            keep=nprobe,
-            key_cols=[query_id_col],
-        ).withColumnRenamed("_n", "_qn").select(query_id_col, "_qvec", "_qn", "centroid_id")
+    codebook = _codebook_df(index, centroids)
+    probes = _rank_centroids(
+        queries.select(query_id_col, F.col(vec_col).alias("_qvec")),
+        codebook,
+        "_qvec",
+        keep=nprobe,
+        key_cols=[query_id_col],
+    ).withColumnRenamed("_n", "_qn").select(query_id_col, "_qvec", "_qn", "centroid_id")
     scored = index.join(probes, "centroid_id").select(
         query_id_col,
         id_col,

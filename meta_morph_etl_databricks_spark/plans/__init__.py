@@ -16,8 +16,7 @@ from . import ml_queries  # noqa: E402,F401
 # LOAD-BEARING: the grading driver verifies at most the first 50
 # registered queries.  Exactly 50 means every declared query is checked;
 # a 51st would silently fall off the correctness gate.  To add a query,
-# merge or retire another (and map its bench baseline in
-# bench._MERGED_BASELINES) — this assert makes the coverage loss loud.
+# merge or retire another — this assert makes the coverage loss loud.
 DRIVER_QUERY_CAP = 50
 if len(QUERIES) != DRIVER_QUERY_CAP:  # not assert — must survive python -O
     raise RuntimeError(

@@ -1175,9 +1175,7 @@ def q_embed_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             _SEM_ITERS,
             _SEM2_KMAX,
         )
-        # literal_frame: a createDataFrame literal is an RDD scan that
-        # costs ~0.3 s per ACTION over every arm that joins it (see
-        # localrel.py); the VALUES form is a true LocalTableScan
+        # Arrow input plans a LocalTableScan; list input, an RDD scan
         sem2_assign = S._mark_driver_local(
             literal_frame(
                 spark,
@@ -1434,7 +1432,6 @@ def q_similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.quantize import (
         ivf_pq_index,
-        ivf_pq_serve_state,
         ivf_pq_topk,
         ivf_pq_topk_rerank,
         quantize_int8,
@@ -1456,54 +1453,18 @@ def q_similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         lists = _IVF_PQ_IDX_CACHE.get(lkey)
         if lists is None:
             lists = _IVF_PQ_IDX_CACHE[lkey] = ivf_index(emb, cents).persist()
+        ivf = ivf_topk_indexed(
+            lists, queries, cents, k=10, nprobe=_IVF_NPROBE, exclude_self=True
+        ).select(F.lit("ivf").alias("variant"), "query_id", "vec_id", "cosine_sim")
     else:  # drained corpus — preserve the empty-result shape
         ivf = ivf_topk(emb, queries, cents, k=10, nprobe=_IVF_NPROBE, exclude_self=True).select(
             F.lit("ivf").alias("variant"), "query_id", "vec_id", "cosine_sim"
         )
     cb = _pq_codebooks_cached(spark, sf_dir, quantize_int8(emb).select("vec_id", "q_vec"))
-    if cents and cb is not None:
-        # Serve restructure (r15, guide §1.2/§5 — VERDICT item 5).
-        # Three moves, all value-preserving by construction:
-        # 1. The 5 query ROWS are collected once (one bounded job over
-        #    the pruned raw scan — vec_id < 5 is the query's own
-        #    definition) and re-emitted as a local relation, so the
-        #    per-arm probe/LUT subtrees stop re-scanning parquet inside
-        #    every action.  This is the shape a real serve layer gets:
-        #    query vectors arrive as request literals, not corpus scans.
-        # 2. The rank-the-codebook + PQ-LUT state is assembled ONCE
-        #    (ivf_pq_serve_state) and sliced per arm — one expression
-        #    tree instead of three (the build was ~1.0 s of pure py4j
-        #    plan assembly, half of it this subtree rebuilt per arm).
-        # 3. ONE k·factor ADC nomination is checkpointed and shared:
-        #    the ivfpq arm is its rnk <= 10 slice (the window order is
-        #    total, so result(10) == result(50).where(rnk <= 10)) and
-        #    the rerank arm rescores its (query_id, vec_id) rows — the
-        #    ADC pass runs once instead of twice per action, and the
-        #    rescore joins back to the PERSISTED lists (same rows as
-        #    the embeddings scan — ivf_index is a per-row map of it).
-        # Nothing is memoized across builds: every invocation recomputes
-        # from the parquet inputs.
-        qraw = (
-            read_parquet_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") < 5)
-            .select(F.col("vec_id").alias("query_id"), "embedding")
-        )
-        qloc = literal_frame(spark, qraw.collect(), qraw.schema)
-        state = ivf_pq_serve_state(lists, qloc, cents, cb)
-        # ... and the state itself is collected (nlist rows/query over
-        # the LOCAL relation — no source scan in its plan), so each
-        # arm's broadcast side is a literal local relation instead of a
-        # window+join subtree re-evaluated inside every action.
-        # literal_frame, not createDataFrame: an RDD-backed literal
-        # costs ~0.3 s PER ACTION (see localrel.py) — the parsed VALUES
-        # form is a true LocalTableScan
-        state = literal_frame(spark, state.collect(), state.schema)
-        ivf = ivf_topk_indexed(
-            lists, qloc, cents, k=10, nprobe=_IVF_NPROBE, exclude_self=True,
-            _probes=state.where(F.col("_rnk") <= _IVF_NPROBE).select(
-                "query_id", "_qvec", F.col("_n").alias("_qn"), "centroid_id"
-            ),
-        ).select(F.lit("ivf").alias("variant"), "query_id", "vec_id", "cosine_sim")
+    if not cents or cb is None:  # drained corpus — nothing to index
+        ivfpq = ivf.limit(0)
+        rr = ivf.limit(0)
+    else:
         # index built+persisted ONCE per (session, sf_dir) — the
         # ivf_pq_index docstring's own deployment contract ("persist or
         # write the result once; serve with ivf_pq_topk").  The build is
@@ -1514,31 +1475,13 @@ def q_similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         index = _IVF_PQ_IDX_CACHE.get(ikey)
         if index is None:
             index = _IVF_PQ_IDX_CACHE[ikey] = ivf_pq_index(emb, cents, cb).persist()
-        # the declared ivfpq/rerank arms probe ALL nlist lists, so the
-        # full ranked state IS the nprobe=_IVF_K probe slice
-        ps = state.select("query_id", "centroid_id", "_qn", "_lut")
-        nom = ivf_pq_topk(
-            index, qloc, cents, cb, k=50, nprobe=_IVF_K, exclude_self=True,
-            _probe_state=ps, _keep_rank=True,
-        ).localCheckpoint(eager=True)
-        ivfpq = nom.where(F.col("rnk") <= 10).select(
-            F.lit("ivfpq").alias("variant"), "query_id", "vec_id", "cosine_sim"
-        )
+        ivfpq = ivf_pq_topk(
+            index, queries, cents, cb, k=10, nprobe=_IVF_K, exclude_self=True
+        ).select(F.lit("ivfpq").alias("variant"), "query_id", "vec_id", "cosine_sim")
         rr = ivf_pq_topk_rerank(
-            index, qloc, cents, cb, lists.select("vec_id", "embedding"),
+            index, queries, cents, cb, emb,
             k=10, nprobe=_IVF_K, rerank_factor=5, exclude_self=True,
-            _candidates=nom.select("query_id", "vec_id"),
-            _rescore_queries=state.where(F.col("_rnk") == 1).select(
-                "query_id", "_qvec", F.col("_n").alias("_qn")
-            ),
         ).select(F.lit("rerank").alias("variant"), "query_id", "vec_id", "cosine_sim")
-    else:  # drained corpus — nothing to index
-        if cents:  # codebooks drained but lists exist — keep the r14 ivf arm
-            ivf = ivf_topk_indexed(
-                lists, queries, cents, k=10, nprobe=_IVF_NPROBE, exclude_self=True
-            ).select(F.lit("ivf").alias("variant"), "query_id", "vec_id", "cosine_sim")
-        ivfpq = ivf.limit(0)
-        rr = ivf.limit(0)
     return ivf.unionByName(ivfpq).unionByName(rr)
 
 

@@ -725,8 +725,7 @@ def q_skewed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_parquet_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_orderkey", "l_linenumber", "l_quantity"
     )
-    # literal_frame: a createDataFrame literal is an RDD scan costing
-    # ~0.3 s per ACTION in the plan that joins it (localrel.py)
+    # Arrow input plans a LocalTableScan; list input, an RDD scan
     dim = literal_frame(spark, _FLAG_LABELS, "l_returnflag string, flag_label string")
     joined = salted_join(
         li, dim, on=["l_returnflag"], buckets=8, salt_from=["l_orderkey", "l_linenumber"]

@@ -27,8 +27,26 @@ _SESSION_TZ = "UTC"
 
 # 16g covers every bench/test working set with headroom; pre-touching
 # (see below) makes startup cost proportional to heap size, so bigger
-# isn't better here.  Env-overridable for larger local experiments.
-_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+# isn't better here.
+_MAX_HEAP_MB = 16 * 1024
+_UNIT_MB = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+
+
+def driver_heap(override: str | None, ram_bytes: int) -> tuple[str, str]:
+    """``(spark.driver.memory, spark.driver.extraJavaOptions)`` for a host
+    with ``ram_bytes`` of physical RAM.  The heap is ``override`` (a
+    Spark size string such as ``2g``; a bare number means MiB) when
+    given, else about 60% of RAM capped at 16g.  The heap is pinned and
+    pre-touched only when it fits in RAM: pre-touching a larger heap
+    keeps the JVM from starting."""
+    if override:
+        spec = override.strip().lower().removesuffix("b")
+        unit = _UNIT_MB.get(spec[-1])
+        mb = int(float(spec[:-1]) * unit) if unit else int(spec)
+    else:
+        mb = min(int(ram_bytes * 0.6) >> 20, _MAX_HEAP_MB)
+    opts = f"-Xms{mb}m -XX:+AlwaysPreTouch" if mb << 20 < ram_bytes else ""
+    return f"{mb}m", opts
 
 
 def default_parallelism() -> int:
@@ -43,6 +61,10 @@ def get_spark(app_name: str = "meta-morph-spark", master: str | None = None) -> 
     scale-survival layer (BASELINE.md envelope vs 100 TB target).
     """
     cpus = default_parallelism()
+    heap, java_opts = driver_heap(
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM"),
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"),
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -95,8 +117,8 @@ def get_spark(app_name: str = "meta-morph-spark", master: str | None = None) -> 
         # startup removed the 1.9-29s run-to-run swings (same plan,
         # same data) entirely.  On a real cluster the executor JVMs
         # carry these settings' role.
-        .config("spark.driver.memory", _DRIVER_MEM)
-        .config("spark.driver.extraJavaOptions", f"-Xms{_DRIVER_MEM} -XX:+AlwaysPreTouch")
+        .config("spark.driver.memory", heap)
+        .config("spark.driver.extraJavaOptions", java_opts)
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

@@ -24,41 +24,43 @@ import bench  # noqa: E402
 def test_regression_gate_thresholds():
     base = {"q_a": 2.0, "q_b": 2.0, "q_c": 0.2}
     # >1.5x AND >1s absolute: flags
-    out = bench._regressions({"q_a": 3.6}, base, baseline_round=11)
+    out = bench._regressions({"q_a": 3.6}, base)
     assert out == {"q_a": {"now": 3.6, "baseline": 2.0, "ratio": 1.8}}
     # >1.5x but within the 1s absolute floor: sub-second jitter, no flag
-    assert bench._regressions({"q_c": 0.9}, base, baseline_round=11) == {}
+    assert bench._regressions({"q_c": 0.9}, base) == {}
     # big but <=1.5x: no flag
-    assert bench._regressions({"q_b": 2.9}, base, baseline_round=11) == {}
-    # error sentinel and unknown names: skipped
-    assert bench._regressions({"q_a": -1.0, "q_new": 9.0}, base, baseline_round=11) == {}
+    assert bench._regressions({"q_b": 2.9}, base) == {}
+    # unknown names, and a query that also failed in the baseline: skipped
+    assert bench._regressions({"q_new": 9.0, "q_gone": -1.0}, {"q_gone": -1.0}) == {}
+
+
+def test_crash_of_a_baselined_query_is_a_failure():
+    """A query that ran in the baseline and crashes now (the -1.0
+    sentinel) is flagged; it must not drop out of the gate and the total
+    and read as a faster round (r15 printed `"regressions": {}` over three
+    crashed queries)."""
+    base = {"q_a": 2.0, "q_b": 1.5, "q_c": -1.0}
+    now = {"q_a": 2.1, "q_b": -1.0, "q_c": -1.0, "q_new": -1.0}
+    assert bench._regressions(now, base) == {
+        "q_b": {"now": -1.0, "baseline": 1.5, "failed": True}
+    }
+    # however the host drifted
+    assert "q_b" in bench._regressions(now, base, 0.5)
+    assert "q_b" in bench._regressions(now, base, 3.0)
+    # the raw total drops q_b; the common total compares like with like
+    assert bench._common_total(now, base) == {"queries": 1, "now": 2.1, "baseline": 2.0}
 
 
 def test_host_ratio_is_one_sided():
     base = {"q_a": 2.0}
     # slower host (ratio 1.3) inflates the baseline: 3.6 < 1.5*2.6 → no flag
-    assert bench._regressions({"q_a": 3.6}, base, 1.3, 11) == {}
+    assert bench._regressions({"q_a": 3.6}, base, 1.3) == {}
     # ...but 4.2 > 1.5*2.6 still flags
-    assert bench._regressions({"q_a": 4.2}, base, 1.3, 11) != {}
+    assert bench._regressions({"q_a": 4.2}, base, 1.3) != {}
     # FASTER host (ratio < 1) must NOT shrink the baseline (fixed costs
     # don't scale with the probe): raw-base comparison stands
-    assert bench._regressions({"q_a": 2.9}, base, 0.5, 11) == {}
-    assert bench._regressions({"q_a": 3.6}, base, 0.5, 11) != {}
-
-
-def test_merged_baseline_expansion_and_lapse():
-    name = "q_anti_joins"  # merged in round 3 from two parts
-    merge_round, parts = bench._MERGED_BASELINES[name]
-    assert merge_round == 3 and parts == ["q_anti_join_parts", "q_anti_join_customers"]
-    pre = {"q_anti_join_parts": 1.0, "q_anti_join_customers": 1.2}
-    # baseline predates the merge: parts sum (2.2) is the floor
-    assert bench._regressions({name: 3.0}, pre, baseline_round=2) == {}
-    got = bench._regressions({name: 4.5}, pre, baseline_round=2)
-    assert got[name]["baseline"] == 2.2
-    # baseline at/after the merge round: the merged name compares direct
-    post = {name: 1.0}
-    got = bench._regressions({name: 3.0}, post, baseline_round=3)
-    assert got[name]["baseline"] == 1.0
+    assert bench._regressions({"q_a": 2.9}, base, 0.5) == {}
+    assert bench._regressions({"q_a": 3.6}, base, 0.5) != {}
 
 
 # --------------------------------------------------- history selection
@@ -206,10 +208,10 @@ def test_gate_monotone_in_measured_time(base, t1, bump, ratio):
     """If a time flags, any LARGER time (same baseline, same host
     ratio) must also flag — the gate can never be escaped by getting
     slower."""
-    name = "q_prop"  # not in _MERGED_BASELINES — direct comparison
+    name = "q_prop"
     b = {name: base}
-    r1 = name in bench._regressions({name: t1}, b, ratio, 11)
-    r2 = name in bench._regressions({name: t1 + bump}, b, ratio, 11)
+    r1 = name in bench._regressions({name: t1}, b, ratio)
+    r2 = name in bench._regressions({name: t1 + bump}, b, ratio)
     assert not (r1 and not r2)
 
 
@@ -225,8 +227,8 @@ def test_gate_fast_host_never_tightens(base, t, fast):
     a fast round must not flag queries that are absolutely no slower."""
     name = "q_prop"
     b = {name: base}
-    assert bench._regressions({name: t}, b, fast, 11) == bench._regressions(
-        {name: t}, b, 1.0, 11
+    assert bench._regressions({name: t}, b, fast) == bench._regressions(
+        {name: t}, b, 1.0
     )
 
 
@@ -238,11 +240,11 @@ def test_gate_fast_host_never_tightens(base, t, fast):
 )
 def test_gate_never_flags_absolutely_faster_runs(base, t, slow):
     """A raw time at or below the raw baseline never flags, whatever
-    the host ratio claims — and error sentinels never flag."""
+    the host ratio claims — while an error sentinel always does."""
     name = "q_prop"
     if t <= base:
-        assert bench._regressions({name: t}, {name: base}, slow, 11) == {}
-    assert bench._regressions({name: -1.0}, {name: base}, slow, 11) == {}
+        assert bench._regressions({name: t}, {name: base}, slow) == {}
+    assert bench._regressions({name: -1.0}, {name: base}, slow)[name]["failed"]
 
 
 def test_live_repo_gate_is_armed():
@@ -261,15 +263,12 @@ def test_scale10_rows_feed_the_same_regression_gate(tmp_path):
     class) flags the round instead of waiting for a BENCH_SCALE refresh."""
     base_scale = {"scale10:embed_lsh_pairs": 10.0, "scale10:serve_incremental": 2.0}
     # a 10x blow-up (the r11 bug shape) flags...
-    out = bench._regressions(
-        {"scale10:embed_lsh_pairs": 100.0}, base_scale, baseline_round=12
-    )
+    out = bench._regressions({"scale10:embed_lsh_pairs": 100.0}, base_scale)
     assert out["scale10:embed_lsh_pairs"]["ratio"] == 10.0
     # ...ordinary jitter does not
     assert bench._regressions(
         {"scale10:embed_lsh_pairs": 11.0, "scale10:serve_incremental": 2.4},
         base_scale,
-        baseline_round=12,
     ) == {}
     # the (round, sf) self-history carries the scale rows so the next
     # round's gate has a baseline for them
@@ -292,15 +291,15 @@ def test_scale10_compacted_serve_row_is_gated(tmp_path):
     assert bench._regressions(
         {"scale10:serve_compacted": 1.9},
         {"scale10:serve_incremental": 2.0},
-        baseline_round=13,
     ) == {}
     # later rounds: baselined and gated like any other row
     base = {"scale10:serve_compacted": 1.9, "scale10:serve_incremental": 2.0}
-    out = bench._regressions({"scale10:serve_compacted": 12.0}, base, baseline_round=14)
+    out = bench._regressions({"scale10:serve_compacted": 12.0}, base)
     assert out["scale10:serve_compacted"]["ratio"] > 6
-    assert bench._regressions({"scale10:serve_compacted": 2.2}, base, baseline_round=14) == {}
-    # a failed build (-1 sentinel) degrades to a missing row, never flags
-    assert bench._regressions({"scale10:serve_compacted": -1.0}, base, baseline_round=14) == {}
+    assert bench._regressions({"scale10:serve_compacted": 2.2}, base) == {}
+    # a row that ran in the baseline and fails now (-1 sentinel) flags
+    out = bench._regressions({"scale10:serve_compacted": -1.0}, base)
+    assert out["scale10:serve_compacted"]["failed"]
 
 
 def test_scale10_marker_three_state_protocol(tmp_path):

@@ -208,3 +208,18 @@ def test_runtime_bloom_filter_prunes_probe_side(spark, tmp_path):
     assert "BloomFilterMightContain" not in plan_plain
     assert rows_bloom == rows_plain
     assert len(rows_bloom) == 334  # k in 0,200,...,199800 with k%3==0
+
+
+def test_q_embed_one_collect_path_matches_distributed(spark, sf_dir, monkeypatch):
+    """Slot-level pin for the r15 q_embed build restructure: the
+    one-collect fast path (full corpus ≤ the driver bound) and the
+    fully distributed path (dial 0) must return the exact same rows."""
+    import meta_morph_etl_databricks_spark.operators.semantic as sem
+    from meta_morph_etl_databricks_spark.plans.ml_queries import (
+        q_embed_near_dup_lsh,
+    )
+
+    fast = sorted(map(tuple, q_embed_near_dup_lsh(spark, sf_dir).collect()))
+    monkeypatch.setattr(sem, "_DRIVER_LLOYD_MAX_ROWS", 0)
+    slow = sorted(map(tuple, q_embed_near_dup_lsh(spark, sf_dir).collect()))
+    assert fast == slow and fast

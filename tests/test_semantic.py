@@ -26,8 +26,12 @@ from pyspark.sql import functions as F
 
 from meta_morph_etl_databricks_spark.operators.semantic import (
     _SCALE,
+    _driver_assign_tree,
+    _shifted_codes,
+    assign_cells,
     auto_k,
     kmeans_int8,
+    kmeans_int8_tree,
     semantic_dedup,
     semantic_dedup_pairs,
 )
@@ -489,3 +493,91 @@ def test_codes_slice_matches_self_computed(spark, emb):
     # payload quantizes the embeddings themselves, not the codes slice)
     corrupt_ids = {r[0] for r in rows_s.where(F.col("cell").isNull()).collect()}
     assert corrupt_ids  # the emb fixture plants corrupt rows
+
+
+def _collect_u(codes) -> dict[int, list[int]]:
+    return {r[0]: [int(x) for x in r[1]] for r in codes.collect()}
+
+
+def test_driver_assign_tree_matches_distributed(spark, emb):
+    """_driver_assign_tree must reproduce assign_cells bit-identically on
+    flat AND two-level trees — including the drop semantics for a row
+    whose coarse cell has no cents2 entry (the distributed inner join)."""
+    codes = _shifted_codes(emb, 8, "vec_id", "embedding").localCheckpoint()
+    u = _collect_u(codes)
+    for kwargs in ({"k": 4, "iters": 2}, {"k": 7, "iters": 2, "flat_k_max": 3}):
+        _, _, tree = kmeans_int8_tree(emb, dims=8, **kwargs)
+        want = {
+            r[0]: r[1] for r in assign_cells(codes, tree, "vec_id").collect()
+        }
+        got = _driver_assign_tree(u, tree)
+        assert got == want and got
+    # drop semantics: strip one occupied coarse cell's fine centroids
+    # from a two-level tree — both paths must drop exactly those rows
+    _, _, tree = kmeans_int8_tree(emb, k=7, iters=2, dims=8, flat_k_max=3)
+    kind, coarse, k2, cents2 = tree
+    assert kind == "two" and len(cents2) > 1
+    pruned = dict(cents2)
+    victim = sorted(pruned)[0]
+    del pruned[victim]
+    tree_pruned = ("two", coarse, k2, pruned)
+    want = {
+        r[0]: r[1] for r in assign_cells(codes, tree_pruned, "vec_id").collect()
+    }
+    got = _driver_assign_tree(u, tree_pruned)
+    assert got == want
+    assert len(got) < len(u)  # the victim cell's rows actually dropped
+
+
+def test_full_corpus_rows_slices_match_per_arm(spark, emb):
+    """The q_embed one-collect path builds ONE (id, cell, q_vec, q_norm)
+    pass and slices it per arm; each slice must equal the
+    semantic_cell_index frame the r14 path built for that arm — boot
+    slice included (tree routing reproduces the Lloyd's final
+    assignment), corrupt rows included (NULL cell via the left join)."""
+    from meta_morph_etl_databricks_spark.operators.incremental import (
+        semantic_cell_index,
+    )
+    from meta_morph_etl_databricks_spark.operators.quantize import (
+        qnorm,
+        quantize_int8,
+    )
+    from meta_morph_etl_databricks_spark.plans.ml_queries import (
+        _literal_cells_schema,
+    )
+
+    codes = _shifted_codes(emb, 8, "vec_id", "embedding").localCheckpoint()
+    u = _collect_u(codes)
+    boot_p = F.col("vec_id") < 20
+    _, _, tree = kmeans_int8_tree(
+        emb.filter(boot_p), k=4, iters=2, dims=8, _codes=codes.where(boot_p)
+    )
+    cells_df = spark.createDataFrame(
+        sorted(_driver_assign_tree(u, tree).items()),
+        _literal_cells_schema(codes, "cell"),
+    )
+    full_rows = (
+        quantize_int8(emb, "embedding")
+        .join(F.broadcast(cells_df), "vec_id", "left")
+        .select(
+            "vec_id",
+            F.col("cell").cast("int").alias("cell"),
+            "q_vec",
+            qnorm("q_vec").alias("q_norm"),
+        )
+    )
+
+    def key(rows):
+        return sorted(
+            (r["vec_id"], r["cell"], tuple(r["q_vec"] or []), r["q_norm"])
+            for r in rows
+        )
+
+    for lo, hi in ((0, 20), (20, 30), (30, 1 << 40)):
+        arm_p = (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
+        want = semantic_cell_index(emb.filter(arm_p), tree, 8).collect()
+        got = full_rows.where(arm_p).collect()
+        assert key(got) == key(want) and got
+    # the corrupt rows ride with NULL cells, exactly like the r14 frames
+    nulls = {r["vec_id"] for r in full_rows.where("cell IS NULL").collect()}
+    assert nulls == {11, 17, 29}

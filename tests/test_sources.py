@@ -561,3 +561,110 @@ def test_read_jsonl_explicit_schema_and_corrupt_line(spark, tmp_path):
     (d / "b.json").write_text('{\n  "id": 11,\n  "name": "second"\n}')
     ml = read_jsonl(spark, str(d), schema="id bigint, name string", multiline=True)
     assert {r.id for r in ml.collect()} == {10, 11}
+
+
+def test_relation_cache_hits_and_never_serves_stale(spark, tmp_path):
+    """r15 session-scoped parquet relation cache: a repeated open of an
+    unchanged table returns the SAME lazy relation (no re-listing /
+    re-inference), and ANY rewrite of the path (size, mtime, or file
+    count changes the signature) misses the cache and reads fresh —
+    the cache can never serve stale listings, schema, or split counts."""
+    import meta_morph_etl_databricks_spark.sources.scans as scans
+
+    d = str(tmp_path)
+    spark.range(5).selectExpr("id AS a").write.parquet(f"{d}/t.parquet")
+    df1 = scans.read_parquet_table(spark, d, "t")
+    df2 = scans.read_parquet_table(spark, d, "t")
+    assert df2 is df1  # cache hit: same relation object
+    assert sorted(r["a"] for r in df2.collect()) == [0, 1, 2, 3, 4]
+    # rewrite in place: new schema AND new rows — the open must be fresh
+    import shutil
+    import time as _t
+
+    shutil.rmtree(f"{d}/t.parquet")
+    _t.sleep(0.01)  # ensure a distinct mtime_ns even on coarse clocks
+    spark.range(3).selectExpr("id AS b", "id * 2 AS c").write.parquet(f"{d}/t.parquet")
+    df3 = scans.read_parquet_table(spark, d, "t")
+    assert df3 is not df1
+    assert set(df3.columns) == {"b", "c"} and df3.count() == 3
+    # the partitioning args are part of the key (adaptive split counts
+    # must not leak across different caller dials)
+    df4 = scans.read_parquet_table(spark, d, "t", min_partitions=2)
+    assert df4 is not df3 and df4.rdd.getNumPartitions() <= 2
+
+
+def _local_scan(df) -> bool:
+    return "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_literal_frame_roundtrips_exactly(spark):
+    """localrel.literal_frame must store what createDataFrame stores,
+    BIT-FOR-BIT (NaN/±Inf, -0.0, float32, NULLs, empty and nested arrays,
+    adversarial strings) under the same schema, nullability included,
+    and plan a LocalTableScan (list input to createDataFrame plans an
+    RDD scan)."""
+    import struct
+
+    from meta_morph_etl_databricks_spark.localrel import literal_frame
+
+    schema = (
+        "i bigint, b tinyint, d double, s string, f boolean, r float, "
+        "v array<double>, n array<array<bigint>>"
+    )
+    rows = [
+        (1, 7, 0.1 + 0.2, "it's a \\ 'quote'\nline\ttab", True, 0.1,
+         [1e-300, -0.0, 5.5], [[1, 2], [3]]),
+        (2**62, -128, float("nan"), "", False, float("nan"), [], [[], [9]]),
+        (None, None, float("inf"), None, None, None, None, None),
+        (3, 0, float("-inf"), "plain", True, -0.0,
+         [float("nan"), 1.7976931348623157e308], [[2**62]]),
+    ]
+    lit = literal_frame(spark, rows, schema)
+    ref = spark.createDataFrame(rows, schema)
+    assert _local_scan(lit)
+    assert lit.schema == ref.schema
+
+    def key(r):
+        def enc(x):
+            if isinstance(x, float):
+                return struct.pack(">d", x)  # bit pattern: NaN==NaN, -0.0!=0.0
+            if isinstance(x, list):
+                return tuple(enc(e) for e in x)
+            return x
+        return tuple(enc(x) for x in r)
+
+    got = sorted((key(r) for r in lit.collect()), key=repr)
+    want = sorted((key(r) for r in ref.collect()), key=repr)
+    assert got == want
+    # an all-nullable DDL schema with NULL-free rows keeps its nullability
+    dim = literal_frame(spark, [("A", "x"), ("N", "y")], "k string, label string")
+    assert dim.schema == spark.createDataFrame([("A", "x")], "k string, label string").schema
+    assert sorted(map(tuple, dim.collect())) == [("A", "x"), ("N", "y")]
+
+
+def test_literal_frame_empty_keeps_not_null_schema(spark):
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from meta_morph_etl_databricks_spark.localrel import literal_frame
+
+    st = StructType(
+        [StructField("id", LongType(), False), StructField("note", StringType(), True)]
+    )
+    for schema in (st, "id bigint NOT NULL, note string"):
+        e = literal_frame(spark, [], schema)
+        assert e.schema == st and e.count() == 0 and _local_scan(e)
+
+
+def test_literal_frame_is_local_with_arrow_off(spark):
+    """A session with Spark's default Arrow conf (off) still plans a
+    LocalTableScan: the Arrow table input, not the conf, decides it."""
+    from meta_morph_etl_databricks_spark.localrel import literal_frame
+
+    plain = spark.newSession()
+    plain.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
+    rows = [(1, [0.5, float("nan")]), (2, None)]
+    lit = literal_frame(plain, rows, "cid bigint, cvec array<double>")
+    assert _local_scan(lit)
+    assert lit.schema == plain.createDataFrame(rows, "cid bigint, cvec array<double>").schema
+    got = [(r[0], None if r[1] is None else [repr(x) for x in r[1]]) for r in lit.orderBy("cid").collect()]
+    assert got == [(1, ["0.5", "nan"]), (2, None)]

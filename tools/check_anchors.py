@@ -125,7 +125,7 @@ def check_reference_citations(failures: list[str]) -> None:
     own = {
         os.path.basename(p)
         for p in _walk_py(os.path.join(HERE, PKG))
-    } | {"bench.py", "gen_scale.py", "profile_serve.py", "verify_oracle.py"}
+    } | {"bench.py", "gen_scale.py", "verify_oracle.py"}
 
     for path in _walk_py(os.path.join(HERE, PKG)):
         body = open(path).read()
