@@ -322,13 +322,6 @@ def embedding_bucket_index(
     )
 
 
-def _qcos(a_code: Column, b_code: Column, a_norm: Column, b_norm: Column) -> Column:
-    from .quantize import qdot
-
-    d = qdot(a_code, b_code).cast("double")
-    return F.when((a_norm > 0) & (b_norm > 0), d / (a_norm * b_norm))
-
-
 # r14 (guide §4.2): the serve-path pair filters spent ~12 µs/pair in
 # the interpreted aggregate(zip_with) HOF — ~3 s per 250k-pair serve
 # join at sf0.1, and the dominant term of the sem_inc/retract arms.
@@ -341,9 +334,9 @@ def _qcos(a_code: Column, b_code: Column, a_norm: Column, b_norm: Column) -> Col
 # join strategy/shape is untouched (same broadcast equi-join, no new
 # shuffle — deliberately NOT a cogroup, which would re-shuffle the
 # pre-partitioned index side by cell on every serve), and the node is
-# Arrow-batched (MapInArrow), which the plan audit allows.  Set
-# SPARK_GRAFT_JVM_PAIR_SCORER=1 to fall back to the relational filter
-# (environments without Python workers; also the A/B dial).
+# Arrow-batched (MapInArrow), which the plan audit allows.  The
+# relational ``aggregate(zip_with)`` filter it replaced is the reference
+# of the scorer's equivalence test.
 def _qcos_reject_ids(
     pairs: DataFrame,
     id_col: Column,
@@ -355,12 +348,6 @@ def _qcos_reject_ids(
     out_name: str,
     out_type: str,
 ) -> DataFrame:
-    import os
-
-    if os.environ.get("SPARK_GRAFT_JVM_PAIR_SCORER") == "1":
-        return pairs.where(_qcos(a_vec, b_vec, a_norm, b_norm) >= threshold).select(
-            id_col.alias(out_name)
-        )
     proj = pairs.select(
         id_col.alias(out_name),
         a_vec.alias("_av"),

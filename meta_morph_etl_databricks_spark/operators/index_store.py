@@ -325,9 +325,10 @@ def writer_lock(
     concurrent writers could both pass recovery and race
     :func:`_new_generation` into interleaved half-generations.  Readers
     stay lock-free (the pointer protocol already gives them atomic
-    snapshots); plain appends stay lock-free too — they are the
-    streaming sink's per-trigger hot path and the sink IS the single
-    appender by contract (``append_ivf_vectors`` docstring).
+    snapshots).  Dedup-kind appends take it in
+    :func:`_locked_serve_append` (a re-entry inside a streaming batch,
+    which holds the slot for its whole body); ``append_ivf_vectors``
+    stays lock-free — single appender by contract (its docstring).
 
     Mechanics: the lock is an atomically-created marker file at
     ``<root>__writer_lock`` — a SIBLING of the index root, not inside
@@ -568,6 +569,78 @@ def _finish_generation(spark: SparkSession, root: str, gen: str, meta: dict) -> 
     _install_pointer(spark, root, gen)
 
 
+def _rewrite_entry(
+    spark: SparkSession, path: str, op: str, kind: str | None = None
+) -> tuple[str, str, dict]:
+    """Writer entry of every generational rewrite and sidecar update:
+    reap crash debris first, resolve the live generation ONCE, and
+    refuse the legacy flat layout (the rewrite's reader-atomic swap
+    needs the pointer).  ``kind`` pins the index kind (``op`` is then
+    the hint :func:`_open_live` names).  Returns ``(root, live, meta)``."""
+    recover_compaction(spark, path)
+    root = path.rstrip("/")
+    if kind is not None:
+        live, meta = _open_live(spark, root, kind, op)
+    else:
+        live, meta = live_index(spark, root)
+        if meta is None:
+            raise ValueError(f"no {META_FILE} at {path} — nothing to {op}")
+    if live == root:
+        raise ValueError(
+            f"index at {path} uses the legacy flat layout — run migrate_index "
+            "first to get the reader-atomic pointer swap"
+        )
+    return root, live, meta
+
+
+def _write_generation(spark: SparkSession, root: str, rows: DataFrame) -> tuple[str, str]:
+    """Write ``rows`` (``pfx`` included) as the data of the NEXT
+    generation — repartitioned on pfx first so each bucket directory
+    gets ONE file, not one per upstream task.  Returns ``(gen, dir)``;
+    the caller completes it with :func:`_finish_generation`."""
+    gen = _new_generation(spark, root)
+    rows.repartition("pfx").write.mode("overwrite").partitionBy("pfx").parquet(
+        f"{root}/{gen}"
+    )
+    return gen, f"{root}/{gen}"
+
+
+def _repack_seen(
+    spark: SparkSession,
+    live: str,
+    meta: dict,
+    new_dir: str,
+    n_buckets: int,
+    tombs: list | None = None,
+    purge: DataFrame | None = None,
+) -> None:
+    """Carry the seen-id sidecar into a rewrite's next generation: minus
+    the pending takedowns (or the ``purge`` ids of a retraction), one
+    entry per id (replay duplicates collapse), ``spfx`` recomputed at
+    ``n_buckets`` under the shared :func:`_seen_pfx` convention
+    (round-10 advice: sites that inlined it would silently diverge)."""
+    from ..sources.sinks import _hadoop_fs
+
+    fs, path_cls, _ = _hadoop_fs(spark, live)
+    if not fs.exists(path_cls(_seen_dir(live))):
+        return
+    id_col = meta["id_col"]
+    seen = spark.read.schema(_seen_schema(meta)).parquet(_seen_dir(live))
+    if purge is not None:
+        seen = seen.join(purge, id_col, "left_anti")
+    else:
+        seen = _minus_tombstones(spark, live, meta, seen, tombs)
+    (
+        seen.select(id_col)
+        .distinct()
+        .withColumn("spfx", _seen_pfx(id_col, n_buckets))
+        .repartition("spfx")
+        .write.mode("overwrite")
+        .partitionBy("spfx")
+        .parquet(_seen_dir(new_dir))
+    )
+
+
 @_locked_writer
 def migrate_index(spark: SparkSession, path: str) -> str:
     """Move a legacy FLAT index (data directly under root) into the
@@ -607,6 +680,22 @@ def _open_live(spark: SparkSession, path: str, kind: str, hint: str) -> tuple[st
     if meta.get("kind") != kind:
         raise ValueError(f"index at {path} is kind={meta.get('kind')!r}, not {kind}")
     return live, meta
+
+
+def _open_index(
+    spark: SparkSession, path: str, kind: str, hint: str, pinned: dict | None = None, **given
+) -> tuple[DataFrame, dict]:
+    """Body of every ``open_*``: resolve the live generation, validate
+    the sidecar against the caller's params (``given`` None = accept
+    the stored value; ``pinned`` is checked even when None) and return
+    ``(index_df, meta)`` minus pending takedowns.  The explicit schema
+    makes a meta-only path (crash between sidecar write and first row
+    write) read as empty instead of failing schema inference."""
+    live, meta = _open_live(spark, path, kind, hint)
+    expected = {k: v for k, v in given.items() if v is not None}
+    _require_meta(meta, {**expected, **(pinned or {})}, path)
+    df = spark.read.schema(_kind_schema(meta)).parquet(live)
+    return _minus_tombstones(spark, live, meta, df), meta
 
 
 def _require_meta(meta: dict, expected: dict, path: str) -> None:
@@ -1034,16 +1123,7 @@ def tombstone_ids(spark: SparkSession, path: str, ids: list) -> int:
     (:func:`_replace_small_file`); a crash loses at worst the
     in-flight update, never yields a torn list.  Single-writer slot
     ENFORCED via :func:`writer_lock` (r11), shared with compaction."""
-    recover_compaction(spark, path)  # writer entry point
-    root = path.rstrip("/")
-    live, meta = live_index(spark, root)
-    if meta is None:
-        raise ValueError(f"no {META_FILE} at {path} — nothing to retract from")
-    if live == root:
-        raise ValueError(
-            f"index at {path} uses the legacy flat layout — run migrate_index "
-            "first to get the reader-atomic pointer swap"
-        )
+    _, live, meta = _rewrite_entry(spark, path, "retract from")
     ids = _check_request_ids(meta, ids, path)  # fail BEFORE persisting
     stored = _tombstone_list(spark, live)
     cur = set(stored)
@@ -1305,43 +1385,14 @@ def create_band_index(
         "n_buckets": n_buckets,
     }
     root = path.rstrip("/")
-    gen = _new_generation(spark, root)
-    (
-        rows.withColumn("pfx", _band_pfx(n_buckets))
-        .repartition("pfx")
-        .write.mode("overwrite")
-        .partitionBy("pfx")
-        .parquet(f"{root}/{gen}")
-    )
+    gen, gen_dir = _write_generation(spark, root, rows.withColumn("pfx", _band_pfx(n_buckets)))
     if n_rows is None:  # explicit-n_buckets path: footer-only count
-        n_rows = spark.read.schema(_band_schema(meta)).parquet(f"{root}/{gen}").count()
+        n_rows = spark.read.schema(_band_schema(meta)).parquet(gen_dir).count()
     # running row counter (r11, extending the SEM/IVF convention to the
     # band kind): feeds rebucket_due's O(1) growth dial
     meta["rows"] = n_rows
     _finish_generation(spark, root, gen, meta)
     return meta
-
-
-def append_band_rows(rows: DataFrame, path: str, meta: dict) -> None:
-    """Append an increment's band rows (``IncrementalDedupResult
-    .index_rows``) into the live generation's partitioned layout and
-    bump the growth counter (no-op for pre-r11 sidecars without
-    ``rows``).  The frame is materialized once when the counter needs a
-    count — the band generator cannot be pruned out of a count(), so
-    write-then-count on the raw frame would evaluate the minhash chain
-    twice (the create-path lesson, r10)."""
-    spark = rows.sparkSession
-    live = live_root(spark, path)
-    if "rows" in meta:
-        rows = rows.localCheckpoint()
-    (
-        rows.withColumn("pfx", _band_pfx(meta["n_buckets"]))
-        .write.mode("append")
-        .partitionBy("pfx")
-        .parquet(live)
-    )
-    if "rows" in meta:
-        _bump_rows(spark, live, meta, rows.count())
 
 
 def open_band_index(
@@ -1355,15 +1406,9 @@ def open_band_index(
     ``(index_df, meta)``.  The explicit schema makes a meta-only path
     (crash between sidecar write and first row write) read as empty
     instead of failing schema inference."""
-    live, meta = _open_live(spark, path, BAND_KIND, "create_band_index")
-    expected = {}
-    if num_hashes is not None:
-        expected["num_hashes"] = num_hashes
-    if bands is not None:
-        expected["bands"] = bands
-    _require_meta(meta, expected, path)
-    df = spark.read.schema(_band_schema(meta)).parquet(live)
-    return _minus_tombstones(spark, live, meta, df), meta
+    return _open_index(
+        spark, path, BAND_KIND, "create_band_index", num_hashes=num_hashes, bands=bands
+    )
 
 
 def serve_incremental_dedup(
@@ -1374,16 +1419,13 @@ def serve_incremental_dedup(
     append: bool = True,
     trace: dict | None = None,
 ) -> IncrementalDedupResult:
-    """One increment against the persisted band index, with pruning:
-
-    1. band the increment once (persisted — it feeds the touched-pfx
-       probe, the dedup joins, and the append);
-    2. collect its touched pfx values (≤ n_buckets integers);
-    3. read the index pruned to those partitions;
-    4. run the :func:`~.incremental.incremental_dedup` policy (build
-       params come from the sidecar — validated there, no data probe);
-    5. optionally append the increment's band rows (ALL docs, accepted
-       or not — the policy's index-grows-by-everything rule).
+    """One increment against the persisted band index, with pruning —
+    :func:`_serve_plan` (band the increment, probe its touched pfx
+    values, read the index pruned to them minus tombstones, run the
+    :func:`~.incremental.incremental_dedup` policy with build params
+    from the sidecar) then, when ``append``, :func:`_locked_serve_append`
+    (the increment's band rows — ALL docs, accepted or not — join the
+    index: the policy's index-grows-by-everything rule).
 
     The pruned read is the flat-serve mechanism: with ``n_buckets``
     sized to the corpus, a fixed-size increment touches a fixed number
@@ -1395,62 +1437,10 @@ def serve_incremental_dedup(
     recorded into it (keys ``open_live / band_plan / band_touch /
     tombstones / pruned_plan / policy_plan / append``) — the hook
     ``perfbench`` traces serve phases through; zero cost when None."""
-    t = time.time if trace is not None else None
-    spark = new_docs.sparkSession
-    t0 = t and t()
-    live, meta = _open_live(spark, path, BAND_KIND, "create_band_index")
-    if t:
-        trace["open_live"] = t() - t0
-    _check_id_type(new_docs, meta, path)
-    id_col, num_hashes, bands = meta["id_col"], meta["num_hashes"], meta["bands"]
-    n_buckets = meta["n_buckets"]
-
-    t0 = t and t()
-    banded = (
-        minhash_band_index(new_docs, text_col, id_col, num_hashes, bands)
-        .withColumn("pfx", _band_pfx(n_buckets))
-        .persist()
+    return _serve_increment(
+        new_docs, path, BAND_KIND, "create_band_index", append,
+        {"text_col": text_col, "est_threshold": est_threshold}, trace,
     )
-    if t:
-        trace["band_plan"] = t() - t0
-    try:
-        t0 = t and t()
-        touched = [r.pfx for r in banded.select("pfx").distinct().collect()]
-        if t:
-            trace["band_touch"] = t() - t0
-            t0 = t()
-        tombs = _tombstone_list(spark, live)
-        if t:
-            trace["tombstones"] = t() - t0
-            t0 = t()
-        index = _minus_tombstones(
-            spark, live, meta, pruned_read(spark, live, _band_schema(meta), touched), tombs
-        )
-        if t:
-            trace["pruned_plan"] = t() - t0
-            t0 = t()
-        res = incremental_dedup(
-            new_docs,
-            index.drop("pfx"),
-            text_col,
-            id_col,
-            num_hashes,
-            bands,
-            est_threshold,
-            index_meta=meta,
-            _banded=banded.drop("pfx"),
-        )
-        if t:
-            trace["policy_plan"] = t() - t0
-            t0 = t()
-        if append:
-            # pfx already on the cached rows; locked + swap-aware
-            _locked_serve_append(spark, path, live, meta, banded, new_docs, tombs)
-        if t and append:
-            trace["append"] = t() - t0
-        return res
-    finally:
-        banded.unpersist()
 
 
 def recover_compaction(
@@ -1600,57 +1590,27 @@ def compact_index(spark: SparkSession, path: str) -> None:
     :func:`recover_compaction` (run first, and by every streaming batch)
     deletes the debris.  Concurrent MAINTENANCE writers are serialized
     by :func:`writer_lock` (r11 — before it, single-writer was
-    convention only); plain appends stay lock-free, so still run
-    compaction where the appender runs (e.g. between streaming
-    triggers) or rely on the in-sink ``compact_every`` path.
+    convention only); dedup-kind appends take the same slot
+    (:func:`_locked_serve_append`), while IVF appends stay lock-free,
+    so run their compaction where the appender runs (e.g. between
+    streaming triggers) or rely on the in-sink ``compact_every`` path.
 
     Legacy flat indexes must :func:`migrate_index` first — the pointer
     protocol needs the generation layout."""
-    from ..sources.sinks import _hadoop_fs
-
-    recover_compaction(spark, path)
-    root = path.rstrip("/")
-    live, meta = live_index(spark, root)
-    if meta is None:
-        raise ValueError(f"no {META_FILE} at {path} — nothing to compact")
-    if live == root:
-        raise ValueError(
-            f"index at {path} uses the legacy flat layout — run migrate_index "
-            "first to get the reader-atomic pointer swap"
-        )
+    root, live, meta = _rewrite_entry(spark, path, "compact")
     schema = _kind_schema(meta)
-    gen = _new_generation(spark, root)
-    new_dir = f"{root}/{gen}"
     # tombstone reap: pending takedowns ride the rewrite for free — the
     # new generation is born without their rows, seen entries, or the
     # sidecar itself (the physical half of the O(ids) takedown path)
     tombs = _tombstone_list(spark, live)
-    (
+    gen, new_dir = _write_generation(
+        spark,
+        root,
         _minus_tombstones(
             spark, live, meta, spark.read.schema(schema).parquet(live), tombs
-        )
-        .distinct()
-        .repartition("pfx")
-        .write.mode("overwrite")
-        .partitionBy("pfx")
-        .parquet(new_dir)
+        ).distinct(),
     )
-    fs, path_cls, _ = _hadoop_fs(spark, root)
-    if fs.exists(path_cls(f"{live}/_seen_ids")):
-        (
-            _minus_tombstones(
-                spark,
-                live,
-                meta,
-                spark.read.schema(_seen_schema(meta)).parquet(f"{live}/_seen_ids"),
-                tombs,
-            )
-            .distinct()
-            .repartition("spfx")
-            .write.mode("overwrite")
-            .partitionBy("spfx")
-            .parquet(f"{new_dir}/_seen_ids")
-        )
+    _repack_seen(spark, live, meta, new_dir, meta["n_buckets"], tombs)
     if "rows" in meta:  # distinct() dropped replay dupes — recount (footer-only)
         meta = dict(
             meta, rows=spark.read.schema(schema).parquet(new_dir).count()
@@ -1761,6 +1721,139 @@ def _kind_pfx(meta: dict) -> Column:
     return builders[meta["kind"]](meta["n_buckets"])
 
 
+# ------------------------------------------------- shared serve path
+# Every dedup index kind serves an increment the same way; only the
+# row builder + policy differ.  The batch serves and the streaming
+# sinks (streaming/dedup.py) share these steps, so a hardening rule is
+# applied once: :func:`_serve_plan` (persisted rows → touched pfx →
+# tombstones → pruned read → policy) and :func:`_locked_serve_append`
+# (the only path dedup-kind rows take into a live generation).  A
+# kind's row builder returns its index rows (no pfx yet) and its policy
+# ``policy(pruned_index, new_rows) -> IncrementalDedupResult``.
+def _band_rows(docs: DataFrame, meta: dict, text_col: str, est_threshold: float):
+    id_col, num_hashes, bands = meta["id_col"], meta["num_hashes"], meta["bands"]
+
+    def policy(index: DataFrame, new_rows: DataFrame) -> IncrementalDedupResult:
+        return incremental_dedup(
+            docs, index, text_col, id_col, num_hashes, bands, est_threshold,
+            index_meta=meta, _banded=new_rows,
+        )
+
+    return minhash_band_index(docs, text_col, id_col, num_hashes, bands), policy
+
+
+def _embed_rows(vecs: DataFrame, meta: dict, threshold: float, vec_col: str):
+    args = (meta["dims"], meta["n_planes"], meta["id_col"], vec_col, meta["center"])
+
+    def policy(index: DataFrame, new_rows: DataFrame) -> IncrementalDedupResult:
+        return incremental_embed_near_dup(
+            vecs, index, threshold, *args, index_meta=meta, _new_rows=new_rows
+        )
+
+    return embedding_bucket_index(vecs, *args), policy
+
+
+def _sem_rows(vecs: DataFrame, meta: dict, threshold: float, vec_col: str):
+    from .semantic import tree_from_json
+
+    tree = tree_from_json(meta["tree"])
+    dims, id_col = meta["dims"], meta["id_col"]
+
+    def policy(index: DataFrame, new_rows: DataFrame) -> IncrementalDedupResult:
+        return incremental_semantic_near_dup(
+            vecs, index, tree, threshold, dims, id_col, vec_col,
+            index_meta=meta, _new_rows=new_rows,
+        )
+
+    return semantic_cell_index(vecs, tree, dims, id_col, vec_col), policy
+
+
+_KIND_ROWS = {BAND_KIND: _band_rows, EMBED_KIND: _embed_rows, SEM_KIND: _sem_rows}
+
+
+def _phase_clock(trace: dict | None):
+    """``lap(name)`` records the wall seconds since the previous lap
+    into ``trace[name]``; a no-op when ``trace`` is None."""
+    if trace is None:
+        return lambda name: None
+    last = [time.time()]
+
+    def lap(name: str) -> None:
+        now = time.time()
+        trace[name] = now - last[0]
+        last[0] = now
+
+    return lap
+
+
+def _serve_plan(
+    increment: DataFrame, live: str, meta: dict, params: dict, lap=_phase_clock(None)
+) -> tuple[IncrementalDedupResult, DataFrame, list]:
+    """The plan step of one increment against the live generation, for
+    every dedup kind (keyed by ``meta["kind"]``):
+
+    1. build the kind's index rows + ``pfx`` and persist them — they
+       feed the touched-pfx probe, the policy's joins and the append;
+    2. collect the touched pfx values (≤ n_buckets ints; NULL pfx —
+       corrupt vectors in the Hive default partition — never touched);
+    3. read the tombstone list once;
+    4. read the index pruned to the touched buckets, minus tombstones;
+    5. run the kind's policy (``params`` are its serve arguments).
+
+    Returns ``(result, rows_with_pfx, tombstones)``; the caller owns the
+    persisted rows (append them via :func:`_locked_serve_append`, then
+    unpersist).  ``lap`` records the phases for ``trace``."""
+    spark = increment.sparkSession
+    rows, policy = _KIND_ROWS[meta["kind"]](increment, meta, **params)
+    rows = rows.withColumn("pfx", _kind_pfx(meta)).persist()
+    lap("band_plan")
+    try:
+        touched = [
+            r.pfx
+            for r in rows.select("pfx").where(F.col("pfx").isNotNull()).distinct().collect()
+        ]
+        lap("band_touch")
+        tombs = _tombstone_list(spark, live)
+        lap("tombstones")
+        index = _minus_tombstones(
+            spark, live, meta, pruned_read(spark, live, _kind_schema(meta), touched), tombs
+        )
+        lap("pruned_plan")
+        res = policy(index.drop("pfx"), rows.drop("pfx"))
+        lap("policy_plan")
+    except BaseException:
+        rows.unpersist()
+        raise
+    return res, rows, tombs
+
+
+def _serve_increment(
+    increment: DataFrame,
+    path: str,
+    kind: str,
+    hint: str,
+    append: bool,
+    params: dict,
+    trace: dict | None = None,
+) -> IncrementalDedupResult:
+    """Body of every ``serve_incremental_*``: one pointer resolution,
+    the id-type check, :func:`_serve_plan`, then (``append``)
+    :func:`_locked_serve_append`."""
+    lap = _phase_clock(trace)
+    spark = increment.sparkSession
+    live, meta = _open_live(spark, path, kind, hint)
+    lap("open_live")
+    _check_id_type(increment, meta, path)
+    res, rows, tombs = _serve_plan(increment, live, meta, params, lap)
+    try:
+        if append:
+            _locked_serve_append(spark, path, live, meta, rows, increment, tombs)
+            lap("append")
+        return res
+    finally:
+        rows.unpersist()
+
+
 def _locked_serve_append(
     spark: SparkSession,
     path: str,
@@ -1768,21 +1861,28 @@ def _locked_serve_append(
     meta: dict,
     rows_with_pfx: DataFrame,
     increment: DataFrame,
-    tombs: list,
-) -> None:
-    """The serve functions' append section, under the (reentrant) slot
-    lock — r11 review: lock-free, the append could race a concurrent
-    maintenance op's generation swap and land rows in a retired
-    generation (silently reaped a cycle later).  Inside the lock the
-    pointer is re-checked: unchanged (the common case, and always when
-    the caller is a streaming batch already holding the lock) appends
-    as computed; moved by a LAYOUT-ONLY rewrite (rebucket/compact —
-    same kind params, only ``n_buckets``/``rows`` may differ) re-keys
-    the pfx column against the new layout and appends there; moved by
-    a REBUILD that changed the kind's parameters (recluster/retrain —
-    the increment's cell/centroid assignments are stale) raises
-    loudly rather than corrupt routing — re-run the serve against the
-    new generation."""
+    tombs: list | None = None,
+) -> tuple[str, dict]:
+    """The append step — the only way dedup-kind index rows enter a
+    live generation (IVF lists append through :func:`append_ivf_vectors`):
+    partitioned write, ``_rows``/``_appends`` bump, then re-ingested
+    takedown ids (``increment`` ∩ ``tombs``; None reads the list) are
+    cleared — in that order, which the streaming sinks' at-least-once
+    contract relies on.  Returns the ``(live, meta)`` the
+    rows landed in (the sinks write their seen marker there).
+
+    Runs under the (reentrant) slot lock — r11 review: lock-free, the
+    append could race a concurrent maintenance op's generation swap and
+    land rows in a retired generation (silently reaped a cycle later).
+    Inside the lock the pointer is re-checked: unchanged (the common
+    case, and always when the caller is a streaming batch already
+    holding the lock) appends as computed; moved by a LAYOUT-ONLY
+    rewrite (rebucket/compact — same kind params, only
+    ``n_buckets``/``rows`` may differ) re-keys the pfx column against
+    the new layout and appends there; moved by a REBUILD that changed
+    the kind's parameters (recluster/retrain — the increment's
+    cell/centroid assignments are stale) raises loudly rather than
+    corrupt routing — re-run the serve against the new generation."""
     with writer_lock(spark, path, "serve_append", retries=60):
         live2, meta2 = live_index(spark, path)
         if live2 != live:
@@ -1798,13 +1898,35 @@ def _locked_serve_append(
             rows_with_pfx = rows_with_pfx.drop("pfx").withColumn(
                 "pfx", _kind_pfx(meta2)
             )
-            live, meta = live2, meta2
-            tombs = _tombstone_list(spark, live)
+            live, meta, tombs = live2, meta2, None
         rows_with_pfx.write.mode("append").partitionBy("pfx").parquet(live)
-        _bump_rows(spark, live, meta, rows_with_pfx.count())
+        if "rows" in meta:
+            meta = _bump_rows(spark, live, meta, rows_with_pfx.count())
+        if tombs is None:
+            tombs = _tombstone_list(spark, live)
         back = _reingested_tombstones(spark, meta, increment, tombs)
         if back:  # re-ingested takedown ids become servable again
             clear_tombstones(spark, live, back)
+    return live, meta
+
+
+def append_index_rows(rows: DataFrame, path: str, meta: dict) -> None:
+    """Append an increment's index rows (a dedup kind's row builder
+    output, e.g. ``IncrementalDedupResult.index_rows``) into the live
+    generation through :func:`_locked_serve_append`: pfx from
+    :func:`_kind_pfx`, the growth counter bumped (no-op for pre-r11
+    sidecars without ``rows``), re-ingested takedown ids cleared.  The
+    frame is materialized once when the counter needs a count — the
+    band generator cannot be pruned out of a count(), so write-then-
+    count on the raw frame would evaluate the minhash chain twice (the
+    create-path lesson, r10)."""
+    spark = rows.sparkSession
+    if "rows" in meta:
+        rows = rows.localCheckpoint()
+    _locked_serve_append(
+        spark, path, live_root(spark, path), meta,
+        rows.withColumn("pfx", _kind_pfx(meta)), rows,
+    )
 
 
 @_locked_writer
@@ -1833,18 +1955,7 @@ def rebucket_index(
     NEW pfx) — no Lloyd, no codebook retrain, no corpus re-read; the
     cheap maintenance op for the band/embed kinds whose only drift is
     occupancy.  Returns the new meta dict."""
-    from ..sources.sinks import _hadoop_fs
-
-    recover_compaction(spark, path)  # writer entry point
-    root = path.rstrip("/")
-    live, meta = live_index(spark, root)
-    if meta is None:
-        raise ValueError(f"no {META_FILE} at {path} — nothing to rebucket")
-    if live == root:
-        raise ValueError(
-            f"index at {path} uses the legacy flat layout — run migrate_index "
-            "first to get the reader-atomic pointer swap"
-        )
+    root, live, meta = _rewrite_entry(spark, path, "rebucket")
     schema = _kind_schema(meta)
     tombs = _tombstone_list(spark, live)
     stored = (
@@ -1863,32 +1974,10 @@ def rebucket_index(
         if meta["kind"] == IVF_KIND:  # same cap rule as create/retrain:
             n_buckets = min(n_buckets, max(meta.get("nlist", 1), 1))
     new_meta = dict(meta, n_buckets=n_buckets)
-    gen = _new_generation(spark, root)
-    new_dir = f"{root}/{gen}"
-    (
-        stored.withColumn("pfx", _kind_pfx(new_meta))
-        .repartition("pfx")
-        .write.mode("overwrite")
-        .partitionBy("pfx")
-        .parquet(new_dir)
+    gen, new_dir = _write_generation(
+        spark, root, stored.withColumn("pfx", _kind_pfx(new_meta))
     )
-    fs, path_cls, _ = _hadoop_fs(spark, root)
-    if fs.exists(path_cls(f"{live}/_seen_ids")):
-        id_col = meta["id_col"]
-        (
-            _minus_tombstones(
-                spark, live, meta,
-                spark.read.schema(_seen_schema(meta)).parquet(f"{live}/_seen_ids"),
-                tombs,
-            )
-            .select(id_col)
-            .distinct()
-            .withColumn("spfx", _seen_pfx(id_col, n_buckets))
-            .repartition("spfx")
-            .write.mode("overwrite")
-            .partitionBy("spfx")
-            .parquet(f"{new_dir}/_seen_ids")
-        )
+    _repack_seen(spark, live, meta, new_dir, n_buckets, tombs)
     if "rows" in new_meta:  # distinct() dropped replay dupes — recount
         new_meta = dict(
             new_meta, rows=spark.read.schema(schema).parquet(new_dir).count()
@@ -1938,34 +2027,12 @@ def create_embedding_index(
         "n_buckets": n_buckets,
     }
     root = path.rstrip("/")
-    gen = _new_generation(spark, root)
-    (
-        rows.withColumn("pfx", _bucket_pfx(n_buckets))
-        .repartition("pfx")
-        .write.mode("overwrite")
-        .partitionBy("pfx")
-        .parquet(f"{root}/{gen}")
-    )
+    gen, gen_dir = _write_generation(spark, root, rows.withColumn("pfx", _bucket_pfx(n_buckets)))
     if n_rows is None:  # explicit-n_buckets path: footer-only count
-        n_rows = spark.read.schema(_embed_schema(meta)).parquet(f"{root}/{gen}").count()
+        n_rows = spark.read.schema(_embed_schema(meta)).parquet(gen_dir).count()
     meta["rows"] = n_rows  # growth counter (r11) — feeds rebucket_due
     _finish_generation(spark, root, gen, meta)
     return meta
-
-
-def append_embed_rows(rows: DataFrame, path: str, meta: dict) -> None:
-    spark = rows.sparkSession
-    live = live_root(spark, path)
-    if "rows" in meta:  # single evaluation for the counter's count
-        rows = rows.localCheckpoint()
-    (
-        rows.withColumn("pfx", _bucket_pfx(meta["n_buckets"]))
-        .write.mode("append")
-        .partitionBy("pfx")
-        .parquet(live)
-    )
-    if "rows" in meta:
-        _bump_rows(spark, live, meta, rows.count())
 
 
 def open_embedding_index(
@@ -1981,17 +2048,11 @@ def open_embedding_index(
     float list — validation is exact equality, which is the point: the
     bucket function is bit-deterministic in it, so "almost the same
     center" is a DIFFERENT bucket function."""
-    live, meta = _open_live(spark, path, EMBED_KIND, "create_embedding_index")
-    expected: dict = {}
-    if dims is not None:
-        expected["dims"] = dims
-    if n_planes is not None:
-        expected["n_planes"] = n_planes
-    if check_center:
-        expected["center"] = center
-    _require_meta(meta, expected, path)
-    df = spark.read.schema(_embed_schema(meta)).parquet(live)
-    return _minus_tombstones(spark, live, meta, df), meta
+    pinned = {"center": center} if check_center else {}
+    return _open_index(
+        spark, path, EMBED_KIND, "create_embedding_index", pinned,
+        dims=dims, n_planes=n_planes,
+    )
 
 
 def serve_incremental_embed_near_dup(
@@ -2006,45 +2067,10 @@ def serve_incremental_embed_near_dup(
     drift them), the index read is pruned to the increment's touched
     pfx buckets, and the increment's rows (corrupt ones included, with
     their NULL buckets) append back."""
-    spark = new_embeddings.sparkSession
-    live, meta = _open_live(spark, path, EMBED_KIND, "create_embedding_index")
-    _check_id_type(new_embeddings, meta, path)
-    id_col, dims, n_planes = meta["id_col"], meta["dims"], meta["n_planes"]
-    center, n_buckets = meta["center"], meta["n_buckets"]
-
-    new_rows = (
-        embedding_bucket_index(new_embeddings, dims, n_planes, id_col, vec_col, center)
-        .withColumn("pfx", _bucket_pfx(n_buckets))
-        .persist()
+    return _serve_increment(
+        new_embeddings, path, EMBED_KIND, "create_embedding_index", append,
+        {"threshold": threshold, "vec_col": vec_col},
     )
-    try:
-        touched = [
-            r.pfx
-            for r in new_rows.select("pfx").where(F.col("pfx").isNotNull()).distinct().collect()
-        ]
-        tombs = _tombstone_list(spark, live)
-        index = _minus_tombstones(
-            spark, live, meta, pruned_read(spark, live, _embed_schema(meta), touched), tombs
-        )
-        res = incremental_embed_near_dup(
-            new_embeddings,
-            index.drop("pfx"),
-            threshold,
-            dims,
-            n_planes,
-            id_col,
-            vec_col,
-            center,
-            index_meta=meta,
-            _new_rows=new_rows.drop("pfx"),
-        )
-        if append:
-            _locked_serve_append(
-                spark, path, live, meta, new_rows, new_embeddings, tombs
-            )
-        return res
-    finally:
-        new_rows.unpersist()
 
 
 # ----------------------------------------------------- semantic index
@@ -2114,39 +2140,9 @@ def create_semantic_index(
         "tree": tree_to_json(tree),
     }
     root = path.rstrip("/")
-    gen = _new_generation(spark, root)
-    (
-        rows.withColumn("pfx", _cell_pfx(n_buckets))
-        .repartition("pfx")
-        .write.mode("overwrite")
-        .partitionBy("pfx")
-        .parquet(f"{root}/{gen}")
-    )
+    gen, _ = _write_generation(spark, root, rows.withColumn("pfx", _cell_pfx(n_buckets)))
     _finish_generation(spark, root, gen, meta)
     return meta
-
-
-def append_sem_rows(rows: DataFrame, path: str, meta: dict) -> None:
-    """Append coded semantic rows into the live generation and bump the
-    growth counter, exactly like :func:`append_band_rows` /
-    :func:`append_embed_rows` (r12 review: this was the one append
-    helper that skipped the bump, so a batch caller growing the corpus
-    through it froze ``semantic_recluster_due`` at the bootstrap count
-    and the drift dial never fired).  Materialized once when the
-    counter needs a count — same double-evaluation guard as the band
-    helper."""
-    spark = rows.sparkSession
-    live = live_root(spark, path)
-    if "rows" in meta:
-        rows = rows.localCheckpoint()
-    (
-        rows.withColumn("pfx", _cell_pfx(meta["n_buckets"]))
-        .write.mode("append")
-        .partitionBy("pfx")
-        .parquet(live)
-    )
-    if "rows" in meta:
-        _bump_rows(spark, live, meta, rows.count())
 
 
 def open_semantic_index(
@@ -2159,15 +2155,7 @@ def open_semantic_index(
     the sidecar (None = accept stored) and return ``(index_df, meta)``.
     ``meta['tree']`` is the JSON assigner tree —
     ``semantic.tree_from_json`` rehydrates it."""
-    live, meta = _open_live(spark, path, SEM_KIND, "create_semantic_index")
-    expected: dict = {}
-    if dims is not None:
-        expected["dims"] = dims
-    if k is not None:
-        expected["k"] = k
-    _require_meta(meta, expected, path)
-    df = spark.read.schema(_sem_schema(meta)).parquet(live)
-    return _minus_tombstones(spark, live, meta, df), meta
+    return _open_index(spark, path, SEM_KIND, "create_semantic_index", dims=dims, k=k)
 
 
 def serve_incremental_semantic_dedup(
@@ -2179,65 +2167,22 @@ def serve_incremental_semantic_dedup(
 ) -> IncrementalDedupResult:
     """One increment against the persisted semantic cell index — the
     SemDeDup sibling of :func:`serve_incremental_dedup` /
-    :func:`serve_incremental_embed_near_dup`:
-
-    1. route the increment into the bootstrap cells through the
-       sidecar's assigner tree (no Lloyd re-run) and code it;
-    2. collect its touched pfx values (≤ n_buckets ints, NULL cells
-       excluded — corrupt history costs zero IO);
-    3. read the index pruned to those partitions;
-    4. apply the triad policy (reject vs index or vs lower-id increment
-       row, deterministic int8 cosine over stored codes);
-    5. optionally append the increment's rows (ALL docs — rejected
-       duplicates must keep disqualifying their future copies).
+    :func:`serve_incremental_embed_near_dup`: the increment is routed
+    into the bootstrap cells through the sidecar's assigner tree (no
+    Lloyd re-run) and coded, NULL cells stay out of the touched set
+    (corrupt history costs zero IO), and the triad policy rejects vs
+    the index or a lower-id increment row with the deterministic int8
+    cosine over stored codes.  ALL rows append — rejected duplicates
+    must keep disqualifying their future copies.
 
     Flat-serve posture: fixed increment → fixed touched-bucket count →
     fixed pruned-scan rows (buckets sized to the corpus), and the
     assigner pass is corpus-size-free up to the ⌈log₆₄ k⌉ tree depth —
     measured across a 100× corpus in BENCH_SCALE ``semantic_partitioned``."""
-    from .semantic import tree_from_json
-
-    spark = new_embeddings.sparkSession
-    live, meta = _open_live(spark, path, SEM_KIND, "create_semantic_index")
-    _check_id_type(new_embeddings, meta, path)
-    id_col, dims, n_buckets = meta["id_col"], meta["dims"], meta["n_buckets"]
-    tree = tree_from_json(meta["tree"])
-
-    new_rows = (
-        semantic_cell_index(new_embeddings, tree, dims, id_col, vec_col)
-        .withColumn("pfx", _cell_pfx(n_buckets))
-        .persist()
+    return _serve_increment(
+        new_embeddings, path, SEM_KIND, "create_semantic_index", append,
+        {"threshold": threshold, "vec_col": vec_col},
     )
-    try:
-        touched = [
-            r.pfx
-            for r in new_rows.select("pfx")
-            .where(F.col("pfx").isNotNull())
-            .distinct()
-            .collect()
-        ]
-        tombs = _tombstone_list(spark, live)
-        index = _minus_tombstones(
-            spark, live, meta, pruned_read(spark, live, _sem_schema(meta), touched), tombs
-        )
-        res = incremental_semantic_near_dup(
-            new_embeddings,
-            index.drop("pfx"),
-            tree,
-            threshold,
-            dims,
-            id_col,
-            vec_col,
-            index_meta=meta,
-            _new_rows=new_rows.drop("pfx"),
-        )
-        if append:
-            _locked_serve_append(
-                spark, path, live, meta, new_rows, new_embeddings, tombs
-            )
-        return res
-    finally:
-        new_rows.unpersist()
 
 
 def semantic_recluster_due(
@@ -2310,14 +2255,7 @@ def recluster_semantic_index(
     place it.  Returns the new meta dict."""
     from .semantic import _kmeans_dispatch, _FLAT_K_MAX, tree_to_json
 
-    recover_compaction(spark, path)  # writer entry point
-    root = path.rstrip("/")
-    live, meta = _open_live(spark, root, SEM_KIND, "create_semantic_index")
-    if live == root:
-        raise ValueError(
-            f"index at {path} uses the legacy flat layout — run migrate_index "
-            "first to get the reader-atomic pointer swap"
-        )
+    root, live, meta = _rewrite_entry(spark, path, "create_semantic_index", SEM_KIND)
     id_col, dims = meta["id_col"], meta["dims"]
     iters = meta["iters"] if iters is None else iters
     tcs = meta["target_cell_size"] if target_cell_size is None else target_cell_size
@@ -2370,38 +2308,10 @@ def recluster_semantic_index(
         rows=n,
         tree=tree_to_json(tree),
     )
-    gen = _new_generation(spark, root)
-    new_dir = f"{root}/{gen}"
-    (
-        new_rows.withColumn("pfx", _cell_pfx(n_buckets))
-        .repartition("pfx")
-        .write.mode("overwrite")
-        .partitionBy("pfx")
-        .parquet(new_dir)
+    gen, new_dir = _write_generation(
+        spark, root, new_rows.withColumn("pfx", _cell_pfx(n_buckets))
     )
-    from ..sources.sinks import _hadoop_fs
-
-    fs, path_cls, _ = _hadoop_fs(spark, root)
-    if fs.exists(path_cls(f"{live}/_seen_ids")):
-        (
-            _minus_tombstones(
-                spark,
-                live,
-                meta,
-                spark.read.schema(_seen_schema(meta)).parquet(f"{live}/_seen_ids"),
-                tombs,
-            )
-            .select(id_col)
-            .distinct()
-            # spfx recomputed under the SHARED convention (_seen_pfx —
-            # round-10 advice: this site inlined the expression):
-            # n_buckets just changed, so every entry re-buckets
-            .withColumn("spfx", _seen_pfx(id_col, n_buckets))
-            .repartition("spfx")
-            .write.mode("overwrite")
-            .partitionBy("spfx")
-            .parquet(f"{new_dir}/_seen_ids")
-        )
+    _repack_seen(spark, live, meta, new_dir, n_buckets, tombs)  # n_buckets changed
     _finish_generation(spark, root, gen, new_meta)
     return new_meta
 
@@ -2432,18 +2342,7 @@ def retract_ids(spark: SparkSession, path: str, ids: list) -> int:
     atomic, :func:`recover_compaction` reaps a half-built generation.
     Single-writer slot ENFORCED via :func:`writer_lock` (r11), shared
     with compaction."""
-    from ..sources.sinks import _hadoop_fs
-
-    recover_compaction(spark, path)  # writer entry point
-    root = path.rstrip("/")
-    live, meta = live_index(spark, root)
-    if meta is None:
-        raise ValueError(f"no {META_FILE} at {path} — nothing to retract from")
-    if live == root:
-        raise ValueError(
-            f"index at {path} uses the legacy flat layout — run migrate_index "
-            "first to get the reader-atomic pointer swap"
-        )
+    root, live, meta = _rewrite_entry(spark, path, "retract from")
     ids = _check_request_ids(meta, list(ids), path)  # r13 review: same hazard
     id_col = meta["id_col"]
     ids_df = F.broadcast(_ids_df(spark, meta, ids))
@@ -2462,26 +2361,10 @@ def retract_ids(spark: SparkSession, path: str, ids: list) -> int:
     schema = _kind_schema(meta)
     stored = spark.read.schema(schema).parquet(live)
     removed = stored.join(ids_df, id_col, "left_semi").count()
-    gen = _new_generation(spark, root)
-    new_dir = f"{root}/{gen}"
-    (
-        stored.join(purge_df, id_col, "left_anti")
-        .repartition("pfx")
-        .write.mode("overwrite")
-        .partitionBy("pfx")
-        .parquet(new_dir)
+    gen, new_dir = _write_generation(
+        spark, root, stored.join(purge_df, id_col, "left_anti")
     )
-    fs, path_cls, _ = _hadoop_fs(spark, root)
-    if fs.exists(path_cls(f"{live}/_seen_ids")):
-        (
-            spark.read.schema(_seen_schema(meta))
-            .parquet(f"{live}/_seen_ids")
-            .join(purge_df, id_col, "left_anti")
-            .repartition("spfx")
-            .write.mode("overwrite")
-            .partitionBy("spfx")
-            .parquet(f"{new_dir}/_seen_ids")
-        )
+    _repack_seen(spark, live, meta, new_dir, meta["n_buckets"], purge=purge_df)
     if "rows" in meta:  # exact recount (footer-only) — the rewrite is rare
         meta = dict(meta, rows=spark.read.schema(schema).parquet(new_dir).count())
     _finish_generation(spark, root, gen, meta)
@@ -2583,14 +2466,7 @@ def create_ivf_index(
         n_buckets = min(auto_index_buckets(n), max(len(centroids), 1))
     meta["n_buckets"] = n_buckets
     root = path.rstrip("/")
-    gen = _new_generation(spark, root)
-    (
-        rows.withColumn("pfx", _list_pfx(n_buckets))
-        .repartition("pfx")
-        .write.mode("overwrite")
-        .partitionBy("pfx")
-        .parquet(f"{root}/{gen}")
-    )
+    gen, _ = _write_generation(spark, root, rows.withColumn("pfx", _list_pfx(n_buckets)))
     _finish_generation(spark, root, gen, meta)
     return meta
 
@@ -2605,15 +2481,7 @@ def open_ivf_index(
     sidecar (None = accept stored) and return ``(index_df, meta)``;
     ``meta['centroids']`` (and ``meta['pq']['codebooks']`` for the pq
     codec) are the pinned quantizers."""
-    live, meta = _open_live(spark, path, IVF_KIND, "create_ivf_index")
-    expected: dict = {}
-    if nlist is not None:
-        expected["nlist"] = nlist
-    if codec is not None:
-        expected["codec"] = codec
-    _require_meta(meta, expected, path)
-    df = spark.read.schema(_ivf_schema(meta)).parquet(live)
-    return _minus_tombstones(spark, live, meta, df), meta
+    return _open_index(spark, path, IVF_KIND, "create_ivf_index", nlist=nlist, codec=codec)
 
 
 def append_ivf_vectors(
@@ -2902,17 +2770,9 @@ def retrain_ivf_index(
       centroid (NULL pfx — unservable until re-ingested).
 
     Returns the new meta dict."""
-    from ..sources.sinks import _hadoop_fs
     from .similarity import auto_nlist, ivf_centroids, ivf_index
 
-    recover_compaction(spark, path)  # writer entry point
-    root = path.rstrip("/")
-    live, meta = _open_live(spark, root, IVF_KIND, "create_ivf_index")
-    if live == root:
-        raise ValueError(
-            f"index at {path} uses the legacy flat layout — run migrate_index "
-            "first to get the reader-atomic pointer swap"
-        )
+    root, live, meta = _rewrite_entry(spark, path, "create_ivf_index", IVF_KIND)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     tombs = _tombstone_list(spark, live)  # reaped by the rebuild
     stored = (
@@ -2962,34 +2822,10 @@ def retrain_ivf_index(
         bootstrap_rows=n,
         rows=n,
     )
-    gen = _new_generation(spark, root)
-    new_dir = f"{root}/{gen}"
-    (
-        new_rows.withColumn("pfx", _list_pfx(n_buckets))
-        .repartition("pfx")
-        .write.mode("overwrite")
-        .partitionBy("pfx")
-        .parquet(new_dir)
+    gen, new_dir = _write_generation(
+        spark, root, new_rows.withColumn("pfx", _list_pfx(n_buckets))
     )
-    fs, path_cls, _ = _hadoop_fs(spark, root)
-    if fs.exists(path_cls(f"{live}/_seen_ids")):
-        (
-            _minus_tombstones(
-                spark,
-                live,
-                meta,
-                spark.read.schema(_seen_schema(meta)).parquet(f"{live}/_seen_ids"),
-                tombs,
-            )
-            .select(id_col)
-            .distinct()
-            # spfx recomputed under the shared convention — n_buckets changed
-            .withColumn("spfx", _seen_pfx(id_col, n_buckets))
-            .repartition("spfx")
-            .write.mode("overwrite")
-            .partitionBy("spfx")
-            .parquet(f"{new_dir}/_seen_ids")
-        )
+    _repack_seen(spark, live, meta, new_dir, n_buckets, tombs)  # n_buckets changed
     _finish_generation(spark, root, gen, new_meta)
     return new_meta
 

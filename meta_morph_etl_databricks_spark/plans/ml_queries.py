@@ -960,9 +960,10 @@ def _sem_inc_ctes(k: int, iters: int, dims: int, b0: int, t: float, scale: int =
     the FULL corpus, run Lloyd (seeds + updates) over the id<b0
     BOOTSTRAP rows only, assign ALL valid rows under the final
     centroids (= the assigner-tree routing), score within-cell pairs
-    with the stored-code int8 cosine (norm guards matching _qcos), and
-    reject every b ≥ b0 with a lower-id match.  Accepted = every corpus
-    id (corrupt included) not rejected."""
+    with the stored-code int8 cosine (norm guards matching
+    incremental._qcos_reject_ids), and reject every b ≥ b0 with a
+    lower-id match.  Accepted = every corpus id (corrupt included) not
+    rejected."""
     ctes = [
         f"""uval AS (
     SELECT vec_id, v FROM (

@@ -77,9 +77,13 @@ def _path_signature(path: str) -> tuple[int, int, int] | None:
 # path reads re-pay it per call, so we lift the same per-session
 # memoization to the relation level.  NOT result caching: the cached
 # object is the lazy reader plan; every action still scans the parquet
-# files.  Keyed on (applicationId, path, path SIGNATURE, partitioning
-# args): nothing crosses driver runs, and a rewrite of the path (size/
-# mtime/file-count change) misses the cache and re-lists/re-infers.
+# files.  Keyed on (session, path, path SIGNATURE, partitioning args):
+# a rewrite of the path (size/mtime/file-count change) misses the cache
+# and re-lists/re-infers.  The session is keyed by identity, not by
+# applicationId — ``spark.newSession()`` shares the applicationId, and a
+# sibling session must not get a frame analyzed under the first one's
+# confs (the events cast binds its time zone).  A cached frame holds its
+# session, so the ``id`` cannot be reused while the entry lives.
 from collections import OrderedDict as _OrderedDict
 
 _RELATION_CACHE: "_OrderedDict[tuple, DataFrame]" = _OrderedDict()
@@ -129,7 +133,7 @@ def read_parquet_table(
     path = f"{sf_dir}/{name}.parquet"
     sig = _path_signature(path)
     key = (
-        spark.sparkContext.applicationId,
+        id(spark),
         path,
         sig,
         min_partitions,

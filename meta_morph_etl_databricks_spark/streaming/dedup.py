@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..operators import index_store as ix
+
 
 def dedup_stream(
     events: DataFrame,
@@ -55,15 +57,142 @@ def dedup_stream_exact(events: DataFrame, keys: list[str]) -> DataFrame:
     return events.dropDuplicates(keys)
 
 
-# The seen-store convention (partition prefix, directory name, fresh
-# filter, commit-marker append) lives in operators/index_store next to
-# the other pfx conventions (round-10 advice: recluster_semantic_index
-# inlined the prefix expression; one definition now serves the sinks,
-# the batch IVF ingest, and the rebuild re-packs).  These aliases keep
-# this module's historical names for callers and tests.
-from ..operators.index_store import _seen_dir, _seen_pfx  # noqa: F401
-from ..operators.index_store import append_seen_ids as _append_seen
-from ..operators.index_store import seen_filter_fresh as _filter_fresh
+def _index_sink(stream, index_path, checkpoint, trigger_available_now, kind, expected, body):
+    """Start a foreachBatch sink over a persisted index.  Each batch
+    runs ``body(batch_df, batch_id, live, meta)`` with the scaffolding
+    every index sink shares:
+
+    - the WHOLE batch holds the (reentrant) writer slot (r11 review):
+      recovery's debris reap, the data/seen appends and in-line
+      maintenance all serialize against external maintenance ops
+      instead of racing their generation swaps.  ``owner=checkpoint``
+      (r12 advice): a hard-killed incarnation of THIS stream strands
+      the marker; the restart reclaims its own stale lock instead of
+      polling out and dying (replay via recover_compaction is safe —
+      see writer_lock's owner contract);
+    - ``recover_compaction`` runs UNCONDITIONALLY (not gated on
+      ``compact_every``): a compaction crash mid-swap leaves no live
+      index, and a restart that dropped the flag would otherwise read
+      meta=None and silently bootstrap a fresh EMPTY index over the
+      trash — then a later recovery call would see root+trash, declare
+      the compaction "finished", and delete the old index permanently.
+      Two fs.exists calls per batch buy immunity to that whole class;
+    - the pointer is resolved ONCE per batch — meta and data must come
+      from the same generation (round-9 advice: a flip between separate
+      meta/live reads pairs stale meta with new data);
+    - an existing index must be of ``kind`` and match the caller's
+      ``expected`` params and the batch's id dtype — checked driver-side
+      BEFORE any data is touched (``meta`` is None: no index yet, the
+      body bootstraps one)."""
+
+    def run_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        with ix.writer_lock(
+            spark, index_path, "stream_batch", retries=120, owner=checkpoint
+        ):
+            ix.recover_compaction(spark, index_path)
+            live, meta = ix.live_index(spark, index_path)
+            if meta is not None:
+                if meta.get("kind") != kind:
+                    raise ValueError(f"index at {index_path} is kind={meta.get('kind')!r}")
+                ix._require_meta(meta, expected, index_path)
+                ix._check_id_type(batch_df, meta, index_path)
+            body(batch_df, batch_id, live, meta)
+
+    writer = stream.writeStream.foreachBatch(run_batch).option(
+        "checkpointLocation", checkpoint
+    )
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _maintain(spark, index_path, batch_id, compact_every, dial=None) -> None:
+    """Between-triggers maintenance after a committed batch: the
+    ``compact_every`` cadence, then the kind's growth/drift dial.  The
+    batch still holds the writer slot (foreachBatch serializes
+    batches), so no appender is live during a rewrite — the exact spot
+    the rewrites' single-writer contract names."""
+    if compact_every and (batch_id + 1) % compact_every == 0:
+        ix.compact_index(spark, index_path, lock_retries=60)
+    if dial is not None:
+        dial(spark)
+
+
+def _rebucket_dial(index_path, target_rows):
+    """The band/embed growth dial: rebucket when due, with the SAME
+    target as the dial (r12 advice: the fixed 500 default left a
+    <125-rows/bucket dial re-firing a full rewrite on every subsequent
+    batch forever)."""
+
+    def dial(spark) -> None:
+        if ix.rebucket_due(spark, index_path, target_rows_per_bucket=target_rows):
+            ix.rebucket_index(
+                spark, index_path, target_rows_per_bucket=target_rows, lock_retries=60
+            )
+
+    return dial
+
+
+def _dedup_sink(
+    stream, index_path, accepted_path, checkpoint, trigger_available_now,
+    kind, expected, params, bootstrap, compact_every, dial,
+):
+    """The one foreachBatch body of the three dedup sinks.  Per batch,
+    inside :func:`_index_sink`'s lock/recover/pointer/validation
+    scaffolding:
+
+    1. no index yet → ``bootstrap(batch_df)`` returns the kind's meta
+       (None = not bootstrappable yet: retry on the next batch) and the
+       first generation is initialized;
+    2. the seen filter drops ids a committed batch already processed;
+    3. :func:`~..operators.index_store._serve_plan` — the batch serve's
+       own plan step (``params`` are the policy's serve arguments);
+    4. write order accepted rows → index rows → row counter → tombstone
+       clear (:func:`~..operators.index_store._locked_serve_append`) →
+       seen marker, so a crash replays the whole batch against
+       consistent state (see :func:`stream_incremental_dedup`).  The
+       counter is bumped BEFORE the seen marker: a crash in between
+       replays the batch, physically re-appending rows the counter
+       already counted once, so ``meta['rows']`` UNDER-counts until the
+       next compact/recluster recount (round-10 advice) — acceptable
+       for a drift heuristic: the dial fires LATE, never spuriously.
+       Re-ingested takedown ids are cleared before the marker too, so
+       such a crash replays full-row duplicates instead of stranding
+       re-accepted content behind its own tombstone;
+    5. :func:`_maintain` with the kind's ``dial``."""
+
+    def body(batch_df: DataFrame, batch_id: int, live, meta) -> None:
+        spark = batch_df.sparkSession
+        if meta is None:
+            meta = bootstrap(batch_df)
+            if meta is None:
+                return
+            live = ix.init_index(spark, index_path, meta, lock_retries=60)
+        # persisted: feeds isEmpty, the row builder, the policy's
+        # anti-join, the tombstone clear and the seen append.  Freed
+        # before return — a long-running stream must not accumulate
+        # caches.
+        fresh = ix.seen_filter_fresh(batch_df, live, meta).persist()
+        try:
+            if fresh.isEmpty():
+                return
+            res, rows, tombs = ix._serve_plan(fresh, live, meta, params)
+            try:
+                res.accepted.write.mode("append").parquet(accepted_path)
+                live, meta = ix._locked_serve_append(
+                    spark, index_path, live, meta, rows, fresh, tombs
+                )
+                ix.append_seen_ids(fresh, live, meta)  # commit marker
+            finally:
+                rows.unpersist()
+        finally:
+            fresh.unpersist()
+        _maintain(spark, index_path, batch_id, compact_every, dial)
+
+    return _index_sink(
+        stream, index_path, checkpoint, trigger_available_now, kind, expected, body
+    )
 
 
 def stream_incremental_dedup(
@@ -115,8 +244,9 @@ def stream_incremental_dedup(
       processing — cross-batch redelivery is a no-op, now INCLUDING
       sub-shingle docs (the seen sidecar records every processed id,
       not just ids with band rows);
-    - per-batch write order is accepted → index rows → seen ids, so a
-      crash replays the whole batch against consistent state: before
+    - per-batch write order is accepted → index rows → row counter →
+      tombstone clear → seen ids (:func:`_dedup_sink`), so a crash
+      replays the whole batch against consistent state: before
       the index append the recomputed accepted set is identical (the
       index is unchanged); after it, the batch's own band rows are in
       the index and every shingled doc self-matches (est 1.0) so no
@@ -129,157 +259,39 @@ def stream_incremental_dedup(
       matters).
 
     ``compact_every=N`` runs :func:`~..operators.index_store
-    .compact_index` after every Nth committed batch — BETWEEN triggers,
-    the exact spot its single-writer contract names (foreachBatch
-    serializes batches, so no appender is live during the rewrite).
-    Every batch (with or without the flag — a restart may drop it)
-    first runs ``recover_compaction``: a crash mid-swap otherwise
-    leaves no live index and the next batch's meta-read would silently
-    BOOTSTRAP A FRESH EMPTY INDEX over the trash — losing all dedup
-    state without an error.  Appends add
-    O(touched) small files per batch and replays duplicate rows, so
-    long-running streams should set this (file-count and replay-bloat
-    bound, amortized one rewrite per N batches).
-    """
-    from ..operators import index_store as ix
-    from ..operators.incremental import incremental_dedup, minhash_band_index
+    .compact_index` after every Nth committed batch, between triggers
+    (:func:`_maintain`); every batch first runs ``recover_compaction``
+    whatever the flag (:func:`_index_sink`).  Appends add O(touched)
+    small files per batch and replays duplicate rows, so long-running
+    streams should set it (file-count and replay-bloat bound, amortized
+    one rewrite per N batches)."""
 
-    def dedupe_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # the WHOLE batch body holds the (reentrant) writer slot
-        # (r11 review): recovery's debris reap, the data/seen appends
-        # and in-line maintenance all serialize against external
-        # maintenance ops instead of racing their generation swaps.
-        # owner=checkpoint (r12 advice): a hard-killed incarnation of
-        # THIS stream strands the marker; the restart reclaims its own
-        # stale lock instead of polling out and dying (replay via
-        # recover_compaction is safe — see writer_lock's owner contract)
-        with ix.writer_lock(
-            spark, index_path, "stream_batch", retries=120, owner=checkpoint
-        ):
-            # UNCONDITIONAL (not gated on compact_every): a compaction crash
-            # mid-swap leaves no live index, and a restart that dropped the
-            # flag would otherwise read meta=None and silently bootstrap a
-            # fresh EMPTY index over the trash — then a later recovery call
-            # would see root+trash, declare the compaction "finished", and
-            # delete the old index permanently.  Two fs.exists calls per
-            # batch buys immunity to that whole class.
-            ix.recover_compaction(spark, index_path)
-            # resolve the pointer ONCE per batch — meta and data must come
-            # from the same generation (round-9 advice: a flip between
-            # separate meta/live reads pairs stale meta with new data)
-            live, meta = ix.live_index(spark, index_path)
-            if meta is None:
-                if batch_df.isEmpty():
-                    # nothing to size the index from (Kafka latest-offsets
-                    # fires an empty batch 0): bootstrapping here would pin
-                    # n_buckets at the 32-bucket floor FOREVER (r12 review)
-                    # — retry on the next batch instead
-                    return
-                meta = {
-                    "kind": ix.BAND_KIND,
-                    "id_col": id_col,
-                    "id_type": dict(batch_df.dtypes)[id_col],
-                    "num_hashes": num_hashes,
-                    "bands": bands,
-                    "n_buckets": n_buckets or ix.auto_index_buckets(batch_df.count() * bands),
-                    "rows": 0,  # running counter (r11) — bumped per batch
-                }
-                live = ix.init_index(spark, index_path, meta, lock_retries=60)
-            else:
-                if meta.get("kind") != ix.BAND_KIND:
-                    raise ValueError(f"index at {index_path} is kind={meta.get('kind')!r}")
-                ix._require_meta(
-                    meta,
-                    {"id_col": id_col, "num_hashes": num_hashes, "bands": bands},
-                    index_path,
-                )
-                ix._check_id_type(batch_df, meta, index_path)
-            nb = meta["n_buckets"]
+    def bootstrap(batch_df: DataFrame) -> dict | None:
+        if batch_df.isEmpty():
+            # nothing to size the index from (Kafka latest-offsets fires
+            # an empty batch 0): bootstrapping here would pin n_buckets
+            # at the 32-bucket floor FOREVER (r12 review) — retry on the
+            # next batch instead
+            return None
+        return {
+            "kind": ix.BAND_KIND,
+            "id_col": id_col,
+            "id_type": dict(batch_df.dtypes)[id_col],
+            "num_hashes": num_hashes,
+            "bands": bands,
+            "n_buckets": n_buckets or ix.auto_index_buckets(batch_df.count() * bands),
+            "rows": 0,  # running counter (r11) — bumped per batch
+        }
 
-            # persist the seen-filtered batch AND its band rows: fresh
-            # feeds isEmpty, the banding, the accepted anti-join, and the
-            # seen append; banded feeds the touched-pfx probe, both dedup
-            # joins, and the index append.  Both freed before return — a
-            # long-running stream must not accumulate caches.
-            from pyspark.sql import functions as F
-
-            tombs = ix._tombstone_list(spark, live)
-            fresh = _filter_fresh(batch_df, live, meta).persist()
-            if fresh.isEmpty():
-                fresh.unpersist()
-                return
-            banded = (
-                minhash_band_index(fresh, text_col, id_col, num_hashes, bands)
-                .withColumn("pfx", ix._band_pfx(nb))
-                .persist()
-            )
-            try:
-                # NULL-pfx filter for uniformity with the embed/sem
-                # bodies (band pfx is never NULL today — xxhash64 over
-                # non-null band cols — but the sibling shape must not
-                # silently diverge, r12 review)
-                touched = [
-                    r.pfx
-                    for r in banded.select("pfx")
-                    .where(F.col("pfx").isNotNull())
-                    .distinct()
-                    .collect()
-                ]
-                index = ix._minus_tombstones(
-                    spark, live, meta,
-                    ix.pruned_read(spark, live, ix._band_schema(meta), touched), tombs,
-                )
-                res = incremental_dedup(
-                    fresh,
-                    index.drop("pfx"),
-                    text_col,
-                    id_col,
-                    num_hashes,
-                    bands,
-                    est_threshold,
-                    index_meta=meta,
-                    _banded=banded.drop("pfx"),
-                )
-                res.accepted.write.mode("append").parquet(accepted_path)
-                banded.write.mode("append").partitionBy("pfx").parquet(live)
-                # counter bump before the seen marker — same replay-
-                # undercount trade as the semantic sink (see that comment)
-                meta = ix._bump_rows(spark, live, meta, banded.count())
-                # re-ingested takedown ids become servable again — cleared
-                # BEFORE the seen marker so a crash between the two replays
-                # the batch (full-row dups) instead of stranding re-accepted
-                # content behind its own tombstone
-                back = ix._reingested_tombstones(spark, meta, fresh, tombs)
-                if back:
-                    ix.clear_tombstones(spark, live, back)
-                _append_seen(fresh, live, meta)  # commit marker
-                if compact_every and (_batch_id + 1) % compact_every == 0:
-                    ix.compact_index(spark, index_path, lock_retries=60)
-                if rebucket_when_due and ix.rebucket_due(
-                    spark, index_path, target_rows_per_bucket=rebucket_target_rows
-                ):
-                    # BETWEEN-triggers writer slot, like compact: the grown
-                    # corpus gets auto_index_buckets-many buckets back.
-                    # SAME target as the dial (r12 advice: the fixed 500
-                    # default left a <125-rows/bucket dial re-firing a
-                    # full rewrite on every subsequent batch forever)
-                    ix.rebucket_index(
-                        spark,
-                        index_path,
-                        target_rows_per_bucket=rebucket_target_rows,
-                        lock_retries=60,
-                    )
-            finally:
-                banded.unpersist()
-                fresh.unpersist()
-
-    writer = stream.writeStream.foreachBatch(dedupe_batch).option(
-        "checkpointLocation", checkpoint
+    return _dedup_sink(
+        stream, index_path, accepted_path, checkpoint, trigger_available_now,
+        ix.BAND_KIND,
+        {"id_col": id_col, "num_hashes": num_hashes, "bands": bands},
+        {"text_col": text_col, "est_threshold": est_threshold},
+        bootstrap,
+        compact_every,
+        _rebucket_dial(index_path, rebucket_target_rows) if rebucket_when_due else None,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_incremental_semantic_dedup(
@@ -330,132 +342,47 @@ def stream_incremental_semantic_dedup(
     appender is ever live during the swap and the next batch routes
     through the new generation's tree.  Default off: the rebuild is an
     O(corpus-codes) Lloyd run, a scheduling decision the operator owns."""
-    from ..operators import index_store as ix
-    from ..operators.incremental import incremental_semantic_near_dup, semantic_cell_index
-    from ..operators.semantic import auto_k, kmeans_int8_tree, tree_from_json, tree_to_json
+    from ..operators.semantic import auto_k, kmeans_int8_tree, tree_to_json
 
-    def dedupe_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        from pyspark.sql import functions as F
+    def bootstrap(batch_df: DataFrame) -> dict | None:
+        n = batch_df.count()
+        kk = k if k is not None else auto_k(n, target_cell_size)
+        _, _, tree = kmeans_int8_tree(batch_df, kk, iters, dims, id_col, vec_col, n_docs=n)
+        if tree is None:  # no valid vectors — nothing to cluster on
+            batch_df.write.mode("append").parquet(accepted_path)
+            return None
+        return {
+            "kind": ix.SEM_KIND,
+            "id_col": id_col,
+            "id_type": dict(batch_df.dtypes)[id_col],
+            "dims": dims,
+            "k": kk,
+            "iters": iters,
+            "n_buckets": n_buckets or ix.auto_index_buckets(n),
+            "target_cell_size": target_cell_size,
+            "bootstrap_rows": n,
+            "rows": 0,
+            "tree": tree_to_json(tree),
+        }
 
-        spark = batch_df.sparkSession
-        # the WHOLE batch body holds the (reentrant) writer slot
-        # (r11 review): recovery's debris reap, the data/seen appends
-        # and in-line maintenance all serialize against external
-        # maintenance ops instead of racing their generation swaps.
-        # owner=checkpoint: restart reclaims its own hard-kill-stranded
-        # lock (see stream_incremental_dedup)
-        with ix.writer_lock(
-            spark, index_path, "stream_batch", retries=120, owner=checkpoint
-        ):
-            # UNCONDITIONAL — same crash-class immunity as the other sinks
-            ix.recover_compaction(spark, index_path)
-            # resolve the pointer ONCE per batch — meta and data must come
-            # from the same generation (round-9 advice: a flip between
-            # separate meta/live reads pairs stale meta with new data)
-            live, meta = ix.live_index(spark, index_path)
-            if meta is None:
-                n = batch_df.count()
-                kk = k if k is not None else auto_k(n, target_cell_size)
-                _, _, tree = kmeans_int8_tree(
-                    batch_df, kk, iters, dims, id_col, vec_col, n_docs=n
-                )
-                if tree is None:  # no valid vectors — nothing to cluster on
-                    batch_df.write.mode("append").parquet(accepted_path)
-                    return
-                meta = {
-                    "kind": ix.SEM_KIND,
-                    "id_col": id_col,
-                    "id_type": dict(batch_df.dtypes)[id_col],
-                    "dims": dims,
-                    "k": kk,
-                    "iters": iters,
-                    "n_buckets": n_buckets or ix.auto_index_buckets(n),
-                    "target_cell_size": target_cell_size,
-                    "bootstrap_rows": n,
-                    "rows": 0,
-                    "tree": tree_to_json(tree),
-                }
-                live = ix.init_index(spark, index_path, meta, lock_retries=60)
-            else:
-                if meta.get("kind") != ix.SEM_KIND:
-                    raise ValueError(f"index at {index_path} is kind={meta.get('kind')!r}")
-                expected = {"id_col": id_col, "dims": dims}
-                if k is not None:
-                    expected["k"] = k
-                ix._require_meta(meta, expected, index_path)
-                ix._check_id_type(batch_df, meta, index_path)
-            nb = meta["n_buckets"]
-            tree = tree_from_json(meta["tree"])
+    def recluster_dial(spark) -> None:
+        # the rebuild-and-swap runs with no appender live, and the next
+        # batch resolves the new generation's tree/meta
+        if ix.semantic_recluster_due(spark, index_path, drift_factor):
+            ix.recluster_semantic_index(spark, index_path, lock_retries=60)
 
-            tombs = ix._tombstone_list(spark, live)
-            fresh = _filter_fresh(batch_df, live, meta).persist()
-            if fresh.isEmpty():
-                fresh.unpersist()
-                return
-            new_rows = (
-                semantic_cell_index(fresh, tree, meta["dims"], id_col, vec_col)
-                .withColumn("pfx", ix._cell_pfx(nb))
-                .persist()
-            )
-            try:
-                touched = [
-                    r.pfx
-                    for r in new_rows.select("pfx")
-                    .where(F.col("pfx").isNotNull())
-                    .distinct()
-                    .collect()
-                ]
-                index = ix._minus_tombstones(
-                    spark, live, meta,
-                    ix.pruned_read(spark, live, ix._sem_schema(meta), touched), tombs,
-                )
-                res = incremental_semantic_near_dup(
-                    fresh,
-                    index.drop("pfx"),
-                    tree,
-                    threshold,
-                    meta["dims"],
-                    id_col,
-                    vec_col,
-                    index_meta=meta,
-                    _new_rows=new_rows.drop("pfx"),
-                )
-                res.accepted.write.mode("append").parquet(accepted_path)
-                new_rows.write.mode("append").partitionBy("pfx").parquet(live)
-                # counter bump BEFORE the seen marker: a crash in between
-                # replays the batch, physically re-appending rows while the
-                # counter was already bumped once, so meta['rows'] UNDER-
-                # counts physical rows until the next compact/recluster
-                # recount (round-10 advice) — acceptable for a drift
-                # heuristic: the dial fires LATE, never spuriously, and
-                # compact_every bounds the drift window.  (Bump-after-seen
-                # would overcount on the mirror-image crash — same class.)
-                meta = ix._bump_rows(spark, live, meta, new_rows.count())
-                # re-ingested takedown ids become servable again — cleared
-                # BEFORE the seen marker (see stream_incremental_dedup)
-                back = ix._reingested_tombstones(spark, meta, fresh, tombs)
-                if back:
-                    ix.clear_tombstones(spark, live, back)
-                _append_seen(fresh, live, meta)  # commit marker
-                if compact_every and (_batch_id + 1) % compact_every == 0:
-                    ix.compact_index(spark, index_path, lock_retries=60)
-                if recluster_when_due and ix.semantic_recluster_due(
-                    spark, index_path, drift_factor
-                ):
-                    # BETWEEN-triggers writer slot, same as compaction: the
-                    # rebuild-and-swap runs with no appender live, and the
-                    # next batch resolves the new generation's tree/meta
-                    ix.recluster_semantic_index(spark, index_path, lock_retries=60)
-            finally:
-                new_rows.unpersist()
-                fresh.unpersist()
-
-    writer = stream.writeStream.foreachBatch(dedupe_batch).option(
-        "checkpointLocation", checkpoint
+    expected = {"id_col": id_col, "dims": dims}
+    if k is not None:
+        expected["k"] = k
+    return _dedup_sink(
+        stream, index_path, accepted_path, checkpoint, trigger_available_now,
+        ix.SEM_KIND,
+        expected,
+        {"threshold": threshold, "vec_col": vec_col},
+        bootstrap,
+        compact_every,
+        recluster_dial if recluster_when_due else None,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_incremental_embed_near_dup(
@@ -497,159 +424,62 @@ def stream_incremental_embed_near_dup(
     same dropDuplicates([id]) read contract.  ``compact_every`` behaves
     exactly as in :func:`stream_incremental_dedup` (compaction between
     triggers + per-batch crash recovery)."""
-    from ..operators import index_store as ix
-    from ..operators.incremental import (
-        embedding_bucket_index,
-        incremental_embed_near_dup,
+    from pyspark.sql import functions as F
+
+    from ..operators.similarity import embedding_center
+
+    def bootstrap(batch_df: DataFrame) -> dict | None:
+        if batch_df.isEmpty():
+            return None  # size/center next batch (see the band sink)
+        # the bootstrap batch must hold at least one VALID vector (r12
+        # review): an all-corrupt batch 0 under center="auto" would pin
+        # center=[0.0]*dims in the sidecar FOREVER — reintroducing the
+        # anisotropic bucket collapse the auto-center exists to prevent
+        # — and its row count is a junk n_buckets sizing either way.
+        # Mirror the semantic sink's no-valid-vectors path: pass the
+        # batch through accepted as-is and retry bootstrap next batch.
+        amax = F.array_max(F.transform(F.col(vec_col), lambda x: F.abs(x)))
+        valid = (
+            F.col(vec_col).isNotNull()
+            & (F.size(vec_col) == dims)
+            # interior NULL elements too (r12 advice): array_max SKIPS
+            # nulls, so a right-length all-NULL-element vector passes
+            # the amax tests yet lands in the NULL bucket — it must not
+            # size n_buckets or seed center
+            & ~F.exists(F.col(vec_col), lambda x: x.isNull())
+            & ~F.isnan(amax)
+            & (amax != F.lit(float("inf")))
+        )
+        if batch_df.where(valid).isEmpty():
+            batch_df.write.mode("append").parquet(accepted_path)
+            return None
+        c = embedding_center(batch_df, dims, vec_col) if center == "auto" else center
+        return {
+            "kind": ix.EMBED_KIND,
+            "id_col": id_col,
+            "id_type": dict(batch_df.dtypes)[id_col],
+            "dims": dims,
+            "n_planes": n_planes,
+            "center": c,
+            "n_buckets": n_buckets or ix.auto_index_buckets(batch_df.count()),
+            "rows": 0,  # running counter (r11) — bumped per batch
+        }
+
+    # validate the CALLER's params against the sidecar — passing meta's
+    # own values into the builders would compare the sidecar against
+    # itself and never fire (round-7 advice)
+    expected = {"id_col": id_col, "dims": dims, "n_planes": n_planes}
+    if center != "auto":
+        expected["center"] = center
+    return _dedup_sink(
+        stream, index_path, accepted_path, checkpoint, trigger_available_now,
+        ix.EMBED_KIND,
+        expected,
+        {"threshold": threshold, "vec_col": vec_col},
+        bootstrap,
+        compact_every,
+        _rebucket_dial(index_path, rebucket_target_rows) if rebucket_when_due else None,
     )
-
-    def dedupe_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        from ..operators.similarity import embedding_center
-
-        spark = batch_df.sparkSession
-        # the WHOLE batch body holds the (reentrant) writer slot
-        # (r11 review): recovery's debris reap, the data/seen appends
-        # and in-line maintenance all serialize against external
-        # maintenance ops instead of racing their generation swaps.
-        # owner=checkpoint: restart reclaims its own hard-kill-stranded
-        # lock (see stream_incremental_dedup)
-        with ix.writer_lock(
-            spark, index_path, "stream_batch", retries=120, owner=checkpoint
-        ):
-            # UNCONDITIONAL (not gated on compact_every): a compaction crash
-            # mid-swap leaves no live index, and a restart that dropped the
-            # flag would otherwise read meta=None and silently bootstrap a
-            # fresh EMPTY index over the trash — then a later recovery call
-            # would see root+trash, declare the compaction "finished", and
-            # delete the old index permanently.  Two fs.exists calls per
-            # batch buys immunity to that whole class.
-            ix.recover_compaction(spark, index_path)
-            # resolve the pointer ONCE per batch — meta and data must come
-            # from the same generation (round-9 advice: a flip between
-            # separate meta/live reads pairs stale meta with new data)
-            live, meta = ix.live_index(spark, index_path)
-            if meta is None:
-                if batch_df.isEmpty():
-                    return  # size/center next batch (see the band sink)
-                # the bootstrap batch must hold at least one VALID vector
-                # (r12 review): an all-corrupt batch 0 under center="auto"
-                # would pin center=[0.0]*dims in the sidecar FOREVER —
-                # reintroducing the anisotropic bucket collapse the
-                # auto-center exists to prevent — and its row count is a
-                # junk n_buckets sizing either way.  Mirror the semantic
-                # sink's no-valid-vectors path: pass the batch through
-                # accepted as-is and retry bootstrap on the next batch.
-                amax = F.array_max(F.transform(F.col(vec_col), lambda x: F.abs(x)))
-                valid = (
-                    F.col(vec_col).isNotNull()
-                    & (F.size(vec_col) == dims)
-                    # interior NULL elements too (r12 advice): array_max
-                    # SKIPS nulls, so a right-length all-NULL-element
-                    # vector passes the amax tests yet lands in the NULL
-                    # bucket — it must not size n_buckets or seed center
-                    & ~F.exists(F.col(vec_col), lambda x: x.isNull())
-                    & ~F.isnan(amax)
-                    & (amax != F.lit(float("inf")))
-                )
-                if batch_df.where(valid).isEmpty():
-                    batch_df.write.mode("append").parquet(accepted_path)
-                    return
-                c = embedding_center(batch_df, dims, vec_col) if center == "auto" else center
-                meta = {
-                    "kind": ix.EMBED_KIND,
-                    "id_col": id_col,
-                    "id_type": dict(batch_df.dtypes)[id_col],
-                    "dims": dims,
-                    "n_planes": n_planes,
-                    "center": c,
-                    "n_buckets": n_buckets or ix.auto_index_buckets(batch_df.count()),
-                    "rows": 0,  # running counter (r11) — bumped per batch
-                }
-                live = ix.init_index(spark, index_path, meta, lock_retries=60)
-            else:
-                if meta.get("kind") != ix.EMBED_KIND:
-                    raise ValueError(f"index at {index_path} is kind={meta.get('kind')!r}")
-                # validate the CALLER's params against the sidecar — passing
-                # meta's own values into the builders below would compare the
-                # sidecar against itself and never fire (round-7 advice)
-                expected = {"id_col": id_col, "dims": dims, "n_planes": n_planes}
-                if center != "auto":
-                    expected["center"] = center
-                ix._require_meta(meta, expected, index_path)
-                ix._check_id_type(batch_df, meta, index_path)
-            nb = meta["n_buckets"]
-
-            tombs = ix._tombstone_list(spark, live)
-            fresh = _filter_fresh(batch_df, live, meta).persist()
-            if fresh.isEmpty():
-                fresh.unpersist()
-                return
-            new_rows = (
-                embedding_bucket_index(
-                    fresh, meta["dims"], meta["n_planes"], id_col, vec_col, meta["center"]
-                )
-                .withColumn("pfx", ix._bucket_pfx(nb))
-                .persist()
-            )
-            try:
-                touched = [
-                    r.pfx
-                    for r in new_rows.select("pfx")
-                    .where(F.col("pfx").isNotNull())
-                    .distinct()
-                    .collect()
-                ]
-                index = ix._minus_tombstones(
-                    spark, live, meta,
-                    ix.pruned_read(spark, live, ix._embed_schema(meta), touched), tombs,
-                )
-                res = incremental_embed_near_dup(
-                    fresh,
-                    index.drop("pfx"),
-                    threshold,
-                    meta["dims"],
-                    meta["n_planes"],
-                    id_col,
-                    vec_col,
-                    meta["center"],
-                    index_meta=meta,
-                    _new_rows=new_rows.drop("pfx"),
-                )
-                res.accepted.write.mode("append").parquet(accepted_path)
-                new_rows.write.mode("append").partitionBy("pfx").parquet(live)
-                # counter bump before the seen marker — same replay-
-                # undercount trade as the semantic sink (see that comment)
-                meta = ix._bump_rows(spark, live, meta, new_rows.count())
-                # re-ingested takedown ids become servable again — cleared
-                # BEFORE the seen marker (see stream_incremental_dedup)
-                back = ix._reingested_tombstones(spark, meta, fresh, tombs)
-                if back:
-                    ix.clear_tombstones(spark, live, back)
-                _append_seen(fresh, live, meta)  # commit marker
-                if compact_every and (_batch_id + 1) % compact_every == 0:
-                    ix.compact_index(spark, index_path, lock_retries=60)
-                if rebucket_when_due and ix.rebucket_due(
-                    spark, index_path, target_rows_per_bucket=rebucket_target_rows
-                ):
-                    # SAME target as the dial (see stream_incremental_dedup)
-                    ix.rebucket_index(
-                        spark,
-                        index_path,
-                        target_rows_per_bucket=rebucket_target_rows,
-                        lock_retries=60,
-                    )
-            finally:
-                new_rows.unpersist()
-                fresh.unpersist()
-
-    writer = stream.writeStream.foreachBatch(dedupe_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_ivf_ingest(
@@ -695,57 +525,39 @@ def stream_ivf_ingest(
     (``compact_every`` bounds the exposure; the dedup kinds' duplicate
     rows are correctness-neutral, the IVF kind's are
     quality-transient)."""
-    from ..operators import index_store as ix
 
-    def ingest_batch(batch_df: DataFrame, _batch_id: int) -> None:
+    def body(batch_df: DataFrame, batch_id: int, live, meta) -> None:
         spark = batch_df.sparkSession
-        # the WHOLE batch body holds the (reentrant) writer slot
-        # (r11 review): recovery's debris reap, the data/seen appends
-        # and in-line maintenance all serialize against external
-        # maintenance ops instead of racing their generation swaps.
-        # owner=checkpoint: restart reclaims its own hard-kill-stranded
-        # lock (see stream_incremental_dedup)
-        with ix.writer_lock(
-            spark, index_path, "stream_batch", retries=120, owner=checkpoint
-        ):
-            ix.recover_compaction(spark, index_path)
+        if meta is None:
+            if batch_df.isEmpty():
+                return  # nothing to bootstrap a codebook from yet
+            ix.create_ivf_index(
+                batch_df, index_path,
+                nlist=nlist, id_col=id_col, vec_col=vec_col,
+                codec=codec, m=m, ksub=ksub, n_buckets=n_buckets,
+                lock_retries=60,
+            )
+            # seen marker for the bootstrap batch, written LAST like the
+            # append path's — a crash in between replays batch 1 as
+            # full-row dups (see the at-least-once note above)
             live, meta = ix.live_index(spark, index_path)
-            if meta is None:
-                if batch_df.isEmpty():
-                    return  # nothing to bootstrap a codebook from yet
-                ix.create_ivf_index(
-                    batch_df, index_path,
-                    nlist=nlist, id_col=id_col, vec_col=vec_col,
-                    codec=codec, m=m, ksub=ksub, n_buckets=n_buckets,
-                    lock_retries=60,
-                )
-                # seen marker for the bootstrap batch, written LAST like the
-                # append path's — a crash in between replays batch 1 as
-                # full-row dups (see the at-least-once note above)
-                live, meta = ix.live_index(spark, index_path)
-                ix.append_seen_ids(batch_df.select(id_col), live, meta)
-            else:
-                if meta.get("kind") != ix.IVF_KIND:
-                    raise ValueError(f"index at {index_path} is kind={meta.get('kind')!r}")
-                # nlist is deliberately NOT validated (r11 review): it is
-                # a create-time sizing dial, not index identity — retrain
-                # re-sizes it to the grown corpus, and a bootstrap batch
-                # with fewer valid vectors than requested stores fewer
-                # centroids; pinning it would kill the stream on the
-                # first retrain.  The codebook itself always comes from
-                # the sidecar.
-                expected = {"id_col": id_col, "vec_col": vec_col, "codec": codec}
-                ix._require_meta(meta, expected, index_path)
-                ix._check_id_type(batch_df, meta, index_path)
-                ix.append_ivf_vectors(batch_df, index_path, dedupe_redelivery=True)
-            if compact_every and (_batch_id + 1) % compact_every == 0:
-                ix.compact_index(spark, index_path, lock_retries=60)
-            if retrain_when_due and ix.ivf_retrain_due(spark, index_path, drift_factor):
-                ix.retrain_ivf_index(spark, index_path, lock_retries=60)
+            ix.append_seen_ids(batch_df.select(id_col), live, meta)
+        else:
+            ix.append_ivf_vectors(batch_df, index_path, dedupe_redelivery=True)
+        _maintain(spark, index_path, batch_id, compact_every, dial)
 
-    writer = stream.writeStream.foreachBatch(ingest_batch).option(
-        "checkpointLocation", checkpoint
+    def retrain_dial(spark) -> None:
+        if ix.ivf_retrain_due(spark, index_path, drift_factor):
+            ix.retrain_ivf_index(spark, index_path, lock_retries=60)
+
+    dial = retrain_dial if retrain_when_due else None
+    # nlist is deliberately NOT validated (r11 review): it is a
+    # create-time sizing dial, not index identity — retrain re-sizes it
+    # to the grown corpus, and a bootstrap batch with fewer valid
+    # vectors than requested stores fewer centroids; pinning it would
+    # kill the stream on the first retrain.  The codebook itself always
+    # comes from the sidecar.
+    expected = {"id_col": id_col, "vec_col": vec_col, "codec": codec}
+    return _index_sink(
+        stream, index_path, checkpoint, trigger_available_now, ix.IVF_KIND, expected, body
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -16,6 +16,17 @@ from meta_morph_etl_databricks_spark.operators.incremental import (
 K, B, T = 16, 4, 0.8
 
 
+def _qcos(a_code, b_code, a_norm, b_norm):
+    """Relational int8 cosine — the reference the engine's Arrow pair
+    scorer (incremental._qcos_reject_ids) must reproduce bit-for-bit:
+    exact long dot via aggregate(zip_with), NULL unless both norms are
+    positive, then ``d / (a_norm * b_norm)`` in IEEE double."""
+    from meta_morph_etl_databricks_spark.operators.quantize import qdot
+
+    d = qdot(a_code, b_code).cast("double")
+    return F.when((a_norm > 0) & (b_norm > 0), d / (a_norm * b_norm))
+
+
 def one_shot_accepted(docs):
     """The reference policy, directly: estimate-verified pairs over the
     whole corpus, drop the higher id of every pair."""
@@ -441,7 +452,6 @@ def test_incremental_embed_near_dup_matches_one_shot(spark):
     from meta_morph_etl_databricks_spark.operators.incremental import (
         embedding_bucket_index,
         incremental_embed_near_dup,
-        _qcos,
     )
 
     import math
@@ -876,10 +886,12 @@ def test_stream_compact_every_and_mid_swap_recovery(spark, tmp_path):
 def test_arrow_pair_scorer_matches_jvm_filter(spark, monkeypatch):
     """r14 _qcos_reject_ids: the mapInArrow pair scorer must produce
     the same accepted set as the relational aggregate(zip_with) filter
-    (SPARK_GRAFT_JVM_PAIR_SCORER=1), on both the semantic and the
-    embedding serve paths — including near-threshold pairs."""
+    it replaced (:func:`_qcos`, swapped in as the reference), on both
+    the semantic and the embedding serve paths — including
+    near-threshold pairs."""
     import random
 
+    from meta_morph_etl_databricks_spark.operators import incremental
     from meta_morph_etl_databricks_spark.operators.incremental import (
         embedding_bucket_index,
         incremental_embed_near_dup,
@@ -887,6 +899,12 @@ def test_arrow_pair_scorer_matches_jvm_filter(spark, monkeypatch):
         semantic_cell_index,
     )
     from meta_morph_etl_databricks_spark.operators.semantic import kmeans_int8_tree
+
+    def jvm_reject_ids(pairs, id_col, a_vec, b_vec, a_norm, b_norm, threshold,
+                       out_name, out_type):
+        return pairs.where(_qcos(a_vec, b_vec, a_norm, b_norm) >= threshold).select(
+            id_col.alias(out_name)
+        )
 
     rng = random.Random(7)
     base = [[rng.uniform(-3, 3) for _ in range(8)] for _ in range(12)]
@@ -907,11 +925,9 @@ def test_arrow_pair_scorer_matches_jvm_filter(spark, monkeypatch):
 
     def run_both(fn):
         got = sorted(r.vec_id for r in fn().accepted.collect())
-        monkeypatch.setenv("SPARK_GRAFT_JVM_PAIR_SCORER", "1")
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(incremental, "_qcos_reject_ids", jvm_reject_ids)
             want = sorted(r.vec_id for r in fn().accepted.collect())
-        finally:
-            monkeypatch.delenv("SPARK_GRAFT_JVM_PAIR_SCORER")
         assert got == want and got
         return got
 
@@ -958,3 +974,48 @@ def test_arrow_pair_scorer_degenerate_batches(spark):
         ).collect()
     )
     assert got == [1]
+
+
+def test_embed_sink_does_not_bootstrap_from_interior_null_batch(spark, tmp_path):
+    """Batch 0 whose only right-length vectors carry NULL ELEMENTS must
+    pass through un-indexed (like the all-NaN batch) — array_max skips
+    NULLs so the r12 guard accepted them, pinning n_buckets and a
+    partial center from rows that all land in the NULL bucket."""
+    import random
+
+    from meta_morph_etl_databricks_spark.operators import index_store as ix
+    from meta_morph_etl_databricks_spark.streaming.dedup import (
+        stream_incremental_embed_near_dup,
+    )
+
+    schema = "vec_id long, embedding array<double>"
+
+    esrc = tmp_path / "esrc"
+    esrc.mkdir()
+    eidx = str(tmp_path / "eidx")
+    eacc, eckpt = str(tmp_path / "eacc"), str(tmp_path / "eckpt")
+
+    # batch 0: every vector is dims-long but has a NULL element
+    sneaky = [(i, [1.0] * i + [None] + [1.0] * (7 - i)) for i in range(4)]
+    spark.createDataFrame(sneaky, schema).write.parquet(str(esrc / "b0"))
+    stream = spark.readStream.schema(schema).parquet(str(esrc) + "/*")
+    stream_incremental_embed_near_dup(
+        stream, eidx, eacc, eckpt, dims=8
+    ).awaitTermination(120)
+    assert ix.live_index(spark, eidx)[1] is None  # no bootstrap
+    assert spark.read.parquet(eacc).count() == 4  # passed through
+
+    # first honest batch bootstraps, centered on real data only
+    rng = random.Random(13)
+    spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(10, 16)],
+        schema,
+    ).write.parquet(str(esrc / "b1"))
+    stream = spark.readStream.schema(schema).parquet(str(esrc) + "/*")
+    stream_incremental_embed_near_dup(
+        stream, eidx, eacc, eckpt, dims=8
+    ).awaitTermination(180)
+    meta = ix.live_index(spark, eidx)[1]
+    assert meta is not None
+    assert any(abs(c) > 0 for c in meta["center"])
+    assert spark.read.parquet(eacc).count() == 10

@@ -492,3 +492,77 @@ def test_seen_store_travels_with_the_generation(spark, corpus, tmp_path):
     live = ix.live_root(spark, d)
     got = sorted(r.doc_id for r in spark.read.parquet(f"{live}/_seen_ids").collect())
     assert got == [1, 2]
+
+
+@pytest.mark.parametrize("kind", ["band", "embed", "semantic"])
+def test_stream_sink_and_batch_serve_share_one_path(spark, corpus, emb, tmp_path, kind):
+    """The streaming sinks run the batch serves' plan and append steps:
+    two micro-batches through a sink, then the same two increments
+    through ``serve_*(append=True)`` against a fresh index initialized
+    from the sink's own sidecar, accept the same ids and leave the same
+    multiset of index rows (NULL-pfx corrupt rows included)."""
+    from meta_morph_etl_databricks_spark.streaming import dedup as sd
+
+    if kind == "band":
+        data, id_col, cut, end = corpus, "doc_id", 30, 60
+        sink = lambda s, *p: sd.stream_incremental_dedup(s, *p)  # noqa: E731
+        serve = ix.serve_incremental_dedup
+    else:
+        data, id_col, cut, end = emb, "vec_id", 20, 40
+        if kind == "embed":
+            sink = lambda s, *p: sd.stream_incremental_embed_near_dup(s, *p, dims=16)  # noqa: E731
+            serve = ix.serve_incremental_embed_near_dup
+        else:
+            sink = lambda s, *p: sd.stream_incremental_semantic_dedup(  # noqa: E731
+                s, *p, k=3, dims=16
+            )
+            serve = ix.serve_incremental_semantic_dedup
+    batches = [data.where(F.col(id_col) < cut), data.where(F.col(id_col) >= cut)]
+
+    src = tmp_path / "src"
+    src.mkdir()
+    sidx, acc, ckpt = str(tmp_path / "sidx"), str(tmp_path / "acc"), str(tmp_path / "ckpt")
+    for i, b in enumerate(batches):
+        b.write.parquet(str(src / f"b{i}"))
+        stream = spark.readStream.schema(data.schema).parquet(str(src) + "/*")
+        sink(stream, sidx, acc, ckpt).awaitTermination(180)
+    sink_ids = sorted(r[0] for r in spark.read.parquet(acc).select(id_col).collect())
+    live, meta = ix.live_index(spark, sidx)
+
+    bidx = str(tmp_path / "bidx")
+    ix.init_index(spark, bidx, dict(meta, rows=0))
+    serve_ids = sorted(
+        r[0]
+        for b in batches
+        for r in serve(b, bidx, append=True).accepted.select(id_col).collect()
+    )
+    assert serve_ids == sink_ids and len(sink_ids) < end  # some rejected
+
+    def index_rows(root):
+        return spark.read.schema(ix._kind_schema(meta)).parquet(ix.live_root(spark, root))
+
+    a, b = index_rows(sidx), index_rows(bidx)
+    assert a.count() == b.count() > 0
+    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+    assert ix.live_index(spark, bidx)[1]["rows"] == meta["rows"]
+
+
+def test_band_serve_append_job_count_is_pinned(spark, corpus, tmp_path):
+    """One ``serve_incremental_dedup(append=True)`` increment runs a
+    fixed set of Spark jobs — the touched-pfx probe, the partitioned
+    append and the counter's count over the persisted band rows, six
+    under AQE (the same six before the serves and sinks shared one
+    path).  The policy stays lazy (no job until the caller's action),
+    and already-persisted rows are not checkpointed again."""
+    d = str(tmp_path / "jidx")
+    ix.create_band_index(corpus.where("doc_id < 40"), d, n_buckets=8)
+    inc = corpus.where("doc_id >= 40")
+    sc = spark.sparkContext
+    sc.setJobGroup("band_serve_append", "one increment")
+    try:
+        res = ix.serve_incremental_dedup(inc, d, append=True)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("band_serve_append"))
+    finally:
+        sc.setJobGroup(None, None)
+    assert n_jobs == 6
+    assert res.accepted.count() > 0

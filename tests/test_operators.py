@@ -1512,3 +1512,32 @@ def test_connected_components_driver_matches_distributed(spark, monkeypatch):
     monkeypatch.setattr(C, "_DRIVER_CC_MAX_EDGES", 0)
     want = sorted(map(tuple, C.connected_components(pairs).collect()))
     assert got == want and got
+
+
+def test_dlit_renders_every_double_bit_exactly(spark):
+    """The expr-string kernels interpolate doubles via similarity._dlit;
+    one batch proves the rendered literal parses back to the SAME bits
+    for the adversarial cases: non-finite (repr gave 'nanD' — a
+    ParseException pre-fix), signed zero, subnormals, extremes, and
+    shortest-repr values."""
+    import math
+    import struct
+
+    from meta_morph_etl_databricks_spark.operators.similarity import _dlit
+    from pyspark.sql import functions as F
+
+    vals = [
+        float("nan"), float("inf"), float("-inf"), 0.0, -0.0,
+        5e-324, -5e-324, 2.2250738585072014e-308,  # subnormal / min normal
+        1.7976931348623157e308, -1.7976931348623157e308,
+        0.1, -0.30000000000000004, math.pi, 1e-17, 123456789.123456789,
+        1.0000000000000002,  # one ulp above 1
+    ]
+    row = (
+        spark.range(1)
+        .select(F.expr("array({})".format(", ".join(_dlit(v) for v in vals))))
+        .first()[0]
+    )
+    assert len(row) == len(vals)
+    for want, got in zip(vals, row):
+        assert struct.pack("<d", want) == struct.pack("<d", got), (want, got)

@@ -383,9 +383,9 @@ def test_rebucket_resizes_at_the_dial_target(spark, tmp_path):
 
 # -------------------------------------------------- torn-tmp tombstones
 # ------------------------------------------- module-review (r12) fixes
-def test_append_sem_rows_bumps_counter(spark, tmp_path):
-    """The SEM kind's public append helper must feed the drift dial
-    like its band/embed siblings (review: it was the one append that
+def test_append_index_rows_bumps_sem_counter(spark, tmp_path):
+    """The shared public append helper must feed the SEM kind's drift
+    dial like the band/embed ones (review: the old per-kind SEM helper
     skipped the bump, freezing semantic_recluster_due at the bootstrap
     count forever)."""
     import random
@@ -407,7 +407,7 @@ def test_append_sem_rows_bumps_counter(spark, tmp_path):
     meta = ix.create_semantic_index(emb(0, 40), path, k=4, iters=1, dims=8)
     assert ix.live_index(spark, path)[1]["rows"] == 40
     coded = semantic_cell_index(emb(100, 25), tree_from_json(meta["tree"]), 8)
-    ix.append_sem_rows(coded, path, meta)
+    ix.append_index_rows(coded, path, meta)
     live, meta2 = ix.live_index(spark, path)
     assert meta2["rows"] == 65  # counter grew with the append
     # the dial reads the grown count — and the resolved= hook matches

@@ -593,6 +593,23 @@ def test_relation_cache_hits_and_never_serves_stale(spark, tmp_path):
     assert df4 is not df3 and df4.rdd.getNumPartitions() <= 2
 
 
+def test_relation_cache_is_keyed_by_session(spark, tmp_path):
+    """``spark.newSession()`` shares the applicationId but not the
+    confs: a sibling session must get a frame bound to itself, never
+    the first session's cached relation."""
+    import meta_morph_etl_databricks_spark.sources.scans as scans
+
+    d = str(tmp_path)
+    spark.range(4).selectExpr("id AS a").write.parquet(f"{d}/t.parquet")
+    df1 = scans.read_parquet_table(spark, d, "t")
+    s2 = spark.newSession()
+    df2 = scans.read_parquet_table(s2, d, "t")
+    assert df1.sparkSession is spark
+    assert df2.sparkSession is s2 and df2 is not df1
+    assert scans.read_parquet_table(s2, d, "t") is df2  # still cached per session
+    assert df2.count() == 4
+
+
 def _local_scan(df) -> bool:
     return "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
 

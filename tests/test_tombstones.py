@@ -280,3 +280,47 @@ def test_tombstone_write_crash_windows(spark, tmp_path, monkeypatch):
     assert ix._tombstone_list(spark, live2) == []
     df, _ = ix.open_band_index(spark, path)
     assert df.where(df.doc_id.isin([1, 2, 3, 4])).isEmpty()
+
+
+# -------------------------------------------------- tombstone id types
+def _mk_band_index(spark, path, n_docs: int = 30):
+    rows = [(i, " ".join(f"d{i}w{j}" for j in range(30))) for i in range(n_docs)]
+    docs = spark.createDataFrame(rows, DSCHEMA)
+    ix.create_band_index(docs, path, n_buckets=8)
+    return docs
+
+
+def test_tombstone_ids_rejects_wrong_type_before_persisting(spark, tmp_path):
+    """r12 advice removed the accidental sorted() type-guard; the r13
+    review showed the real hazard was never orderability — a wrong-type
+    id WRITTEN to the sidecar crashes every later append-mode serve
+    (``_ids_df``: 'LongType can not accept object x').  The request now
+    fails fast against the sidecar's id type and nothing persists."""
+    import pytest
+
+    path = str(tmp_path / "bidx")
+    _mk_band_index(spark, path)  # doc_id bigint
+    with pytest.raises(TypeError, match="incompatible id"):
+        ix.tombstone_ids(spark, path, [2, "x"])
+    with pytest.raises(TypeError, match="incompatible id"):
+        ix.tombstone_ids(spark, path, [True])  # bool is not an id
+    assert ix.index_info(spark, path)["pending_tombstones"] == 0  # nothing wrote
+    with pytest.raises(TypeError, match="incompatible id"):
+        ix.retract_ids(spark, path, ["x"])
+    # valid ints still land, and the index stays servable afterwards
+    assert ix.tombstone_ids(spark, path, [2, 1, 2]) == 2
+    docs = spark.createDataFrame(
+        [(100, " ".join(f"n{j}" for j in range(30)))], DSCHEMA
+    )
+    assert ix.serve_incremental_dedup(docs, path).accepted.count() == 1
+
+
+def test_tombstone_ids_preserves_request_order_same_type(spark, tmp_path):
+    path = str(tmp_path / "bidx2")
+    _mk_band_index(spark, path)
+    assert ix.tombstone_ids(spark, path, [9, 3, 7, 3]) == 3
+    live, _ = ix.live_index(spark, path)
+    assert ix._tombstone_list(spark, live) == [9, 3, 7]
+    # idempotent re-request
+    assert ix.tombstone_ids(spark, path, [3, 9]) == 0
+    assert ix.index_info(spark, path)["pending_tombstones"] == 3

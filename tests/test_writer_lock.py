@@ -92,7 +92,7 @@ def test_concurrent_compact_and_retract_serialize(spark, tmp_path):
     path = str(tmp_path / "bidx")
     docs = _mk_band_index(spark, path)
     # appends create replay-style duplicate rows for compact to drop
-    ix.append_band_rows(
+    ix.append_index_rows(
         ix.minhash_band_index(docs.limit(5), "text", "doc_id", 16, 4), path,
         ix.read_index_meta(spark, path),
     )

@@ -1206,7 +1206,7 @@ def bench_rebucket(spark, sampler: _Sampler, label: str, d: str, passes: int = 2
     try:
         meta = ix.create_band_index(boot, idx_dir)
         nb0 = meta["n_buckets"]
-        ix.append_band_rows(
+        ix.append_index_rows(
             minhash_band_index(grow, "text", "doc_id", meta["num_hashes"], meta["bands"]),
             idx_dir,
             meta,
