@@ -29,12 +29,10 @@ plan doubles per iteration and analysis time goes exponential.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_DRIVER_CC_MAX_EDGES = int(os.environ.get("SPARK_GRAFT_DRIVER_CC_EDGES", "131072"))
+_DRIVER_CC_MAX_EDGES = 131072
 
 
 def _checkpoint(df: DataFrame) -> DataFrame:

@@ -324,15 +324,13 @@ def ngram_jaccard_pairs(
 # ------------------------------------------------------------ curation
 def curate_corpus(
     docs: DataFrame,
+    banded: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     min_quality: float = 0.5,
     jaccard_threshold: float = 0.8,
-    num_hashes: int = 16,
-    bands: int = 4,
     persist_gated: bool = True,
     group_collapse: bool = False,
-    _banded: DataFrame | None = None,
 ) -> DataFrame:
     """The full training-data curation pipeline as one composition:
 
@@ -341,6 +339,14 @@ def curate_corpus(
        (a window filter — one shuffle on the fingerprint, no self-join)
     3. near-dup removal: MinHash-LSH candidates → exact n-gram Jaccard ≥
        ``jaccard_threshold`` → drop the higher id of every pair
+
+    ``banded`` is the MATERIALIZED band index of ``docs``
+    (incremental.minhash_band_index, same ``text_col``/``id_col``, at
+    the caller's num_hashes/bands).  Band rows are a per-document map
+    of the text, so the gated set's rows are a semi-join SLICE of it:
+    candidates are one id equi-join + the banded self-join, and a plan
+    that also serves increments pays the shingle→md5→min chain once
+    (r14, guide §2.4: q_corpus_curation _build 2.63→~1.7 s at sf0.1).
 
     Returns the surviving rows of ``docs`` plus the profile columns.
     Every stage is a shuffle-bounded relational plan (hash aggregates
@@ -378,39 +384,24 @@ def curate_corpus(
     # contract, and pinning them lets prune_docs restrict the verify's
     # two shingle-set passes to docs that appear in a pair instead of
     # re-shingling the whole gated corpus twice
-    if _banded is not None:
-        # ``_banded`` = a MATERIALIZED full-corpus band index
-        # (incremental.minhash_band_index, SAME text_col/id_col/
-        # num_hashes/bands/shingle defaults — the caller's contract,
-        # like incremental_dedup's ``_banded``).  Band rows are a pure
-        # per-document map of the text, so the gated set's rows are a
-        # semi-join SLICE of the full index — candidates become one
-        # id equi-join + the banded self-join instead of a second
-        # shingle→md5→min chain over the gated corpus (r14, guide §2.4:
-        # the builder already pays that chain once for its incremental
-        # arm; measured q_corpus_curation _build 2.63→~1.7 s at sf0.1).
-        bb = _banded.join(s1.select(id_col), id_col, "left_semi").select(
-            id_col, "band_idx", "band_key"
+    bb = banded.join(s1.select(id_col), id_col, "left_semi").select(
+        id_col, "band_idx", "band_key"
+    )
+    ba, b2 = bb.alias("a"), bb.alias("b")
+    cands = (
+        ba.join(
+            b2,
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_key") == F.col("b.band_key"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
-        ba, b2 = bb.alias("a"), bb.alias("b")
-        cands = (
-            ba.join(
-                b2,
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_key") == F.col("b.band_key"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
         )
-    else:
-        cands = minhash_lsh_candidates(
-            s1, text_col, id_col, num_hashes, bands
-        ).localCheckpoint(eager=True)
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
     near = ngram_jaccard_pairs(
         s1,
         text_col,

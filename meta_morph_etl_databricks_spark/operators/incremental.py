@@ -46,6 +46,8 @@ interpreted per-row HOF).
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
@@ -149,74 +151,76 @@ def _validate_band_params(
         )
 
 
+def _reject(
+    new_docs: DataFrame,
+    index: DataFrame,
+    new_rows: DataFrame,
+    id_col: str,
+    keys: tuple[str, ...],
+    score,
+) -> IncrementalDedupResult:
+    """The policy body every increment kind shares (see the module
+    docstring): a new row is rejected iff ``score`` keeps its pair with
+    an INDEXED row on the same ``keys`` (index ids are lower by the
+    monotone-id contract) or with a LOWER-ID row of its own increment;
+    ``accepted`` is ``new_docs`` minus the rejects, and the index grows
+    by ALL of ``new_rows``.  ``score(pairs, l, r, ids)`` filters the
+    joined pairs (sides aliased ``l``/``r``) and returns ``ids``.
+
+    ``new_rows`` is the caller's: it is read by both joins and by
+    whoever appends ``index_rows``, so a caller consuming both returned
+    frames materializes it first (the index_store serves, the streaming
+    sinks and the declared queries all do)."""
+
+    def on(l: str, r: str) -> Column:
+        return reduce(
+            operator.and_, [F.col(f"{l}.{k}") == F.col(f"{r}.{k}") for k in keys]
+        )
+
+    n, x = new_rows.alias("n"), index.alias("x")
+    vs_index = score(n.join(x, on("n", "x")), "n", "x", F.col(f"n.{id_col}"))
+    a, b = new_rows.alias("a"), new_rows.alias("b")
+    within = score(
+        a.join(b, on("a", "b") & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))),
+        "a",
+        "b",
+        F.col(f"b.{id_col}"),
+    )
+    rejected = vs_index.union(within).distinct()
+    accepted = new_docs.join(rejected, id_col, "left_anti")
+    return IncrementalDedupResult(accepted=accepted, index_rows=new_rows)
+
+
 def incremental_dedup(
     new_docs: DataFrame,
     index: DataFrame,
-    text_col: str = "text",
+    new_rows: DataFrame,
     id_col: str = "doc_id",
     num_hashes: int = 16,
     bands: int = 4,
     est_threshold: float = 0.8,
     index_meta: dict | None = None,
-    _banded: DataFrame | None = None,
 ) -> IncrementalDedupResult:
     """Dedup ``new_docs`` against the persisted band ``index`` (schema of
     :func:`minhash_band_index`) and against lower-id docs of the same
     increment.  See the module docstring for the policy and its
     one-shot-parity guarantee.
 
-    ``num_hashes``/``bands`` MUST match the values the index was built
-    with — validated by :func:`_validate_band_params` (driver-side dict
-    compare when ``index_meta`` is passed, one metadata-scale probe
-    otherwise); a mismatch raises rather than silently producing zero
-    candidates.  ``_banded`` lets the persisted-serve path
-    (index_store.serve_incremental_dedup) hand in the increment's band
-    rows it already computed for pfx pruning — MUST equal
-    ``minhash_band_index(new_docs, ...)``.
-
-    Multi-action note: without ``_banded``, consuming BOTH returned
-    frames as separate actions re-evaluates the minhash chain per
-    action (measured ~45 s per evaluation at 490k docs) — persist or
-    localCheckpoint the increment's band rows first and pass them in,
-    exactly what the serve/sink paths do.
+    ``new_rows`` are the increment's band rows —
+    ``minhash_band_index(new_docs, ...)`` under the index's build
+    parameters, or an id-slice of one materialized full-corpus band pass
+    (banding is a per-document map).  ``num_hashes``/``bands`` MUST
+    match the values the index was built with — validated by
+    :func:`_validate_band_params` (driver-side dict compare when
+    ``index_meta`` is passed, one metadata-scale probe otherwise); a
+    mismatch raises rather than silently producing zero candidates.
     """
-    if num_hashes % bands != 0:
-        raise ValueError(f"bands ({bands}) must divide num_hashes ({num_hashes})")
     _validate_band_params(index, num_hashes, bands, index_meta)
 
-    new_banded = (
-        _banded
-        if _banded is not None
-        else minhash_band_index(new_docs, text_col, id_col, num_hashes, bands)
-    )
+    def score(pairs: DataFrame, l: str, r: str, ids: Column) -> DataFrame:
+        return pairs.where(_est(f"{l}.sig", f"{r}.sig", num_hashes) >= est_threshold).select(ids)
 
-    # vs corpus: any band-key match with estimate ≥ t disqualifies the
-    # new doc (index ids are lower by the monotone-id contract)
-    n, x = new_banded.alias("n"), index.alias("x")
-    vs_index = (
-        n.join(
-            x,
-            (F.col("n.band_idx") == F.col("x.band_idx"))
-            & (F.col("n.band_key") == F.col("x.band_key")),
-        )
-        .where(_est("n.sig", "x.sig", num_hashes) >= est_threshold)
-        .select(F.col(f"n.{id_col}"))
-    )
-    # within the increment: the higher id of every matching pair drops
-    a, b = new_banded.alias("a"), new_banded.alias("b")
-    within = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .where(_est("a.sig", "b.sig", num_hashes) >= est_threshold)
-        .select(F.col(f"b.{id_col}"))
-    )
-    rejected = vs_index.union(within).distinct()
-    accepted = new_docs.join(rejected, id_col, "left_anti")
-    return IncrementalDedupResult(accepted=accepted, index_rows=new_banded)
+    return _reject(new_docs, index, new_rows, id_col, ("band_idx", "band_key"), score)
 
 
 def fingerprint_index(
@@ -412,6 +416,27 @@ def _qcos_reject_ids(
     return proj.mapInArrow(score, f"{out_name} {out_type}")
 
 
+def _qcos_score(new_rows: DataFrame, id_col: str, threshold: float):
+    """The embed/semantic pair scorer for :func:`_reject`: the int8
+    cosine over the stored codes and norms of both sides."""
+    idt = new_rows.schema[id_col].dataType.simpleString()
+
+    def score(pairs: DataFrame, l: str, r: str, ids: Column) -> DataFrame:
+        return _qcos_reject_ids(
+            pairs,
+            ids,
+            F.col(f"{l}.q_vec"),
+            F.col(f"{r}.q_vec"),
+            F.col(f"{l}.q_norm"),
+            F.col(f"{r}.q_norm"),
+            threshold,
+            id_col,
+            idt,
+        )
+
+    return score
+
+
 def _validate_embed_params(
     index: DataFrame,
     dims: int,
@@ -462,37 +487,23 @@ def _validate_embed_params(
 
 def semantic_cell_index(
     embeddings: DataFrame,
-    tree,
-    dims: int = 64,
+    cells: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    _cells: DataFrame | None = None,
-    _codes: DataFrame | None = None,
 ) -> DataFrame:
     """Semantic-dedup index rows: ``(id_col, cell, q_vec, q_norm)`` —
-    the k-means cell from a finished run's ASSIGNER TREE
-    (operators/semantic.py assign_cells: O(d·64·depth) per vector, no
-    Lloyd replay) plus the int8 code and its norm, the same
-    deterministic scoring payload as :func:`embedding_bucket_index`.
+    the k-means cell from ``cells``, an ``(id_col, cell)`` assignment
+    (operators/semantic.py: :func:`~.semantic.semantic_cell_assign`
+    through a finished run's assigner tree, or the bootstrap Lloyd
+    run's own final assignment), plus the int8 code and its norm, the
+    same deterministic scoring payload as :func:`embedding_bucket_index`.
     Corrupt vectors (NULL / empty / NaN / Inf / wrong-length /
-    NULL-element) carry a NULL cell — never equi-join, never pair,
-    never pile into a hot cell — mirroring the NULL-bucket convention.
-
-    ``_cells`` lets a caller that already computed the assignment (the
-    bootstrap, whose Lloyd run IS the assignment) hand it in as an
-    (id, cell) frame instead of re-routing through the tree.  ``_codes``
-    forwards the caller's already-materialized shifted-codes rows to the
-    tree routing (semantic.semantic_cell_assign's contract) — the q_vec
-    payload below still quantizes ``embeddings`` itself, so corrupt rows
-    keep riding the index with a NULL cell."""
+    NULL-element) have no cell in the assignment and carry a NULL cell —
+    never equi-join, never pair, never pile into a hot cell — mirroring
+    the NULL-bucket convention; the q_vec payload quantizes
+    ``embeddings`` itself, so they keep riding the index."""
     from .quantize import qnorm, quantize_int8
-    from .semantic import semantic_cell_assign
 
-    cells = (
-        _cells
-        if _cells is not None
-        else semantic_cell_assign(embeddings, tree, dims, id_col, vec_col, _codes)
-    )
     coded = quantize_int8(embeddings, vec_col)
     return coded.join(cells, id_col, "left").select(
         F.col(id_col),
@@ -525,14 +536,12 @@ def _validate_sem_params(dims: int, k: int | None, index_meta: dict | None) -> N
 def incremental_semantic_near_dup(
     new_embeddings: DataFrame,
     index: DataFrame,
+    new_rows: DataFrame,
     tree,
     threshold: float = 0.9,
     dims: int = 64,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
     index_meta: dict | None = None,
-    _new_rows: DataFrame | None = None,
-    _codes: DataFrame | None = None,
 ) -> IncrementalDedupResult:
     """SemDeDup for an increment against the persisted cell index
     (schema of :func:`semantic_cell_index`) — the third member of the
@@ -542,6 +551,10 @@ def incremental_semantic_near_dup(
     split of a post-bootstrap stream accepts a bit-identical set,
     because cells are FIXED by the bootstrap tree and scoring is the
     deterministic int8 cosine over stored codes on both sides).
+    ``new_rows`` are the increment's cell-index rows, routed through
+    ``tree`` (:func:`semantic_cell_index` over
+    ``semantic_cell_assign(..., tree)``); ``tree`` and ``dims`` are
+    validated against ``index_meta``.
 
     Semantic nuance the other two don't have: the cells themselves are
     a function of the BOOTSTRAP corpus — increments are placed into
@@ -555,12 +568,7 @@ def incremental_semantic_near_dup(
     by a hash prefix of ``cell`` so a fixed increment touches a bounded
     set of buckets (index_store pruned read), and assignment is
     O(d·64·⌈log₆₄ k⌉) per increment row — serve cost is flat in the
-    corpus up to the log factor.
-
-    Multi-action note: when ``_new_rows`` is not supplied, consuming
-    BOTH returned frames as separate actions re-evaluates the coding
-    chain per action — persist/materialize first (the index_store
-    serve and streaming sinks do exactly that)."""
+    corpus up to the log factor."""
     _validate_sem_params(dims, None, index_meta)
     # the ASSIGNER itself is validated, not just its dials (r12
     # review): a caller holding yesterday's tree while the sink's
@@ -579,123 +587,49 @@ def incremental_semantic_near_dup(
                 "increment and silently empties every cell join; rehydrate "
                 "the tree from the index meta (semantic.tree_from_json)"
             )
-    new_rows = (
-        _new_rows
-        if _new_rows is not None
-        else semantic_cell_index(
-            new_embeddings, tree, dims, id_col, vec_col, _codes=_codes
-        )
+    return _reject(
+        new_embeddings, index, new_rows, id_col, ("cell",),
+        _qcos_score(new_rows, id_col, threshold),
     )
-    idt = new_rows.schema[id_col].dataType.simpleString()
-    n, x = new_rows.alias("n"), index.alias("x")
-    vs_index = _qcos_reject_ids(
-        n.join(x, F.col("n.cell") == F.col("x.cell")),
-        F.col(f"n.{id_col}"),
-        F.col("n.q_vec"),
-        F.col("x.q_vec"),
-        F.col("n.q_norm"),
-        F.col("x.q_norm"),
-        threshold,
-        id_col,
-        idt,
-    )
-    a, b = new_rows.alias("a"), new_rows.alias("b")
-    within = _qcos_reject_ids(
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        ),
-        F.col(f"b.{id_col}"),
-        F.col("a.q_vec"),
-        F.col("b.q_vec"),
-        F.col("a.q_norm"),
-        F.col("b.q_norm"),
-        threshold,
-        id_col,
-        idt,
-    )
-    rejected = vs_index.union(within).distinct()
-    accepted = new_embeddings.join(rejected, id_col, "left_anti")
-    return IncrementalDedupResult(accepted=accepted, index_rows=new_rows)
 
 
 def incremental_embed_near_dup(
     new_embeddings: DataFrame,
     index: DataFrame,
+    new_rows: DataFrame,
     threshold: float = 0.9,
     dims: int = 64,
     n_planes: int = 8,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
     center: list[float] | None = None,
     index_meta: dict | None = None,
-    _new_rows: DataFrame | None = None,
 ) -> IncrementalDedupResult:
     """Embedding-cosine near-dup dedup of an increment against the
     persisted bucket index (schema of :func:`embedding_bucket_index`) —
     the vector-space sibling of :func:`incremental_dedup`, same policy
     (reject on match vs index or vs a lower-id increment row; index
     grows by ALL increment rows; monotone ids across increments — any
-    split then accepts a bit-identical set).
+    split then accepts a bit-identical set).  ``new_rows`` are the
+    increment's ``embedding_bucket_index(new_embeddings, dims, n_planes,
+    ..., center)`` rows.
 
     Scoring is the deterministic int8 cosine over the STORED codes on
     both sides (the quantized score, not the float one — thresholds
     mean the same thing on day 1 and day 1000, and the increment's own
     rows are scored with exactly what gets indexed).  ``dims``/
-    ``n_planes`` must match the index's build values — the hyperplane
-    family is derived from them, and a mismatch silently empties every
-    bucket join; keep them with the index's metadata.
+    ``n_planes``/``center`` must be the index's build values — the
+    hyperplane family is derived from them, and a mismatch silently
+    empties every bucket join.  All three are validated by
+    :func:`_validate_embed_params` (full driver-side contract with
+    ``index_meta``, a weaker data probe without); the persisted path
+    (index_store.serve_incremental_embed_near_dup) always passes the
+    sidecar.
 
     Scale shape: per-bucket equi-joins only (the O(n·m) cross of
     increment×corpus never materializes), index pre-partitioned by
-    ``bucket`` makes the daily join shuffle only the increment.
-    ``center`` must be the index's build-time value (see
-    :func:`embedding_bucket_index`) — a different center re-buckets the
-    increment and silently empties the join.  All three build params
-    are validated by :func:`_validate_embed_params` (full driver-side
-    contract with ``index_meta``, a weaker data probe without); the
-    persisted path (index_store.serve_incremental_embed_near_dup)
-    always passes the sidecar.  ``_new_rows`` lets that path hand in
-    the increment's index rows it already computed for pfx pruning.
-    Multi-action note: without ``_new_rows``, consuming both returned
-    frames as separate actions re-codes the increment per action —
-    persist first (see incremental_dedup)."""
+    ``bucket`` makes the daily join shuffle only the increment."""
     _validate_embed_params(index, dims, n_planes, center, index_meta)
-    new_rows = (
-        _new_rows
-        if _new_rows is not None
-        else embedding_bucket_index(new_embeddings, dims, n_planes, id_col, vec_col, center)
+    return _reject(
+        new_embeddings, index, new_rows, id_col, ("bucket",),
+        _qcos_score(new_rows, id_col, threshold),
     )
-    idt = new_rows.schema[id_col].dataType.simpleString()
-    n, x = new_rows.alias("n"), index.alias("x")
-    vs_index = _qcos_reject_ids(
-        n.join(x, F.col("n.bucket") == F.col("x.bucket")),
-        F.col(f"n.{id_col}"),
-        F.col("n.q_vec"),
-        F.col("x.q_vec"),
-        F.col("n.q_norm"),
-        F.col("x.q_norm"),
-        threshold,
-        id_col,
-        idt,
-    )
-    a, b = new_rows.alias("a"), new_rows.alias("b")
-    within = _qcos_reject_ids(
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        ),
-        F.col(f"b.{id_col}"),
-        F.col("a.q_vec"),
-        F.col("b.q_vec"),
-        F.col("a.q_norm"),
-        F.col("b.q_norm"),
-        threshold,
-        id_col,
-        idt,
-    )
-    rejected = vs_index.union(within).distinct()
-    accepted = new_embeddings.join(rejected, id_col, "left_anti")
-    return IncrementalDedupResult(accepted=accepted, index_rows=new_rows)

@@ -117,6 +117,29 @@ def _shifted_codes(
     )
 
 
+def shifted_codes(
+    embeddings: DataFrame,
+    dims: int = 64,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The (id, ``_u``) shifted-codes frame (:func:`_shifted_codes`) the
+    codes-level kernels take — :func:`kmeans_int8_tree` and
+    :func:`semantic_cell_assign` — lazily local-checkpointed (the first
+    job pays it).  Every Lloyd job (seed collect, per-iteration
+    assign+update, final assignment) and every tree routing pass
+    explodes ``_u``, and a raw lineage re-evaluates the quantize+shift
+    chain UNDER the generate — the O(d²) expression-inlining cousin of
+    the quantize_int8 scale trap, paid per exploded ELEMENT.  Measured
+    at 196k×64 (r10): the k=654 two-level build dropped 68.5 s → 17.9 s
+    with bit-identical assignments, and increment routing 12.5 s → 1.4 s
+    per 4k-vector serve pass; the frame is n·(8+8d) bytes (~100 MB at
+    196k), driver-free.  Quantize+shift is a per-row map, so an id-slice
+    of one full-corpus frame equals the slice's own frame — a plan that
+    shares codes across arms builds this once and slices it."""
+    return _shifted_codes(embeddings, dims, id_col, vec_col).localCheckpoint(eager=False)
+
+
 # Per-session cache of centroid DataFrames, keyed by an md5 of the
 # centroid CONTENT (cryptographic — a 64-bit hash() collision would
 # silently mis-assign).  Why it exists: every assignment pass ships the
@@ -144,7 +167,7 @@ def _cached_frame(spark, content, schema: str) -> DataFrame:
     import json as _json
 
     key = (
-        spark.sparkContext.applicationId,
+        id(spark),  # per session: newSession() shares the applicationId
         schema,
         hashlib.md5(_json.dumps(content, sort_keys=True).encode()).hexdigest(),
     )
@@ -498,9 +521,7 @@ def _two_level_split(k: int, kmax: int = _FLAT_K_MAX) -> tuple[int, int]:
 # is a DRIVER-MEMORY dial (rows·d ints, ~2 MB at the default), not a
 # cluster-width tune; corpora past it run the distributed kernel
 # unchanged.
-import os as _os
-
-_DRIVER_LLOYD_MAX_ROWS = int(_os.environ.get("SPARK_GRAFT_DRIVER_LLOYD_ROWS", "4096"))
+_DRIVER_LLOYD_MAX_ROWS = 4096
 
 
 def _mark_driver_local(df: DataFrame) -> DataFrame:
@@ -778,18 +799,19 @@ def kmeans_int8(
     vec_col: str = "embedding",
     n_docs: int | None = None,
     flat_k_max: int | None = None,
-    _codes: DataFrame | None = None,
 ) -> tuple[DataFrame, list[tuple[int, list[int]]]]:
     """Integer-exact Lloyd k-means over int8 codes.  Returns
     ``(assignment, centroids)`` — assignment is a lazy (id, cluster)
     frame under the FINAL centroids; centroids are the fixed-point
-    vectors ``[(cid, [m_0..m_d])]`` after ``iters`` updates.
+    vectors ``[(cid, [m_0..m_d])]`` after ``iters`` updates.  The
+    embeddings-level entry point of :func:`kmeans_int8_tree`.
 
     ``k=None`` auto-sizes from ``n_docs`` (catalog stats — no scan) or
-    one count().  Driver actions: 1 seed collect (k rows) + ``iters``
-    update collects (k·d ints each) — all bounded by k·d, never by the
-    corpus.  Seeds are the k lowest-id valid vectors: deterministic,
-    layout-independent, and the same rule the PQ/IVF codebooks use.
+    one count() of ``embeddings`` (corrupt rows included).  Driver
+    actions: 1 seed collect (k rows) + ``iters`` update collects (k·d
+    ints each) — all bounded by k·d, never by the corpus.  Seeds are the
+    k lowest-id valid vectors: deterministic, layout-independent, and
+    the same rule the PQ/IVF codebooks use.
 
     k ≤ 64 runs the flat kernel (the oracle-checked recurrence); larger
     k — what auto_k produces at real corpus sizes — routes through the
@@ -815,62 +837,31 @@ def kmeans_int8(
     calls for Arrow collection (``toPandas`` on the grouped frame) or
     ``toLocalIterator``; at the k this repo's dials produce it is
     driver-trivial."""
-    return kmeans_int8_tree(
-        embeddings, k, iters, dims, id_col, vec_col, n_docs, flat_k_max, _codes
-    )[:2]
+    if k is None:
+        k = auto_k(embeddings.count() if n_docs is None else n_docs)
+    codes = shifted_codes(embeddings, dims, id_col, vec_col)
+    return kmeans_int8_tree(codes, k, iters, id_col, flat_k_max)[:2]
 
 
 def kmeans_int8_tree(
-    embeddings: DataFrame,
-    k: int | None = 16,
+    codes: DataFrame,
+    k: int,
     iters: int = 1,
-    dims: int = 64,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_docs: int | None = None,
     flat_k_max: int | None = None,
-    _codes: DataFrame | None = None,
 ) -> tuple[DataFrame, list[tuple[int, list[int]]], AssignerTree | None]:
-    """:func:`kmeans_int8` plus the ASSIGNER TREE — the persistable
-    routing structure (see module comment above :func:`assign_cells`)
-    that places future vectors into the finished run's cells without
-    replaying Lloyd.  The semantic index kind
-    (operators/index_store.create_semantic_index) serializes it into
-    the metadata sidecar; increments assign through it in O(d·64·depth)
-    per vector.
-
-    ``_codes``: a caller that already holds THIS corpus's
-    :func:`_shifted_codes` rows — e.g. a slice of one materialized
-    full-corpus pass (the ``_banded`` device of the band family) — hands
-    them in and skips the internal chain+checkpoint; the frame must be
-    exactly ``_shifted_codes(embeddings, dims, id_col, vec_col)`` and
-    already materialized/checkpointed (it is consumed by multiple Lloyd
-    jobs)."""
-    if k is None:
-        k = auto_k(embeddings.count() if n_docs is None else n_docs)
-    # Materialize the codes ONCE (lazy local checkpoint — first job pays
-    # it).  Every Lloyd job (seed collect, per-iteration assign+update,
-    # final assignment) explodes ``_u``, and a raw lineage re-evaluates
-    # the quantize+shift chain UNDER the generate — the O(d²)
-    # expression-inlining cousin of the quantize_int8 scale trap, paid
-    # per exploded ELEMENT.  Measured at 196k×64 (r10): the k=654
-    # two-level build dropped 68.5 s → 17.9 s with bit-identical
-    # assignments; the codes frame is n·(8+8d) bytes (~100 MB at 196k),
-    # driver-free.  Same fix applied at semantic_cell_assign (increment
-    # routing: 12.5 s → 1.4 s per 4k-vector serve pass) and
-    # recluster_semantic_index.
-    codes = (
-        _codes
-        if _codes is not None
-        else _shifted_codes(embeddings, dims, id_col, vec_col).localCheckpoint(
-            eager=False
-        )
-    )
+    """:func:`kmeans_int8` over a :func:`shifted_codes` frame, plus the
+    ASSIGNER TREE — the persistable routing structure (see module
+    comment above :func:`assign_cells`) that places future vectors into
+    the finished run's cells without replaying Lloyd.  The semantic
+    index kind (operators/index_store.create_semantic_index) serializes
+    it into the metadata sidecar; increments assign through it in
+    O(d·64·depth) per vector."""
     final, cents, tree = _kmeans_dispatch(
         codes, k, iters, id_col, _FLAT_K_MAX if flat_k_max is None else flat_k_max
     )
     if final is None:
-        empty = embeddings.limit(0).select(
+        empty = codes.limit(0).select(
             F.col(id_col), F.lit(None).cast("int").alias("cluster")
         )
         return empty, [], None
@@ -881,31 +872,14 @@ def kmeans_int8_tree(
 
 
 def semantic_cell_assign(
-    embeddings: DataFrame,
-    tree: AssignerTree,
-    dims: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    _codes: DataFrame | None = None,
+    codes: DataFrame, tree: AssignerTree, id_col: str = "vec_id"
 ) -> DataFrame:
-    """Assign NEW embeddings to a persisted run's cells through its
-    assigner tree → (id, ``cell``).  Valid rows only — corrupt vectors
-    (NULL / wrong-length / NULL-element / non-finite) are excluded
-    exactly as :func:`_shifted_codes` excluded them from the original
-    clustering: they belong to no cell and can never pair.
-
-    ``_codes``: same contract as :func:`kmeans_int8_tree` — the caller's
-    already-materialized ``_shifted_codes`` rows for THIS corpus."""
-    # lazy checkpoint: the assigner explode would otherwise re-evaluate
-    # the quantize chain per exploded element (see kmeans_int8_tree —
-    # measured 12.5 s → 1.4 s per 4k-vector routing pass at k1=26)
-    codes = (
-        _codes
-        if _codes is not None
-        else _shifted_codes(embeddings, dims, id_col, vec_col).localCheckpoint(
-            eager=False
-        )
-    )
+    """Assign NEW vectors (their :func:`shifted_codes` frame) to a
+    persisted run's cells through its assigner tree → (id, ``cell``).
+    Valid rows only — corrupt vectors (NULL / wrong-length /
+    NULL-element / non-finite) are excluded by the codes frame exactly
+    as they were from the original clustering: they belong to no cell
+    and can never pair."""
     return assign_cells(codes, tree, id_col).withColumnRenamed("_cl", "cell")
 
 
@@ -933,47 +907,46 @@ def _raise_if_dims_mismatch(embeddings: DataFrame, dims: int, vec_col: str) -> N
         )
 
 
+def materialize_assignment(
+    assign: DataFrame,
+    embeddings: DataFrame,
+    dims: int = 64,
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Make a Lloyd run's (id, cluster) ``assign`` over ``embeddings``
+    ready for :func:`semantic_dedup_pairs`.  The assignment subtree
+    (explode + broadcast join + k-way agg) would otherwise be COMPUTED
+    TWICE by the pair self-join — and a third time by
+    :func:`semantic_dedup`'s cluster join-back — so it is checkpointed
+    (8·n bytes + an int; same device as q_dedup_ngram_jaccard's
+    scored-pair checkpoint before the components rounds), and an empty
+    one is diagnosed (:func:`_raise_if_dims_mismatch`).  A DRIVER-LOCAL
+    assignment (the _kmeans_dispatch small-corpus replay) is already
+    literal driver data and non-empty by construction, so the checkpoint
+    job AND the emptiness probe would be two pure-waste Spark jobs (r14,
+    guide §1.2) — it is returned as is."""
+    if _is_driver_local(assign):
+        return assign
+    assign = assign.localCheckpoint(eager=True)
+    if assign.isEmpty():  # cheap on the checkpointed frame
+        _raise_if_dims_mismatch(embeddings, dims, vec_col)
+    return assign
+
+
 def semantic_dedup_pairs(
     embeddings: DataFrame,
-    k: int | None = 16,
-    iters: int = 1,
+    assign: DataFrame,
     threshold: float = 0.9,
-    dims: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_docs: int | None = None,
-    _assign: DataFrame | None = None,
-    flat_k_max: int | None = None,
-    _codes: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs WITHIN k-means cells: (id_a < id_b,
     cosine_sim ≥ threshold), cosine on the ORIGINAL double vectors
     rounded to 6dp — the same scorer as lsh_bucketed_pairs, so the two
-    families differ only in how they partition the corpus.  ``_codes``
-    forwards to :func:`kmeans_int8` (same contract)."""
-    if _assign is None:
-        # the assignment subtree (explode + broadcast join + k-way agg)
-        # would otherwise be COMPUTED TWICE by the pair self-join below —
-        # checkpoint the (id, cluster) frame (8·n bytes + an int) so both
-        # sides read the materialized rows (same device as
-        # q_dedup_ngram_jaccard's scored-pair checkpoint before the
-        # components rounds).  A passed _assign is the CALLER's to
-        # checkpoint — semantic_dedup does, and re-checkpointing here
-        # would materialize the same rows a second time.  A DRIVER-LOCAL
-        # assignment (the _kmeans_dispatch small-corpus replay) is
-        # already literal driver data: both self-join sides read the
-        # parallelized rows and it is non-empty by construction, so the
-        # checkpoint job AND the isEmpty probe would be two pure-waste
-        # Spark jobs (r14, guide §1.2) — skip them.
-        assign = kmeans_int8(
-            embeddings, k, iters, dims, id_col, vec_col, n_docs, flat_k_max, _codes
-        )[0]
-        if not _is_driver_local(assign):
-            assign = assign.localCheckpoint(eager=True)
-            if assign.isEmpty():  # cheap on the checkpointed frame
-                _raise_if_dims_mismatch(embeddings, dims, vec_col)
-    else:
-        assign = _assign
+    families differ only in how they partition the corpus.  ``assign``
+    is the (id, cluster) assignment of ``embeddings`` — a
+    :func:`kmeans_int8` run passed through
+    :func:`materialize_assignment`, since the self-join reads it twice."""
     memb = embeddings.join(assign, id_col).select(
         id_col, vec_col, "cluster", norm(vec_col).alias("_n")
     )
@@ -1010,18 +983,12 @@ def semantic_dedup(
     Returns the accepted rows with their cluster id (NULL for corrupt
     rows) — the cluster column is the SemDeDup byproduct callers use
     for stratified sampling and mixing."""
-    # checkpoint HERE (not inside semantic_dedup_pairs): the assignment
-    # feeds the pair self-join twice AND the final cluster join-back —
-    # a local checkpoint inside the callee would rebind only its own
-    # variable and this frame would recompute the whole k-means subtree.
-    # Driver-local assignments skip both jobs (see semantic_dedup_pairs).
-    assign = kmeans_int8(embeddings, k, iters, dims, id_col, vec_col, n_docs)[0]
-    if not _is_driver_local(assign):
-        assign = assign.localCheckpoint(eager=True)
-        if assign.isEmpty():  # see _raise_if_dims_mismatch — no-op diagnosis
-            _raise_if_dims_mismatch(embeddings, dims, vec_col)
-    pairs = semantic_dedup_pairs(
-        embeddings, k, iters, threshold, dims, id_col, vec_col, n_docs, _assign=assign
+    assign = materialize_assignment(
+        kmeans_int8(embeddings, k, iters, dims, id_col, vec_col, n_docs)[0],
+        embeddings,
+        dims,
+        vec_col,
     )
+    pairs = semantic_dedup_pairs(embeddings, assign, threshold, id_col, vec_col)
     dups = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return embeddings.join(dups, id_col, "left_anti").join(assign, id_col, "left")

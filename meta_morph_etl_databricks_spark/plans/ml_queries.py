@@ -684,14 +684,18 @@ SELECT * FROM flt UNION ALL SELECT * FROM i8 UNION ALL SELECT * FROM pq
 
 # Session-level artifact caches for the similarity queries: the PQ
 # codebook and IVF centroids are deterministic functions of the corpus
-# (seed rules over the lowest vec_ids), so per-(application, sf_dir)
+# (seed rules over the lowest vec_ids), so per-(session, sf_dir)
 # caching changes nothing about the values — it just stops the declared
 # queries from re-running the small build collect on every invocation,
 # matching the production build-once/serve-many split (ivf_index's
-# contract).  Keyed by applicationId so a fresh session rebuilds.
-_PQ_CB_CACHE: dict[tuple[str, str], list[list[list[int]]] | None] = {}
-_IVF_CENT_CACHE: dict[tuple[str, str], list[tuple[int, list[float]]]] = {}
-_IVF_PQ_IDX_CACHE: dict[tuple[str, str], DataFrame] = {}
+# contract).  Keyed by session identity, like scans._RELATION_CACHE:
+# ``spark.newSession()`` shares the applicationId, and a cached frame
+# must never be served to a session it was not built in.  A cached
+# frame holds its session, so the ``id`` cannot be reused while the
+# entry lives; the codebook and centroid entries are plain values.
+_PQ_CB_CACHE: dict[tuple[int, str], list[list[list[int]]] | None] = {}
+_IVF_CENT_CACHE: dict[tuple[int, str], list[tuple[int, list[float]]]] = {}
+_IVF_PQ_IDX_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _pq_codebooks_cached(
@@ -703,7 +707,7 @@ def _pq_codebooks_cached(
     zero rows, not an exception — callers turn None into an empty arm."""
     from ..operators.quantize import pq_codebooks_from_codes
 
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = (id(spark), sf_dir)
     if key not in _PQ_CB_CACHE:
         try:
             _PQ_CB_CACHE[key] = pq_codebooks_from_codes(codes, m=4, ksub=16)
@@ -717,7 +721,7 @@ def _pq_codebooks_cached(
 def _ivf_centroids_cached(spark: SparkSession, sf_dir: str, emb: DataFrame) -> list[tuple[int, list[float]]]:
     from ..operators.similarity import ivf_centroids
 
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = (id(spark), sf_dir)
     cents = _IVF_CENT_CACHE.get(key)
     if cents is None:
         cents = _IVF_CENT_CACHE[key] = ivf_centroids(emb, k=_IVF_K)
@@ -1120,11 +1124,11 @@ def q_embed_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         incremental_semantic_near_dup,
         semantic_cell_index,
     )
-    from ..operators.quantize import qnorm, quantize_int8
     from ..operators.semantic import (
-        _shifted_codes,
         kmeans_int8_tree,
+        semantic_cell_assign,
         semantic_dedup_pairs,
+        shifted_codes,
     )
 
     emb = _embeddings(spark, sf_dir)
@@ -1137,22 +1141,20 @@ def q_embed_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     u_inc1 = lambda i: _SEMI_B0 <= i < _SEMI_C1  # noqa: E731
     p_inc2, p_hist = F.col("vec_id") >= _SEMI_C1, F.col("vec_id") < _SEMI_C1
     # ONE shifted-codes pass for the whole slot (r14, guide §2.4 — the
-    # `_banded` device applied to the int8 code chain): quantize+shift is
-    # a pure per-row map, so every arm's codes frame is an id-slice of
-    # one materialized full-corpus pass.  Before, the slot built the
-    # chain 4× (boot Lloyd, sem2 Lloyd, inc1 and inc2 tree routing) —
-    # 4 plan-compiles + 4 checkpoint materializations whose slices sum
-    # to ~1.3 corpus passes.
-    codes_all = _shifted_codes(emb, _DIMS, "vec_id", "embedding").localCheckpoint(
-        eager=False
-    )
+    # shared band pass of q_corpus_curation applied to the int8 code
+    # chain): quantize+shift is a pure per-row map, so every arm's codes
+    # frame is an id-slice of one materialized full-corpus pass.
+    # Before, the slot built the chain 4× (boot Lloyd, sem2 Lloyd, inc1
+    # and inc2 tree routing) — 4 plan-compiles + 4 checkpoint
+    # materializations whose slices sum to ~1.3 corpus passes.
+    codes_all = shifted_codes(emb, _DIMS)
     lsh = lsh_bucketed_pairs(
         emb, n_planes=_N_PLANES, dims=_DIMS, threshold=_NEAR_DUP_T
     ).select(F.lit("lsh").alias("variant"), "id_a", "id_b", "cosine_sim")
     # ONE driver probe for the whole slot (r15, guide §1.2/§5 — the
     # final step of the r14 driver-Lloyd restructure): when the FULL
     # corpus codes fit the driver bound (the same ~2 MB
-    # SPARK_GRAFT_DRIVER_LLOYD_ROWS dial the per-arm dispatch uses),
+    # semantic._DRIVER_LLOYD_MAX_ROWS bound the per-arm dispatch uses),
     # collect them ONCE and run both Lloyd replays plus ALL cell
     # routing (boot / inc1 / inc2 through the bootstrap tree) in driver
     # int64 numpy — bit-identical by the pinned kernel tests.  Every
@@ -1184,21 +1186,16 @@ def q_embed_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _literal_cells_schema(codes_all, "cluster"),
             )
         )
-        sem2 = semantic_dedup_pairs(
-            emb.filter(p_sem2), threshold=_NEAR_DUP_T, _assign=sem2_assign
-        )
     else:
         # empty/corrupt slice falls back so the dims-mismatch diagnostic
         # and the drained-corpus shape stay exactly the r14 path's
-        sem2 = semantic_dedup_pairs(
-            emb.filter(p_sem2),
-            k=_SEM2_K,
-            iters=_SEM_ITERS,
-            threshold=_NEAR_DUP_T,
-            flat_k_max=_SEM2_KMAX,
-            _codes=codes_all.where(p_sem2),
-        )
-    sem2 = sem2.select(F.lit("semantic2").alias("variant"), "id_a", "id_b", "cosine_sim")
+        sem2_assign = kmeans_int8_tree(
+            codes_all.where(p_sem2), _SEM2_K, _SEM_ITERS, flat_k_max=_SEM2_KMAX
+        )[0]
+    emb2 = emb.filter(p_sem2)
+    sem2 = semantic_dedup_pairs(
+        emb2, S.materialize_assignment(sem2_assign, emb2, _DIMS), _NEAR_DUP_T
+    ).select(F.lit("semantic2").alias("variant"), "id_a", "id_b", "cosine_sim")
     # incremental-serve arm: bootstrap Lloyd on the prefix, two real
     # increments against the growing in-plan index, emit accepted ids
     boot = emb.filter(p_boot)
@@ -1213,13 +1210,7 @@ def q_embed_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             S._FLAT_K_MAX,
         )
     else:
-        asg, _, tree = kmeans_int8_tree(
-            boot,
-            k=_SEMI_K,
-            iters=_SEM_ITERS,
-            dims=_DIMS,
-            _codes=codes_all.where(p_boot),
-        )
+        asg, _, tree = kmeans_int8_tree(codes_all.where(p_boot), _SEMI_K, _SEM_ITERS)
     if tree is None:  # drained corpus — everything (nothing) accepted
         acc_ids = emb.select("vec_id")
         retr_ids = emb.select("vec_id").where(p_inc2)
@@ -1241,31 +1232,19 @@ def q_embed_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
                 sorted(S._driver_assign_tree(u_all, tree).items()),
                 _literal_cells_schema(codes_all, "cell"),
             )
-            full_rows = (
-                quantize_int8(emb, "embedding")
-                .join(F.broadcast(cells_df), "vec_id", "left")
-                .select(
-                    "vec_id",
-                    F.col("cell").cast("int").alias("cell"),
-                    "q_vec",
-                    qnorm("q_vec").alias("q_norm"),
-                )
-                .localCheckpoint(eager=False)
+            full_rows = semantic_cell_index(emb, F.broadcast(cells_df)).localCheckpoint(
+                eager=False
             )
             idx = full_rows.where(p_boot)
             r1 = incremental_semantic_near_dup(
-                inc1,
-                idx,
-                tree,
-                threshold=_SEMI_T,
-                dims=_DIMS,
-                _new_rows=full_rows.where(p_inc1),
+                inc1, idx, full_rows.where(p_inc1), tree, threshold=_SEMI_T, dims=_DIMS
             )
             grown = full_rows.where(p_hist)  # = idx ∪ r1.index_rows
             inc2_rows = full_rows.where(p_inc2)
         else:
-            idx = semantic_cell_index(
-                boot, tree, _DIMS, _cells=asg.withColumnRenamed("cluster", "cell")
+            idx = semantic_cell_index(boot, asg.withColumnRenamed("cluster", "cell"))
+            inc1_rows = semantic_cell_index(
+                inc1, semantic_cell_assign(codes_all.where(p_inc1), tree)
             )
             # grown + inc2_rows are LAZILY checkpointed (r14 re-A/B):
             # the r10 measurement that rejected materialization (15.2
@@ -1279,12 +1258,7 @@ def q_embed_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             # increment reads IS a materialized artifact (index_store's
             # parquet), never a recomputed lineage.
             r1 = incremental_semantic_near_dup(
-                inc1,
-                idx,
-                tree,
-                threshold=_SEMI_T,
-                dims=_DIMS,
-                _codes=codes_all.where(p_inc1),
+                inc1, idx, inc1_rows, tree, threshold=_SEMI_T, dims=_DIMS
             )
             grown = idx.unionByName(r1.index_rows).localCheckpoint(eager=False)
             # inc2's cell-index rows are a pure function of (inc2, tree,
@@ -1293,10 +1267,10 @@ def q_embed_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             # semantic_cell_index construction is a quantize+assign+
             # localCheckpoint chain, ~0.4 s of driver plan assembly).
             inc2_rows = semantic_cell_index(
-                inc2, tree, _DIMS, _codes=codes_all.where(p_inc2)
+                inc2, semantic_cell_assign(codes_all.where(p_inc2), tree)
             ).localCheckpoint(eager=False)
         r2 = incremental_semantic_near_dup(
-            inc2, grown, tree, threshold=_SEMI_T, dims=_DIMS, _new_rows=inc2_rows
+            inc2, grown, inc2_rows, tree, threshold=_SEMI_T, dims=_DIMS
         )
         acc_ids = (
             boot.select("vec_id")
@@ -1309,12 +1283,7 @@ def q_embed_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # so the arm costs one more cell join, not another Lloyd
         retracted = (F.col("vec_id") % _RETR_MOD == 0) & (F.col("vec_id") < _SEMI_C1)
         r2r = incremental_semantic_near_dup(
-            inc2,
-            grown.where(~retracted),
-            tree,
-            threshold=_SEMI_T,
-            dims=_DIMS,
-            _new_rows=inc2_rows,
+            inc2, grown.where(~retracted), inc2_rows, tree, threshold=_SEMI_T, dims=_DIMS
         )
         retr_ids = r2r.accepted.select("vec_id")
     semi = acc_ids.select(
@@ -1450,7 +1419,7 @@ def q_similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # so the cached artifact equals a fresh build and the oracle
         # hash is unchanged.  Measured at sf0.1: build+serve 1.51 s →
         # 0.71 s serve over the persisted lists).
-        lkey = (spark.sparkContext.applicationId, sf_dir, "ivf_lists")
+        lkey = (id(spark), sf_dir, "ivf_lists")
         lists = _IVF_PQ_IDX_CACHE.get(lkey)
         if lists is None:
             lists = _IVF_PQ_IDX_CACHE[lkey] = ivf_index(emb, cents).persist()
@@ -1472,7 +1441,7 @@ def q_similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # deterministic (seed-rule centroids/codebooks), so the cached
         # artifact is identical to a fresh one and the oracle hash is
         # unchanged; repeated invocations pay only the ADC serve scan.
-        ikey = (spark.sparkContext.applicationId, sf_dir)
+        ikey = (id(spark), sf_dir)
         index = _IVF_PQ_IDX_CACHE.get(ikey)
         if index is None:
             index = _IVF_PQ_IDX_CACHE[ikey] = ivf_pq_index(emb, cents, cb).persist()
@@ -1668,18 +1637,13 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full-corpus band index is materialized once and feeds BOTH arms —
     # the incremental arm slices it per increment (below), and the
     # curation arm derives its LSH candidates from the gated docs'
-    # slice of it (curate_corpus _banded) instead of re-running the
-    # shingle→md5→min chain over the gated corpus a second time.
+    # slice of it (curate_corpus's ``banded``) instead of re-running
+    # the shingle→md5→min chain over the gated corpus a second time.
     banded = minhash_band_index(
         docs, num_hashes=_NUM_HASHES, bands=_BANDS
     ).localCheckpoint(eager=True)
     surviving = D.curate_corpus(
-        docs,
-        min_quality=_CUR_MINQ,
-        jaccard_threshold=_CUR_JT,
-        num_hashes=_NUM_HASHES,
-        bands=_BANDS,
-        _banded=banded,
+        docs, banded, min_quality=_CUR_MINQ, jaccard_threshold=_CUR_JT
     )
     curation = (
         surviving.groupBy("detected_lang")
@@ -1716,10 +1680,10 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # growing-lineage union re-derived every predecessor's minhash
     # chain inside each step's plan — 3+2+1 = 6 chain evaluations per
     # run (measured 4.86 s → 2.47 s for the arm at sf0.1, accepted set
-    # bit-identical at sf0.001).  This is exactly the multi-action
-    # materialization incremental_dedup's own docstring prescribes and
-    # what the persisted index_store serve path does (there the
-    # materialization is the parquet index itself).
+    # bit-identical at sf0.001).  This is the materialization
+    # incremental_dedup's ``new_rows`` contract asks for, and what the
+    # persisted index_store serve path does (there the materialization
+    # is the parquet index itself).
     accepted = None
     lo = None
     for cut in cuts:
@@ -1729,11 +1693,11 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         res = incremental_dedup(
             docs.where(cond),
             banded.where(F.col("doc_id") < (lo if lo is not None else 0)),
+            banded.where(cond),
             num_hashes=_NUM_HASHES,
             bands=_BANDS,
             est_threshold=_INC_T,
             index_meta=meta,
-            _banded=banded.where(cond),
         )
         accepted = (
             res.accepted if accepted is None else accepted.unionByName(res.accepted)

@@ -342,12 +342,13 @@ def stream_incremental_semantic_dedup(
     appender is ever live during the swap and the next batch routes
     through the new generation's tree.  Default off: the rebuild is an
     O(corpus-codes) Lloyd run, a scheduling decision the operator owns."""
-    from ..operators.semantic import auto_k, kmeans_int8_tree, tree_to_json
+    from ..operators.semantic import auto_k, kmeans_int8_tree, shifted_codes, tree_to_json
 
     def bootstrap(batch_df: DataFrame) -> dict | None:
         n = batch_df.count()
         kk = k if k is not None else auto_k(n, target_cell_size)
-        _, _, tree = kmeans_int8_tree(batch_df, kk, iters, dims, id_col, vec_col, n_docs=n)
+        codes = shifted_codes(batch_df, dims, id_col, vec_col)
+        _, _, tree = kmeans_int8_tree(codes, kk, iters, id_col)
         if tree is None:  # no valid vectors — nothing to cluster on
             batch_df.write.mode("append").parquet(accepted_path)
             return None

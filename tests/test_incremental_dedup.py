@@ -68,7 +68,8 @@ def test_incremental_dedup_matches_one_shot(spark, corpus, cuts):
     lo = 0
     for hi in cuts:
         inc = corpus.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        res = incremental_dedup(inc, index, num_hashes=K, bands=B, est_threshold=T)
+        rows = minhash_band_index(inc, num_hashes=K, bands=B)
+        res = incremental_dedup(inc, index, rows, num_hashes=K, bands=B, est_threshold=T)
         accepted.extend(r.doc_id for r in res.accepted.collect())
         index = index.union(res.index_rows.select(*index.columns))
         lo = hi
@@ -101,14 +102,26 @@ def test_rejected_docs_still_disqualify_their_future_copies(spark):
     assert matched == {(1, 2), (2, 3)}  # the chain, with (1, 3) below threshold
 
     index = empty_index(spark)
+    inc1 = docs.where("doc_id <= 2")
     r1 = incremental_dedup(
-        docs.where("doc_id <= 2"), index, num_hashes=K, bands=B, est_threshold=chain_t
+        inc1,
+        index,
+        minhash_band_index(inc1, num_hashes=K, bands=B),
+        num_hashes=K,
+        bands=B,
+        est_threshold=chain_t,
     )
     assert sorted(r.doc_id for r in r1.accepted.collect()) == [1]
     index = index.union(r1.index_rows.select(*index.columns))
 
+    inc2 = docs.where("doc_id = 3")
     r2 = incremental_dedup(
-        docs.where("doc_id = 3"), index, num_hashes=K, bands=B, est_threshold=chain_t
+        inc2,
+        index,
+        minhash_band_index(inc2, num_hashes=K, bands=B),
+        num_hashes=K,
+        bands=B,
+        est_threshold=chain_t,
     )
     assert [r.doc_id for r in r2.accepted.collect()] == []  # c rejected by b
 
@@ -116,7 +129,7 @@ def test_rejected_docs_still_disqualify_their_future_copies(spark):
 def test_index_width_mismatch_raises(spark, corpus):
     idx = minhash_band_index(corpus.limit(5), num_hashes=8, bands=4)
     with pytest.raises(ValueError, match="8-hash"):
-        incremental_dedup(corpus, idx, num_hashes=16, bands=4)
+        incremental_dedup(corpus, idx, minhash_band_index(corpus), num_hashes=16, bands=4)
 
 
 def test_band_params_divisibility_guard(spark, corpus):
@@ -130,11 +143,15 @@ def test_empty_increment_and_sub_shingle_docs(spark, corpus):
     minhash_signatures) and contribute no index rows."""
     index = minhash_band_index(corpus, num_hashes=K, bands=B)
     empty = corpus.where("doc_id < 0")
-    res = incremental_dedup(empty, index, num_hashes=K, bands=B)
+    res = incremental_dedup(
+        empty, index, minhash_band_index(empty, num_hashes=K, bands=B), num_hashes=K, bands=B
+    )
     assert res.accepted.count() == 0 and res.index_rows.count() == 0
 
     short = spark.createDataFrame([(1000, "just two")], "doc_id long, text string")
-    res2 = incremental_dedup(short, index, num_hashes=K, bands=B)
+    res2 = incremental_dedup(
+        short, index, minhash_band_index(short, num_hashes=K, bands=B), num_hashes=K, bands=B
+    )
     assert [r.doc_id for r in res2.accepted.collect()] == [1000]
     assert res2.index_rows.count() == 0
 
@@ -219,7 +236,8 @@ def test_incremental_parity_property(spark, choices, cut_mask):
     lo = 0
     for hi in cuts:
         inc = docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        res = incremental_dedup(inc, index, num_hashes=K, bands=B, est_threshold=T)
+        rows = minhash_band_index(inc, num_hashes=K, bands=B)
+        res = incremental_dedup(inc, index, rows, num_hashes=K, bands=B, est_threshold=T)
         got.extend(r.doc_id for r in res.accepted.collect())
         index = index.union(res.index_rows.select(*index.columns))
         lo = hi
@@ -498,7 +516,10 @@ def test_incremental_embed_near_dup_matches_one_shot(spark):
         lo = 0
         for hi in cuts:
             inc = emb.where((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
-            res = incremental_embed_near_dup(inc, index, threshold=0.995, dims=dims, n_planes=6)
+            rows = embedding_bucket_index(inc, dims=dims, n_planes=6)
+            res = incremental_embed_near_dup(
+                inc, index, rows, threshold=0.995, dims=dims, n_planes=6
+            )
             got.extend(r.vec_id for r in res.accepted.collect())
             index = index.union(res.index_rows.select(*index.columns))
             lo = hi
@@ -536,10 +557,11 @@ def test_est_threshold_exact_boundary(spark):
 
     for n_pert, est in [(3, 13 / 16), (4, 12 / 16)]:
         idx = crafted_index(n_pert)
-        at_t = incremental_dedup(doc, idx, num_hashes=K, bands=B, est_threshold=est)
+        rows = minhash_band_index(doc, num_hashes=K, bands=B)
+        at_t = incremental_dedup(doc, idx, rows, num_hashes=K, bands=B, est_threshold=est)
         assert at_t.accepted.count() == 0, f"est == t must reject (est={est})"
         above = incremental_dedup(
-            doc, idx, num_hashes=K, bands=B, est_threshold=math.nextafter(est, 1.0)
+            doc, idx, rows, num_hashes=K, bands=B, est_threshold=math.nextafter(est, 1.0)
         )
         assert above.accepted.count() == 1, f"est < t must accept (est={est})"
 
@@ -624,10 +646,12 @@ def test_int8_cosine_exact_boundary(spark):
 
     # the engine's _qcos order: d / (n.q_norm * x.q_norm), n = increment
     t = 16129.0 / (math.sqrt(25154.0) * 127.0)
-    at_t = incremental_embed_near_dup(inc, idx, threshold=t, dims=dims, n_planes=n_planes)
+    at_t = incremental_embed_near_dup(
+        inc, idx, inc_rows, threshold=t, dims=dims, n_planes=n_planes
+    )
     assert at_t.accepted.count() == 0, "qcos == t must reject"
     above = incremental_embed_near_dup(
-        inc, idx, threshold=math.nextafter(t, 1.0), dims=dims, n_planes=n_planes
+        inc, idx, inc_rows, threshold=math.nextafter(t, 1.0), dims=dims, n_planes=n_planes
     )
     assert above.accepted.count() == 1, "qcos < t must accept"
 
@@ -898,7 +922,11 @@ def test_arrow_pair_scorer_matches_jvm_filter(spark, monkeypatch):
         incremental_semantic_near_dup,
         semantic_cell_index,
     )
-    from meta_morph_etl_databricks_spark.operators.semantic import kmeans_int8_tree
+    from meta_morph_etl_databricks_spark.operators.semantic import (
+        kmeans_int8_tree,
+        semantic_cell_assign,
+        shifted_codes,
+    )
 
     def jvm_reject_ids(pairs, id_col, a_vec, b_vec, a_norm, b_norm, threshold,
                        out_name, out_type):
@@ -931,13 +959,19 @@ def test_arrow_pair_scorer_matches_jvm_filter(spark, monkeypatch):
         assert got == want and got
         return got
 
-    asg, _, tree = kmeans_int8_tree(boot, k=4, iters=1, dims=8)
-    idx = semantic_cell_index(boot, tree, 8, _cells=asg.withColumnRenamed("cluster", "cell"))
-    run_both(lambda: incremental_semantic_near_dup(inc, idx, tree, threshold=0.93, dims=8))
+    asg, _, tree = kmeans_int8_tree(shifted_codes(boot, 8), k=4, iters=1)
+    idx = semantic_cell_index(boot, asg.withColumnRenamed("cluster", "cell"))
+    rows = semantic_cell_index(inc, semantic_cell_assign(shifted_codes(inc, 8), tree))
+    run_both(
+        lambda: incremental_semantic_near_dup(inc, idx, rows, tree, threshold=0.93, dims=8)
+    )
 
     bidx = embedding_bucket_index(boot, dims=8, n_planes=3)
+    brows = embedding_bucket_index(inc, dims=8, n_planes=3)
     run_both(
-        lambda: incremental_embed_near_dup(inc, bidx, threshold=0.93, dims=8, n_planes=3)
+        lambda: incremental_embed_near_dup(
+            inc, bidx, brows, threshold=0.93, dims=8, n_planes=3
+        )
     )
 
 

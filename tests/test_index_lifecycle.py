@@ -344,3 +344,91 @@ def test_retract_unknown_ids_is_noop(spark, tmp_path):
     assert ix.open_band_index(spark, path)[0].count() == n0
     with pytest.raises(ValueError, match="nothing to retract"):
         ix.retract_ids(spark, str(tmp_path / "nope"), [1])
+
+
+# ------------------------------------------------ compaction dial
+def _mk_band_index(spark, path, n_docs: int = 30):
+    rows = [(i, " ".join(f"d{i}w{j}" for j in range(30))) for i in range(n_docs)]
+    docs = spark.createDataFrame(rows, DSCHEMA)
+    ix.create_band_index(docs, path, n_buckets=8)
+    return docs
+
+
+def test_compact_due_counts_appends_and_resets_on_rewrite(spark, tmp_path):
+    """r14: the small-file dial.  Committed appends bump the _appends
+    counter O(1); compact_due fires at the threshold; ANY generational
+    rewrite resets it for free (the counter lives in the live gen dir);
+    index_info surfaces both."""
+    path = str(tmp_path / "bidx_dial")
+    docs = _mk_band_index(spark, path)
+    assert ix.compact_due(spark, path, max_appends=2) is False
+    assert ix.index_info(spark, path)["appends_since_rewrite"] == 0
+
+    def inc(ids):
+        rows = [(i, " ".join(f"x{i}w{j}" for j in range(30))) for i in ids]
+        return spark.createDataFrame(rows, DSCHEMA)
+
+    ix.serve_incremental_dedup(inc([100, 101]), path, append=True)
+    assert ix.index_info(spark, path)["appends_since_rewrite"] == 1
+    assert ix.compact_due(spark, path, max_appends=2) is False
+    ix.serve_incremental_dedup(inc([102]), path, append=True)
+    info = ix.index_info(spark, path)
+    assert info["appends_since_rewrite"] == 2
+    assert ix.compact_due(spark, path, max_appends=2) is True
+    assert info["compact_due"] is False  # default threshold (8) not yet hit
+
+    # the dial is O(1): it reads one small file, no index scan — pin the
+    # structural property by pointing it at a counter we hand-write
+    live, meta = ix.live_index(spark, path)
+    ix._replace_small_file(spark, f"{live}/{ix.APPENDS_FILE}", "99")
+    assert ix.compact_due(spark, path) is True
+    assert ix.index_info(spark, path)["compact_due"] is True
+
+    # any generational rewrite resets: compact, then the counter is gone
+    ix.compact_index(spark, path)
+    info2 = ix.index_info(spark, path)
+    assert info2["appends_since_rewrite"] == 0
+    assert ix.compact_due(spark, path, max_appends=2) is False
+    # post-reset appends count again and serving still works
+    ix.serve_incremental_dedup(inc([103]), path, append=True)
+    assert ix.index_info(spark, path)["appends_since_rewrite"] == 1
+    assert docs is not None
+
+
+def test_streaming_batches_bump_the_compaction_dial(spark, tmp_path):
+    """The streaming sinks' per-batch appends feed the same _appends
+    counter the batch dial reads — compact_every and compact_due are
+    one policy counted two ways, and a compact_every trigger resets
+    the counter like any generational rewrite."""
+    import random
+
+    from meta_morph_etl_databricks_spark.streaming.dedup import stream_ivf_ingest
+
+    rng = random.Random(5)
+    schema = "vec_id long, embedding array<double>"
+
+    def vecs(ids):
+        return [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in ids]
+
+    src = tmp_path / "dsrc"
+    src.mkdir()
+    path = str(tmp_path / "didx")
+    ckpt = str(tmp_path / "dckpt")
+
+    def run_once(**kw):
+        stream = spark.readStream.schema(schema).parquet(str(src) + "/*")
+        q = stream_ivf_ingest(stream, path, ckpt, **kw)
+        q.awaitTermination(120)
+
+    spark.createDataFrame(vecs(range(30)), schema).write.parquet(str(src / "b1"))
+    run_once()  # bootstrap batch: create, no append yet
+    assert ix.index_info(spark, path)["appends_since_rewrite"] == 0
+    spark.createDataFrame(vecs(range(30, 60)), schema).write.parquet(str(src / "b2"))
+    run_once()
+    assert ix.index_info(spark, path)["appends_since_rewrite"] == 1
+    assert ix.compact_due(spark, path, max_appends=1) is True
+    # a compact_every-triggered compaction resets the dial
+    spark.createDataFrame(vecs(range(60, 90)), schema).write.parquet(str(src / "b3"))
+    run_once(compact_every=1)
+    assert ix.index_info(spark, path)["appends_since_rewrite"] == 0
+    assert ix.compact_due(spark, path, max_appends=1) is False

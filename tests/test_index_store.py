@@ -84,7 +84,10 @@ def test_band_store_serve_matches_dataframe_path(spark, corpus, tmp_path):
     res = ix.serve_incremental_dedup(inc, d, append=True)
     got = sorted(r.doc_id for r in res.accepted.collect())
     plain = incremental_dedup(
-        inc, minhash_band_index(seed), index_meta={"num_hashes": 16, "bands": 4}
+        inc,
+        minhash_band_index(seed),
+        minhash_band_index(inc),
+        index_meta={"num_hashes": 16, "bands": 4},
     )
     want = sorted(r.doc_id for r in plain.accepted.collect())
     assert got == want
@@ -115,7 +118,9 @@ def test_band_store_multi_increment_chain(spark, corpus, tmp_path):
     want: list[int] = []
     for lo, hi in [(0, 20), (20, 41), (41, 60)]:
         inc = corpus.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        res = incremental_dedup(inc, index, index_meta={"num_hashes": 16, "bands": 4})
+        res = incremental_dedup(
+            inc, index, minhash_band_index(inc), index_meta={"num_hashes": 16, "bands": 4}
+        )
         want.extend(r.doc_id for r in res.accepted.collect())
         index = index.union(res.index_rows.select(*index.columns))
     assert sorted(got) == sorted(want)
@@ -130,9 +135,11 @@ def test_band_meta_mismatch_raises(spark, corpus, tmp_path):
         ix.open_band_index(spark, d, bands=8)
     idx, meta = ix.open_band_index(spark, d)  # no expectations: fine
     with pytest.raises(ValueError, match="num_hashes"):
-        incremental_dedup(corpus, idx.drop("pfx"), index_meta=meta, num_hashes=8, bands=4)
+        rows = minhash_band_index(corpus, num_hashes=8, bands=4)
+        incremental_dedup(corpus, idx.drop("pfx"), rows, index_meta=meta, num_hashes=8, bands=4)
     with pytest.raises(ValueError, match="bands"):
-        incremental_dedup(corpus, idx.drop("pfx"), index_meta=meta, num_hashes=16, bands=2)
+        rows = minhash_band_index(corpus, num_hashes=16, bands=2)
+        incremental_dedup(corpus, idx.drop("pfx"), rows, index_meta=meta, num_hashes=16, bands=2)
 
 
 def test_band_probe_fallback_catches_bands_mismatch(spark, corpus):
@@ -141,7 +148,7 @@ def test_band_probe_fallback_catches_bands_mismatch(spark, corpus):
     probe now checks max band_idx too."""
     idx = minhash_band_index(corpus.limit(10), num_hashes=16, bands=8)
     with pytest.raises(ValueError, match="8 bands"):
-        incremental_dedup(corpus, idx, num_hashes=16, bands=4)
+        incremental_dedup(corpus, idx, minhash_band_index(corpus), num_hashes=16, bands=4)
     # width axis still covered (the original probe's test lives in
     # test_incremental_dedup.py::test_index_width_mismatch_raises)
 
@@ -181,7 +188,13 @@ def test_embed_store_auto_center_and_serve_parity(spark, emb, tmp_path):
     got = sorted(r.vec_id for r in res.accepted.collect())
     cidx = embedding_bucket_index(seed, 16, 6, center=meta["center"])
     plain = incremental_embed_near_dup(
-        inc, cidx, threshold=0.995, dims=16, n_planes=6, center=meta["center"]
+        inc,
+        cidx,
+        embedding_bucket_index(inc, 16, 6, center=meta["center"]),
+        threshold=0.995,
+        dims=16,
+        n_planes=6,
+        center=meta["center"],
     )
     want = sorted(r.vec_id for r in plain.accepted.collect())
     assert got == want and got  # non-trivial
@@ -207,14 +220,20 @@ def test_embed_meta_mismatch_raises_every_axis(spark, emb, tmp_path):
     idx, _ = ix.open_embedding_index(spark, d, dims=16, n_planes=6)
     with pytest.raises(ValueError, match="center"):
         incremental_embed_near_dup(
-            emb, idx.drop("pfx"), dims=16, n_planes=6, center=None, index_meta=meta
+            emb,
+            idx.drop("pfx"),
+            embedding_bucket_index(emb, 16, 6),
+            dims=16,
+            n_planes=6,
+            center=None,
+            index_meta=meta,
         )
 
 
 def test_embed_probe_fallback_catches_dims(spark, emb):
     idx = embedding_bucket_index(emb.where("vec_id < 20"), dims=16, n_planes=6)
     with pytest.raises(ValueError, match="16-dim"):
-        incremental_embed_near_dup(emb, idx, dims=8, n_planes=6)
+        incremental_embed_near_dup(emb, idx, embedding_bucket_index(emb, 8, 6), dims=8, n_planes=6)
 
 
 def test_wrong_length_vector_gets_null_bucket(spark, emb):

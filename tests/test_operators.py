@@ -1391,6 +1391,7 @@ def test_curate_corpus_group_collapse_vs_pair_drop(spark):
     removes only verified near-dups' larger ids → keeps {1,2};
     group_collapse removes everything transitively connected → {1}."""
     from meta_morph_etl_databricks_spark.operators.dedup import curate_corpus
+    from meta_morph_etl_databricks_spark.operators.incremental import minhash_band_index
 
     words = [f"w{i}" for i in range(16)]
     d1 = "the " + " ".join(words)
@@ -1402,8 +1403,8 @@ def test_curate_corpus_group_collapse_vs_pair_drop(spark):
         return sorted(
             r.doc_id
             for r in curate_corpus(
-                docs, min_quality=0.0, jaccard_threshold=0.4,
-                num_hashes=16, bands=16, group_collapse=gc,
+                docs, minhash_band_index(docs, num_hashes=16, bands=16),
+                min_quality=0.0, jaccard_threshold=0.4, group_collapse=gc,
             ).select("doc_id").collect()
         )
 
@@ -1541,3 +1542,64 @@ def test_dlit_renders_every_double_bit_exactly(spark):
     assert len(row) == len(vals)
     for want, got in zip(vals, row):
         assert struct.pack("<d", want) == struct.pack("<d", got), (want, got)
+
+
+def test_float_kernel_string_path_matches_column_path(spark):
+    """similarity.dot/norm/cosine_with_norms: the r14 F.expr fast path
+    (string column refs, one py4j round trip) must agree with the
+    Column-lambda form on every degenerate shape the kernels guard —
+    NULL vector, empty vector, NaN/Inf component, zero norm — and on
+    alias-qualified refs (`a.embedding`)."""
+    from pyspark.sql import functions as F
+
+    from meta_morph_etl_databricks_spark.operators.similarity import (
+        cosine_with_norms,
+        dot,
+        norm,
+    )
+
+    rows = [
+        (1, [1.0, 2.0, 3.0], [4.0, 5.0, 6.0]),
+        (2, None, [1.0, 0.0, 0.0]),
+        (3, [], []),
+        (4, [float("nan"), 1.0, 0.0], [1.0, 1.0, 1.0]),
+        (5, [float("inf"), 1.0, 0.0], [1.0, 1.0, 1.0]),
+        (6, [0.0, 0.0, 0.0], [1.0, 2.0, 3.0]),
+    ]
+    df = spark.createDataFrame(rows, "id long, u array<double>, v array<double>")
+    base = df.select(
+        "id",
+        "u",
+        "v",
+        norm(F.col("u")).alias("nu_col"),
+        norm("u").alias("nu_str"),
+        dot(F.col("u"), F.col("v")).alias("d_col"),
+        dot("u", "v").alias("d_str"),
+    )
+    both = base.select(
+        "id",
+        "nu_col",
+        "nu_str",
+        "d_col",
+        "d_str",
+        cosine_with_norms(F.col("u"), F.col("v"), F.col("nu_col"), F.col("nu_col")).alias("c_col"),
+        cosine_with_norms("u", "v", "nu_str", "nu_str").alias("c_str"),
+    )
+    for r in both.collect():
+        for a, b in (("nu_col", "nu_str"), ("d_col", "d_str"), ("c_col", "c_str")):
+            va, vb = getattr(r, a), getattr(r, b)
+            same = (va is None and vb is None) or va == vb or (va != va and vb != vb)
+            assert same, (r.id, a, va, b, vb)
+    # alias-qualified refs resolve through the string path
+    withn = df.select("id", "u", "v", norm("u").alias("nu"), norm("v").alias("nv"))
+    a, b = withn.alias("a"), withn.alias("b")
+    q = a.join(b, F.col("a.id") == F.col("b.id")).select(
+        F.col("a.id").alias("id"),
+        cosine_with_norms("a.u", "b.v", "a.nu", "b.nv").alias("c_str"),
+        cosine_with_norms(
+            F.col("a.u"), F.col("b.v"), F.col("a.nu"), F.col("b.nv")
+        ).alias("c_col"),
+    )
+    for r in q.collect():
+        same = r.c_str == r.c_col or (r.c_str != r.c_str and r.c_col != r.c_col)
+        assert same, (r.id, r.c_str, r.c_col)

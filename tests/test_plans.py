@@ -210,6 +210,39 @@ def test_runtime_bloom_filter_prunes_probe_side(spark, tmp_path):
     assert len(rows_bloom) == 334  # k in 0,200,...,199800 with k%3==0
 
 
+def _warm_build_jobs(spark, build, sf_dir, group: str) -> int:
+    """Spark jobs run while BUILDING ``build(spark, sf_dir)`` a second
+    time in one session — the first build pays for schema inference
+    and cache fills."""
+    build(spark, sf_dir).collect()
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "warm build")
+    try:
+        build(spark, sf_dir)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+
+
+def test_shared_subplan_build_jobs_are_pinned(spark, sf_dir, monkeypatch):
+    """The plan modules build each shared sub-plan once and pass it in:
+    q_corpus_curation's one minhash band pass feeds both arms, and
+    q_embed_near_dup_lsh's one shifted-codes pass and one index-rows
+    pass feed every arm.  A second copy of either chain shows up as
+    extra build jobs — on the one-collect driver path and on the fully
+    distributed path (driver bound 0) alike."""
+    import meta_morph_etl_databricks_spark.operators.semantic as sem
+    from meta_morph_etl_databricks_spark.plans.ml_queries import (
+        q_corpus_curation,
+        q_embed_near_dup_lsh,
+    )
+
+    assert _warm_build_jobs(spark, q_corpus_curation, sf_dir, "pin_curation") == 10
+    assert _warm_build_jobs(spark, q_embed_near_dup_lsh, sf_dir, "pin_embed") == 6
+    monkeypatch.setattr(sem, "_DRIVER_LLOYD_MAX_ROWS", 0)
+    assert _warm_build_jobs(spark, q_embed_near_dup_lsh, sf_dir, "pin_embed_dist") == 44
+
+
 def test_q_embed_one_collect_path_matches_distributed(spark, sf_dir, monkeypatch):
     """Slot-level pin for the r15 q_embed build restructure: the
     one-collect fast path (full corpus ≤ the driver bound) and the
@@ -223,3 +256,54 @@ def test_q_embed_one_collect_path_matches_distributed(spark, sf_dir, monkeypatch
     monkeypatch.setattr(sem, "_DRIVER_LLOYD_MAX_ROWS", 0)
     slow = sorted(map(tuple, q_embed_near_dup_lsh(spark, sf_dir).collect()))
     assert fast == slow and fast
+
+
+def test_cube_and_grouping_sets_match_manual_unions(spark):
+    """r14: the rollup oracle arm (q_quantiles_by_status) represents
+    the Expand plan family; this pins the OTHER two members against
+    first principles — cube() equals the union of all four manual
+    GROUP BYs, and SQL GROUPING SETS equals exactly the sets asked
+    for, with grouping_id() disambiguating all-NULL group values."""
+    from pyspark.sql import functions as F
+
+    rows = [
+        ("F", "HIGH", 10.0), ("F", "LOW", 20.0), ("O", "HIGH", 5.0),
+        ("O", None, 7.0), ("P", "LOW", 3.0), ("F", "HIGH", 2.0),
+    ]
+    df = spark.createDataFrame(rows, "status string, prio string, v double")
+
+    cube = {
+        (r.status, r.prio, r.gid, r.cnt, r.s)
+        for r in df.cube("status", "prio")
+        .agg(
+            F.grouping_id().cast("int").alias("gid"),
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum("v").alias("s"),
+        )
+        .collect()
+    }
+    manual = set()
+    for gid, keys in [(0, ["status", "prio"]), (1, ["status"]), (2, ["prio"]), (3, [])]:
+        agg = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt"), F.sum("v").alias("s"))
+        for r in agg.collect():
+            d = r.asDict()
+            manual.add((d.get("status"), d.get("prio"), gid, d["cnt"], d["s"]))
+    assert cube == manual
+    # the (O, NULL) DATA group at gid=0 and the O rollup row at gid=1
+    # are distinct rows — grouping_id is what tells them apart
+    assert ("O", None, 0, 1, 7.0) in cube and ("O", None, 1, 2, 12.0) in cube
+
+    df.createOrReplaceTempView("gs_t")
+    gs = {
+        (r.status, r.prio, r.gid, r.cnt)
+        for r in spark.sql(
+            """SELECT status, prio, CAST(grouping_id() AS INT) AS gid,
+                      COUNT(*) AS cnt
+               FROM gs_t GROUP BY GROUPING SETS ((status), (prio))"""
+        ).collect()
+    }
+    expect = {(d.get("status"), d.get("prio"), gid, d["cnt"])
+              for gid, keys in [(1, ["status"]), (2, ["prio"])]
+              for d in (r.asDict() for r in
+                        df.groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt")).collect())}
+    assert gs == expect

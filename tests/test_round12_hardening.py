@@ -393,7 +393,11 @@ def test_append_index_rows_bumps_sem_counter(spark, tmp_path):
     from meta_morph_etl_databricks_spark.operators.incremental import (
         semantic_cell_index,
     )
-    from meta_morph_etl_databricks_spark.operators.semantic import tree_from_json
+    from meta_morph_etl_databricks_spark.operators.semantic import (
+        semantic_cell_assign,
+        shifted_codes,
+        tree_from_json,
+    )
 
     rng = random.Random(5)
 
@@ -406,7 +410,9 @@ def test_append_index_rows_bumps_sem_counter(spark, tmp_path):
     path = str(tmp_path / "semidx")
     meta = ix.create_semantic_index(emb(0, 40), path, k=4, iters=1, dims=8)
     assert ix.live_index(spark, path)[1]["rows"] == 40
-    coded = semantic_cell_index(emb(100, 25), tree_from_json(meta["tree"]), 8)
+    inc = emb(100, 25)
+    cells = semantic_cell_assign(shifted_codes(inc, 8), tree_from_json(meta["tree"]))
+    coded = semantic_cell_index(inc, cells)
     ix.append_index_rows(coded, path, meta)
     live, meta2 = ix.live_index(spark, path)
     assert meta2["rows"] == 65  # counter grew with the append
@@ -538,9 +544,12 @@ def test_stale_assigner_tree_raises_against_sidecar(spark, tmp_path):
 
     from meta_morph_etl_databricks_spark.operators.incremental import (
         incremental_semantic_near_dup,
+        semantic_cell_index,
     )
     from meta_morph_etl_databricks_spark.operators.semantic import (
         kmeans_int8_tree,
+        semantic_cell_assign,
+        shifted_codes,
         tree_from_json,
     )
 
@@ -556,14 +565,20 @@ def test_stale_assigner_tree_raises_against_sidecar(spark, tmp_path):
     meta = ix.create_semantic_index(emb(0, 40), path, k=4, iters=1, dims=8)
     index_df, _ = ix.open_semantic_index(spark, path)
     # a DIFFERENT bootstrap's tree — the stale-assigner hazard
-    _, _, stale_tree = kmeans_int8_tree(emb(500, 40), 4, 1, 8, n_docs=40)
+    _, _, stale_tree = kmeans_int8_tree(shifted_codes(emb(500, 40), 8), 4, 1)
+    inc = emb(100, 10)
+
+    def rows(tree):
+        return semantic_cell_index(inc, semantic_cell_assign(shifted_codes(inc, 8), tree))
+
     with pytest.raises(ValueError, match="assigner tree"):
         incremental_semantic_near_dup(
-            emb(100, 10), index_df, stale_tree, dims=8, index_meta=meta
+            inc, index_df, rows(stale_tree), stale_tree, dims=8, index_meta=meta
         )
     # the sidecar's own tree passes (round-trip equality)
+    tree = tree_from_json(meta["tree"])
     res = incremental_semantic_near_dup(
-        emb(100, 10), index_df, tree_from_json(meta["tree"]), dims=8, index_meta=meta
+        inc, index_df, rows(tree), tree, dims=8, index_meta=meta
     )
     assert res.accepted.count() <= 10
 

@@ -32,9 +32,18 @@ from meta_morph_etl_databricks_spark.operators.semantic import (
     auto_k,
     kmeans_int8,
     kmeans_int8_tree,
+    materialize_assignment,
+    semantic_cell_assign,
     semantic_dedup,
     semantic_dedup_pairs,
+    shifted_codes,
 )
+
+
+def _pairs(emb, k, iters, threshold, dims):
+    """semantic_dedup_pairs over a fresh kmeans_int8 assignment."""
+    asg = materialize_assignment(kmeans_int8(emb, k, iters, dims)[0], emb, dims)
+    return semantic_dedup_pairs(emb, asg, threshold)
 
 
 @pytest.fixture(scope="module")
@@ -172,7 +181,7 @@ def test_planted_clusters_separate_and_pairs_stay_within(spark, emb):
     assert len({cl[i] for i in b_ids}) == 1
     assert cl[a_ids[0]] != cl[b_ids[0]]
 
-    pairs = semantic_dedup_pairs(emb, k=2, iters=2, threshold=0.99, dims=8).collect()
+    pairs = _pairs(emb, k=2, iters=2, threshold=0.99, dims=8).collect()
     assert pairs  # the planted near-dups are found
     for p in pairs:
         assert cl[p.id_a] == cl[p.id_b]
@@ -184,7 +193,7 @@ def test_semantic_dedup_keep_policy_and_corrupt_rows(spark, emb):
     vectors (NULL / NaN / wrong-length) are never paired, always
     survive, and carry a NULL cluster."""
     t = 0.99
-    pairs = semantic_dedup_pairs(emb, k=2, iters=1, threshold=t, dims=8)
+    pairs = _pairs(emb, k=2, iters=1, threshold=t, dims=8)
     dropped = {r.id_b for r in pairs.collect()}
     kept = semantic_dedup(emb, k=2, iters=1, threshold=t, dims=8)
     got = {r.vec_id: r.cluster for r in kept.collect()}
@@ -253,11 +262,11 @@ def test_auto_k_end_to_end_occupancy_and_pinned_parity(spark):
 
     pairs_auto = {
         (r.id_a, r.id_b)
-        for r in semantic_dedup_pairs(emb, k=None, iters=1, threshold=0.99, dims=8).collect()
+        for r in _pairs(emb, k=None, iters=1, threshold=0.99, dims=8).collect()
     }
     pairs_pin = {
         (r.id_a, r.id_b)
-        for r in semantic_dedup_pairs(emb, k=10, iters=1, threshold=0.99, dims=8).collect()
+        for r in _pairs(emb, k=10, iters=1, threshold=0.99, dims=8).collect()
     }
     assert pairs_auto and pairs_auto == pairs_pin  # the family must pair
 
@@ -306,7 +315,7 @@ def test_two_level_partition_invariance_and_nesting(spark, emb):
 def test_two_level_pairs_still_contract(spark, emb):
     """semantic_dedup_pairs through the two-level path keeps the pair
     contract: id_a < id_b, cosine ≥ t, both ends in one (fine) cell."""
-    pairs = semantic_dedup_pairs(emb, k=66, iters=1, threshold=0.99, dims=8)
+    pairs = _pairs(emb, k=66, iters=1, threshold=0.99, dims=8)
     asg, _ = kmeans_int8(emb, k=66, iters=1, dims=8)
     cl = {r.vec_id: r.cluster for r in asg.collect()}
     rows = pairs.collect()
@@ -363,7 +372,7 @@ def test_oracle_sql_corrupt_row_parity(spark, emb):
     emb = emb.unionByName(extra)
     got = sorted(
         (r.id_a, r.id_b, r.cosine_sim)
-        for r in semantic_dedup_pairs(emb, k=k, iters=iters, threshold=t, dims=dims).collect()
+        for r in _pairs(emb, k=k, iters=iters, threshold=t, dims=dims).collect()
     )
     assert not any(50 in (a, b) or 51 in (a, b) for a, b, _ in got)
 
@@ -406,9 +415,9 @@ def test_driver_lloyd_matches_distributed(spark, emb, monkeypatch):
         {"k": 7, "iters": 2, "flat_k_max": 3},  # forced two-level
         {"k": 4100, "iters": 1},  # k > 64² → coarse recursion
     ):
-        asg_d, cents_d, tree_d = kmeans_int8_tree(emb, dims=8, **kwargs)
+        asg_d, cents_d, tree_d = kmeans_int8_tree(shifted_codes(emb, 8), **kwargs)
         monkeypatch.setattr(sem, "_DRIVER_LLOYD_MAX_ROWS", 0)
-        asg_x, cents_x, tree_x = kmeans_int8_tree(emb, dims=8, **kwargs)
+        asg_x, cents_x, tree_x = kmeans_int8_tree(shifted_codes(emb, 8), **kwargs)
         monkeypatch.setattr(sem, "_DRIVER_LLOYD_MAX_ROWS", 4096)
         assert sorted(map(tuple, asg_d.collect())) == sorted(map(tuple, asg_x.collect()))
         assert cents_d == cents_x
@@ -426,13 +435,13 @@ def test_driver_lloyd_empty_and_corrupt_only(spark, monkeypatch):
         [(1, None), (2, [float("nan")] * 8)], "vec_id long, embedding array<double>"
     )
     for df in (empty, corrupt):
-        asg, cents, tree = kmeans_int8_tree(df, k=4, iters=1, dims=8)
+        asg, cents, tree = kmeans_int8_tree(shifted_codes(df, 8), k=4, iters=1)
         assert asg.count() == 0 and cents == [] and tree is None
 
 
 def test_driver_local_assign_skips_checkpoint(spark, emb, monkeypatch):
     """r14 finding 19: a driver-replayed assignment is marked
-    driver-local and semantic_dedup_pairs skips its materialization /
+    driver-local and materialize_assignment skips its materialization /
     emptiness jobs for it — the pair set must equal the distributed
     (checkpointed) path's, and the corrupt-corpus diagnostic must
     still ride the UNMARKED empty-frame path."""
@@ -441,13 +450,13 @@ def test_driver_local_assign_skips_checkpoint(spark, emb, monkeypatch):
     asg = kmeans_int8(emb, k=4, iters=2, dims=8)[0]
     assert getattr(asg, "_sg_driver_local", False)  # marked literal
     got = sorted(
-        map(tuple, semantic_dedup_pairs(emb, k=4, iters=2, threshold=0.8, dims=8).collect())
+        map(tuple, _pairs(emb, k=4, iters=2, threshold=0.8, dims=8).collect())
     )
     monkeypatch.setattr(sem, "_DRIVER_LLOYD_MAX_ROWS", 0)
     asg_x = kmeans_int8(emb, k=4, iters=2, dims=8)[0]
     assert not getattr(asg_x, "_sg_driver_local", False)
     want = sorted(
-        map(tuple, semantic_dedup_pairs(emb, k=4, iters=2, threshold=0.8, dims=8).collect())
+        map(tuple, _pairs(emb, k=4, iters=2, threshold=0.8, dims=8).collect())
     )
     assert got == want and got  # non-empty, path-identical
     # corrupt-only corpus: assignment is the empty frame (never marked),
@@ -457,37 +466,33 @@ def test_driver_local_assign_skips_checkpoint(spark, emb, monkeypatch):
         [(1, [1.0] * 5), (2, [2.0] * 5)], "vec_id long, embedding array<double>"
     )
     with pytest.raises(ValueError, match="dims"):
-        semantic_dedup_pairs(wrong, k=2, iters=1, threshold=0.8, dims=8)
+        _pairs(wrong, k=2, iters=1, threshold=0.8, dims=8)
 
 
 def test_codes_slice_matches_self_computed(spark, emb):
-    """r14 finding 20: handing kmeans/semantic_cell_index an id-slice of
-    ONE materialized full-corpus _shifted_codes pass must be
+    """r14 finding 20: handing kmeans/semantic_cell_assign an id-slice of
+    ONE materialized full-corpus shifted-codes pass must be
     bit-identical to each consumer building its own chain — quantize+
     shift is a pure per-row map, so slicing commutes with it."""
     from meta_morph_etl_databricks_spark.operators.incremental import (
         semantic_cell_index,
     )
-    from meta_morph_etl_databricks_spark.operators.semantic import (
-        _shifted_codes,
-        kmeans_int8_tree,
-        tree_to_json,
-    )
+    from meta_morph_etl_databricks_spark.operators.semantic import tree_to_json
 
-    codes_all = _shifted_codes(emb, 8, "vec_id", "embedding").localCheckpoint(
-        eager=False
-    )
+    codes_all = shifted_codes(emb, 8)
     half = F.col("vec_id") % 2 == 0
-    asg_s, cents_s, tree_s = kmeans_int8_tree(
-        emb.filter(half), k=4, iters=2, dims=8, _codes=codes_all.where(half)
+    asg_s, cents_s, tree_s = kmeans_int8_tree(codes_all.where(half), k=4, iters=2)
+    asg_o, cents_o, tree_o = kmeans_int8_tree(
+        shifted_codes(emb.filter(half), 8), k=4, iters=2
     )
-    asg_o, cents_o, tree_o = kmeans_int8_tree(emb.filter(half), k=4, iters=2, dims=8)
     assert sorted(map(tuple, asg_s.collect())) == sorted(map(tuple, asg_o.collect()))
     assert cents_s == cents_o and tree_to_json(tree_s) == tree_to_json(tree_o)
     rows_s = semantic_cell_index(
-        emb.filter(~half), tree_s, 8, _codes=codes_all.where(~half)
+        emb.filter(~half), semantic_cell_assign(codes_all.where(~half), tree_s)
     )
-    rows_o = semantic_cell_index(emb.filter(~half), tree_o, 8)
+    rows_o = semantic_cell_index(
+        emb.filter(~half), semantic_cell_assign(shifted_codes(emb.filter(~half), 8), tree_o)
+    )
     assert sorted(map(tuple, rows_s.collect())) == sorted(map(tuple, rows_o.collect()))
     # corrupt rows still ride the sliced index with NULL cell (the q_vec
     # payload quantizes the embeddings themselves, not the codes slice)
@@ -506,7 +511,7 @@ def test_driver_assign_tree_matches_distributed(spark, emb):
     codes = _shifted_codes(emb, 8, "vec_id", "embedding").localCheckpoint()
     u = _collect_u(codes)
     for kwargs in ({"k": 4, "iters": 2}, {"k": 7, "iters": 2, "flat_k_max": 3}):
-        _, _, tree = kmeans_int8_tree(emb, dims=8, **kwargs)
+        _, _, tree = kmeans_int8_tree(shifted_codes(emb, 8), **kwargs)
         want = {
             r[0]: r[1] for r in assign_cells(codes, tree, "vec_id").collect()
         }
@@ -514,7 +519,7 @@ def test_driver_assign_tree_matches_distributed(spark, emb):
         assert got == want and got
     # drop semantics: strip one occupied coarse cell's fine centroids
     # from a two-level tree — both paths must drop exactly those rows
-    _, _, tree = kmeans_int8_tree(emb, k=7, iters=2, dims=8, flat_k_max=3)
+    _, _, tree = kmeans_int8_tree(shifted_codes(emb, 8), k=7, iters=2, flat_k_max=3)
     kind, coarse, k2, cents2 = tree
     assert kind == "two" and len(cents2) > 1
     pruned = dict(cents2)
@@ -549,9 +554,7 @@ def test_full_corpus_rows_slices_match_per_arm(spark, emb):
     codes = _shifted_codes(emb, 8, "vec_id", "embedding").localCheckpoint()
     u = _collect_u(codes)
     boot_p = F.col("vec_id") < 20
-    _, _, tree = kmeans_int8_tree(
-        emb.filter(boot_p), k=4, iters=2, dims=8, _codes=codes.where(boot_p)
-    )
+    _, _, tree = kmeans_int8_tree(codes.where(boot_p), k=4, iters=2)
     cells_df = spark.createDataFrame(
         sorted(_driver_assign_tree(u, tree).items()),
         _literal_cells_schema(codes, "cell"),
@@ -575,9 +578,24 @@ def test_full_corpus_rows_slices_match_per_arm(spark, emb):
 
     for lo, hi in ((0, 20), (20, 30), (30, 1 << 40)):
         arm_p = (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
-        want = semantic_cell_index(emb.filter(arm_p), tree, 8).collect()
+        arm = emb.filter(arm_p)
+        want = semantic_cell_index(arm, semantic_cell_assign(shifted_codes(arm, 8), tree))
+        want = want.collect()
         got = full_rows.where(arm_p).collect()
         assert key(got) == key(want) and got
     # the corrupt rows ride with NULL cells, exactly like the r14 frames
     nulls = {r["vec_id"] for r in full_rows.where("cell IS NULL").collect()}
     assert nulls == {11, 17, 29}
+
+
+def test_cached_frame_is_keyed_by_session(spark):
+    """``spark.newSession()`` shares the applicationId; the centroid
+    frame cache must still hand each session a frame of its own."""
+    from meta_morph_etl_databricks_spark.operators.semantic import _cached_frame
+
+    content = [(0, 0, 1), (0, 1, 2)]
+    schema = "cid int, _pos int, _y long"
+    s2 = spark.newSession()
+    assert _cached_frame(spark, content, schema).sparkSession is spark
+    assert _cached_frame(s2, content, schema).sparkSession is s2
+    assert _cached_frame(spark, content, schema).sparkSession is spark

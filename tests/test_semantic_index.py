@@ -23,6 +23,7 @@ from meta_morph_etl_databricks_spark.operators.incremental import (
 from meta_morph_etl_databricks_spark.operators.semantic import (
     kmeans_int8_tree,
     semantic_cell_assign,
+    shifted_codes,
     tree_from_json,
     tree_to_json,
 )
@@ -58,13 +59,13 @@ def test_tree_roundtrip_and_assign_parity(spark):
     makes one-shot and incremental assignment one code path."""
     emb = spark.createDataFrame([r for r in _corpus(40)], SCHEMA)
     for kwargs in ({"k": 4}, {"k": 6, "flat_k_max": 2}):
-        asg, _, tree = kmeans_int8_tree(emb, iters=2, dims=DIMS, **kwargs)
+        asg, _, tree = kmeans_int8_tree(shifted_codes(emb, DIMS), iters=2, **kwargs)
         assert tree is not None
         assert tree_from_json(tree_to_json(tree)) == tree
         want = {r.vec_id: r.cluster for r in asg.collect()}
         got = {
             r.vec_id: r.cell
-            for r in semantic_cell_assign(emb, tree, dims=DIMS).collect()
+            for r in semantic_cell_assign(shifted_codes(emb, DIMS), tree).collect()
         }
         assert got == want and len(got) == 38  # 2 corrupt rows excluded
 
@@ -86,8 +87,12 @@ def test_serve_matches_one_shot_across_ragged_splits(spark, tmp_path):
     path0 = str(tmp_path / "ref")
     meta0 = ix.create_semantic_index(boot, path0, k=4, iters=1, dims=DIMS)
     tree = tree_from_json(meta0["tree"])
-    boot_rows = semantic_cell_index(boot, tree, DIMS)
-    res = incremental_semantic_near_dup(rest, boot_rows, tree, threshold=t, dims=DIMS)
+    def cell_rows(df):
+        return semantic_cell_index(df, semantic_cell_assign(shifted_codes(df, DIMS), tree))
+
+    res = incremental_semantic_near_dup(
+        rest, cell_rows(boot), cell_rows(rest), tree, threshold=t, dims=DIMS
+    )
     want = sorted(r.vec_id for r in res.accepted.collect())
     assert 24 in want and 31 in want  # corrupt rows always accepted
     assert len(want) < rest.count()  # the dup families must actually reject
@@ -255,7 +260,7 @@ def test_empty_coarse_cell_still_routable(spark, tmp_path):
     pts = [(0, vec(0, 0)), (1, vec(15, 0)), (2, vec(40, 0)), (3, vec(15, 40))]
     pts += [(4 + i, vec(28, 30)) for i in range(12)]
     emb = spark.createDataFrame(pts, SCHEMA)
-    asg, _, tree = kmeans_int8_tree(emb, k=7, iters=1, dims=3, flat_k_max=3)
+    asg, _, tree = kmeans_int8_tree(shifted_codes(emb, 3), k=7, iters=1, flat_k_max=3)
     assert tree[0] == "two"
     _, coarse, k2, cents2 = tree
     # the hole is REAL on this fixture: coarse cell 1 has no final member
@@ -307,7 +312,7 @@ def test_serve_int8_cosine_exact_boundary(spark, tmp_path):
     idx_df = ix.open_semantic_index(spark, path)[0]
     cells = {r.vec_id: r.cell for r in idx_df.collect()}
     tree = tree_from_json(ix.read_index_meta(spark, path)["tree"])
-    inc_cell = semantic_cell_assign(inc, tree, dims=dims).collect()[0].cell
+    inc_cell = semantic_cell_assign(shifted_codes(inc, dims), tree).collect()[0].cell
     assert cells[0] == inc_cell
 
     t = 16129.0 / (math.sqrt(25154.0) * 127.0)

@@ -324,3 +324,90 @@ def test_tombstone_ids_preserves_request_order_same_type(spark, tmp_path):
     # idempotent re-request
     assert ix.tombstone_ids(spark, path, [3, 9]) == 0
     assert ix.index_info(spark, path)["pending_tombstones"] == 3
+
+
+def test_numpy_integral_ids_accepted_and_coerced(spark, tmp_path):
+    """numpy.int64 ids are valid keys of a bigint index (pandas hands
+    them over routinely); the guard must not reject them, and the
+    persisted sidecar must hold plain JSON ints."""
+    import numpy as np
+
+    path = str(tmp_path / "bidx_np")
+    _mk_band_index(spark, path)
+    assert ix.tombstone_ids(spark, path, [np.int64(3), np.int32(5)]) == 2
+    live, _ = ix.live_index(spark, path)
+    stored = ix._tombstone_list(spark, live)
+    assert stored == [3, 5]
+    assert all(type(i) is int for i in stored)  # json-native, not numpy
+    # the sidecar itself round-trips through json cleanly
+    json.dumps(stored)
+    # retraction with numpy ids physically removes the doc's band rows
+    assert ix.retract_ids(spark, path, [np.int64(7)]) >= 1
+    assert ix.index_info(spark, path)["pending_tombstones"] == 0  # reaped
+
+
+def test_numpy_bool_still_rejected(spark, tmp_path):
+    """np.bool_ is Integral-adjacent in spirit but must stay rejected:
+    True tombstoning id 1 silently is the original hazard."""
+    import numpy as np
+    import pytest
+
+    path = str(tmp_path / "bidx_npb")
+    _mk_band_index(spark, path)
+    with pytest.raises(TypeError, match="incompatible id"):
+        ix.tombstone_ids(spark, path, [True])
+    # np.bool_ is not a numbers.Integral subclass → rejected by class
+    with pytest.raises(TypeError, match="incompatible id"):
+        ix.tombstone_ids(spark, path, [np.bool_(True)])
+
+
+def test_retract_ids_survives_unsortable_legacy_sidecar(spark, tmp_path):
+    """A pre-r13-guard sidecar can hold wrong-typed junk (a stringified
+    int under a bigint index) that both sorted() and createDataFrame
+    choke on.  Retraction must fully SUCCEED regardless: the purge
+    union is order-preserving dedup and the stored list passes through
+    the type filter (junk can never match a stored row, so dropping it
+    un-hides nothing); valid stored tombstones are still reaped and
+    the rewrite heals the sidecar."""
+    path = str(tmp_path / "bidx_legacy")
+    _mk_band_index(spark, path)
+    assert ix.tombstone_ids(spark, path, [4]) == 1
+    live, _ = ix.live_index(spark, path)
+    # the legacy artifact: ints mixed with a stringified int
+    ix._replace_small_file(
+        spark, f"{live}/{ix.TOMBSTONES_FILE}", json.dumps([4, "6"])
+    )
+    # serves stay resilient against the junk sidecar: id 4 is hidden,
+    # the junk hides nothing, nothing crashes
+    docs = spark.createDataFrame(
+        [(200, " ".join(f"n{j}" for j in range(30)))], DSCHEMA
+    )
+    assert ix.serve_incremental_dedup(docs, path, append=False).accepted.count() == 1
+    # retraction of a valid id succeeds AND reaps the valid stored
+    # tombstone (4) into the purge; the new generation's sidecar is gone
+    assert ix.retract_ids(spark, path, [9]) >= 1
+    live2, _ = ix.live_index(spark, path)
+    assert live2 != live
+    assert ix._tombstone_list(spark, live2) == []
+    stored = spark.read.parquet(live2)
+    assert stored.where("doc_id IN (4, 9)").count() == 0  # both purged
+
+
+def test_takedown_rewrite_heals_legacy_sidecar_junk(spark, tmp_path):
+    """The next takedown's sidecar rewrite drops pre-guard junk instead
+    of carrying it forward to crash a later serve/_ids_df."""
+    path = str(tmp_path / "bidx_heal")
+    _mk_band_index(spark, path)
+    live, _ = ix.live_index(spark, path)
+    ix._replace_small_file(
+        spark, f"{live}/{ix.TOMBSTONES_FILE}", json.dumps([2, "junk", 5])
+    )
+    assert ix.tombstone_ids(spark, path, [7]) == 1
+    assert ix._tombstone_list(spark, live) == [2, 5, 7]  # junk healed out
+    # resurrection path is sorted()-free too: clearing an id with junk
+    # present neither crashes nor loses the other pending takedowns
+    ix._replace_small_file(
+        spark, f"{live}/{ix.TOMBSTONES_FILE}", json.dumps([2, "junk", 5])
+    )
+    ix.clear_tombstones(spark, live, [5])
+    assert [i for i in ix._tombstone_list(spark, live) if i != "junk"] == [2]

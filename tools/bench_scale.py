@@ -385,6 +385,8 @@ def bench_semantic(spark, sampler: _Sampler, label: str, d: str, passes: int = 3
     auto-dial the 100 TB story actually rides on."""
     from meta_morph_etl_databricks_spark.operators.semantic import (
         auto_k,
+        kmeans_int8,
+        materialize_assignment,
         semantic_dedup_pairs,
     )
     from meta_morph_etl_databricks_spark.plans.ml_queries import _embeddings
@@ -395,10 +397,9 @@ def bench_semantic(spark, sampler: _Sampler, label: str, d: str, passes: int = 3
     rows: list[int] = []
 
     def run():
+        asg = kmeans_int8(emb, k=k, iters=1, dims=64, n_docs=n)[0]
         rows.append(
-            semantic_dedup_pairs(
-                emb, k=k, iters=1, threshold=0.18, dims=64, n_docs=n
-            ).count()
+            semantic_dedup_pairs(emb, materialize_assignment(asg, emb, 64), 0.18).count()
         )
 
     rec = sampler.measure(run, passes)
@@ -431,13 +432,11 @@ def bench_semantic(spark, sampler: _Sampler, label: str, d: str, passes: int = 3
         pair_sets = []
         for fn in (_kmeans_flat, _kmeans_two_level):
             asg = fn(codes, flat_k, 1, "vec_id")[0]
-            # the _assign contract: the CALLER checkpoints — the pair
-            # self-join reads the assignment twice
+            # checkpointed: the pair self-join reads the assignment twice
             pairs = semantic_dedup_pairs(
-                emb, threshold=0.9, dims=64,
-                _assign=asg.withColumnRenamed("_cl", "cluster").localCheckpoint(
-                    eager=True
-                ),
+                emb,
+                asg.withColumnRenamed("_cl", "cluster").localCheckpoint(eager=True),
+                0.9,
             )
             pair_sets.append({(r.id_a, r.id_b) for r in pairs.collect()})
         f_pairs, t_pairs = pair_sets
@@ -599,7 +598,10 @@ def bench_incremental(spark, sampler: _Sampler, label: str, d: str, passes: int 
         index = spark.read.parquet(idx_dir)
 
         inc_rec = sampler.measure(
-            lambda: incremental_dedup(increment, index).accepted.count(), passes
+            lambda: incremental_dedup(
+                increment, index, minhash_band_index(increment)
+            ).accepted.count(),
+            passes,
         )
         oneshot_rec = sampler.measure(
             lambda: minhash_lsh_candidates(docs).count(), passes
@@ -761,7 +763,11 @@ def bench_incremental_embed(spark, sampler: _Sampler, label: str, d: str, passes
 
         inc_rec = sampler.measure(
             lambda: incremental_embed_near_dup(
-                increment, index, threshold=0.9, n_planes=n_planes
+                increment,
+                index,
+                embedding_bucket_index(increment, n_planes=n_planes),
+                threshold=0.9,
+                n_planes=n_planes,
             ).accepted.count(),
             passes,
         )
