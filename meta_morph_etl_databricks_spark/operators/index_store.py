@@ -144,7 +144,7 @@ def write_index_meta(spark: SparkSession, path: str, meta: dict) -> None:
     """Persist ``meta`` as ``<path>/_index_meta.json`` via the Hadoop FS
     API (works on any supported filesystem, not just local — same
     rationale as sources.sinks.path_exists).  ``path`` is a DATA dir
-    (a generation dir, or a legacy flat root) — no pointer resolution;
+    (a generation dir) — no pointer resolution;
     the generation protocol relies on writing meta into a specific gen
     (and writing it LAST, see :func:`compact_index`)."""
     _write_small_file(
@@ -171,26 +171,26 @@ def live_index(spark: SparkSession, path: str) -> tuple[str, dict | None]:
     changes ``n_buckets`` or the assigner tree would mis-route the pfx
     pruning with stale meta.  Every open/serve path goes through here.
 
-    Counter overlay: for kinds that maintain the running row counter
-    (``rows`` in the sidecar — SEM since r10, IVF since r11), the LIVE
-    value lives in a separate ``_rows`` file so the meta sidecar stays
-    WRITE-ONCE after its generation completes (round-10 advice: the old
+    Counter overlay: the sidecar's ``rows`` is the build-time count;
+    the LIVE running row counter lives in a separate ``_rows`` file so
+    the meta sidecar stays WRITE-ONCE after its generation completes (round-10 advice: the old
     in-place meta rewrite left a truncation window on the completeness
     marker itself).  The overlay is read here — callers see one merged
     dict; a missing/torn ``_rows`` degrades to the sidecar's build-time
     count (a late drift dial, never a broken index)."""
     live = live_root(spark, path)
-    text = _read_small_file(spark, f"{live.rstrip('/')}/{META_FILE}")
+    if live == path.rstrip("/"):  # no generation — a root's own files are no index
+        return live, None
+    text = _read_small_file(spark, f"{live}/{META_FILE}")
     if text is None:
         return live, None
     meta = json.loads(text)
-    if "rows" in meta:
-        counted = _read_small_file(spark, f"{live.rstrip('/')}/{ROWS_FILE}")
-        if counted is not None:
-            try:
-                meta["rows"] = int(counted.strip())
-            except ValueError:  # torn legacy write — build-time count stands
-                pass
+    counted = _read_small_file(spark, f"{live}/{ROWS_FILE}")
+    if counted is not None:
+        try:
+            meta["rows"] = int(counted.strip())
+        except ValueError:  # torn write — build-time count stands
+            pass
     return live, meta
 
 
@@ -212,10 +212,6 @@ def live_index(spark: SparkSession, path: str) -> tuple[str, dict | None]:
 # only, never delete), so they are safe DURING a live compaction;
 # debris cleanup (stale generations, pointer tmp) belongs to writers
 # via :func:`recover_compaction`.
-#
-# Legacy flat indexes (data directly under root, pre-pointer) resolve
-# to the root itself and stay readable/servable; :func:`compact_index`
-# on one raises with a :func:`migrate_index` hint.
 CURRENT_FILE = "_current"
 _GEN_PREFIX = "gen-"
 
@@ -261,9 +257,9 @@ def live_root(spark: SparkSession, path: str) -> str:
     """The index's LIVE data dir: the pointed-to generation, else (no
     pointer — an HDFS-style delete+rename window, or a crash before the
     first pointer landed) the highest COMPLETE generation, else the
-    root itself (legacy flat layout, or nothing there yet).  Read-only —
-    never mutates, so it is safe under a concurrently-running
-    compaction."""
+    root itself: no index there (:func:`live_index` reads no sidecar
+    from it).  Read-only — never mutates, so it is safe under a
+    concurrently-running compaction."""
     from ..sources.sinks import _hadoop_fs
 
     root = path.rstrip("/")
@@ -273,12 +269,6 @@ def live_root(spark: SparkSession, path: str) -> str:
         gen = gen.strip()
         if gen and fs.exists(path_cls(f"{root}/{gen}")):
             return f"{root}/{gen}"
-    # legacy flat layout: meta at the root itself — checked BEFORE the
-    # generation listing, because a flat root holds n_buckets child dirs
-    # and listing it per serve is exactly the O(corpus/bucket) driver
-    # cost pruned_read exists to avoid
-    if fs.exists(path_cls(f"{root}/{META_FILE}")):
-        return root
     done = _complete_gens(spark, root)
     if done:
         return f"{root}/{done[-1]}"
@@ -318,7 +308,7 @@ def writer_lock(
 ):
     """ENFORCE the single-writer index slot (round-10 verdict task 3).
 
-    Every generation-writing op (create/init/migrate, compact, retract,
+    Every generation-writing op (create/init, compact, retract,
     recluster, retrain, tombstone) runs its whole body — including its
     leading :func:`recover_compaction` — inside this lock; before it,
     the single-writer rule was docstring convention only, and two
@@ -332,9 +322,8 @@ def writer_lock(
 
     Mechanics: the lock is an atomically-created marker file at
     ``<root>__writer_lock`` — a SIBLING of the index root, not inside
-    it, so :func:`migrate_index`'s rename-the-root-aside and the debris
-    reaper never touch it (same placement as ``merge_upsert``'s
-    ``__lock``, sources/sinks.py).  The marker body records the op name
+    it, so the debris reaper never touches it (same placement as
+    ``merge_upsert``'s ``__lock``, sources/sinks.py).  The marker body records the op name
     and acquire time for operators staring at a stuck slot.  Release is
     in ``finally`` — an exception inside the op frees the slot (its
     half-built generation is debris the next writer's recovery reaps);
@@ -524,36 +513,21 @@ def break_writer_lock(spark: SparkSession, path: str) -> bool:
     return bool(fs.delete(path_cls(f"{root}{WRITER_LOCK_SUFFIX}"), False))
 
 
-def _reject_legacy_for_write(spark: SparkSession, root: str) -> None:
-    """create_* over a LEGACY flat index must not interleave generation
-    dirs with the flat data (the stale root sidecar would hijack the
-    pointer-loss fallback later) — migrate or pick a fresh path.  Also
-    the shared create-path spot for the glob-literal root guard (r12 —
-    see :func:`_reject_glob_root`): every builder calls here before
-    writing anything."""
-    _reject_glob_root(root)
-    if _read_small_file(spark, f"{root}/{CURRENT_FILE}") is None and _read_small_file(
-        spark, f"{root}/{META_FILE}"
-    ) is not None:
-        raise ValueError(
-            f"{root} holds a legacy flat index — run migrate_index first, or "
-            "create the new index at a fresh path"
-        )
-
-
 @_locked_writer
-def init_index(spark: SparkSession, path: str, meta: dict) -> str:
+def init_index(spark: SparkSession, path: str, meta: dict) -> tuple[str, dict]:
     """Bootstrap an EMPTY index at ``path`` in the generation layout:
-    create the first generation with only the meta sidecar and point
-    ``_current`` at it.  Returns the live data dir.  (The streaming
-    sinks use this on their first batch; batch ``create_*`` builders
-    write data first and call :func:`_finish_generation` instead.)"""
+    create the first generation with only the meta sidecar (``rows=0``
+    — an empty index has no rows) and point ``_current`` at it.
+    Returns ``(live_dir, meta)``.  (The streaming sinks use this on
+    their first batch; batch ``create_*`` builders write data first and
+    call :func:`_finish_generation` instead.)"""
     root = path.rstrip("/")
     _reject_glob_root(root)
+    meta = dict(meta, rows=0)
     gen = _new_generation(spark, root)
     write_index_meta(spark, f"{root}/{gen}", meta)
     _install_pointer(spark, root, gen)
-    return f"{root}/{gen}"
+    return f"{root}/{gen}", meta
 
 
 def _finish_generation(spark: SparkSession, root: str, gen: str, meta: dict) -> None:
@@ -573,10 +547,9 @@ def _rewrite_entry(
     spark: SparkSession, path: str, op: str, kind: str | None = None
 ) -> tuple[str, str, dict]:
     """Writer entry of every generational rewrite and sidecar update:
-    reap crash debris first, resolve the live generation ONCE, and
-    refuse the legacy flat layout (the rewrite's reader-atomic swap
-    needs the pointer).  ``kind`` pins the index kind (``op`` is then
-    the hint :func:`_open_live` names).  Returns ``(root, live, meta)``."""
+    reap crash debris first, then resolve the live generation ONCE.
+    ``kind`` pins the index kind (``op`` is then the hint
+    :func:`_open_live` names).  Returns ``(root, live, meta)``."""
     recover_compaction(spark, path)
     root = path.rstrip("/")
     if kind is not None:
@@ -584,12 +557,7 @@ def _rewrite_entry(
     else:
         live, meta = live_index(spark, root)
         if meta is None:
-            raise ValueError(f"no {META_FILE} at {path} — nothing to {op}")
-    if live == root:
-        raise ValueError(
-            f"index at {path} uses the legacy flat layout — run migrate_index "
-            "first to get the reader-atomic pointer swap"
-        )
+            raise ValueError(f"no index at {path} — nothing to {op}")
     return root, live, meta
 
 
@@ -641,42 +609,13 @@ def _repack_seen(
     )
 
 
-@_locked_writer
-def migrate_index(spark: SparkSession, path: str) -> str:
-    """Move a legacy FLAT index (data directly under root) into the
-    generation layout so compaction/rebuild get the reader-atomic
-    pointer swap.  Steps (each idempotent, resumed by
-    :func:`recover_compaction` after a crash): rename root aside to
-    ``<root>__migrate``, recreate root, rename the sidelined tree in as
-    generation 0, install the pointer.  Returns the live dir."""
-    from ..sources.sinks import _hadoop_fs
-
-    root = path.rstrip("/")
-    _reject_glob_root(root)  # the migrated index must be pruned-servable
-    fs, path_cls, _ = _hadoop_fs(spark, root)
-    if _read_small_file(spark, f"{root}/{CURRENT_FILE}") is not None:
-        return live_root(spark, root)  # already pointer layout
-    side = f"{root}__migrate"
-    if not fs.exists(path_cls(side)):
-        if read_index_meta(spark, root) is None:
-            raise ValueError(f"no index at {root} to migrate")
-        if not fs.rename(path_cls(root), path_cls(side)):
-            raise IOError(f"migrate_index: could not move {root} aside")
-    gen = f"{_GEN_PREFIX}{0:07d}"
-    fs.mkdirs(path_cls(root))
-    if not fs.rename(path_cls(side), path_cls(f"{root}/{gen}")):
-        raise IOError(f"migrate_index: could not install {side} as {gen}")
-    _install_pointer(spark, root, gen)
-    return f"{root}/{gen}"
-
-
 def _open_live(spark: SparkSession, path: str, kind: str, hint: str) -> tuple[str, dict]:
     """One pointer resolution → ``(live_dir, meta)`` with the kind
     checked; raises when no index exists yet.  The open/serve entry
     gate shared by all index kinds."""
     live, meta = live_index(spark, path)
     if meta is None:
-        raise ValueError(f"no {META_FILE} at {path} — {hint} first")
+        raise ValueError(f"no index at {path} — {hint} first")
     if meta.get("kind") != kind:
         raise ValueError(f"index at {path} is kind={meta.get('kind')!r}, not {kind}")
     return live, meta
@@ -797,10 +736,8 @@ def _bump_rows(spark: SparkSession, live: str, meta: dict, delta: int) -> dict:
     """Maintain the running row count — the O(1) feed for the drift
     dials (:func:`semantic_recluster_due`, :func:`ivf_retrain_due`;
     round-9 verdict task: the dial previously LISTED every bucket's
-    parquet footers per poll, O(files) in the corpus).  Only kinds
-    whose meta carries ``rows`` (SEM since r10, IVF since r11; older
-    sidecars fall back to the footer count) pay it — one atomic
-    small-file replace per committed append.
+    parquet footers per poll, O(files) in the corpus).  Every kind
+    pays it — one atomic small-file replace per committed append.
 
     The counter lives in its own ``_rows`` file, NOT the meta sidecar
     (round-10 advice): rewriting ``_index_meta.json`` in the LIVE
@@ -819,12 +756,12 @@ def _bump_rows(spark: SparkSession, live: str, meta: dict, delta: int) -> dict:
     stale ``meta`` dict would otherwise write base+delta twice and
     clobber the first bump.  Single-writer by the appender contract,
     so the read-add-replace needs no lock."""
-    if "rows" not in meta or not delta:
+    if not delta:
         return meta
     cur = _read_small_file(spark, f"{live.rstrip('/')}/{ROWS_FILE}")
     try:
         base = int(cur.strip()) if cur is not None else int(meta["rows"])
-    except ValueError:  # torn legacy write — meta snapshot stands
+    except ValueError:  # torn write — meta snapshot stands
         base = int(meta["rows"])
     meta = dict(meta, rows=base + int(delta))
     _replace_small_file(spark, f"{live.rstrip('/')}/{ROWS_FILE}", str(meta["rows"]))
@@ -845,7 +782,7 @@ def _appends_count(spark: SparkSession, live: str) -> int:
     cur = _read_small_file(spark, f"{live.rstrip('/')}/{APPENDS_FILE}")
     try:
         return int(cur.strip()) if cur is not None else 0
-    except ValueError:  # torn legacy write — counter restarts
+    except ValueError:  # torn write — counter restarts
         return 0
 
 
@@ -1048,9 +985,9 @@ def _check_request_ids(meta: dict, ids: list, path: str) -> list:
 
 def _typed_stored_tombstones(meta: dict, stored: list) -> list:
     """Filter a STORED tombstone list down to ids type-compatible with
-    the sidecar's id column (r14 review): a pre-r13-guard sidecar can
-    hold wrong-typed junk (e.g. a stringified int under a bigint
-    index), and feeding it onward crashes ``_ids_df``/``createDataFrame``
+    the sidecar's id column (r14 review): a hand-edited sidecar (or one
+    written before the r13 request guard) can hold wrong-typed junk
+    (e.g. a stringified int under a bigint index), and feeding it onward crashes ``_ids_df``/``createDataFrame``
     — blocking valid retractions.  Dropping the junk is semantically a
     no-op: a wrong-typed id can never equal any id the index's column
     type can store, so it was hiding nothing; the generational rewrite
@@ -1087,7 +1024,7 @@ def _minus_tombstones(
     that size should be compacted anyway.
 
     The list passes through :func:`_typed_stored_tombstones` (r14
-    review): legacy pre-guard sidecars can hold wrong-typed junk that
+    review): hand-edited sidecars can hold wrong-typed junk that
     would crash the isin predicate or ``_ids_df`` on every serve; the
     junk hides nothing (wrong type can't match the id column), so
     serves stay resilient and the next sidecar rewrite heals it."""
@@ -1136,7 +1073,7 @@ def tombstone_ids(spark: SparkSession, path: str, ids: list) -> int:
     fresh = [i for i in dict.fromkeys(ids) if i not in cur]
     if fresh:
         # persist through the type filter (r14 review): rewriting the
-        # sidecar is the cheap chance to heal legacy wrong-typed junk
+        # sidecar is the cheap chance to heal wrong-typed junk
         # out of it (junk can never match a stored row, see
         # _typed_stored_tombstones) instead of carrying it forward to
         # crash a later _ids_df/serve
@@ -1149,11 +1086,8 @@ def tombstone_ids(spark: SparkSession, path: str, ids: list) -> int:
 
 
 def _root_of_live(live: str) -> str:
-    """The index ROOT a live data dir belongs to: the parent for a
-    ``gen-N`` dir, the dir itself for the legacy flat layout."""
-    live = live.rstrip("/")
-    head, _, tail = live.rpartition("/")
-    return head if tail.startswith(_GEN_PREFIX) else live
+    """The index ROOT a live ``gen-N`` data dir belongs to."""
+    return live.rstrip("/").rpartition("/")[0]
 
 
 def clear_tombstones(
@@ -1187,9 +1121,9 @@ def clear_tombstones(
     with writer_lock(spark, root, "clear_tombstones", retries=lock_retries):
         stored = _tombstone_list(spark, live)
         drop = set(ids)
-        # order-preserving, NOT sorted() (r14 review: same legacy
-        # mixed-type hazard as retract_ids' purge union — a resurrection
-        # must not crash on unrelated junk in a pre-guard sidecar)
+        # order-preserving, NOT sorted() (r14 review: same mixed-type
+        # hazard as retract_ids' purge union — a resurrection must not
+        # crash on unrelated junk in a hand-edited sidecar)
         keep = [i for i in stored if i not in drop]
         if len(keep) == len(stored):
             return
@@ -1209,7 +1143,7 @@ def _reingested_tombstones(
     committed ingest must resurrect (:func:`clear_tombstones`).  A
     broadcast semi-join collected to the driver: bounded by the
     tombstone list, never by the increment."""
-    tombs = _typed_stored_tombstones(meta, tombs)  # r14: legacy junk
+    tombs = _typed_stored_tombstones(meta, tombs)  # r14: wrong-typed junk
     if not tombs:
         return []
     id_col = meta["id_col"]
@@ -1238,7 +1172,7 @@ def _reject_glob_root(root: str) -> None:
     an empty index read, and an empty index ADMITS every duplicate,
     the module's documented worst failure class.  Writers don't glob,
     so the index would CREATE fine and fail only silently at serve
-    time; rejected loudly at create/init/migrate AND at every pruned
+    time; rejected loudly at create/init AND at every pruned
     read (covering indexes created before this guard)."""
     bad = _GLOB_CHARS.intersection(root)
     if bad:
@@ -1362,7 +1296,7 @@ def create_band_index(
     # writer entry point: reap stale/half-built generations first
     # (round-8 advice: create over crash debris must not strand state)
     recover_compaction(spark, path)
-    _reject_legacy_for_write(spark, path.rstrip("/"))
+    _reject_glob_root(path.rstrip("/"))
     rows = minhash_band_index(docs, text_col, id_col, num_hashes, bands)
     n_rows = None
     if n_buckets is None:
@@ -1452,9 +1386,7 @@ def recover_compaction(
     """Writer-side self-heal + debris cleanup for the generation
     layout.  Idempotent; returns what it did:
 
-    - ``"clean"`` — nothing to do (also: legacy flat layout / fresh path);
-    - ``"migrated"`` — a crashed :func:`migrate_index` was resumed (the
-      sidelined legacy tree installed as generation 0);
+    - ``"clean"`` — nothing to do (also: a fresh path);
     - ``"restored"`` — the pointer was missing or dangled (the
       delete+rename fallback window, or a crash before the first flip):
       re-pointed at the highest COMPLETE generation;
@@ -1486,58 +1418,13 @@ def _recover_compaction_unlocked(spark: SparkSession, path: str) -> str:
     root = path.rstrip("/")
     fs, path_cls, _ = _hadoop_fs(spark, root)
     state = "clean"
-    # Pre-r9 two-rename compaction debris (round-9 advice): the old
-    # scheme renamed the FLAT index aside to <root>__compact_trash and
-    # installed <root>__compact_tmp as the new root.  A crash between
-    # the two renames leaves the ONLY copy of the index in the trash
-    # with root missing — the generation-layout logic below would see a
-    # bare root, return "clean", and the next streaming batch would
-    # silently bootstrap a fresh EMPTY index over it (the duplicate-
-    # readmission mode the old recovery existed to prevent, reopened
-    # across the layout upgrade).  Restore the sidelined tree as
-    # generation 0.  A root that already holds an index (crash AFTER
-    # the install, or post-upgrade layouts) keeps it and the trash is
-    # dropped.  The tmp copy is always dropped, even when complete —
-    # compaction is re-runnable, the pre-compaction tree is the
-    # conservative restore.
-    trash, ctmp = f"{root}__compact_trash", f"{root}__compact_tmp"
-    if fs.exists(path_cls(trash)):
-        has_index = bool(
-            _read_small_file(spark, f"{root}/{CURRENT_FILE}") is not None
-            or _read_small_file(spark, f"{root}/{META_FILE}") is not None
-            or _complete_gens(spark, root)
-        )
-        if has_index:
-            fs.delete(path_cls(trash), True)
-        else:
-            for g in _gen_dir_names(spark, root):  # half-built debris only
-                fs.delete(path_cls(f"{root}/{g}"), True)
-            gen0 = f"{_GEN_PREFIX}{0:07d}"
-            fs.mkdirs(path_cls(root))
-            if not fs.rename(path_cls(trash), path_cls(f"{root}/{gen0}")):
-                raise IOError(
-                    f"recover_compaction: could not restore legacy trash {trash}"
-                )
-            _install_pointer(spark, root, gen0)
-            state = "restored"
-    if fs.exists(path_cls(ctmp)):
-        fs.delete(path_cls(ctmp), True)
-    side = f"{root}__migrate"
-    if fs.exists(path_cls(side)):
-        gen0 = f"{_GEN_PREFIX}{0:07d}"
-        fs.mkdirs(path_cls(root))
-        if not fs.rename(path_cls(side), path_cls(f"{root}/{gen0}")):
-            raise IOError(f"recover_compaction: could not resume migration of {side}")
-        _install_pointer(spark, root, gen0)
-        state = "migrated"
     cur = _read_small_file(spark, f"{root}/{CURRENT_FILE}")
     cur = cur.strip() if cur is not None else None
     if cur is None or not fs.exists(path_cls(f"{root}/{cur}")):
         done = _complete_gens(spark, root)
         if not done:
-            # no pointer, no complete generation: a legacy flat index, a
-            # fresh path, or the debris of a crashed FIRST build — drop
-            # any half-built gens, the flat root (if any) stays live
+            # no pointer, no complete generation: a fresh path, or the
+            # debris of a crashed FIRST build — drop any half-built gens
             for g in _gen_dir_names(spark, root):
                 fs.delete(path_cls(f"{root}/{g}"), True)
             return state
@@ -1593,10 +1480,7 @@ def compact_index(spark: SparkSession, path: str) -> None:
     convention only); dedup-kind appends take the same slot
     (:func:`_locked_serve_append`), while IVF appends stay lock-free,
     so run their compaction where the appender runs (e.g. between
-    streaming triggers) or rely on the in-sink ``compact_every`` path.
-
-    Legacy flat indexes must :func:`migrate_index` first — the pointer
-    protocol needs the generation layout."""
+    streaming triggers) or rely on the in-sink ``compact_every`` path."""
     root, live, meta = _rewrite_entry(spark, path, "compact")
     schema = _kind_schema(meta)
     # tombstone reap: pending takedowns ride the rewrite for free — the
@@ -1611,10 +1495,8 @@ def compact_index(spark: SparkSession, path: str) -> None:
         ).distinct(),
     )
     _repack_seen(spark, live, meta, new_dir, meta["n_buckets"], tombs)
-    if "rows" in meta:  # distinct() dropped replay dupes — recount (footer-only)
-        meta = dict(
-            meta, rows=spark.read.schema(schema).parquet(new_dir).count()
-        )
+    # distinct() dropped replay dupes — recount (footer-only)
+    meta = dict(meta, rows=spark.read.schema(schema).parquet(new_dir).count())
     _finish_generation(spark, root, gen, meta)
 
 
@@ -1634,9 +1516,8 @@ def rebucket_due(
     linearly with it.  Fires when mean bucket population exceeds
     ``drift_factor × target_rows_per_bucket`` (the ``auto_index_buckets``
     target).  O(1): reads the ``rows`` counter maintained by every
-    committed append/serve-append/compact (pre-r11 sidecars fall back
-    to one footer count).  Applies to any kind, but the SEM/IVF kinds
-    normally re-size buckets through their own rebuilds
+    committed append/serve-append/compact.  Applies to any kind, but
+    the SEM/IVF kinds normally re-size buckets through their own rebuilds
     (:func:`recluster_semantic_index` / :func:`retrain_ivf_index`);
     :func:`rebucket_index` is the cheap rewrite that fixes layout alone
     (no Lloyd, no codebook retrain).
@@ -1654,12 +1535,10 @@ def rebucket_due(
     ``resolved``: optionally the ``live_index`` pair the caller already
     holds — :func:`index_info` passes it so its one console snapshot is
     not torn across a concurrent pointer flip."""
-    live, meta = resolved if resolved is not None else live_index(spark, path)
+    meta = (resolved if resolved is not None else live_index(spark, path))[1]
     if meta is None:
         raise ValueError(f"no index at {path}")
-    rows = meta.get("rows")
-    if rows is None:  # pre-r11 sidecar — footer-only count, O(files)
-        rows = spark.read.schema(_kind_schema(meta)).parquet(live).count()
+    rows = meta["rows"]
     target = auto_index_buckets(rows, target_rows_per_bucket)
     if meta.get("kind") == IVF_KIND:  # same cap rule as rebucket_index
         target = min(target, max(meta.get("nlist", 1), 1))
@@ -1901,8 +1780,7 @@ def _locked_serve_append(
             )
             live, meta, tombs = live2, meta2, None
         rows_with_pfx.write.mode("append").partitionBy("pfx").parquet(live)
-        if "rows" in meta:
-            meta = _bump_rows(spark, live, meta, rows_with_pfx.count())
+        meta = _bump_rows(spark, live, meta, rows_with_pfx.count())
         if tombs is None:
             tombs = _tombstone_list(spark, live)
         back = _reingested_tombstones(spark, meta, increment, tombs)
@@ -1915,15 +1793,13 @@ def append_index_rows(rows: DataFrame, path: str, meta: dict) -> None:
     """Append an increment's index rows (a dedup kind's row builder
     output, e.g. ``IncrementalDedupResult.index_rows``) into the live
     generation through :func:`_locked_serve_append`: pfx from
-    :func:`_kind_pfx`, the growth counter bumped (no-op for pre-r11
-    sidecars without ``rows``), re-ingested takedown ids cleared.  The
-    frame is materialized once when the counter needs a count — the
-    band generator cannot be pruned out of a count(), so write-then-
-    count on the raw frame would evaluate the minhash chain twice (the
+    :func:`_kind_pfx`, the growth counter bumped, re-ingested takedown
+    ids cleared.  The frame is materialized once for the counter's
+    count — the band generator cannot be pruned out of a count(), so
+    write-then-count on the raw frame would evaluate the minhash chain twice (the
     create-path lesson, r10)."""
     spark = rows.sparkSession
-    if "rows" in meta:
-        rows = rows.localCheckpoint()
+    rows = rows.localCheckpoint()
     _locked_serve_append(
         spark, path, live_root(spark, path), meta,
         rows.withColumn("pfx", _kind_pfx(meta)), rows,
@@ -1967,11 +1843,7 @@ def rebucket_index(
         .distinct()
     )
     if n_buckets is None:
-        rows = meta.get("rows")
-        if rows is None:
-            stored = stored.localCheckpoint()  # reused by count + write
-            rows = stored.count()
-        n_buckets = auto_index_buckets(rows, target_rows_per_bucket)
+        n_buckets = auto_index_buckets(meta["rows"], target_rows_per_bucket)
         if meta["kind"] == IVF_KIND:  # same cap rule as create/retrain:
             n_buckets = min(n_buckets, max(meta.get("nlist", 1), 1))
     new_meta = dict(meta, n_buckets=n_buckets)
@@ -1979,10 +1851,8 @@ def rebucket_index(
         spark, root, stored.withColumn("pfx", _kind_pfx(new_meta))
     )
     _repack_seen(spark, live, meta, new_dir, n_buckets, tombs)
-    if "rows" in new_meta:  # distinct() dropped replay dupes — recount
-        new_meta = dict(
-            new_meta, rows=spark.read.schema(schema).parquet(new_dir).count()
-        )
+    # distinct() dropped replay dupes — recount
+    new_meta = dict(new_meta, rows=spark.read.schema(schema).parquet(new_dir).count())
     _finish_generation(spark, root, gen, new_meta)
     return new_meta
 
@@ -2012,7 +1882,7 @@ def create_embedding_index(
         center = embedding_center(embeddings, dims, vec_col)
     spark = embeddings.sparkSession
     recover_compaction(spark, path)  # writer entry point — reap debris first
-    _reject_legacy_for_write(spark, path.rstrip("/"))
+    _reject_glob_root(path.rstrip("/"))
     rows = embedding_bucket_index(embeddings, dims, n_planes, id_col, vec_col, center)
     n_rows = None
     if n_buckets is None:
@@ -2114,7 +1984,7 @@ def create_semantic_index(
 
     spark = embeddings.sparkSession
     recover_compaction(spark, path)  # writer entry point — reap debris first
-    _reject_legacy_for_write(spark, path.rstrip("/"))
+    _reject_glob_root(path.rstrip("/"))
     n = embeddings.count()
     if k is None:
         k = auto_k(n, target_cell_size)
@@ -2199,17 +2069,13 @@ def semantic_recluster_due(
     incremental serve; k is fixed by the tree).  O(1): the row count
     comes from the sidecar's running ``rows`` counter (maintained by
     every committed append/compact/retract/recluster — round-9 verdict
-    task 5; pre-r10 sidecars without it fall back to one
-    parquet-footer count).  Rebuild-and-swap:
+    task 5).  Rebuild-and-swap:
     :func:`recluster_semantic_index`.  ``resolved``: see
     :func:`rebucket_due` (the console's no-torn-snapshot hook)."""
-    live, meta = resolved if resolved is not None else live_index(spark, path)
+    meta = (resolved if resolved is not None else live_index(spark, path))[1]
     if meta is None or meta.get("kind") != SEM_KIND:
         raise ValueError(f"no semantic index at {path}")
-    rows = meta.get("rows")
-    if rows is None:  # pre-r10 sidecar — footer-only count, O(files)
-        rows = spark.read.schema(_sem_schema(meta)).parquet(live).count()
-    return rows / max(meta["k"], 1) > drift_factor * meta["target_cell_size"]
+    return meta["rows"] / max(meta["k"], 1) > drift_factor * meta["target_cell_size"]
 
 
 @_locked_writer
@@ -2351,7 +2217,7 @@ def retract_ids(spark: SparkSession, path: str, ids: list) -> int:
     # reaps them (same rule as compaction/recluster), so the new
     # generation starts with an empty takedown backlog.  Order-preserving
     # dedup, NOT sorted() (r13 advice), and the STORED list is filtered
-    # through the sidecar's id type (r14 review): a legacy pre-guard
+    # through the sidecar's id type (r14 review): a hand-edited
     # sidecar holding mixed-type junk must neither crash sorted() NOR
     # crash _ids_df below — either way the valid retraction would be
     # blocked.  The dropped junk could never match a stored row (wrong
@@ -2366,8 +2232,8 @@ def retract_ids(spark: SparkSession, path: str, ids: list) -> int:
         spark, root, stored.join(purge_df, id_col, "left_anti")
     )
     _repack_seen(spark, live, meta, new_dir, meta["n_buckets"], purge=purge_df)
-    if "rows" in meta:  # exact recount (footer-only) — the rewrite is rare
-        meta = dict(meta, rows=spark.read.schema(schema).parquet(new_dir).count())
+    # exact recount (footer-only) — the rewrite is rare
+    meta = dict(meta, rows=spark.read.schema(schema).parquet(new_dir).count())
     _finish_generation(spark, root, gen, meta)
     return removed
 
@@ -2432,7 +2298,7 @@ def create_ivf_index(
         raise ValueError(f"unknown codec {codec!r} — 'float' or 'pq'")
     spark = embeddings.sparkSession
     recover_compaction(spark, path)  # writer entry point
-    _reject_legacy_for_write(spark, path.rstrip("/"))
+    _reject_glob_root(path.rstrip("/"))
     n = embeddings.count()
     if nlist is None:
         nlist = auto_nlist(n)
@@ -2716,17 +2582,14 @@ def ivf_retrain_due(
     √ rule; operators who pinned nlist own their own schedule.
 
     O(1): rows come from the ``_rows`` sidecar counter maintained by
-    every committed append/compact/retract/retrain (pre-r11 sidecars
-    fall back to one parquet-footer count).  An EMPTY bootstrap
+    every committed append/compact/retract/retrain.  An EMPTY bootstrap
     codebook (zero-row create) reports due as soon as any rows exist —
     the first retrain is what gives it lists at all.  ``resolved``:
     see :func:`rebucket_due` (the console's no-torn-snapshot hook)."""
-    live, meta = resolved if resolved is not None else live_index(spark, path)
+    meta = (resolved if resolved is not None else live_index(spark, path))[1]
     if meta is None or meta.get("kind") != IVF_KIND:
         raise ValueError(f"no IVF index at {path}")
-    rows = meta.get("rows")
-    if rows is None:  # pre-r11 sidecar — footer-only count, O(files)
-        rows = spark.read.schema(_ivf_schema(meta)).parquet(live).count()
+    rows = meta["rows"]
     nlist = meta.get("nlist", 0)
     if nlist <= 0:
         return rows > 0
@@ -2837,16 +2700,15 @@ def index_info(spark: SparkSession, path: str) -> dict:
     tombstone backlog, drift dials, writer lock) that "what state is
     this index in?" deserves one cheap call instead of five sidecar
     reads.  Lock-free and passive (safe during a live writer): small-
-    file reads plus one bounded generation listing; the only data-scale
-    work is the footer-count fallback for pre-counter sidecars, and
-    only when a dial needs it.
+    file reads plus one bounded generation listing, no data-scale
+    work.
 
     Returns ``{path, live, kind, meta, rows, generations,
     pending_tombstones, maintenance_due, appends_since_rewrite,
     compact_due, writer_lock}`` where
 
-    - ``rows`` is the counter-overlaid live count (None for kinds that
-      do not maintain one);
+    - ``rows`` is the counter-overlaid live count (None when there is
+      no index);
     - ``maintenance_due`` is the kind-appropriate REBUILD dial at
       default factors (:func:`semantic_recluster_due` /
       :func:`ivf_retrain_due`; None for the band/embed kinds, which
@@ -2865,7 +2727,7 @@ def index_info(spark: SparkSession, path: str) -> dict:
         "live": live,
         "kind": None if meta is None else meta.get("kind"),
         "meta": meta,
-        "rows": None if meta is None else meta.get("rows"),
+        "rows": None if meta is None else meta["rows"],
         "generations": _gen_dir_names(spark, root),
         "pending_tombstones": len(_tombstone_list(spark, live)),
         "maintenance_due": None,

@@ -67,6 +67,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..localrel import literal_frame
+from ..session_cache import session_cached
 from .quantize import quantize_int8
 from .similarity import cosine_with_norms, norm
 
@@ -156,29 +157,19 @@ def shifted_codes(
 # eviction (r12 review: the old clear-everything overflow policy let
 # one 32-iteration Lloyd rebuild evict the HOT persisted-tree frames
 # the serve path exists to keep — the next serve batch then re-paid
-# the ~1 s/pass frame build the cache was measured to save).
-from collections import OrderedDict as _OrderedDict
-
-_FRAME_CACHE: "_OrderedDict[tuple, DataFrame]" = _OrderedDict()
+# the ~1 s/pass frame build the cache was measured to save).  Held per
+# session (session_cache): a frame belongs to the session it was built in.
+_FRAME_CACHE_MAX = 64
 
 
 def _cached_frame(spark, content, schema: str) -> DataFrame:
     import hashlib
     import json as _json
 
-    key = (
-        id(spark),  # per session: newSession() shares the applicationId
-        schema,
-        hashlib.md5(_json.dumps(content, sort_keys=True).encode()).hexdigest(),
+    key = (schema, hashlib.md5(_json.dumps(content, sort_keys=True).encode()).hexdigest())
+    return session_cached(
+        spark, "frames", key, lambda: literal_frame(spark, content, schema), _FRAME_CACHE_MAX
     )
-    df = _FRAME_CACHE.get(key)
-    if df is not None:
-        _FRAME_CACHE.move_to_end(key)  # LRU: a reuse marks the frame hot
-    else:
-        while len(_FRAME_CACHE) > 64:  # LRU bound — evict COLD keys only
-            _FRAME_CACHE.popitem(last=False)
-        df = _FRAME_CACHE[key] = literal_frame(spark, content, schema)
-    return df
 
 
 def _assign_int(codes: DataFrame, cents: list[tuple[int, list[int]]], id_col: str) -> DataFrame:

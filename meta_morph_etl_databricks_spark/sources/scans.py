@@ -17,6 +17,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session_cache import session_cached
+
 TESTDATA_TABLES = (
     "region",
     "nation",
@@ -77,16 +79,12 @@ def _path_signature(path: str) -> tuple[int, int, int] | None:
 # path reads re-pay it per call, so we lift the same per-session
 # memoization to the relation level.  NOT result caching: the cached
 # object is the lazy reader plan; every action still scans the parquet
-# files.  Keyed on (session, path, path SIGNATURE, partitioning args):
-# a rewrite of the path (size/mtime/file-count change) misses the cache
-# and re-lists/re-infers.  The session is keyed by identity, not by
-# applicationId — ``spark.newSession()`` shares the applicationId, and a
-# sibling session must not get a frame analyzed under the first one's
-# confs (the events cast binds its time zone).  A cached frame holds its
-# session, so the ``id`` cannot be reused while the entry lives.
-from collections import OrderedDict as _OrderedDict
-
-_RELATION_CACHE: "_OrderedDict[tuple, DataFrame]" = _OrderedDict()
+# files.  Held per session (session_cache — a sibling session must not
+# get a frame analyzed under the first one's confs: the events cast
+# binds its time zone) and keyed on (path, path SIGNATURE, partitioning
+# args): a rewrite of the path (size/mtime/file-count change) misses the
+# cache and re-lists/re-infers.  LRU-bounded, so a long-lived session
+# over many paths evicts its cold relations instead of growing.
 _RELATION_CACHE_MAX = 256
 
 
@@ -132,18 +130,24 @@ def read_parquet_table(
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
     sig = _path_signature(path)
-    key = (
-        id(spark),
-        path,
-        sig,
-        min_partitions,
-        target_partition_bytes,
+    key = None if sig is None else (path, sig, min_partitions, target_partition_bytes)
+    return session_cached(
+        spark,
+        "relations",
+        key,
+        lambda: _open_relation(spark, path, name, sig, min_partitions, target_partition_bytes),
+        _RELATION_CACHE_MAX,
     )
-    if sig is not None:
-        cached = _RELATION_CACHE.get(key)
-        if cached is not None:
-            _RELATION_CACHE.move_to_end(key)
-            return cached
+
+
+def _open_relation(
+    spark: SparkSession,
+    path: str,
+    name: str,
+    sig: tuple[int, int, int] | None,
+    min_partitions: int | None,
+    target_partition_bytes: int | None,
+) -> DataFrame:
     df = spark.read.parquet(path)
     if min_partitions is not None:
         n = min_partitions
@@ -189,10 +193,6 @@ def read_parquet_table(
                     "the cast binds the session zone at analysis time"
                 )
             df = df.withColumn("ts", F.col("ts").cast(TimestampType()))
-    if sig is not None:
-        while len(_RELATION_CACHE) >= _RELATION_CACHE_MAX:
-            _RELATION_CACHE.popitem(last=False)  # LRU: evict cold keys
-        _RELATION_CACHE[key] = df
     return df
 
 

@@ -168,7 +168,7 @@ def _dedup_sink(
             meta = bootstrap(batch_df)
             if meta is None:
                 return
-            live = ix.init_index(spark, index_path, meta, lock_retries=60)
+            live, meta = ix.init_index(spark, index_path, meta, lock_retries=60)
         # persisted: feeds isEmpty, the row builder, the policy's
         # anti-join, the tombstone clear and the seen append.  Freed
         # before return — a long-running stream must not accumulate
@@ -280,7 +280,6 @@ def stream_incremental_dedup(
             "num_hashes": num_hashes,
             "bands": bands,
             "n_buckets": n_buckets or ix.auto_index_buckets(batch_df.count() * bands),
-            "rows": 0,  # running counter (r11) — bumped per batch
         }
 
     return _dedup_sink(
@@ -362,7 +361,6 @@ def stream_incremental_semantic_dedup(
             "n_buckets": n_buckets or ix.auto_index_buckets(n),
             "target_cell_size": target_cell_size,
             "bootstrap_rows": n,
-            "rows": 0,
             "tree": tree_to_json(tree),
         }
 
@@ -463,7 +461,6 @@ def stream_incremental_embed_near_dup(
             "n_planes": n_planes,
             "center": c,
             "n_buckets": n_buckets or ix.auto_index_buckets(batch_df.count()),
-            "rows": 0,  # running counter (r11) — bumped per batch
         }
 
     # validate the CALLER's params against the sidecar — passing meta's

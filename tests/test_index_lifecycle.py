@@ -135,8 +135,8 @@ def test_recluster_resets_drift_dial_and_counter(spark, tmp_path):
 def test_recluster_crash_windows_and_legacy(spark, tmp_path):
     """A crashed recluster leaves the pointer on the old complete
     generation; recovery reaps the debris and serving continues against
-    pre-recluster state.  Legacy flat layouts are refused with the
-    migrate hint (the swap needs the pointer protocol)."""
+    pre-recluster state.  A generation's files copied to a bare root
+    are no index: the rewrite refuses it (the swap needs the pointer)."""
     import shutil
 
     path = str(tmp_path / "idx")
@@ -167,12 +167,12 @@ def test_recluster_crash_windows_and_legacy(spark, tmp_path):
     )
     assert r.accepted.count() > 0
 
-    # legacy flat: refused
+    # a generation's files copied to a bare root are no index
     flat = str(tmp_path / "flat")
     shutil.copytree(ix.live_root(spark, path), flat)
-    with pytest.raises(ValueError, match="migrate_index"):
+    with pytest.raises(ValueError, match="no index"):
         ix.recluster_semantic_index(spark, flat)
-    with pytest.raises(ValueError, match="migrate_index"):
+    with pytest.raises(ValueError, match="no index"):
         ix.retract_ids(spark, flat, [1])
 
 

@@ -157,8 +157,7 @@ def test_open_band_index_meta_only_path_reads_empty(spark, corpus, tmp_path):
     """Crash between sidecar write and first row write must read as an
     EMPTY index, not a schema-inference failure."""
     d = str(tmp_path / "metaonly")
-    (tmp_path / "metaonly").mkdir()
-    ix.write_index_meta(
+    ix.init_index(
         spark,
         d,
         {"kind": ix.BAND_KIND, "id_col": "doc_id", "num_hashes": 16, "bands": 4, "n_buckets": 8},
@@ -380,77 +379,6 @@ def test_recover_compaction_pointer_crash_windows(spark, corpus, tmp_path):
     assert ix.recover_compaction(spark, d) == "clean"
 
 
-def test_legacy_flat_index_migrates_then_compacts(spark, corpus, tmp_path):
-    """A pre-pointer FLAT index stays readable/servable through the
-    legacy fallback; compact_index refuses it with a migrate hint;
-    migrate_index moves it into generation 0 losslessly (seen store
-    included) and compaction then works."""
-    import shutil
-
-    d = str(tmp_path / "lidx")
-    staging = str(tmp_path / "staging")
-    meta = ix.create_band_index(corpus.where("doc_id < 40"), d, n_buckets=8)
-    _plant_seen(spark, d)
-    # flatten: copy the live gen's CONTENTS directly under a fresh root
-    shutil.copytree(ix.live_root(spark, d), staging)
-    shutil.rmtree(d)
-    os.rename(staging, d)
-    assert ix.live_root(spark, d) == d  # legacy fallback: root IS the data
-    n = ix.open_band_index(spark, d)[0].count()
-    assert n > 0
-    ix.serve_incremental_dedup(corpus.where("doc_id >= 40"), d, append=True)
-    with pytest.raises(ValueError, match="migrate_index"):
-        ix.compact_index(spark, d)
-    live = ix.migrate_index(spark, d)
-    assert live.endswith("gen-0000000")
-    got_meta = ix.open_band_index(spark, d)[1]
-    assert got_meta["rows"] > meta["rows"]  # the append bumped the counter
-    assert dict(got_meta, rows=0) == dict(meta, rows=0)
-    assert spark.read.parquet(f"{live}/_seen_ids").count() == 1
-    ix.compact_index(spark, d)
-    assert ix.open_band_index(spark, d)[0].count() >= n
-
-
-def test_recover_legacy_compaction_trash(spark, corpus, tmp_path):
-    """Pre-r9 two-rename compaction debris across the layout upgrade
-    (round-9 advice): a crash between old→trash and tmp→root left the
-    ONLY index copy in <root>__compact_trash with root missing.  The
-    generation-era recovery must restore it as generation 0 — not
-    return 'clean' and let the next batch bootstrap a fresh EMPTY index
-    that re-admits every duplicate."""
-    import shutil
-
-    d = str(tmp_path / "lidx")
-    staging = str(tmp_path / "stage")
-    meta = ix.create_band_index(corpus.where("doc_id < 40"), d, n_buckets=8)
-    _plant_seen(spark, d)
-    n = ix.open_band_index(spark, d)[0].count()
-    # fabricate the pre-r9 crash state: FLAT tree sidelined as trash
-    # (plus a half-written tmp), root gone
-    shutil.copytree(ix.live_root(spark, d), staging)
-    shutil.rmtree(d)
-    os.rename(staging, d + "__compact_trash")
-    os.makedirs(d + "__compact_tmp/pfx=0")
-    assert ix.recover_compaction(spark, d) == "restored"
-    assert not os.path.exists(d + "__compact_trash")
-    assert not os.path.exists(d + "__compact_tmp")
-    assert ix.live_root(spark, d).endswith("gen-0000000")
-    df, got_meta = ix.open_band_index(spark, d)
-    assert got_meta == meta and df.count() == n
-    assert spark.read.parquet(f"{ix.live_root(spark, d)}/_seen_ids").count() == 1
-    # a duplicate of an indexed doc must still be REJECTED post-recovery
-    dup = corpus.where("doc_id = 1").select(
-        (F.col("doc_id") + 1000).alias("doc_id"), "text"
-    )
-    assert ix.serve_incremental_dedup(dup, d, append=False).accepted.isEmpty()
-    # the other crash side: root already holds the installed index —
-    # recovery drops the debris and leaves the index alone
-    os.makedirs(d + "__compact_trash/pfx=0")
-    ix.recover_compaction(spark, d)
-    assert not os.path.exists(d + "__compact_trash")
-    assert ix.open_band_index(spark, d)[0].count() == n
-
-
 def test_reader_safe_during_compaction(spark, corpus, tmp_path):
     """The round-8 two-rename swap had a no-live-directory window a
     concurrent reader could land in.  With the pointer swap, a reader
@@ -585,3 +513,36 @@ def test_band_serve_append_job_count_is_pinned(spark, corpus, tmp_path):
         sc.setJobGroup(None, None)
     assert n_jobs == 6
     assert res.accepted.count() > 0
+
+
+def test_append_in_touched_buckets_keeps_the_accepted_set(spark, corpus, tmp_path):
+    """An ``append=True`` serve returns a lazy accepted frame, and its
+    append lands rows in the very buckets the serve's pruned read
+    scans.  Counting that frame after the append must still give the
+    set decided before it: the same on a second count, and the same as
+    an ``append=False`` serve of the increment against an identical
+    index copy."""
+    import shutil
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    ix.create_band_index(corpus.where("doc_id < 40"), a, n_buckets=8)
+    shutil.copytree(a, b)
+    inc = corpus.where("doc_id >= 40")
+    live = ix.live_root(spark, a)
+
+    def bucket_files() -> dict[str, int]:
+        return {p: len(os.listdir(f"{live}/{p}")) for p in os.listdir(live) if p.startswith("pfx=")}
+
+    before = bucket_files()
+    appended = ix.serve_incremental_dedup(inc, a, append=True).accepted
+    after = bucket_files()
+    assert any(after[p] > n for p, n in before.items())  # landed in a touched bucket
+    n1 = appended.count()
+    n2 = appended.count()
+    ids1 = sorted(r.doc_id for r in appended.collect())
+    kept = ix.serve_incremental_dedup(inc, b, append=False).accepted
+    n3 = kept.count()
+    ids3 = sorted(r.doc_id for r in kept.collect())
+    assert n1 == n2 == n3 == len(ids1)
+    assert ids1 == ids3
+    assert 0 < n1 < 20  # the increment has both duplicates and new docs

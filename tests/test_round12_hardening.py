@@ -1,16 +1,7 @@
 """Round-12 hardening: the r11 verdict's latent-robustness nits and the
-r11 ADVICE items, each pinned by a test.
+r11 ADVICE items, each pinned by a test (the writer-lock ones live
+in test_writer_lock.py).
 
-- writer-lock reentrancy keys on the CANONICAL root, so one call chain
-  addressing the index through two spellings (`/x/idx` vs
-  `file:/x/idx`) re-enters instead of self-deadlocking;
-- cross-PROCESS contention: a second process holding the slot makes the
-  parent fail fast (or serialize behind with ``lock_retries``) — the
-  thread-level tests in test_writer_lock.py share a JVM, this one does
-  not share anything;
-- stranded-stream self-heal (ADVICE): a hard-killed stream's restart
-  reclaims its OWN lock via the breadcrumb owner token; a foreign
-  owner's lock is never reclaimed;
 - the >``_TOMBSTONE_ISIN_MAX`` backlog switches NOT-isin → broadcast
   anti-join with serve parity across the boundary;
 - ``pruned_read`` chunks its brace-glob past ``_PRUNED_GLOB_MAX``
@@ -26,11 +17,7 @@ r11 ADVICE items, each pinned by a test.
 
 from __future__ import annotations
 
-import json
 import os
-import subprocess
-import sys
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -46,202 +33,6 @@ def _mk_band_index(spark, path, n_docs: int = 30):
     docs = spark.createDataFrame(rows, DSCHEMA)
     ix.create_band_index(docs, path, n_buckets=8)
     return docs
-
-
-def _lock_file(path: str) -> str:
-    return f"{path.rstrip('/')}{ix.WRITER_LOCK_SUFFIX}"
-
-
-# --------------------------------------------------- lock key canonical
-def test_writer_lock_reentrant_across_path_spellings(spark, tmp_path):
-    """`/x/idx` and `file:/x/idx` spell the SAME slot (same marker
-    file): the inner acquire must re-enter, not see "exists" forever
-    and self-deadlock (r11 verdict nit — the held-set keyed on the raw
-    string)."""
-    path = str(tmp_path / "bidx")
-    _mk_band_index(spark, path)
-    entered = []
-    with ix.writer_lock(spark, path, "outer"):
-        with ix.writer_lock(spark, f"file:{path}", "inner_uri_spelling"):
-            entered.append("uri")
-        with ix.writer_lock(spark, path + "/", "inner_trailing_slash"):
-            entered.append("slash")
-        # a locked op addressed through the other spelling re-enters too
-        ix.tombstone_ids(spark, f"file:{path}", [1])
-    assert entered == ["uri", "slash"]
-    # released exactly once, at the outer exit
-    from meta_morph_etl_databricks_spark.sources.sinks import _hadoop_fs
-
-    fs, path_cls, _ = _hadoop_fs(spark, path)
-    assert not fs.exists(path_cls(_lock_file(path)))
-    # and the tombstone landed
-    assert ix.index_info(spark, path)["pending_tombstones"] == 1
-
-
-# ------------------------------------------------ cross-process contention
-_HOLDER_SCRIPT = """
-import os, sys, time
-lock, hold_sec = sys.argv[1], float(sys.argv[2])
-fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)  # atomic create
-os.write(fd, b'{"op": "external_process"}')
-os.close(fd)
-print("HELD", flush=True)
-time.sleep(hold_sec)
-os.unlink(lock)
-"""
-
-
-def test_multiprocess_writer_lock_contention(spark, tmp_path):
-    """The lock's real adversary is a second PROCESS (two jobs pointed
-    at one slot).  A subprocess takes the marker with the same
-    O_CREAT|O_EXCL primitive ``_try_acquire_lock`` uses on local disk;
-    the parent's compact fails fast while it is held, and with
-    ``lock_retries`` serializes behind the holder's release."""
-    path = str(tmp_path / "bidx")
-    _mk_band_index(spark, path)
-
-    proc = subprocess.Popen(
-        [sys.executable, "-c", _HOLDER_SCRIPT, _lock_file(path), "6"],
-        stdout=subprocess.PIPE,
-        text=True,
-    )
-    try:
-        assert proc.stdout.readline().strip() == "HELD"
-        # fail-fast: the foreign process holds the slot
-        with pytest.raises(IOError, match="break_writer_lock"):
-            ix.compact_index(spark, path)
-        # serialize-behind: poll past the holder's tenure, then win
-        t0 = time.time()
-        ix.compact_index(spark, path, lock_retries=120, lock_retry_interval_sec=0.25)
-        assert time.time() - t0 > 1.0  # it actually waited for the release
-    finally:
-        proc.wait(timeout=30)
-    live, meta = ix.live_index(spark, path)
-    assert meta is not None and meta["kind"] == ix.BAND_KIND
-    from meta_morph_etl_databricks_spark.sources.sinks import _hadoop_fs
-
-    fs, path_cls, _ = _hadoop_fs(spark, path)
-    assert not fs.exists(path_cls(_lock_file(path)))
-
-
-# -------------------------------------------------- owner-token reclaim
-def test_owner_reclaims_own_stranded_lock_only(spark, tmp_path):
-    """A marker whose breadcrumb names the SAME owner token is a dead
-    prior incarnation of this job (one-active-query-per-checkpoint) —
-    reclaimed without retries.  A foreign owner's marker, a crumbless
-    marker (holder mid-acquire), and a torn crumb never reclaim."""
-    path = str(tmp_path / "bidx")
-    _mk_band_index(spark, path)
-    lock = _lock_file(path)
-
-    def strand(body: str | None):
-        with open(lock, "x") as f:
-            if body is not None:
-                f.write(body)
-
-    # same owner → reclaimed, op proceeds with retries=0
-    strand(json.dumps({"op": "stream_batch", "owner": "ckpt-A"}))
-    with ix.writer_lock(spark, path, "restart", owner="ckpt-A"):
-        pass
-    assert not os.path.exists(lock)
-
-    # foreign owner → fail loudly, marker intact
-    strand(json.dumps({"op": "stream_batch", "owner": "ckpt-OTHER"}))
-    with pytest.raises(IOError, match="break_writer_lock"):
-        with ix.writer_lock(spark, path, "restart", owner="ckpt-A"):
-            pass
-    assert os.path.exists(lock)
-    os.unlink(lock)
-
-    # crumbless marker (holder mid-acquire) → never reclaimed
-    strand(None)
-    with pytest.raises(IOError):
-        with ix.writer_lock(spark, path, "restart", owner="ckpt-A"):
-            pass
-    assert os.path.exists(lock)
-    os.unlink(lock)
-
-    # torn crumb → never reclaimed
-    strand('{"op": "stream_ba')
-    with pytest.raises(IOError):
-        with ix.writer_lock(spark, path, "restart", owner="ckpt-A"):
-            pass
-    assert os.path.exists(lock)
-    os.unlink(lock)
-
-
-def test_reclaim_restores_foreign_replacement(spark, tmp_path, monkeypatch):
-    """The capture protocol's TOCTOU defense: if the marker CHANGES
-    between the owner peek and the rename (a manual break racing the
-    reclaim), the re-verify against the CAPTURED file sees the truth
-    and restores the innocent writer's marker instead of deleting it.
-    Simulated by faking only the peek read."""
-    path = str(tmp_path / "bidx")
-    _mk_band_index(spark, path)
-    lock = _lock_file(path)
-    with open(lock, "x") as f:
-        f.write(json.dumps({"op": "compact_index", "owner": "OTHER"}))
-
-    real = ix._read_small_file
-    calls = {"n": 0}
-
-    def fake_peek(spark_, p):
-        calls["n"] += 1
-        if calls["n"] == 1 and p == lock:  # the peek: claims our owner
-            return json.dumps({"op": "stream_batch", "owner": "MINE"})
-        return real(spark_, p)  # the captured-file re-verify reads truth
-
-    monkeypatch.setattr(ix, "_read_small_file", fake_peek)
-    from meta_morph_etl_databricks_spark.sources.sinks import _hadoop_fs
-
-    fs, path_cls, _ = _hadoop_fs(spark, path)
-    got = ix._reclaim_own_lock(spark, fs, path_cls, path_cls(lock), lock, "MINE")
-    assert got is False
-    assert os.path.exists(lock)  # restored, not deleted
-    assert not os.path.exists(lock + ".reclaim")
-    assert json.load(open(lock))["owner"] == "OTHER"  # content intact
-    os.unlink(lock)
-
-
-def test_stream_restart_self_heals_stranded_lock(spark, tmp_path):
-    """The ADVICE scenario end-to-end: a hard-killed stream (kill -9 /
-    OOM) strands ``__writer_lock`` with its own checkpoint as owner; on
-    restart the first batch must reclaim it and process — not poll out
-    its retries and die — and dedup state is intact (replay via
-    recover_compaction is safe)."""
-    from meta_morph_etl_databricks_spark.streaming.dedup import (
-        stream_incremental_dedup,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    index_path = str(tmp_path / "idx")
-    ckpt = str(tmp_path / "ckpt")
-    spark.createDataFrame(
-        [(i, " ".join(f"s{i}w{j}" for j in range(30))) for i in range(6)], DSCHEMA
-    ).write.parquet(str(src / "b1"))
-
-    stream = spark.readStream.schema(DSCHEMA).parquet(str(src) + "/*")
-    q = stream_incremental_dedup(stream, index_path, str(tmp_path / "acc"), ckpt)
-    q.awaitTermination(120)
-
-    # hard kill left the marker with this stream's own owner token
-    with open(_lock_file(index_path), "x") as f:
-        f.write(json.dumps({"op": "stream_batch", "owner": ckpt, "acquired_unix": 0}))
-
-    # redeliver batch 1 + one new doc; the restart must reclaim and run
-    spark.read.parquet(str(src / "b1")).write.parquet(str(src / "b2"))
-    spark.createDataFrame(
-        [(100, " ".join(f"n100w{j}" for j in range(30)))], DSCHEMA
-    ).write.parquet(str(src / "b3"))
-    stream = spark.readStream.schema(DSCHEMA).parquet(str(src) + "/*")
-    q = stream_incremental_dedup(stream, index_path, str(tmp_path / "acc"), ckpt)
-    q.awaitTermination(180)
-
-    assert not os.path.exists(_lock_file(index_path))  # released normally
-    acc = spark.read.parquet(str(tmp_path / "acc"))
-    # redelivered ids dropped by the seen filter, the new doc accepted
-    assert acc.count() == 7 and acc.where("doc_id = 100").count() == 1
 
 
 # ------------------------------------------- tombstone isin/anti boundary
@@ -458,7 +249,7 @@ def test_ivf_assignment_preserves_non_bigint_id_type(spark, tmp_path):
 def test_glob_metacharacter_roots_rejected(spark, tmp_path):
     """A glob metacharacter in the index ROOT makes every pruned serve
     silently read an EMPTY index (admitting every duplicate) — create,
-    init, migrate and pruned_read all refuse loudly instead."""
+    init and pruned_read all refuse loudly instead."""
     docs = spark.createDataFrame(
         [(i, " ".join(f"g{i}w{j}" for j in range(30))) for i in range(5)], DSCHEMA
     )

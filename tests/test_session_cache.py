@@ -1,0 +1,165 @@
+"""Session-owned caches (``session_cache``): every cached entry dies
+with its session, and the similarity artifacts follow a rewrite of the
+embeddings table the way the relation cache does."""
+
+from __future__ import annotations
+
+import gc
+import shutil
+import weakref
+
+import pytest
+
+from meta_morph_etl_databricks_spark.operators.quantize import quantize_int8
+from meta_morph_etl_databricks_spark.operators.semantic import _cached_frame
+from meta_morph_etl_databricks_spark.plans import ml_queries as ml
+from meta_morph_etl_databricks_spark.sources.scans import read_parquet_table
+
+
+def _fill_relations(s, sf_dir):
+    read_parquet_table(s, sf_dir, "region")
+
+
+def _fill_frames(s, sf_dir):
+    _cached_frame(s, [(0, 0, 1), (1, 0, 2)], "cid int, _pos int, _y long")
+
+
+def _fill_pq_codebooks(s, sf_dir):
+    codes = quantize_int8(ml._embeddings(s, sf_dir)).select("vec_id", "q_vec")
+    assert ml._pq_codebooks_cached(s, sf_dir, codes) is not None
+
+
+def _fill_ivf_centroids(s, sf_dir):
+    assert ml._ivf_centroids_cached(s, sf_dir, ml._embeddings(s, sf_dir))
+
+
+def _fill_ivf_indexes(s, sf_dir):
+    ml.q_similarity_ivf_topk(s, sf_dir)  # inverted lists + PQ index
+
+
+@pytest.mark.parametrize(
+    "cache, fill",
+    [
+        ("relations", _fill_relations),
+        ("frames", _fill_frames),
+        ("pq_codebooks", _fill_pq_codebooks),
+        ("ivf_centroids", _fill_ivf_centroids),
+        ("ivf_pq_index", _fill_ivf_indexes),
+    ],
+    ids=["relations", "frames", "pq_codebooks", "ivf_centroids", "ivf_indexes"],
+)
+def test_cache_entries_die_with_their_session(spark, sf_dir, cache, fill):
+    """A dropped session is collected even though it filled a cache: a
+    cache keyed by session identity in a module dict kept it alive
+    through its cached frames (and a later session could reuse a dead
+    session's id).  PySpark itself pins two sessions: the newest one
+    (``RDD.toDF`` is re-bound per construction) and the last caller of
+    ``createDataFrame`` (``SparkSession._activeSession``) — one more
+    ``newSession()`` and a ``createDataFrame`` on the fixture session
+    release both."""
+    from meta_morph_etl_databricks_spark.session_cache import _ATTR
+
+    s2 = spark.newSession()
+    fill(s2, sf_dir)
+    assert s2.__dict__[_ATTR][cache]  # the entry is held by s2's registry
+    ref = weakref.ref(s2)
+    del s2
+    spark.newSession()
+    spark.createDataFrame([], "x int")
+    gc.collect()
+    assert ref() is None
+
+
+def test_similarity_caches_follow_a_rewritten_embeddings_table(spark, sf_dir, tmp_path):
+    """Rewriting ``embeddings.parquet`` must invalidate the cached IVF
+    centroids, PQ codebook, inverted lists and PQ index like it
+    invalidates the cached relation: a re-run in the same session names
+    only vec_ids that still exist and equals a cold session's answer."""
+    d = tmp_path / "sf"
+    d.mkdir()
+    shutil.copy(f"{sf_dir}/embeddings.parquet", d / "embeddings.parquet")
+    ml.q_similarity_ivf_topk(spark, str(d)).collect()  # warm every cache
+
+    table = d / "embeddings.parquet"
+    spark.read.parquet(str(table)).where("vec_id < 5 OR vec_id % 2 = 0").coalesce(
+        1
+    ).write.parquet(str(d / "rewrite"))
+    table.unlink()
+    (d / "rewrite").rename(table)
+    live_ids = {r.vec_id for r in spark.read.parquet(str(table)).select("vec_id").collect()}
+
+    rows = ml.q_similarity_ivf_topk(spark, str(d)).collect()
+    assert {r.variant for r in rows} == {"ivf", "ivfpq", "rerank"}
+    stale = [(r.variant, r.vec_id) for r in rows if r.vec_id not in live_ids]
+    assert stale == []
+    cold = ml.q_similarity_ivf_topk(spark.newSession(), str(d)).collect()
+    assert sorted(rows) == sorted(cold)
+
+
+class _Owner:
+    """Stands in for a SparkSession: the registry only needs ``__dict__``."""
+
+
+def test_session_cached_lru_bound_and_unkeyed_builds():
+    from meta_morph_etl_databricks_spark.session_cache import session_cached
+
+    owner, builds = _Owner(), []
+
+    def get(key):
+        return session_cached(owner, "c", key, lambda: builds.append(key) or [key], 2)
+
+    first = get("a")
+    assert get("a") is first and builds == ["a"]  # hit: no rebuild
+    get("b")
+    get("a")  # a is now the most recently used
+    get("c")  # evicts b, the least recently used
+    assert builds == ["a", "b", "c"]
+    get("a")
+    get("b")
+    assert builds == ["a", "b", "c", "b"]
+    get(None)
+    get(None)
+    assert builds[-2:] == [None, None]  # an unkeyed value is never cached
+    assert session_cached(_Owner(), "c", "a", lambda: "other") == "other"  # per owner
+
+
+def test_session_cached_concurrent_callers_share_one_value():
+    """More threads than cores hammer the registry through a shortened
+    switch interval: every caller of one key gets the value stored
+    first (slow builds force concurrent misses), an LRU bound holds, and
+    nothing raises."""
+    import sys
+    import threading
+    import time
+
+    from meta_morph_etl_databricks_spark.session_cache import session_cached
+
+    owner, errors = _Owner(), []
+    seen = {k: set() for k in range(5)}
+
+    def slow_build():
+        time.sleep(0.001)
+        return object()
+
+    def work(t):
+        try:
+            for i in range(200):
+                seen[i % 5].add(id(session_cached(owner, "shared", i % 5, slow_build)))
+                session_cached(owner, "lru", (t + i) % 6, object, 4)
+                assert len(owner.__dict__["_graft_session_cache"]["lru"]) <= 4
+        except Exception as e:  # a thread's exception is otherwise lost
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+        assert not any(th.is_alive() for th in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert errors == []
+    assert all(len(ids) == 1 for ids in seen.values())

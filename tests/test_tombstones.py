@@ -96,8 +96,8 @@ def test_tombstone_idempotent_unknown_and_legacy(spark, tmp_path):
         ix.tombstone_ids(spark, str(tmp_path / "nope"), [1])
     flat = str(tmp_path / "flat")
     shutil.copytree(ix.live_root(spark, path), flat)
-    # the copied sidecar would hijack nothing — legacy flat is refused
-    with pytest.raises(ValueError, match="migrate_index"):
+    # the copied sidecar hijacks nothing — a bare root is no index
+    with pytest.raises(ValueError, match="no index"):
         ix.tombstone_ids(spark, flat, [1])
 
 
