@@ -1,10 +1,18 @@
 """The daily pipeline, end to end — the reference's Airflow DAG
 (meta_morph_etl.py:27-73) as ONE composable function:
 
-    ingest (dup-gate → raw overwrite + day-partitioned history, C3/C4)
-      → four marts (day-stamped, gated, idempotent day-partition writes)
-      → customer_metrics MERGE upsert into the current table (C5)
-      → per-day publish hand-off to the reporting layer (C7)
+    ingest, one branch per table (dup-gate → raw overwrite +
+      day-partitioned history, C3/C4)
+      → fan-in: every ingest branch has finished
+      → four mart branches (day-stamped, gated, idempotent day-partition
+        writes, per-day publish hand-off to the reporting layer, C7);
+        the customer_metrics branch also MERGE-upserts the current
+        table (C5)
+
+The branches of a phase run concurrently on the one session, as the
+reference's tasks do (meta_morph_etl.py:24, max_active_tasks=4): most of
+a day's jobs have a single task at this size, so one branch at a time
+leaves most cores idle.
 
 Differences from the reference, on purpose (SURVEY.md §7.1):
 - one SparkSession for the whole run, stages hand DataFrames (or
@@ -15,11 +23,25 @@ Differences from the reference, on purpose (SURVEY.md §7.1):
   transactional cover we don't have on plain parquet);
 - the cross-pipeline dependency (customer_sales_report reading the same
   day's supplier_performance, §3.1 step 4) is an in-memory DataFrame
-  hand-off, visible to Catalyst.
+  hand-off, visible to Catalyst — so customer_sales_report runs beside
+  supplier_performance instead of after it;
+- each phase is a fan-out over one thread pool followed by one fan-in.
+  A failing branch does not stop its siblings: a bad ingest gate no
+  longer keeps the OTHER tables' raw and history writes from landing
+  (in the reference each ingest is its own Airflow task, too).  Once
+  every branch of the phase has been joined, the first failure in
+  INGEST_TABLES / MART_FNS order is raised, so no mart runs after a
+  failed ingest and the current table stays untouched.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
+from typing import Any
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,6 +79,20 @@ MART_FNS = {
 }
 
 
+def _fan_out(spark: SparkSession, branches: list[Callable[[], Any]]) -> list[Any]:
+    """Run every branch on its own thread, join them all, and return
+    their results in order; the first failure in branch order is raised
+    only after every branch has finished.
+
+    Each branch is wrapped on its own, so it starts from its own copy of
+    the caller's local properties (job group, job tags): a branch thread
+    is a fresh pinned JVM thread, whose jobs would otherwise carry no
+    group and no tag and could not be cancelled by tag."""
+    with ThreadPoolExecutor(max_workers=len(branches)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(b)) for b in branches]
+    return [f.result() for f in futures]
+
+
 def _write_day_partition(df: DataFrame, path: str, day: str) -> DataFrame:
     """Idempotent day write: dynamic partition overwrite replaces ONLY
     this day's partition; other history days are untouched."""
@@ -70,22 +106,69 @@ def _write_day_partition(df: DataFrame, path: str, day: str) -> DataFrame:
     return stamped
 
 
-def ingest(spark: SparkSession, source_dir: str, base_dir: str, day: str) -> dict[str, int]:
-    """C3+C4 per source entity: dup-gate on the declared PK, overwrite
-    the raw snapshot, day-partition the history layer."""
-    counts: dict[str, int] = {}
-    for name in INGEST_TABLES:
-        df = read_parquet_table(spark, source_dir, name)
+def _ingest_table(spark: SparkSession, source_dir: str, base_dir: str, day: str, name: str) -> int:
+    """One ingest branch.  The source is persisted before its gate, so
+    the gate and both writes share one scan."""
+    df = read_parquet_table(spark, source_dir, name).persist()
+    try:
         if name in INGEST_PKS:
             assert_unique(df, INGEST_PKS[name])
-        df.persist()
-        try:
-            write_parquet(df, f"{base_dir}/raw/{name}.parquet", mode="overwrite")
-            _write_day_partition(df, f"{base_dir}/history/{name}", day)
-            counts[name] = df.count()
-        finally:
-            df.unpersist()
-    return counts
+        write_parquet(df, f"{base_dir}/raw/{name}.parquet", mode="overwrite")
+        _write_day_partition(df, f"{base_dir}/history/{name}", day)
+        return df.count()
+    finally:
+        df.unpersist()
+
+
+def ingest(spark: SparkSession, source_dir: str, base_dir: str, day: str) -> dict[str, int]:
+    """C3+C4 per source entity, one concurrent branch per table:
+    dup-gate on the declared PK, overwrite the raw snapshot,
+    day-partition the history layer."""
+    branches = [partial(_ingest_table, spark, source_dir, base_dir, day, n) for n in INGEST_TABLES]
+    return dict(zip(INGEST_TABLES, _fan_out(spark, branches)))
+
+
+def _mart(
+    spark: SparkSession, base_dir: str, day: str, publish: bool, name: str
+) -> dict[str, int]:
+    """One mart branch: build, gate, day write, count, publish — and for
+    customer_metrics the MERGE upsert.  The mart is computed once: the
+    gate, the day write and the MERGE read one persisted frame, while
+    the ``mart.*`` and ``published.*`` counts read back what was
+    written."""
+    out = MART_FNS[name](spark, f"{base_dir}/raw").persist()
+    try:
+        if name in MART_PKS:
+            assert_unique(out, MART_PKS[name])
+        mart_path = f"{base_dir}/marts/{name}"
+        _write_day_partition(out, mart_path, day)
+        stats = {
+            f"mart.{name}": spark.read.parquet(mart_path)
+            .filter(F.col("day_dt") == F.to_date(F.lit(day)))
+            .count()
+        }
+        if publish:
+            stats[f"published.{name}"] = publish_partition(
+                spark, mart_path, f"{base_dir}/reporting/{name}", day
+            )
+        if name == "customer_metrics":
+            # C5: the customer_metrics "current" table is a keyed MERGE
+            # target — matched customers take the new day's values, new
+            # customers insert, unmatched old customers survive
+            # (reference utils.py:368-433).
+            current = merge_upsert(
+                spark, f"{base_dir}/current/customer_metrics", out, keys=["customer_id"]
+            )
+            # release the snapshot cache merge_upsert materialized under
+            # its lock — a daily driver loop must not pin one target copy
+            # per day
+            try:
+                stats["current.customer_metrics"] = current.count()
+            finally:
+                current.unpersist()
+        return stats
+    finally:
+        out.unpersist()
 
 
 def run_daily(
@@ -102,33 +185,6 @@ def run_daily(
     reporting/ (published slices).
     """
     stats = dict(ingest(spark, source_dir, base_dir, day))
-    raw_dir = f"{base_dir}/raw"
-
-    for name, fn in MART_FNS.items():
-        out = fn(spark, raw_dir)
-        if name in MART_PKS:
-            assert_unique(out, MART_PKS[name])
-        mart_path = f"{base_dir}/marts/{name}"
-        _write_day_partition(out, mart_path, day)
-        stats[f"mart.{name}"] = spark.read.parquet(mart_path).filter(
-            F.col("day_dt") == F.to_date(F.lit(day))
-        ).count()
-        if publish:
-            stats[f"published.{name}"] = publish_partition(
-                spark, mart_path, f"{base_dir}/reporting/{name}", day
-            )
-
-    # C5: the customer_metrics "current" table is a keyed MERGE target —
-    # matched customers take the new day's values, new customers insert,
-    # unmatched old customers survive (reference utils.py:368-433).
-    current = merge_upsert(
-        spark,
-        f"{base_dir}/current/customer_metrics",
-        MART_FNS["customer_metrics"](spark, raw_dir),
-        keys=["customer_id"],
-    )
-    stats["current.customer_metrics"] = current.count()
-    # release the snapshot cache merge_upsert materialized under its
-    # lock — a daily driver loop must not pin one target copy per day
-    current.unpersist()
+    for part in _fan_out(spark, [partial(_mart, spark, base_dir, day, publish, n) for n in MART_FNS]):
+        stats.update(part)
     return stats

@@ -62,3 +62,11 @@ def session_cached(
                 entries.popitem(last=False)
         entries[key] = value
     return value
+
+
+def session_evict(spark, cache: str, stale: Callable[[Hashable], bool]) -> list[Any]:
+    """Remove the entries of the session's ``cache`` whose key ``stale``
+    accepts, and return their values for the caller to release."""
+    with _LOCK:
+        entries = spark.__dict__.get(_ATTR, {}).get(cache, {})
+        return [entries.pop(k) for k in [k for k in entries if stale(k)]]

@@ -9,10 +9,12 @@ import shutil
 import weakref
 
 import pytest
+from pyspark import StorageLevel
 
 from meta_morph_etl_databricks_spark.operators.quantize import quantize_int8
 from meta_morph_etl_databricks_spark.operators.semantic import _cached_frame
 from meta_morph_etl_databricks_spark.plans import ml_queries as ml
+from meta_morph_etl_databricks_spark.session_cache import _ATTR
 from meta_morph_etl_databricks_spark.sources.scans import read_parquet_table
 
 
@@ -57,8 +59,6 @@ def test_cache_entries_die_with_their_session(spark, sf_dir, cache, fill):
     ``createDataFrame`` (``SparkSession._activeSession``) — one more
     ``newSession()`` and a ``createDataFrame`` on the fixture session
     release both."""
-    from meta_morph_etl_databricks_spark.session_cache import _ATTR
-
     s2 = spark.newSession()
     fill(s2, sf_dir)
     assert s2.__dict__[_ATTR][cache]  # the entry is held by s2's registry
@@ -74,13 +74,28 @@ def test_similarity_caches_follow_a_rewritten_embeddings_table(spark, sf_dir, tm
     """Rewriting ``embeddings.parquet`` must invalidate the cached IVF
     centroids, PQ codebook, inverted lists and PQ index like it
     invalidates the cached relation: a re-run in the same session names
-    only vec_ids that still exist and equals a cold session's answer."""
+    only vec_ids that still exist and equals a cold session's answer.
+    The superseded lists and index are unpersisted: the JVM cache
+    manager is shared by every session, so a stale pair left cached
+    would hold its blocks for the life of the application."""
     d = tmp_path / "sf"
     d.mkdir()
     shutil.copy(f"{sf_dir}/embeddings.parquet", d / "embeddings.parquet")
     ml.q_similarity_ivf_topk(spark, str(d)).collect()  # warm every cache
-
     table = d / "embeddings.parquet"
+
+    def ivf_frames():
+        caches = spark.__dict__[_ATTR]
+        return [
+            df
+            for cache in ("ivf_lists", "ivf_pq_index")
+            for key, df in caches[cache].items()
+            if key[0] == str(table)
+        ]
+
+    superseded = ivf_frames()
+    assert len(superseded) == 2
+
     spark.read.parquet(str(table)).where("vec_id < 5 OR vec_id % 2 = 0").coalesce(
         1
     ).write.parquet(str(d / "rewrite"))
@@ -92,6 +107,9 @@ def test_similarity_caches_follow_a_rewritten_embeddings_table(spark, sf_dir, tm
     assert {r.variant for r in rows} == {"ivf", "ivfpq", "rerank"}
     stale = [(r.variant, r.vec_id) for r in rows if r.vec_id not in live_ids]
     assert stale == []
+    assert [df.storageLevel for df in superseded] == [StorageLevel.NONE] * 2
+    live = ivf_frames()
+    assert len(live) == 2 and all(df.storageLevel != StorageLevel.NONE for df in live)
     cold = ml.q_similarity_ivf_topk(spark.newSession(), str(d)).collect()
     assert sorted(rows) == sorted(cold)
 
