@@ -64,13 +64,9 @@ def tagged_run(spark, sf_dir, tmp_path_factory):
     return base, group, tag, window, tags
 
 
-def _sorted_rows(df):
-    return sorted(df.collect(), key=repr)
-
-
 def _same_frame(got, want):
     assert [(f.name, f.dataType) for f in got.schema] == [(f.name, f.dataType) for f in want.schema]
-    assert _sorted_rows(got) == _sorted_rows(want)
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
 
 
 def test_every_branch_lands_its_own_rows(spark, tagged_run):
