@@ -47,6 +47,7 @@ import json
 import math
 import numbers
 import time
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -146,7 +147,7 @@ def write_index_meta(spark: SparkSession, path: str, meta: dict) -> None:
     rationale as sources.sinks.path_exists).  ``path`` is a DATA dir
     (a generation dir) — no pointer resolution;
     the generation protocol relies on writing meta into a specific gen
-    (and writing it LAST, see :func:`compact_index`)."""
+    (and writing it LAST, see :func:`_commit_generation`)."""
     _write_small_file(
         spark, f"{path.rstrip('/')}/{META_FILE}", json.dumps(meta, sort_keys=True)
     )
@@ -315,10 +316,9 @@ def writer_lock(
     concurrent writers could both pass recovery and race
     :func:`_new_generation` into interleaved half-generations.  Readers
     stay lock-free (the pointer protocol already gives them atomic
-    snapshots).  Dedup-kind appends take it in
+    snapshots).  Every index append takes it in
     :func:`_locked_serve_append` (a re-entry inside a streaming batch,
-    which holds the slot for its whole body); ``append_ivf_vectors``
-    stays lock-free — single appender by contract (its docstring).
+    which holds the slot for its whole body).
 
     Mechanics: the lock is an atomically-created marker file at
     ``<root>__writer_lock`` — a SIBLING of the index root, not inside
@@ -519,14 +519,13 @@ def init_index(spark: SparkSession, path: str, meta: dict) -> tuple[str, dict]:
     create the first generation with only the meta sidecar (``rows=0``
     — an empty index has no rows) and point ``_current`` at it.
     Returns ``(live_dir, meta)``.  (The streaming sinks use this on
-    their first batch; batch ``create_*`` builders write data first and
-    call :func:`_finish_generation` instead.)"""
+    their first batch; batch ``create_*`` builders write data first
+    through :func:`_commit_generation` instead.)"""
     root = path.rstrip("/")
     _reject_glob_root(root)
     meta = dict(meta, rows=0)
     gen = _new_generation(spark, root)
-    write_index_meta(spark, f"{root}/{gen}", meta)
-    _install_pointer(spark, root, gen)
+    _finish_generation(spark, root, gen, meta)
     return f"{root}/{gen}", meta
 
 
@@ -561,52 +560,63 @@ def _rewrite_entry(
     return root, live, meta
 
 
-def _write_generation(spark: SparkSession, root: str, rows: DataFrame) -> tuple[str, str]:
-    """Write ``rows`` (``pfx`` included) as the data of the NEXT
-    generation — repartitioned on pfx first so each bucket directory
-    gets ONE file, not one per upstream task.  Returns ``(gen, dir)``;
-    the caller completes it with :func:`_finish_generation`."""
-    gen = _new_generation(spark, root)
-    rows.repartition("pfx").write.mode("overwrite").partitionBy("pfx").parquet(
-        f"{root}/{gen}"
-    )
-    return gen, f"{root}/{gen}"
-
-
-def _repack_seen(
+def _commit_generation(
     spark: SparkSession,
-    live: str,
+    root: str,
+    rows: DataFrame,
     meta: dict,
-    new_dir: str,
-    n_buckets: int,
+    live: str | None = None,
     tombs: list | None = None,
     purge: DataFrame | None = None,
-) -> None:
-    """Carry the seen-id sidecar into a rewrite's next generation: minus
-    the pending takedowns (or the ``purge`` ids of a retraction), one
-    entry per id (replay duplicates collapse), ``spfx`` recomputed at
-    ``n_buckets`` under the shared :func:`_seen_pfx` convention
-    (round-10 advice: sites that inlined it would silently diverge)."""
-    from ..sources.sinks import _hadoop_fs
+) -> dict:
+    """The generation protocol of every create and rewrite.  Writes
+    ``rows`` with ``pfx`` from :func:`_kind_pfx` as the data of the NEXT
+    generation, repartitioned on pfx first so each bucket directory gets
+    ONE file, not one per upstream task.  A rewrite (``live`` given)
+    carries the seen-id sidecar along: minus the pending takedowns
+    ``tombs`` (or the ``purge`` ids of a retraction), one entry per id
+    (replay duplicates collapse), ``spfx`` recomputed at the new
+    ``n_buckets`` under the shared :func:`_seen_pfx` convention.  When
+    ``meta`` carries no ``rows`` they are counted from the parquet
+    footers.  :func:`_finish_generation` completes it.  Returns the
+    committed meta.
 
-    fs, path_cls, _ = _hadoop_fs(spark, live)
-    if not fs.exists(path_cls(_seen_dir(live))):
-        return
-    id_col = meta["id_col"]
-    seen = spark.read.schema(_seen_schema(meta)).parquet(_seen_dir(live))
-    if purge is not None:
-        seen = seen.join(purge, id_col, "left_anti")
-    else:
-        seen = _minus_tombstones(spark, live, meta, seen, tombs)
+    ``pfx`` is a pure function of the row, so recomputing it on a
+    rewrite keeps every row in its bucket at an unchanged
+    ``n_buckets``, and a NULL-key row (corrupt vector, parked IVF
+    vector) in the never-served NULL partition."""
+    from ..sources.sinks import path_exists
+
+    gen = _new_generation(spark, root)
+    new_dir = f"{root}/{gen}"
     (
-        seen.select(id_col)
-        .distinct()
-        .withColumn("spfx", _seen_pfx(id_col, n_buckets))
-        .repartition("spfx")
+        rows.withColumn("pfx", _kind_pfx(meta))
+        .repartition("pfx")
         .write.mode("overwrite")
-        .partitionBy("spfx")
-        .parquet(_seen_dir(new_dir))
+        .partitionBy("pfx")
+        .parquet(new_dir)
     )
+    if live is not None and path_exists(spark, _seen_dir(live)):
+        id_col = meta["id_col"]
+        seen = spark.read.schema(_seen_schema(meta)).parquet(_seen_dir(live))
+        if purge is not None:
+            seen = seen.join(purge, id_col, "left_anti")
+        else:
+            seen = _minus_tombstones(spark, live, meta, seen, tombs)
+        (
+            seen.select(id_col)
+            .distinct()
+            .withColumn("spfx", _seen_pfx(id_col, meta["n_buckets"]))
+            .repartition("spfx")
+            .write.mode("overwrite")
+            .partitionBy("spfx")
+            .parquet(_seen_dir(new_dir))
+        )
+    if "rows" not in meta:
+        stored = spark.read.schema(_kind_schema(meta)).parquet(new_dir)
+        meta = dict(meta, rows=stored.count())
+    _finish_generation(spark, root, gen, meta)
+    return meta
 
 
 def _open_live(spark: SparkSession, path: str, kind: str, hint: str) -> tuple[str, dict]:
@@ -662,18 +672,28 @@ def auto_index_buckets(
     return max(floor, min(cap, math.ceil(max(n_rows, 1) / target_rows_per_bucket)))
 
 
-def _band_pfx(n_buckets: int) -> Column:
-    return F.pmod(F.xxhash64("band_idx", "band_key"), F.lit(n_buckets)).cast("int")
+# Each kind's partition key columns.  A NULL vector key (corrupt
+# vector, an IVF vector parked by an empty codebook) → NULL pfx → the
+# Hive default partition: never in any serve's touched set, so corrupt
+# history costs zero IO per increment.
+_PFX_KEYS = {
+    BAND_KIND: ("band_idx", "band_key"),
+    EMBED_KIND: ("bucket",),
+    SEM_KIND: ("cell",),
+    IVF_KIND: ("centroid_id",),
+}
 
 
-def _bucket_pfx(n_buckets: int) -> Column:
-    # NULL bucket (corrupt vectors) → NULL pfx → the Hive default
-    # partition: never in any serve's touched set, so corrupt history
-    # costs zero IO per increment.
-    return F.when(
-        F.col("bucket").isNotNull(),
-        F.pmod(F.xxhash64("bucket"), F.lit(n_buckets)),
-    ).cast("int")
+def _kind_pfx(meta: dict) -> Column:
+    """The kind's partition expression ``pmod(xxhash64(keys),
+    n_buckets)`` at the meta's CURRENT bucket count — the one registry
+    every write and probe uses, so a new kind cannot silently miss
+    re-partitioning."""
+    keys = _PFX_KEYS[meta["kind"]]
+    pfx = F.pmod(F.xxhash64(*keys), F.lit(meta["n_buckets"]))
+    if meta["kind"] != BAND_KIND:
+        pfx = F.when(F.col(keys[0]).isNotNull(), pfx)
+    return pfx.cast("int")
 
 
 # The id column's TYPE is part of the index's identity: every read
@@ -786,19 +806,11 @@ def _appends_count(spark: SparkSession, live: str) -> int:
         return 0
 
 
-def _cell_pfx(n_buckets: int) -> Column:
-    # NULL cell (corrupt vectors) → NULL pfx → the Hive default
-    # partition, same convention as _bucket_pfx
-    return F.when(
-        F.col("cell").isNotNull(), F.pmod(F.xxhash64("cell"), F.lit(n_buckets))
-    ).cast("int")
-
-
 # ------------------------------------------------------- seen-id store
 def _seen_pfx(id_col: str, n_buckets: int) -> Column:
     """THE seen-store partition convention — ``pmod(xxhash64(id),
-    n_buckets)`` — defined ONCE next to its siblings (_band/_bucket/
-    _cell/_list_pfx) and used by every writer and reader of a
+    n_buckets)`` — defined ONCE next to its sibling :func:`_kind_pfx`
+    and used by every writer and reader of a
     ``_seen_ids`` sidecar: the streaming sinks' fresh-filter and
     commit-marker append, and :func:`recluster_semantic_index`'s seen
     re-pack (round-10 advice: the recluster inlined the expression; a
@@ -1318,15 +1330,12 @@ def create_band_index(
         "bands": bands,
         "n_buckets": n_buckets,
     }
-    root = path.rstrip("/")
-    gen, gen_dir = _write_generation(spark, root, rows.withColumn("pfx", _band_pfx(n_buckets)))
-    if n_rows is None:  # explicit-n_buckets path: footer-only count
-        n_rows = spark.read.schema(_band_schema(meta)).parquet(gen_dir).count()
     # running row counter (r11, extending the SEM/IVF convention to the
-    # band kind): feeds rebucket_due's O(1) growth dial
-    meta["rows"] = n_rows
-    _finish_generation(spark, root, gen, meta)
-    return meta
+    # band kind): feeds rebucket_due's O(1) growth dial; the
+    # explicit-n_buckets path leaves it to the footer-only count
+    if n_rows is not None:
+        meta["rows"] = n_rows
+    return _commit_generation(spark, path.rstrip("/"), rows, meta)
 
 
 def open_band_index(
@@ -1454,6 +1463,31 @@ def _recover_compaction_unlocked(spark: SparkSession, path: str) -> str:
     return "finished" if removed else state
 
 
+def _rebucket(
+    spark: SparkSession, path: str, op: str, size: Callable[[dict], int]
+) -> dict:
+    """Body of :func:`compact_index` and :func:`rebucket_index`: rewrite
+    the live rows, minus pending takedowns and replay duplicates, into
+    the next generation at ``n_buckets = size(meta)``.  The tombstones
+    ride the rewrite for free — the new generation is born without
+    their rows, seen entries, or the sidecar itself (the physical half
+    of the O(ids) takedown path) — and the distinct() is row-level-safe
+    because index rows are pure functions of the document (identical on
+    re-derivation).  Returns the new meta, rows recounted."""
+    root, live, meta = _rewrite_entry(spark, path, op)
+    tombs = _tombstone_list(spark, live)
+    stored = (
+        _minus_tombstones(
+            spark, live, meta, spark.read.schema(_kind_schema(meta)).parquet(live), tombs
+        )
+        .drop("pfx")
+        .distinct()
+    )
+    new_meta = {k: v for k, v in meta.items() if k != "rows"}
+    new_meta["n_buckets"] = size(meta)
+    return _commit_generation(spark, root, stored, new_meta, live, tombs)
+
+
 @_locked_writer
 def compact_index(spark: SparkSession, path: str) -> None:
     """Rewrite an index into one file per bucket, dropping duplicate
@@ -1462,8 +1496,8 @@ def compact_index(spark: SparkSession, path: str) -> None:
     twice (both documented, both correctness-neutral — duplicate rows
     only produce duplicate candidates that the rejected-set distinct
     collapses); periodic compaction bounds the file count and the
-    replay bloat.  Distinct is row-level-safe here because index rows
-    are pure functions of the document (identical on re-derivation).
+    replay bloat.  It is :func:`rebucket_index` at the live
+    ``n_buckets``.
 
     Crash-safety AND reader-atomicity contract (generation layout): the
     compacted rows and the re-packed seen-id store (``_seen_ids`` —
@@ -1475,29 +1509,12 @@ def compact_index(spark: SparkSession, path: str) -> None:
     two-rename swap had a no-live-directory window).  A crash at any
     point leaves the pointer on a complete generation;
     :func:`recover_compaction` (run first, and by every streaming batch)
-    deletes the debris.  Concurrent MAINTENANCE writers are serialized
-    by :func:`writer_lock` (r11 — before it, single-writer was
-    convention only); dedup-kind appends take the same slot
-    (:func:`_locked_serve_append`), while IVF appends stay lock-free,
-    so run their compaction where the appender runs (e.g. between
-    streaming triggers) or rely on the in-sink ``compact_every`` path."""
-    root, live, meta = _rewrite_entry(spark, path, "compact")
-    schema = _kind_schema(meta)
-    # tombstone reap: pending takedowns ride the rewrite for free — the
-    # new generation is born without their rows, seen entries, or the
-    # sidecar itself (the physical half of the O(ids) takedown path)
-    tombs = _tombstone_list(spark, live)
-    gen, new_dir = _write_generation(
-        spark,
-        root,
-        _minus_tombstones(
-            spark, live, meta, spark.read.schema(schema).parquet(live), tombs
-        ).distinct(),
-    )
-    _repack_seen(spark, live, meta, new_dir, meta["n_buckets"], tombs)
-    # distinct() dropped replay dupes — recount (footer-only)
-    meta = dict(meta, rows=spark.read.schema(schema).parquet(new_dir).count())
-    _finish_generation(spark, root, gen, meta)
+    deletes the debris.  Concurrent writers are serialized by
+    :func:`writer_lock` (r11 — before it, single-writer was convention
+    only); every kind's appends take the same slot
+    (:func:`_locked_serve_append`) and re-key onto the compacted
+    generation."""
+    _rebucket(spark, path, "compact", lambda meta: meta["n_buckets"])
 
 
 def rebucket_due(
@@ -1587,26 +1604,13 @@ def compact_due(
     return _appends_count(spark, live) >= max_appends
 
 
-def _kind_pfx(meta: dict) -> Column:
-    """The kind's partition expression at the meta's CURRENT bucket
-    count — the single registry the generational rewrites use so a new
-    kind cannot silently miss re-partitioning."""
-    builders = {
-        BAND_KIND: _band_pfx,
-        EMBED_KIND: _bucket_pfx,
-        SEM_KIND: _cell_pfx,
-        IVF_KIND: _list_pfx,
-    }
-    return builders[meta["kind"]](meta["n_buckets"])
-
-
 # ------------------------------------------------- shared serve path
 # Every dedup index kind serves an increment the same way; only the
 # row builder + policy differ.  The batch serves and the streaming
 # sinks (streaming/dedup.py) share these steps, so a hardening rule is
 # applied once: :func:`_serve_plan` (persisted rows → touched pfx →
 # tombstones → pruned read → policy) and :func:`_locked_serve_append`
-# (the only path dedup-kind rows take into a live generation).  A
+# (the only path any kind's rows take into a live generation).  A
 # kind's row builder returns its index rows (no pfx yet) and its policy
 # ``policy(pruned_index, new_rows) -> IncrementalDedupResult``.
 def _band_rows(docs: DataFrame, meta: dict, text_col: str, est_threshold: float):
@@ -1743,8 +1747,9 @@ def _locked_serve_append(
     increment: DataFrame,
     tombs: list | None = None,
 ) -> tuple[str, dict]:
-    """The append step — the only way dedup-kind index rows enter a
-    live generation (IVF lists append through :func:`append_ivf_vectors`):
+    """The append step — the only way index rows of any kind enter a
+    live generation (the dedup serves and sinks,
+    :func:`append_index_rows` and :func:`append_ivf_vectors`):
     partitioned write, ``_rows``/``_appends`` bump, then re-ingested
     takedown ids (``increment`` ∩ ``tombs``; None reads the list) are
     cleared — in that order, which the streaming sinks' at-least-once
@@ -1832,29 +1837,16 @@ def rebucket_index(
     NEW pfx) — no Lloyd, no codebook retrain, no corpus re-read; the
     cheap maintenance op for the band/embed kinds whose only drift is
     occupancy.  Returns the new meta dict."""
-    root, live, meta = _rewrite_entry(spark, path, "rebucket")
-    schema = _kind_schema(meta)
-    tombs = _tombstone_list(spark, live)
-    stored = (
-        _minus_tombstones(
-            spark, live, meta, spark.read.schema(schema).parquet(live), tombs
-        )
-        .drop("pfx")
-        .distinct()
-    )
-    if n_buckets is None:
-        n_buckets = auto_index_buckets(meta["rows"], target_rows_per_bucket)
-        if meta["kind"] == IVF_KIND:  # same cap rule as create/retrain:
-            n_buckets = min(n_buckets, max(meta.get("nlist", 1), 1))
-    new_meta = dict(meta, n_buckets=n_buckets)
-    gen, new_dir = _write_generation(
-        spark, root, stored.withColumn("pfx", _kind_pfx(new_meta))
-    )
-    _repack_seen(spark, live, meta, new_dir, n_buckets, tombs)
-    # distinct() dropped replay dupes — recount
-    new_meta = dict(new_meta, rows=spark.read.schema(schema).parquet(new_dir).count())
-    _finish_generation(spark, root, gen, new_meta)
-    return new_meta
+
+    def size(meta: dict) -> int:
+        if n_buckets is not None:
+            return n_buckets
+        target = auto_index_buckets(meta["rows"], target_rows_per_bucket)
+        if meta["kind"] == IVF_KIND:  # same cap rule as create/retrain
+            return min(target, max(meta.get("nlist", 1), 1))
+        return target
+
+    return _rebucket(spark, path, "rebucket", size)
 
 
 # ---------------------------------------------------- embedding index
@@ -1897,13 +1889,9 @@ def create_embedding_index(
         "center": center,
         "n_buckets": n_buckets,
     }
-    root = path.rstrip("/")
-    gen, gen_dir = _write_generation(spark, root, rows.withColumn("pfx", _bucket_pfx(n_buckets)))
-    if n_rows is None:  # explicit-n_buckets path: footer-only count
-        n_rows = spark.read.schema(_embed_schema(meta)).parquet(gen_dir).count()
-    meta["rows"] = n_rows  # growth counter (r11) — feeds rebucket_due
-    _finish_generation(spark, root, gen, meta)
-    return meta
+    if n_rows is not None:  # growth counter (r11) — feeds rebucket_due
+        meta["rows"] = n_rows
+    return _commit_generation(spark, path.rstrip("/"), rows, meta)
 
 
 def open_embedding_index(
@@ -2010,10 +1998,7 @@ def create_semantic_index(
         "rows": n,
         "tree": tree_to_json(tree),
     }
-    root = path.rstrip("/")
-    gen, _ = _write_generation(spark, root, rows.withColumn("pfx", _cell_pfx(n_buckets)))
-    _finish_generation(spark, root, gen, meta)
-    return meta
+    return _commit_generation(spark, path.rstrip("/"), rows, meta)
 
 
 def open_semantic_index(
@@ -2175,12 +2160,7 @@ def recluster_semantic_index(
         rows=n,
         tree=tree_to_json(tree),
     )
-    gen, new_dir = _write_generation(
-        spark, root, new_rows.withColumn("pfx", _cell_pfx(n_buckets))
-    )
-    _repack_seen(spark, live, meta, new_dir, n_buckets, tombs)  # n_buckets changed
-    _finish_generation(spark, root, gen, new_meta)
-    return new_meta
+    return _commit_generation(spark, root, new_rows, new_meta, live, tombs)
 
 
 @_locked_writer
@@ -2225,29 +2205,16 @@ def retract_ids(spark: SparkSession, path: str, ids: list) -> int:
     stored_tombs = _typed_stored_tombstones(meta, _tombstone_list(spark, live))
     purge = list(dict.fromkeys(list(ids) + stored_tombs))
     purge_df = F.broadcast(_ids_df(spark, meta, purge))
-    schema = _kind_schema(meta)
-    stored = spark.read.schema(schema).parquet(live)
+    stored = spark.read.schema(_kind_schema(meta)).parquet(live)
     removed = stored.join(ids_df, id_col, "left_semi").count()
-    gen, new_dir = _write_generation(
-        spark, root, stored.join(purge_df, id_col, "left_anti")
+    _commit_generation(  # no rows: exact footer-only recount, the rewrite is rare
+        spark, root, stored.join(purge_df, id_col, "left_anti"),
+        {k: v for k, v in meta.items() if k != "rows"}, live, purge=purge_df,
     )
-    _repack_seen(spark, live, meta, new_dir, meta["n_buckets"], purge=purge_df)
-    # exact recount (footer-only) — the rewrite is rare
-    meta = dict(meta, rows=spark.read.schema(schema).parquet(new_dir).count())
-    _finish_generation(spark, root, gen, meta)
     return removed
 
 
 # ----------------------------------------------------------- IVF kind
-def _list_pfx(n_buckets: int) -> Column:
-    # NULL centroid_id (the empty-codebook degenerate) → NULL pfx → the
-    # Hive default partition, same convention as _bucket_pfx/_cell_pfx
-    return F.when(
-        F.col("centroid_id").isNotNull(),
-        F.pmod(F.xxhash64("centroid_id"), F.lit(n_buckets)),
-    ).cast("int")
-
-
 def _ivf_centroids_from_meta(meta: dict) -> list[tuple[int, list[float]]]:
     return [(int(cid), [float(x) for x in mv]) for cid, mv in meta["centroids"]]
 
@@ -2332,10 +2299,7 @@ def create_ivf_index(
         # only coarsens pruning — cap at nlist
         n_buckets = min(auto_index_buckets(n), max(len(centroids), 1))
     meta["n_buckets"] = n_buckets
-    root = path.rstrip("/")
-    gen, _ = _write_generation(spark, root, rows.withColumn("pfx", _list_pfx(n_buckets)))
-    _finish_generation(spark, root, gen, meta)
-    return meta
+    return _commit_generation(spark, path.rstrip("/"), rows, meta)
 
 
 def open_ivf_index(
@@ -2374,9 +2338,12 @@ def append_ivf_vectors(
     use (O(increment) reads), and the increment's ids are recorded
     AFTER the data append — a crash between the two replays the batch
     as full-row duplicates (at-least-once, collapsed by the next
-    compaction), never as lost vectors.  Appends racing a concurrent
-    compact/retract/retrain generation swap remain out of contract
-    either way: run ingest in the single-writer slot."""
+    compaction), never as lost vectors.
+
+    The rows enter through :func:`_locked_serve_append`, like every
+    dedup kind's: under the writer lock, re-keyed onto the new layout
+    when a compaction or rebucket swapped the generation since the
+    open, and refused loudly when a retrain swapped the codebook."""
     from .quantize import pq_encode, quantize_int8
     from .similarity import ivf_index
 
@@ -2384,59 +2351,43 @@ def append_ivf_vectors(
     live, meta = _open_live(spark, path, IVF_KIND, "create_ivf_index")
     _check_id_type(new_embeddings, meta, path)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
-    tombs = _tombstone_list(spark, live)
     if dedupe_redelivery:
-        new_embeddings = seen_filter_fresh(new_embeddings, live, meta).persist()
-        if new_embeddings.isEmpty():
-            new_embeddings.unpersist()
-            return
-    else:
-        # single evaluation (r11 review): the write, the counter bump's
-        # count() and the tombstone probe would otherwise re-run the
-        # increment's upstream plan up to three times — and a
-        # nondeterministic source could make the counted rows disagree
-        # with the written ones
-        new_embeddings = new_embeddings.localCheckpoint()
-    try:
-        if not meta["centroids"] and meta["codec"] == "float":
-            # EMPTY bootstrap codebook: the assignment kernel returns
-            # zero rows for it, which would silently DROP the ingest.
-            # Park the vectors in the NULL list instead (NULL pfx —
-            # never probed, zero serve IO) so they are retained but
-            # unservable until the first retrain_ivf_index gives the
-            # index a codebook (ivf_retrain_due reports due).
-            assign = new_embeddings.select(
-                F.col(id_col),
-                F.col(vec_col),
-                F.lit(None).cast("long").alias("centroid_id"),
-                F.lit(0.0).alias("_n"),
-            )
-        else:
-            assign = ivf_index(
-                new_embeddings, _ivf_centroids_from_meta(meta), id_col, vec_col, method="auto"
-            )
-        if meta["codec"] == "pq":
-            codes = quantize_int8(assign, vec_col).select(id_col, "centroid_id", "q_vec")
-            rows = pq_encode(
-                codes, meta["pq"]["codebooks"], id_col=id_col, carry_cols=["centroid_id"]
-            )
-        else:
-            rows = assign
-        (
-            rows.withColumn("pfx", _list_pfx(meta["n_buckets"]))
-            .write.mode("append")
-            .partitionBy("pfx")
-            .parquet(live)
+        new_embeddings = seen_filter_fresh(new_embeddings, live, meta)
+    if not meta["centroids"] and meta["codec"] == "float":
+        # EMPTY bootstrap codebook: the assignment kernel returns
+        # zero rows for it, which would silently DROP the ingest.
+        # Park the vectors in the NULL list instead (NULL pfx —
+        # never probed, zero serve IO) so they are retained but
+        # unservable until the first retrain_ivf_index gives the
+        # index a codebook (ivf_retrain_due reports due).
+        assign = new_embeddings.select(
+            F.col(id_col),
+            F.col(vec_col),
+            F.lit(None).cast("long").alias("centroid_id"),
+            F.lit(0.0).alias("_n"),
         )
-        _bump_rows(spark, live, meta, new_embeddings.count())
-        back = _reingested_tombstones(spark, meta, new_embeddings, tombs)
-        if back:  # re-ingested takedown ids become servable again
-            clear_tombstones(spark, live, back)
-        if dedupe_redelivery:  # commit marker — written last (see docstring)
-            append_seen_ids(new_embeddings, live, meta)
-    finally:
-        if dedupe_redelivery:
-            new_embeddings.unpersist()
+    else:
+        assign = ivf_index(
+            new_embeddings, _ivf_centroids_from_meta(meta), id_col, vec_col, method="auto"
+        )
+    if meta["codec"] == "pq":
+        codes = quantize_int8(assign, vec_col).select(id_col, "centroid_id", "q_vec")
+        rows = pq_encode(
+            codes, meta["pq"]["codebooks"], id_col=id_col, carry_cols=["centroid_id"]
+        )
+    else:
+        rows = assign
+    # single evaluation (r11 review): the write, the counter bump's
+    # count(), the tombstone probe and the seen marker would otherwise
+    # re-run the increment's upstream plan and its assignment each — and
+    # a nondeterministic source could make the counted rows disagree
+    # with the written ones
+    rows = rows.withColumn("pfx", _kind_pfx(meta)).localCheckpoint()
+    if dedupe_redelivery and rows.isEmpty():
+        return
+    live, meta = _locked_serve_append(spark, path, live, meta, rows, rows)
+    if dedupe_redelivery:  # commit marker — written last (see docstring)
+        append_seen_ids(rows, live, meta)
 
 
 def serve_ivf_topk(
@@ -2476,7 +2427,7 @@ def serve_ivf_topk(
     spark = queries.sparkSession
     live, meta = _open_live(spark, path, IVF_KIND, "create_ivf_index")
     centroids = _ivf_centroids_from_meta(meta)
-    id_col, vec_col, nb = meta["id_col"], meta["vec_col"], meta["n_buckets"]
+    id_col, vec_col = meta["id_col"], meta["vec_col"]
     if nprobe is None:
         nprobe = auto_nprobe(meta["nlist"])
     codebook = _codebook_df(queries, centroids)
@@ -2489,7 +2440,7 @@ def serve_ivf_topk(
     )
     touched = [
         r.p
-        for r in probes.select(_list_pfx(nb).alias("p"))
+        for r in probes.select(_kind_pfx(meta).alias("p"))
         .where(F.col("p").isNotNull())
         .distinct()
         .collect()
@@ -2686,12 +2637,7 @@ def retrain_ivf_index(
         bootstrap_rows=n,
         rows=n,
     )
-    gen, new_dir = _write_generation(
-        spark, root, new_rows.withColumn("pfx", _list_pfx(n_buckets))
-    )
-    _repack_seen(spark, live, meta, new_dir, n_buckets, tombs)  # n_buckets changed
-    _finish_generation(spark, root, gen, new_meta)
-    return new_meta
+    return _commit_generation(spark, root, new_rows, new_meta, live, tombs)
 
 
 def index_info(spark: SparkSession, path: str) -> dict:

@@ -12,6 +12,8 @@ operators/{text,dedup}.py and are exercised by tests instead.
 from __future__ import annotations
 
 import math
+import threading
+import weakref
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -704,16 +706,45 @@ def _persisted_cached(
     spark: SparkSession, cache: str, sf_dir: str, build: Callable[[], DataFrame]
 ) -> DataFrame:
     """The frame ``build`` returns, persisted once per (session,
-    embeddings version).  A new version of the table supersedes the
-    entries of older ones and unpersists them: the JVM cache manager is
-    shared by every session, so a dropped entry would otherwise keep its
-    cached blocks for the life of the application."""
+    embeddings version).  The JVM cache manager is shared by every
+    session, so a dropped entry would otherwise keep its cached blocks
+    for the life of the application: a new version of the table
+    supersedes the entries of older ones and unpersists them, and a
+    frame collected with its session unpersists through a finalizer
+    that holds only its JVM handle (a frame holds its session
+    strongly)."""
     key = _emb_key(sf_dir)
     if key is None:  # not cached, so nothing could release a persisted frame
         return build()
     for old in session_evict(spark, cache, lambda k: k[0] == key[0] and k != key):
         old.unpersist()
-    return session_cached(spark, cache, key, lambda: build().persist())
+
+    def persisted() -> DataFrame:
+        df = build().persist()
+        weakref.finalize(df, _unpersist_later, df._jdf).atexit = False
+        return df
+
+    return session_cached(spark, cache, key, persisted)
+
+
+# one release at a time: uncaching the inverted lists re-caches the PQ
+# index built over them, and a concurrent uncache of that index could
+# land between the two steps and be undone
+_UNPERSIST_LOCK = threading.Lock()
+
+
+def _unpersist_later(jdf) -> None:
+    """Unpersist a collected frame's JVM Dataset on a new thread: a
+    finalizer runs inside whatever call triggered the collection, maybe
+    a py4j call on this thread's connection, which a nested call would
+    interleave with (py4j hands its own object releases to a worker
+    thread for the same reason)."""
+
+    def release() -> None:
+        with _UNPERSIST_LOCK:
+            jdf.unpersist(False)
+
+    threading.Thread(target=release, daemon=True).start()
 
 
 def _pq_codebooks_cached(

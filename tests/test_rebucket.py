@@ -145,3 +145,84 @@ def test_stream_rebucket_when_due(spark, tmp_path):
     run_once()
     got = sorted(r.doc_id for r in spark.read.parquet(acc).collect())
     assert 20 not in got and 1 in got
+
+
+def test_rebucket_resizes_at_the_dial_target(spark, tmp_path):
+    """ADVICE fix: the rewrite must satisfy the dial that requested it.
+    With target_rows_per_bucket=40, an index at 200 rows/bucket is due;
+    after rebucketing AT THAT TARGET the dial reads not-due — before the
+    fix the rewrite re-sized at the fixed 500-rows/bucket default and
+    the dial re-fired a full rewrite on every poll forever."""
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"d{i}w{j}" for j in range(30))) for i in range(100)], DSCHEMA
+    )
+    path = str(tmp_path / "bidx")
+    # 100 docs x 4 bands = 400 band rows over 2 buckets = 200 rows/bucket
+    ix.create_band_index(docs, path, n_buckets=2)
+    assert ix.rebucket_due(spark, path, target_rows_per_bucket=40)
+
+    meta = ix.rebucket_index(spark, path, target_rows_per_bucket=40)
+    assert meta["n_buckets"] >= 400 // 40  # sized to the caller's target
+    assert not ix.rebucket_due(spark, path, target_rows_per_bucket=40)
+    # serves unchanged by the layout rewrite
+    df, _ = ix.open_band_index(spark, path)
+    assert df.select("doc_id").distinct().count() == 100
+
+
+def test_rebucket_due_converges_when_layout_cannot_grow(spark, tmp_path):
+    """An IVF layout capped at nlist must NOT report rebucket-due on
+    occupancy alone — the rewrite would re-pick the same n_buckets and
+    a rebucket_when_due-style loop would re-run a full rewrite on every
+    poll forever (review finding).  The correct signal for that state
+    is the retrain dial, which grows nlist AND buckets."""
+    import random
+
+    rng = random.Random(13)
+    emb = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(60)], ESCHEMA
+    )
+    path = str(tmp_path / "ivf_cap")
+    meta = ix.create_ivf_index(emb, path, nlist=4)
+    assert meta["n_buckets"] == 4  # nlist-capped layout
+    live = ix.live_root(spark, path)
+    with open(f"{live}/{ix.ROWS_FILE}", "w") as f:
+        f.write("1000000")  # simulate heavy growth since bootstrap
+    # occupancy is massively over, but the rewrite cannot grow buckets
+    assert ix.rebucket_due(spark, path, target_rows_per_bucket=500) is False
+    assert ix.ivf_retrain_due(spark, path) is True  # the right dial fires
+
+
+def test_rewrites_keep_null_partition_rows(spark, tmp_path):
+    """compact_index and rebucket_index share one body that recomputes
+    ``pfx`` from each row.  Rows with a NULL key — corrupt embed
+    vectors, IVF vectors parked by an empty codebook — must stay in the
+    NULL partition, stay counted in ``rows``, and never be served."""
+    rng = random.Random(4)
+    good = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(30)]
+    corrupt = [(100, None), (101, [float("nan")] * 8), (102, [0.5] * 5)]
+    emb = spark.createDataFrame(good + corrupt, ESCHEMA)
+    epath, ipath = str(tmp_path / "eidx"), str(tmp_path / "ivf0")
+    ix.create_embedding_index(emb, epath, dims=8, n_planes=4, n_buckets=4)
+    ix.create_ivf_index(emb.limit(0), ipath, nlist=4)  # empty codebook
+    ix.append_ivf_vectors(emb.where("vec_id < 30"), ipath)  # parked
+    cases = [
+        (epath, ix.open_embedding_index, {100, 101, 102}, 33),
+        (ipath, ix.open_ivf_index, set(range(30)), 30),
+    ]
+    for rewrite in (ix.compact_index, lambda s, p: ix.rebucket_index(s, p, n_buckets=2)):
+        for path, open_index, parked, rows in cases:
+            rewrite(spark, path)
+            df, meta = open_index(spark, path)
+            null_ids = {r.vec_id for r in df.where(F.col("pfx").isNull()).collect()}
+            assert null_ids == parked
+            assert meta["rows"] == rows == df.count()
+
+    queries = emb.select(F.col("vec_id").alias("query_id"), "embedding")
+    assert ix.serve_ivf_topk(queries, ipath, k=3).isEmpty()
+    # copies of the corrupt residents match nothing; a copy of a good
+    # vector is still rejected against the rewritten index
+    inc = spark.createDataFrame(
+        [(200 + k, v) for k, (_, v) in enumerate(corrupt)] + [(300, good[0][1])], ESCHEMA
+    )
+    res = ix.serve_incremental_embed_near_dup(inc, epath, threshold=0.9, append=False)
+    assert sorted(r.vec_id for r in res.accepted.collect()) == [200, 201, 202]

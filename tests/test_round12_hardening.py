@@ -1,23 +1,15 @@
 """Round-12 hardening: the r11 verdict's latent-robustness nits and the
 r11 ADVICE items, each pinned by a test (the writer-lock ones live
-in test_writer_lock.py).
+in test_writer_lock.py, the rebucket ones in test_rebucket.py and
+the tombstone ones in test_tombstones.py).
 
-- the >``_TOMBSTONE_ISIN_MAX`` backlog switches NOT-isin → broadcast
-  anti-join with serve parity across the boundary;
 - ``pruned_read`` chunks its brace-glob past ``_PRUNED_GLOB_MAX``
   touched buckets, identical rows either side of the threshold;
-- ``rebucket_index`` re-sizes at the CALLER's target (ADVICE: the fixed
-  500-rows/bucket default left a smaller dial re-firing forever);
-- `_tombstone_list` survives a torn ``.tmp`` when the final name is
-  present, and raises (never silently under-reports) when both are
-  unreadable;
 - the old-Spark "Path does not exist" fallback actually fires (ADVICE:
   it matched the error-class NAME, which pre-class engines never emit).
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,65 +18,6 @@ from meta_morph_etl_databricks_spark.operators import index_store as ix
 
 DSCHEMA = "doc_id long, text string"
 ESCHEMA = "vec_id long, embedding array<double>"
-
-
-def _mk_band_index(spark, path, n_docs: int = 30):
-    rows = [(i, " ".join(f"d{i}w{j}" for j in range(30))) for i in range(n_docs)]
-    docs = spark.createDataFrame(rows, DSCHEMA)
-    ix.create_band_index(docs, path, n_buckets=8)
-    return docs
-
-
-# ------------------------------------------- tombstone isin/anti boundary
-def test_tombstone_isin_boundary_parity(spark, tmp_path):
-    """Crossing ``_TOMBSTONE_ISIN_MAX`` flips the serve-side hide from a
-    pushed-down NOT-isin filter to a broadcast anti-join; both must hide
-    exactly the same ids.  The backlog is driven ACROSS the real 1024
-    boundary (1020 → 1030 pending) and the serve result is pinned equal
-    to the isin path's (obtained by lifting the threshold)."""
-    import random
-
-    rng = random.Random(7)
-    emb = spark.createDataFrame(
-        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(60)], ESCHEMA
-    )
-    path = str(tmp_path / "ivf")
-    ix.create_ivf_index(emb, path, nlist=4)
-
-    # 1020 pending: isin side of the boundary
-    dead = [1, 2, 3] + list(range(10_000, 10_000 + 1017))  # 3 real, rest unknown
-    assert ix.tombstone_ids(spark, path, dead) == 1020
-    below, _ = ix.open_ivf_index(spark, path)
-    below_ids = {r.vec_id for r in below.select("vec_id").collect()}
-    assert below_ids == set(range(60)) - {1, 2, 3}
-
-    # +10 more crosses to the anti-join side
-    more = [4, 5] + list(range(20_000, 20_008))
-    assert ix.tombstone_ids(spark, path, more) == 10
-    assert len(ix._tombstone_list(spark, ix.live_root(spark, path))) == 1030
-    assert 1030 > ix._TOMBSTONE_ISIN_MAX
-    above, meta = ix.open_ivf_index(spark, path)
-    above_ids = {r.vec_id for r in above.select("vec_id").collect()}
-    assert above_ids == set(range(60)) - {1, 2, 3, 4, 5}
-
-    # parity: the same 1030-id backlog through the isin path
-    import meta_morph_etl_databricks_spark.operators.index_store as mod
-
-    old = mod._TOMBSTONE_ISIN_MAX
-    try:
-        mod._TOMBSTONE_ISIN_MAX = 4096
-        isin_df, _ = ix.open_ivf_index(spark, path)
-        assert {r.vec_id for r in isin_df.select("vec_id").collect()} == above_ids
-    finally:
-        mod._TOMBSTONE_ISIN_MAX = old
-
-    # the big backlog serves through a top-k too (anti-join in the plan)
-    q = spark.createDataFrame(
-        [(0, [rng.uniform(-1, 1) for _ in range(8)])], "query_id long, embedding array<double>"
-    )
-    got = ix.serve_ivf_topk(q, path, k=5)
-    assert got.count() == 5
-    assert {r.vec_id for r in got.collect()}.isdisjoint({1, 2, 3, 4, 5})
 
 
 # ------------------------------------------------- pruned_read chunking
@@ -149,30 +82,6 @@ def test_path_missing_error_matcher_old_spark_spellings():
     assert ix._is_path_missing_error(ClassedMissing("[PATH_NOT_FOUND] gone"))
 
 
-# -------------------------------------------------- rebucket target dial
-def test_rebucket_resizes_at_the_dial_target(spark, tmp_path):
-    """ADVICE fix: the rewrite must satisfy the dial that requested it.
-    With target_rows_per_bucket=40, an index at 200 rows/bucket is due;
-    after rebucketing AT THAT TARGET the dial reads not-due — before the
-    fix the rewrite re-sized at the fixed 500-rows/bucket default and
-    the dial re-fired a full rewrite on every poll forever."""
-    docs = spark.createDataFrame(
-        [(i, " ".join(f"d{i}w{j}" for j in range(30))) for i in range(100)], DSCHEMA
-    )
-    path = str(tmp_path / "bidx")
-    # 100 docs x 4 bands = 400 band rows over 2 buckets = 200 rows/bucket
-    ix.create_band_index(docs, path, n_buckets=2)
-    assert ix.rebucket_due(spark, path, target_rows_per_bucket=40)
-
-    meta = ix.rebucket_index(spark, path, target_rows_per_bucket=40)
-    assert meta["n_buckets"] >= 400 // 40  # sized to the caller's target
-    assert not ix.rebucket_due(spark, path, target_rows_per_bucket=40)
-    # serves unchanged by the layout rewrite
-    df, _ = ix.open_band_index(spark, path)
-    assert df.select("doc_id").distinct().count() == 100
-
-
-# -------------------------------------------------- torn-tmp tombstones
 # ------------------------------------------- module-review (r12) fixes
 def test_append_index_rows_bumps_sem_counter(spark, tmp_path):
     """The shared public append helper must feed the SEM kind's drift
@@ -264,37 +173,6 @@ def test_glob_metacharacter_roots_rejected(spark, tmp_path):
     ok = str(tmp_path / "plain")
     ix.create_band_index(docs, ok, n_buckets=4)
     assert ix.open_band_index(spark, ok)[0].count() > 0
-
-
-def test_rebucket_due_converges_when_layout_cannot_grow(spark, tmp_path):
-    """An IVF layout capped at nlist must NOT report rebucket-due on
-    occupancy alone — the rewrite would re-pick the same n_buckets and
-    a rebucket_when_due-style loop would re-run a full rewrite on every
-    poll forever (review finding).  The correct signal for that state
-    is the retrain dial, which grows nlist AND buckets."""
-    import random
-
-    rng = random.Random(13)
-    emb = spark.createDataFrame(
-        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(60)], ESCHEMA
-    )
-    path = str(tmp_path / "ivf_cap")
-    meta = ix.create_ivf_index(emb, path, nlist=4)
-    assert meta["n_buckets"] == 4  # nlist-capped layout
-    live = ix.live_root(spark, path)
-    with open(f"{live}/{ix.ROWS_FILE}", "w") as f:
-        f.write("1000000")  # simulate heavy growth since bootstrap
-    # occupancy is massively over, but the rewrite cannot grow buckets
-    assert ix.rebucket_due(spark, path, target_rows_per_bucket=500) is False
-    assert ix.ivf_retrain_due(spark, path) is True  # the right dial fires
-
-
-def test_tombstone_ids_return_dedupes_request(spark, tmp_path):
-    path = str(tmp_path / "bidx")
-    _mk_band_index(spark, path)
-    assert ix.tombstone_ids(spark, path, [5, 5, 6]) == 2  # not 3
-    assert ix.tombstone_ids(spark, path, [6, 7, 7]) == 1
-    assert ix.index_info(spark, path)["pending_tombstones"] == 3
 
 
 def test_interior_null_element_vectors_get_null_bucket(spark):
@@ -554,27 +432,3 @@ def test_semantic_dedup_raises_on_uniform_dims_mismatch(spark):
     assert got.count() == 2 and all(r.cluster is None for r in got.collect())
 
 
-def test_tombstone_list_survives_torn_tmp_when_final_present(spark, tmp_path):
-    path = str(tmp_path / "bidx")
-    _mk_band_index(spark, path)
-    ix.tombstone_ids(spark, path, [1, 2])
-    live = ix.live_root(spark, path)
-    # a crashed update's torn tmp next to a healthy final list
-    with open(f"{live}/{ix.TOMBSTONES_FILE}.tmp", "w") as f:
-        f.write("[1, 2, 3")  # torn mid-write
-    assert set(ix._tombstone_list(spark, live)) == {1, 2}
-
-
-def test_tombstone_list_refuses_persistently_torn_sidecar(spark, tmp_path):
-    """When the final name is ABSENT and the tmp fallback is torn past
-    the retry budget, the read must RAISE — returning [] would
-    transiently serve taken-down rows (the one illegal outcome)."""
-    path = str(tmp_path / "bidx")
-    _mk_band_index(spark, path)
-    ix.tombstone_ids(spark, path, [1, 2])
-    live = ix.live_root(spark, path)
-    os.unlink(f"{live}/{ix.TOMBSTONES_FILE}")
-    with open(f"{live}/{ix.TOMBSTONES_FILE}.tmp", "w") as f:
-        f.write("[1, 2, 3")  # torn, and no final to fall back to
-    with pytest.raises(IOError, match="takedown"):
-        ix._tombstone_list(spark, live)

@@ -70,6 +70,39 @@ def test_cache_entries_die_with_their_session(spark, sf_dir, cache, fill):
     assert ref() is None
 
 
+def test_persisted_similarity_frames_unpersist_with_their_session(spark, sf_dir):
+    """The inverted lists and PQ index a session persisted are
+    unpersisted once that session is collected: the registry frees the
+    Python frames with the session, but the JVM cache manager is shared
+    by every session and would keep their blocks for the life of the
+    application.  Checked per JVM handle, not by counting
+    ``getPersistentRDDs()``, which the ContextCleaner makes noisy; the
+    release runs on a worker thread, so it is polled for."""
+    import time
+
+    s2 = spark.newSession()
+    ml.q_similarity_ivf_topk(s2, sf_dir)
+    caches = s2.__dict__[_ATTR]
+    handles = [df._jdf for c in ("ivf_lists", "ivf_pq_index") for df in caches[c].values()]
+    assert len(handles) == 2
+
+    def cached(jdf):
+        level = jdf.storageLevel()
+        return level.useMemory() or level.useDisk()
+
+    assert all(cached(h) for h in handles)
+    ref = weakref.ref(s2)
+    del s2, caches
+    spark.newSession()
+    spark.createDataFrame([], "x int")
+    gc.collect()
+    assert ref() is None
+    deadline = time.time() + 30
+    while any(cached(h) for h in handles) and time.time() < deadline:
+        time.sleep(0.2)
+    assert not any(cached(h) for h in handles)
+
+
 def test_similarity_caches_follow_a_rewritten_embeddings_table(spark, sf_dir, tmp_path):
     """Rewriting ``embeddings.parquet`` must invalidate the cached IVF
     centroids, PQ codebook, inverted lists and PQ index like it

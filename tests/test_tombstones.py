@@ -411,3 +411,88 @@ def test_takedown_rewrite_heals_legacy_sidecar_junk(spark, tmp_path):
     )
     ix.clear_tombstones(spark, live, [5])
     assert [i for i in ix._tombstone_list(spark, live) if i != "junk"] == [2]
+
+
+def test_tombstone_isin_boundary_parity(spark, tmp_path):
+    """Crossing ``_TOMBSTONE_ISIN_MAX`` flips the serve-side hide from a
+    pushed-down NOT-isin filter to a broadcast anti-join; both must hide
+    exactly the same ids.  The backlog is driven ACROSS the real 1024
+    boundary (1020 → 1030 pending) and the serve result is pinned equal
+    to the isin path's (obtained by lifting the threshold)."""
+    import random
+
+    rng = random.Random(7)
+    emb = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(60)], ESCHEMA
+    )
+    path = str(tmp_path / "ivf")
+    ix.create_ivf_index(emb, path, nlist=4)
+
+    # 1020 pending: isin side of the boundary
+    dead = [1, 2, 3] + list(range(10_000, 10_000 + 1017))  # 3 real, rest unknown
+    assert ix.tombstone_ids(spark, path, dead) == 1020
+    below, _ = ix.open_ivf_index(spark, path)
+    below_ids = {r.vec_id for r in below.select("vec_id").collect()}
+    assert below_ids == set(range(60)) - {1, 2, 3}
+
+    # +10 more crosses to the anti-join side
+    more = [4, 5] + list(range(20_000, 20_008))
+    assert ix.tombstone_ids(spark, path, more) == 10
+    assert len(ix._tombstone_list(spark, ix.live_root(spark, path))) == 1030
+    assert 1030 > ix._TOMBSTONE_ISIN_MAX
+    above, meta = ix.open_ivf_index(spark, path)
+    above_ids = {r.vec_id for r in above.select("vec_id").collect()}
+    assert above_ids == set(range(60)) - {1, 2, 3, 4, 5}
+
+    # parity: the same 1030-id backlog through the isin path
+    import meta_morph_etl_databricks_spark.operators.index_store as mod
+
+    old = mod._TOMBSTONE_ISIN_MAX
+    try:
+        mod._TOMBSTONE_ISIN_MAX = 4096
+        isin_df, _ = ix.open_ivf_index(spark, path)
+        assert {r.vec_id for r in isin_df.select("vec_id").collect()} == above_ids
+    finally:
+        mod._TOMBSTONE_ISIN_MAX = old
+
+    # the big backlog serves through a top-k too (anti-join in the plan)
+    q = spark.createDataFrame(
+        [(0, [rng.uniform(-1, 1) for _ in range(8)])], "query_id long, embedding array<double>"
+    )
+    got = ix.serve_ivf_topk(q, path, k=5)
+    assert got.count() == 5
+    assert {r.vec_id for r in got.collect()}.isdisjoint({1, 2, 3, 4, 5})
+
+
+def test_tombstone_ids_return_dedupes_request(spark, tmp_path):
+    path = str(tmp_path / "bidx")
+    _mk_band_index(spark, path)
+    assert ix.tombstone_ids(spark, path, [5, 5, 6]) == 2  # not 3
+    assert ix.tombstone_ids(spark, path, [6, 7, 7]) == 1
+    assert ix.index_info(spark, path)["pending_tombstones"] == 3
+
+
+def test_tombstone_list_survives_torn_tmp_when_final_present(spark, tmp_path):
+    path = str(tmp_path / "bidx")
+    _mk_band_index(spark, path)
+    ix.tombstone_ids(spark, path, [1, 2])
+    live = ix.live_root(spark, path)
+    # a crashed update's torn tmp next to a healthy final list
+    with open(f"{live}/{ix.TOMBSTONES_FILE}.tmp", "w") as f:
+        f.write("[1, 2, 3")  # torn mid-write
+    assert set(ix._tombstone_list(spark, live)) == {1, 2}
+
+
+def test_tombstone_list_refuses_persistently_torn_sidecar(spark, tmp_path):
+    """When the final name is ABSENT and the tmp fallback is torn past
+    the retry budget, the read must RAISE — returning [] would
+    transiently serve taken-down rows (the one illegal outcome)."""
+    path = str(tmp_path / "bidx")
+    _mk_band_index(spark, path)
+    ix.tombstone_ids(spark, path, [1, 2])
+    live = ix.live_root(spark, path)
+    os.unlink(f"{live}/{ix.TOMBSTONES_FILE}")
+    with open(f"{live}/{ix.TOMBSTONES_FILE}.tmp", "w") as f:
+        f.write("[1, 2, 3")  # torn, and no final to fall back to
+    with pytest.raises(IOError, match="takedown"):
+        ix._tombstone_list(spark, live)

@@ -75,6 +75,46 @@ def test_second_writer_fails_fast_while_lock_held(spark, tmp_path):
     ix.compact_index(spark, path)
 
 
+def test_ivf_append_takes_the_writer_lock(spark, tmp_path, monkeypatch):
+    """IVF appends enter a live generation through the same locked
+    append as the dedup kinds: against a FOREIGN holder they fail
+    naming the escape hatch and append nothing, and once the slot is
+    free the ``_rows`` bump equals the vectors appended, on both
+    codecs.  The append polls the slot like every serve append; the
+    poll's sleep is stubbed so the refusal comes at once."""
+    import random
+    from types import SimpleNamespace
+
+    from meta_morph_etl_databricks_spark.sources.sinks import _hadoop_fs
+
+    rng = random.Random(3)
+    emb = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    inc = emb.where("vec_id >= 30")
+    path = str(tmp_path / "ivf")
+    ix.create_ivf_index(emb.where("vec_id < 30"), path, nlist=4)
+    fs, path_cls, _ = _hadoop_fs(spark, path)
+    assert fs.createNewFile(path_cls(_lock_file(path)))  # foreign holder
+    with monkeypatch.context() as m:
+        m.setattr(ix, "time", SimpleNamespace(sleep=lambda s: None, time=time.time))
+        try:
+            with pytest.raises(IOError, match="break_writer_lock"):
+                ix.append_ivf_vectors(inc, path)
+        finally:
+            fs.delete(path_cls(_lock_file(path)), False)
+    df, meta = ix.open_ivf_index(spark, path)
+    assert df.count() == 30 and meta["rows"] == 30
+
+    pq_path = str(tmp_path / "ivfpq")
+    ix.create_ivf_index(emb.where("vec_id < 30"), pq_path, nlist=4, codec="pq", ksub=4)
+    for p in (path, pq_path):
+        ix.append_ivf_vectors(inc, p)
+        df, meta = ix.open_ivf_index(spark, p)
+        assert meta["rows"] == 40 == df.count()
+
+
 def test_writer_lock_is_reentrant_per_thread(spark, tmp_path):
     """A batch body that holds the slot can call locked ops in-line
     (compact, tombstone) without deadlocking — re-entry is per thread,

@@ -247,7 +247,7 @@ def bench_incremental_partitioned(
         build_sec = round(time.time() - t0, 2)
         touched = (
             ix.minhash_band_index(increment)
-            .select(ix._band_pfx(meta["n_buckets"]).alias("p"))
+            .select(ix._kind_pfx(meta).alias("p"))
             .distinct()
             .count()
         )
