@@ -14,20 +14,6 @@ from pyspark.sql import functions as F
 from ..functions.scalars import null_safe_sum  # noqa: F401  (re-export)
 
 
-def conditional_count(cond: Column) -> Column:
-    """A4: ``sum(when(cond,1).otherwise(0))``
-    (m_customer_metrics_task.py:148-155).  count_if is the modern
-    spelling; identical semantics, still partial-aggregatable."""
-    return F.count_if(cond)
-
-
-def ratio_of_sums(numer: Column, denom: Column, scale: int = 2) -> Column:
-    """A6: weighted average as sum/sum, guarded against zero denominators
-    (m_product_performance_task.py:103-117)."""
-    s_num, s_den = F.sum(numer), F.sum(denom)
-    return F.when(s_den > 0, F.round(s_num / s_den, scale)).otherwise(F.lit(0.0))
-
-
 def argmax_per_group(df: DataFrame, keys: list[str], order_col: Column, payload: list[str]) -> DataFrame:
     """Skew-proof alternative to the window top-1 (C1): ``max_by`` packs
     the payload into a struct ordered by ``order_col`` and reduces with

@@ -584,18 +584,6 @@ def simhash_hamming_pairs(
     )
 
 
-def simhash_candidates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 16) -> DataFrame:
-    """Near-dup candidates: documents with identical SimHash codes
-    (hamming-0 buckets; :func:`simhash_hamming_pairs` bands the code
-    for hamming-k)."""
-    coded = simhash_codes(docs, text_col, id_col, bits)
-    a, b = coded.alias("a"), coded.alias("b")
-    return (
-        a.join(b, (F.col("a.simhash") == F.col("b.simhash")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"), F.col("a.simhash").alias("simhash"))
-    )
-
-
 # ------------------------------------------------------- decontamination
 def decontaminate(
     docs: DataFrame,

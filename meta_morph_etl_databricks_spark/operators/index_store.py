@@ -322,9 +322,10 @@ def writer_lock(
 
     Mechanics: the lock is an atomically-created marker file at
     ``<root>__writer_lock`` — a SIBLING of the index root, not inside
-    it, so the debris reaper never touches it (same placement as
-    ``merge_upsert``'s ``__lock``, sources/sinks.py).  The marker body records the op name
-    and acquire time for operators staring at a stuck slot.  Release is
+    it, so the debris reaper never touches it.  ``merge_upsert``
+    (sources/sinks.py) takes the same lock on its target around the
+    staged rename.  The marker body records the op name and acquire time
+    for operators staring at a stuck slot.  Release is
     in ``finally`` — an exception inside the op frees the slot (its
     half-built generation is debris the next writer's recovery reaps);
     only a hard process kill leaves the lock behind, and then the next

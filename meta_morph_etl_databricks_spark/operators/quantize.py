@@ -533,39 +533,6 @@ def pq_adc_topk(
     return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k).drop("rnk")
 
 
-def pq_cosine_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    m: int = 4,
-    ksub: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    exclude_self: bool = False,
-    codebooks: list[list[list[int]]] | None = None,
-) -> DataFrame:
-    """Quantize→train→encode→ADC convenience over float inputs.  For
-    repeated querying, persist ``pq_encode(quantize_int8(corpus))``
-    once and call :func:`pq_adc_topk` directly — encoding is the
-    expensive half and amortizes exactly like the IVF index build."""
-    codes = quantize_int8(embeddings, vec_col).select(id_col, "q_vec")
-    cb = codebooks if codebooks is not None else pq_codebooks_from_codes(
-        codes, m=m, ksub=ksub, id_col=id_col
-    )
-    encoded = pq_encode(codes, cb, id_col=id_col)
-    return pq_adc_topk(
-        encoded,
-        queries,
-        cb,
-        k=k,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-        exclude_self=exclude_self,
-    )
-
-
 def pq_topk_rerank(
     embeddings: DataFrame,
     queries: DataFrame,

@@ -26,7 +26,7 @@ domains) at sizes where exact distinct is the bottleneck.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -66,11 +66,6 @@ def merged_distinct(
     return merged.select(
         *(by or []), F.hll_sketch_estimate("_merged").alias(estimate_col)
     )
-
-
-def estimate_distinct(sketch: Column | str) -> Column:
-    """Point estimate from a stored sketch column."""
-    return F.hll_sketch_estimate(sketch)
 
 
 def heavy_hitters(

@@ -124,24 +124,6 @@ def lang_id(text: Column | str, markers: dict[str, list[str]] | None = None) -> 
     return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit(None).cast("string"))
 
 
-def quality_score(text: Column | str) -> Column:
-    """Heuristic document quality in [0, 1]: mean-word-length band,
-    punctuation ratio, and alpha ratio — the length/punct/stopword
-    family every pretraining pipeline runs (C4-style gating).  Exact
-    integer/decimal arithmetic so the score is engine-portable."""
-    c = F.col(text) if isinstance(text, str) else text
-    n_chars = F.length(c)
-    n_tok = token_count(c)
-    mean_word_len = F.when(n_tok > 0, n_chars.cast("double") / n_tok).otherwise(F.lit(0.0))
-    punct = F.length(F.regexp_replace(c, rf"[\w{WS_CLASS}]", ""))
-    punct_ratio = F.when(n_chars > 0, punct.cast("double") / n_chars).otherwise(F.lit(1.0))
-    alpha = F.length(F.regexp_replace(c, r"[^A-Za-z]", ""))
-    alpha_ratio = F.when(n_chars > 0, alpha.cast("double") / n_chars).otherwise(F.lit(0.0))
-    word_len_ok = F.when((mean_word_len >= 3) & (mean_word_len <= 12), F.lit(1.0)).otherwise(F.lit(0.0))
-    score = (word_len_ok + (1.0 - punct_ratio) + alpha_ratio) / 3.0
-    return F.round(score, 4)
-
-
 def fingerprint(text: Column | str, normalize: bool = True) -> Column:
     """Document fingerprint: xxhash64 over the normalized text
     (ASCII-lowercased — see :func:`ascii_lower` for why full Unicode
@@ -228,13 +210,6 @@ def profile_documents(
         quality.alias("quality"),
         fingerprint(text_col).alias("doc_fingerprint"),
     )
-
-
-def analyze_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass text profile: tokens, BPE-ish tokens, detected language,
-    quality score, fingerprint.  Delegates to the distributed
-    :func:`profile_documents` shape."""
-    return profile_documents(docs, text_col)
 
 
 def repetition_profile(

@@ -702,6 +702,18 @@ def _emb_key(sf_dir: str) -> tuple | None:
     return None if sig is None else (path, sig)
 
 
+# SparkContext attribute: (cache, embeddings key) → how many persisted
+# frames of it are live in any session of the context.  The sessions
+# share the context's cache manager, which matches cached data by plan,
+# so those frames share one cached copy, which only the last may release
+_LIVE_ATTR = "_graft_live_persisted_frames"
+# guards the live counts and serializes the releases: uncaching the
+# inverted lists re-caches the PQ index built over them, and a
+# concurrent uncache of that index could land between the two steps and
+# be undone
+_RELEASE_LOCK = threading.Lock()
+
+
 def _persisted_cached(
     spark: SparkSession, cache: str, sf_dir: str, build: Callable[[], DataFrame]
 ) -> DataFrame:
@@ -709,42 +721,49 @@ def _persisted_cached(
     embeddings version).  The JVM cache manager is shared by every
     session, so a dropped entry would otherwise keep its cached blocks
     for the life of the application: a new version of the table
-    supersedes the entries of older ones and unpersists them, and a
-    frame collected with its session unpersists through a finalizer
-    that holds only its JVM handle (a frame holds its session
-    strongly)."""
+    supersedes the entries of older ones and releases them, and a frame
+    collected with its session releases itself through a finalizer that
+    holds only its JVM handle (a frame holds its session strongly).  A
+    release unpersists only when no other session still holds a live
+    frame of the same entry."""
     key = _emb_key(sf_dir)
     if key is None:  # not cached, so nothing could release a persisted frame
         return build()
     for old in session_evict(spark, cache, lambda k: k[0] == key[0] and k != key):
-        old.unpersist()
+        detached = old._graft_release.detach()
+        if detached is not None:  # its finalizer has not released it yet
+            _release(*detached[2])
 
     def persisted() -> DataFrame:
-        df = build().persist()
-        weakref.finalize(df, _unpersist_later, df._jdf).atexit = False
+        live = spark.sparkContext.__dict__.setdefault(_LIVE_ATTR, {})
+        df, entry = build(), (cache, key)
+        with _RELEASE_LOCK:
+            df.persist()
+            live[entry] = live.get(entry, 0) + 1
+        df._graft_release = weakref.finalize(df, _release_later, df._jdf, live, entry)
+        df._graft_release.atexit = False
         return df
 
     return session_cached(spark, cache, key, persisted)
 
 
-# one release at a time: uncaching the inverted lists re-caches the PQ
-# index built over them, and a concurrent uncache of that index could
-# land between the two steps and be undone
-_UNPERSIST_LOCK = threading.Lock()
-
-
-def _unpersist_later(jdf) -> None:
-    """Unpersist a collected frame's JVM Dataset on a new thread: a
-    finalizer runs inside whatever call triggered the collection, maybe
-    a py4j call on this thread's connection, which a nested call would
-    interleave with (py4j hands its own object releases to a worker
-    thread for the same reason)."""
-
-    def release() -> None:
-        with _UNPERSIST_LOCK:
+def _release(jdf, live: dict, entry: tuple) -> None:
+    """Count one persisted frame of ``entry`` gone; the last one
+    unpersists the shared cached copy."""
+    with _RELEASE_LOCK:
+        live[entry] -= 1
+        if not live[entry]:
+            del live[entry]
             jdf.unpersist(False)
 
-    threading.Thread(target=release, daemon=True).start()
+
+def _release_later(jdf, live: dict, entry: tuple) -> None:
+    """:func:`_release` on a new thread: a finalizer runs inside
+    whatever call triggered the collection, maybe a py4j call on this
+    thread's connection, which a nested call would interleave with (py4j
+    hands its own object releases to a worker thread for the same
+    reason)."""
+    threading.Thread(target=_release, args=(jdf, live, entry), daemon=True).start()
 
 
 def _pq_codebooks_cached(

@@ -93,17 +93,11 @@ def _fan_out(spark: SparkSession, branches: list[Callable[[], Any]]) -> list[Any
     return [f.result() for f in futures]
 
 
-def _write_day_partition(df: DataFrame, path: str, day: str) -> DataFrame:
-    """Idempotent day write: dynamic partition overwrite replaces ONLY
-    this day's partition; other history days are untouched."""
-    stamped = df.withColumn("day_dt", F.to_date(F.lit(day)))
-    (
-        stamped.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day_dt")
-        .parquet(path)
-    )
-    return stamped
+def _write_day_partition(df: DataFrame, path: str, day: str) -> None:
+    """Idempotent day write: stamp ``day_dt`` and replace ONLY that
+    day's partition (write_parquet's dynamic partition overwrite); other
+    history days are untouched."""
+    write_parquet(df.withColumn("day_dt", F.to_date(F.lit(day))), path, partition_by=["day_dt"])
 
 
 def _ingest_table(spark: SparkSession, source_dir: str, base_dir: str, day: str, name: str) -> int:

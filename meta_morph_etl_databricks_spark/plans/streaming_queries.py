@@ -1,7 +1,7 @@
 """Declared queries for the streaming window layer — run in BATCH mode
 here so the DuckDB oracle can check the window semantics bit-for-bit;
 the identical builder functions run in streaming mode in
-tests/test_streaming.py (readStream → writeStream, watermark,
+tests/test_streaming.py (readStream → a streaming sink, watermark,
 applyInPandasWithState).
 
 Oracle shapes:

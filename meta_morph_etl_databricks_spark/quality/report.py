@@ -70,11 +70,3 @@ def render_report_html(report, *, limit: int = 15, title: str = "reconcile") -> 
         f"<html><head>{_STYLES}</head><body>"
         f"<h2>DATA RECONCILE Summary for {title}</h2>\n{body}</body></html>"
     )
-
-
-def write_report_html(report, path: str, *, limit: int = 15, title: str = "reconcile") -> str:
-    """Render and save to a local file; returns the HTML string."""
-    html = render_report_html(report, limit=limit, title=title)
-    with open(path, "w", encoding="utf-8") as f:
-        f.write(html)
-    return html

@@ -33,16 +33,6 @@ TESTDATA_TABLES = (
 )
 
 
-def _input_bytes(path: str) -> int | None:
-    """On-disk size of a parquet table (single file or a directory of
-    part files) — the scale signal for :func:`read_parquet_table`'s
-    adaptive split count.  Driver-side os.stat only; None when the path
-    is not a local file (remote filesystems size through Spark's own
-    listing instead — callers then fall back to the requested cap)."""
-    sig = _path_signature(path)
-    return sig[0] if sig is not None else None
-
-
 def _path_signature(path: str) -> tuple[int, int, int] | None:
     """(total bytes, max mtime_ns, file count) of a local table path —
     the freshness key of the relation cache below.  Any rewrite,

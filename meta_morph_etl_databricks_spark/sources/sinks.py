@@ -10,7 +10,6 @@ pruning instead of a full scan, and the ``legacy`` append-history layer
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,12 +24,17 @@ def write_parquet(
 ) -> None:
     """K2/K3: parquet write.  The reference hand-sizes output files with
     ``repartition(2)`` (utils.py:261); at scale we let AQE coalesce and
-    bound file size with maxRecordsPerFile instead of a fixed shuffle."""
+    bound file size with maxRecordsPerFile instead of a fixed shuffle.
+
+    With ``partition_by`` an overwrite is a DYNAMIC partition overwrite:
+    only the partitions the frame writes are replaced and every other
+    partition stays, so re-writing a day (a retry, a backfill) replaces
+    that day's slice instead of the table."""
     writer = df.write.mode(mode)
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
     if partition_by:
-        writer = writer.partitionBy(*partition_by)
+        writer = writer.option("partitionOverwriteMode", "dynamic").partitionBy(*partition_by)
     writer.parquet(path)
 
 
@@ -146,19 +150,23 @@ def merge_upsert(
     executor local disk with truncated lineage — an executor loss
     mid-overwrite lost the target unrecoverably.
 
-    Concurrency: SINGLE WRITER, enforced.  A ``{target}__lock`` marker is
-    created atomically (create-if-absent) before any read and removed on
-    exit.  With ``lock_retries=0`` (default) a second concurrent run
-    fails fast with ``IOError`` instead of interleaving renames; with
-    ``lock_retries=N`` the loser polls every
-    ``lock_retry_interval_sec`` up to N times and then proceeds against
-    the post-merge target — concurrent merges SERIALIZE (one wins, the
-    other retries), each re-reading the freshly installed target under
-    its own lock tenure.  A lock left by a hard-killed process must be
-    removed by the operator (the reference serializes merges through
-    Airflow + a Postgres transaction, utils.py:368-435; a transactional
-    table format — Delta/Iceberg MERGE INTO — is the swap-in when the
-    runtime has one).
+    Concurrency: SINGLE WRITER, enforced by the index store's
+    :func:`~..operators.index_store.writer_lock` (op name
+    ``merge_upsert``): its ``{target}__writer_lock`` marker is created
+    atomically before any read and removed on exit.  With
+    ``lock_retries=0`` (default) a second concurrent run fails fast with
+    an ``IOError`` naming :func:`~..operators.index_store.break_writer_lock`
+    instead of interleaving renames; with ``lock_retries=N`` the loser
+    polls every ``lock_retry_interval_sec`` up to N times and then
+    proceeds against the post-merge target — concurrent merges
+    SERIALIZE (one wins, the other retries), each re-reading the freshly
+    installed target under its own lock tenure.  A lock left by a
+    hard-killed process is removed with ``break_writer_lock`` once the
+    holder is confirmed dead; the marker's breadcrumb names the op and
+    its acquire time (the reference serializes merges through Airflow +
+    a Postgres transaction, utils.py:368-435; a transactional table
+    format — Delta/Iceberg MERGE INTO — is the swap-in when the runtime
+    has one).
 
     Scale note: the anti-join shuffles on the merge keys only; column
     payloads ride along.  The rewrite cost is the whole target — which is
@@ -169,26 +177,13 @@ def merge_upsert(
     before the lock is released — safe to consume after a later
     concurrent merge rewrites the path.  Call ``.unpersist()`` when done.
     """
+    from ..operators.index_store import writer_lock
+
     base = target_path.rstrip("/")
     staging_path, backup_path = f"{base}__staging", f"{base}__backup"
     fs, jvm_path, tgt = _hadoop_fs(spark, base)
     stg, bak = jvm_path(staging_path), jvm_path(backup_path)
-    lock = jvm_path(f"{base}__lock")
-
-    acquired = False
-    for attempt in range(lock_retries + 1):
-        if _try_acquire_lock(fs, lock):
-            acquired = True
-            break
-        if attempt < lock_retries:
-            time.sleep(lock_retry_interval_sec)
-    if not acquired:
-        raise IOError(
-            f"merge_upsert: {base}__lock exists — another merge is running "
-            "(or a previous run was hard-killed; remove the lock to proceed, "
-            "or pass lock_retries to wait for the holder)"
-        )
-    try:
+    with writer_lock(spark, base, "merge_upsert", lock_retries, lock_retry_interval_sec):
         # Recovery: a death between the two renames leaves target missing
         # and __backup holding the only copy — reinstall it first.
         if not fs.exists(tgt) and fs.exists(bak):
@@ -248,13 +243,12 @@ def merge_upsert(
         # class entirely, see merge_upsert_transactional.)
         result = spark.read.parquet(target_path).persist()
         result.count()
-    finally:
-        fs.delete(lock, False)
     return result
 
 
 def _try_acquire_lock(fs, lock) -> bool:
-    """Atomic create-if-absent of the ``__lock`` marker.
+    """Atomic create-if-absent of a lock marker (the
+    :func:`~..operators.index_store.writer_lock` primitive).
 
     Hadoop's ``FileSystem.createNewFile`` is exists-then-create — on the
     LOCAL filesystem that is a TOCTOU window in which two racing writers
@@ -391,12 +385,7 @@ def publish_partition(
                 out = zorder_frame(
                     slice_df, zorder_by, bits=zorder_bits, num_files=zorder_files
                 )
-            (
-                out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("day_dt")
-                .parquet(reporting_path)
-            )
+            write_parquet(out, reporting_path, partition_by=["day_dt"])
     finally:
         slice_df.unpersist()
     return n

@@ -10,7 +10,7 @@ data handling, and a custom stateful operator via
 Design rule: every window builder in :mod:`.windows` is written against
 the DataFrame API only, so the SAME function runs in batch mode (where
 the DuckDB oracle can check it) and in streaming mode (readStream →
-writeStream, exercised in tests/test_streaming.py).  That keeps the
+a streaming sink, exercised in tests/test_streaming.py).  That keeps the
 correctness surface SQL-checkable while the streaming plumbing stays
 real.
 """

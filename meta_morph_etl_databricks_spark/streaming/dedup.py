@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..operators import index_store as ix
+from .sinks import stream_foreach_batch_sink
 
 
 def dedup_stream(
@@ -99,12 +100,7 @@ def _index_sink(stream, index_path, checkpoint, trigger_available_now, kind, exp
                 ix._check_id_type(batch_df, meta, index_path)
             body(batch_df, batch_id, live, meta)
 
-    writer = stream.writeStream.foreachBatch(run_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return stream_foreach_batch_sink(stream, run_batch, checkpoint, trigger_available_now)
 
 
 def _maintain(spark, index_path, batch_id, compact_every, dial=None) -> None:

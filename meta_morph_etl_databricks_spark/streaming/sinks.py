@@ -19,7 +19,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.sinks import merge_upsert, path_exists
+from ..sources.sinks import merge_upsert, path_exists, write_parquet
 
 
 def stream_merge_upsert(
@@ -77,10 +77,7 @@ def stream_merge_upsert(
             return
         merge_upsert(batch_df.sparkSession, target_path, batch_df, keys).unpersist()
 
-    writer = stream.writeStream.foreachBatch(upsert).option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return stream_foreach_batch_sink(stream, upsert, checkpoint, trigger_available_now)
 
 
 def stream_foreach_batch_sink(
@@ -91,7 +88,9 @@ def stream_foreach_batch_sink(
 ):
     """Generic foreachBatch adapter: run any batch sink from the sink
     library per micro-batch under a checkpoint (the composition point
-    for dual_write / append_history / write_jdbc on a stream)."""
+    for dual_write / append_history / write_jdbc on a stream).  Every
+    foreachBatch sink of the package starts here; the default trigger
+    drains what is available and stops."""
     writer = stream.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint)
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
@@ -142,12 +141,7 @@ def update_sketch_table(
     merged = merged.localCheckpoint(eager=True)
     if not merged.take(1):
         return
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day")
-        .parquet(sketch_path)
-    )
+    write_parquet(merged, sketch_path, partition_by=["day"])
 
 
 def stream_sketch_distinct(
@@ -174,7 +168,4 @@ def stream_sketch_distinct(
             batch_df, sketch_path, key_col=key_col, time_col=time_col, lgk=lgk
         )
 
-    writer = stream.writeStream.foreachBatch(fold).option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return stream_foreach_batch_sink(stream, fold, checkpoint, trigger_available_now)

@@ -18,6 +18,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+ESCHEMA = "vec_id long, embedding array<double>"
+
 ROWS = [
     (0, None),
     (1, []),
@@ -93,3 +95,48 @@ def test_lsh_pairs_threshold_holds_under_nan(spark, adv_emb):
     # NaN >= 0.5 is true under Spark comparison semantics — the nanvl
     # containment is what keeps the corrupt pair out
     assert {(r["id_a"], r["id_b"]) for r in rows} == {(5, 6)}
+
+
+def test_quantize_contains_interior_null_and_denormal(spark):
+    """Interior-NULL elements join the corrupt class at the quantizer
+    ROOT (they previously coded non-NULL-with-a-NULL-element, seeding
+    int(None) codebook crashes and fabricated centroid-0 PQ codes), and
+    denormal-magnitude vectors take the zero-code arm instead of
+    overflowing the ANSI tinyint cast."""
+    from meta_morph_etl_databricks_spark.operators.quantize import quantize_int8
+
+    emb = spark.createDataFrame(
+        [
+            (0, [0.5, None, 1.0, 2.0]),        # interior NULL
+            (1, [1e-310, -1e-312, 0.0, 0.0]),  # denormal magnitudes
+            (2, [1.0, -2.0, 0.5, 0.25]),       # healthy
+            (3, None),                          # fully NULL
+        ],
+        ESCHEMA,
+    )
+    rows = {r.vec_id: (r.q_vec, r.q_scale) for r in quantize_int8(emb).collect()}
+    assert rows[0] == (None, None)            # contained at the root
+    assert rows[1] == ([0, 0, 0, 0], 1.0)     # zero at int8 resolution
+    assert rows[2][0] is not None and max(abs(v) for v in rows[2][0]) == 127
+    assert rows[3] == (None, None)
+
+
+def test_pq_paths_survive_stored_null_element_codes(spark):
+    """Pre-fix indexes can hold NULL-element int8 codes on disk: the
+    codebook trainer must skip them as seeds (int(None) killed the
+    driver) and pq_encode must emit NULL, not a fabricated centroid-0
+    code with a positive norm that outranks true neighbors."""
+    from meta_morph_etl_databricks_spark.operators.quantize import (
+        pq_codebooks_from_codes,
+        pq_encode,
+    )
+
+    codes = spark.createDataFrame(
+        [(0, [1, None, 3, 4]), (1, [1, 2, 3, 4]), (2, [5, 6, 7, 8])],
+        "vec_id long, q_vec array<tinyint>",
+    )
+    books = pq_codebooks_from_codes(codes, m=2, ksub=2)  # would crash before
+    assert len(books) == 2 and all(len(b) == 2 for b in books)
+    enc = {r.vec_id: (r.pq_code, r.pq_norm_sq) for r in pq_encode(codes, books).collect()}
+    assert enc[0] == (None, None)  # NULL, not centroid-0 fabrication
+    assert enc[1][0] is not None and enc[1][1] is not None

@@ -18,3 +18,44 @@ def test_anchor_sweep_is_clean():
         capture_output=True, text=True, timeout=300,
     )
     assert r.returncode == 0, r.stdout[-3000:] + r.stderr[-1000:]
+
+
+def test_every_top_level_definition_is_named_elsewhere():
+    """An undecorated top-level function or class of the package that
+    no code, test, tool or benchmark names outside its own ``def`` is
+    dead code.  Decorated definitions (the ``@register`` queries, the
+    ``@_locked_writer`` ops) are reached through their decorator and are
+    exempt."""
+    import ast
+    import re
+    from collections import Counter
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    package = repo / "meta_morph_etl_databricks_spark"
+    sources = [
+        *package.rglob("*.py"),
+        *(repo / "tests").rglob("*.py"),
+        *(repo / "tools").rglob("*.py"),
+        *(repo / "perfbench").rglob("*.py"),
+        repo / "bench.py",
+        repo / "__spark_entry__.py",
+    ]
+    words: Counter[str] = Counter()
+    for path in sources:
+        words.update(re.findall(r"\w+", path.read_text(encoding="utf-8")))
+
+    defined: Counter[str] = Counter()
+    undecorated: dict[str, str] = {}
+    for path in package.rglob("*.py"):
+        for node in ast.parse(path.read_text(encoding="utf-8")).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defined[node.name] += 1
+                if not node.decorator_list:
+                    undecorated[node.name] = f"{path.relative_to(repo)}:{node.lineno}"
+    unnamed = sorted(
+        f"{where} {name}"
+        for name, where in undecorated.items()
+        if words[name] <= defined[name]
+    )
+    assert unnamed == [], unnamed

@@ -1,7 +1,9 @@
 """Round-12 hardening: the r11 verdict's latent-robustness nits and the
 r11 ADVICE items, each pinned by a test (the writer-lock ones live
-in test_writer_lock.py, the rebucket ones in test_rebucket.py and
-the tombstone ones in test_tombstones.py).
+in test_writer_lock.py, the rebucket ones in test_rebucket.py, the
+tombstone ones in test_tombstones.py, the streaming-sink bootstrap one
+in test_streaming.py, the text ones in test_text_pii.py and the
+quantizer ones in test_adversarial_embeddings.py).
 
 - ``pruned_read`` chunks its brace-glob past ``_PRUNED_GLOB_MAX``
   touched buckets, identical rows either side of the threshold;
@@ -252,163 +254,7 @@ def test_stale_assigner_tree_raises_against_sidecar(spark, tmp_path):
     assert res.accepted.count() <= 10
 
 
-def test_sinks_do_not_bootstrap_from_empty_or_corrupt_batch(spark, tmp_path):
-    """Kafka-style latest-offsets init fires an empty batch 0: the band
-    and embed sinks previously pinned n_buckets (and under
-    center='auto' a zero center) from it FOREVER (review finding).
-    Now: empty batch → no index, retry; all-corrupt embed batch →
-    pass-through accepted, retry; first valid batch bootstraps."""
-    from meta_morph_etl_databricks_spark.streaming.dedup import (
-        stream_incremental_dedup,
-        stream_incremental_embed_near_dup,
-    )
-
-    # --- band sink: empty batch 0 must not init the index
-    bsrc = tmp_path / "bsrc"
-    bsrc.mkdir()
-    bidx = str(tmp_path / "bidx")
-    spark.createDataFrame([], DSCHEMA).write.parquet(str(bsrc / "b0"))
-    stream = spark.readStream.schema(DSCHEMA).parquet(str(bsrc) + "/*")
-    q = stream_incremental_dedup(
-        stream, bidx, str(tmp_path / "bacc"), str(tmp_path / "bckpt")
-    )
-    q.awaitTermination(120)
-    assert ix.live_index(spark, bidx)[1] is None  # no premature bootstrap
-    spark.createDataFrame(
-        [(i, " ".join(f"b{i}w{j}" for j in range(30))) for i in range(5)], DSCHEMA
-    ).write.parquet(str(bsrc / "b1"))
-    stream = spark.readStream.schema(DSCHEMA).parquet(str(bsrc) + "/*")
-    q = stream_incremental_dedup(
-        stream, bidx, str(tmp_path / "bacc"), str(tmp_path / "bckpt")
-    )
-    q.awaitTermination(120)
-    assert ix.live_index(spark, bidx)[1] is not None  # sized from real data
-    assert spark.read.parquet(str(tmp_path / "bacc")).count() == 5
-
-    # --- embed sink: empty then all-corrupt then valid
-    esrc = tmp_path / "esrc"
-    esrc.mkdir()
-    eidx = str(tmp_path / "eidx")
-    eacc, eckpt = str(tmp_path / "eacc"), str(tmp_path / "eckpt")
-    spark.createDataFrame([], ESCHEMA).write.parquet(str(esrc / "b0"))
-    stream = spark.readStream.schema(ESCHEMA).parquet(str(esrc) + "/*")
-    stream_incremental_embed_near_dup(stream, eidx, eacc, eckpt, dims=8).awaitTermination(120)
-    assert ix.live_index(spark, eidx)[1] is None
-
-    corrupt = [(0, None), (1, [float("nan")] * 8), (2, [1.0, 2.0])]
-    spark.createDataFrame(corrupt, ESCHEMA).write.parquet(str(esrc / "b1"))
-    stream = spark.readStream.schema(ESCHEMA).parquet(str(esrc) + "/*")
-    stream_incremental_embed_near_dup(stream, eidx, eacc, eckpt, dims=8).awaitTermination(120)
-    assert ix.live_index(spark, eidx)[1] is None  # still no index...
-    assert spark.read.parquet(eacc).count() == 3  # ...corrupt passed through
-
-    import random
-
-    rng = random.Random(31)
-    spark.createDataFrame(
-        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(10, 16)], ESCHEMA
-    ).write.parquet(str(esrc / "b2"))
-    stream = spark.readStream.schema(ESCHEMA).parquet(str(esrc) + "/*")
-    stream_incremental_embed_near_dup(stream, eidx, eacc, eckpt, dims=8).awaitTermination(180)
-    meta = ix.live_index(spark, eidx)[1]
-    assert meta is not None
-    assert any(abs(c) > 0 for c in meta["center"])  # centered on REAL data
-    assert spark.read.parquet(eacc).count() == 9
-
-
 # ------------------------------------- kernel-review (r12, third pass)
-def test_quantize_contains_interior_null_and_denormal(spark):
-    """Interior-NULL elements join the corrupt class at the quantizer
-    ROOT (they previously coded non-NULL-with-a-NULL-element, seeding
-    int(None) codebook crashes and fabricated centroid-0 PQ codes), and
-    denormal-magnitude vectors take the zero-code arm instead of
-    overflowing the ANSI tinyint cast."""
-    from meta_morph_etl_databricks_spark.operators.quantize import quantize_int8
-
-    emb = spark.createDataFrame(
-        [
-            (0, [0.5, None, 1.0, 2.0]),        # interior NULL
-            (1, [1e-310, -1e-312, 0.0, 0.0]),  # denormal magnitudes
-            (2, [1.0, -2.0, 0.5, 0.25]),       # healthy
-            (3, None),                          # fully NULL
-        ],
-        ESCHEMA,
-    )
-    rows = {r.vec_id: (r.q_vec, r.q_scale) for r in quantize_int8(emb).collect()}
-    assert rows[0] == (None, None)            # contained at the root
-    assert rows[1] == ([0, 0, 0, 0], 1.0)     # zero at int8 resolution
-    assert rows[2][0] is not None and max(abs(v) for v in rows[2][0]) == 127
-    assert rows[3] == (None, None)
-
-
-def test_pq_paths_survive_stored_null_element_codes(spark):
-    """Pre-fix indexes can hold NULL-element int8 codes on disk: the
-    codebook trainer must skip them as seeds (int(None) killed the
-    driver) and pq_encode must emit NULL, not a fabricated centroid-0
-    code with a positive norm that outranks true neighbors."""
-    from meta_morph_etl_databricks_spark.operators.quantize import (
-        pq_codebooks_from_codes,
-        pq_encode,
-    )
-
-    codes = spark.createDataFrame(
-        [(0, [1, None, 3, 4]), (1, [1, 2, 3, 4]), (2, [5, 6, 7, 8])],
-        "vec_id long, q_vec array<tinyint>",
-    )
-    books = pq_codebooks_from_codes(codes, m=2, ksub=2)  # would crash before
-    assert len(books) == 2 and all(len(b) == 2 for b in books)
-    enc = {r.vec_id: (r.pq_code, r.pq_norm_sq) for r in pq_encode(codes, books).collect()}
-    assert enc[0] == (None, None)  # NULL, not centroid-0 fabrication
-    assert enc[1][0] is not None and enc[1][1] is not None
-
-
-def test_lang_id_single_language_markers(spark):
-    from meta_morph_etl_databricks_spark.operators.text import (
-        lang_id,
-        profile_documents,
-    )
-
-    docs = spark.createDataFrame(
-        [(0, "the cat and the hat"), (1, "zzz qqq")], DSCHEMA
-    )
-    got = {
-        r.doc_id: r.lang
-        for r in docs.select(
-            "doc_id", lang_id("text", {"en": ["the", "and"]}).alias("lang")
-        ).collect()
-    }
-    assert got == {0: "en", 1: None}
-    prof = profile_documents(docs, markers={"en": ["the", "and"]})
-    langs = {r.doc_id: r.detected_lang for r in prof.collect()}
-    assert langs == {0: "en", 1: None}
-
-
-def test_pii_empty_kinds_and_token_invariant(spark):
-    from meta_morph_etl_databricks_spark.operators.text import pii_counts, redact_pii
-
-    docs = spark.createDataFrame([(0, "mail me: a@b.com")], DSCHEMA)
-    # explicit empty selection redacts/counts NOTHING (was: everything)
-    out = docs.select(redact_pii("text", kinds=[]).alias("t")).first()["t"]
-    assert out == "mail me: a@b.com"
-    assert docs.select(pii_counts("text", kinds=[]).alias("p")).first()["p"] == ()
-    # a token that itself renders PII-shaped is rejected at the boundary
-    with pytest.raises(ValueError, match="token"):
-        redact_pii("text", token="<{kind}#4111111111111111>")
-
-
-def test_profile_null_text_is_uniformly_zero(spark):
-    """NULL-text rows previously profiled INCONSISTENTLY (n_tokens 0
-    but n_bpe_tokens NULL, review finding).  The adversarial contract
-    pins profile metrics non-NULL/bounded (total downstream ordering),
-    so the row is now uniformly zeros."""
-    from meta_morph_etl_databricks_spark.operators.text import profile_documents
-
-    docs = spark.createDataFrame([(0, None), (1, "two words")], DSCHEMA)
-    rows = {r.doc_id: (r.n_tokens, r.n_bpe_tokens) for r in profile_documents(docs).collect()}
-    assert rows[0] == (0, 0)  # self-consistent, non-NULL
-    assert rows[1][0] == 2
-
-
 def test_semantic_dedup_raises_on_uniform_dims_mismatch(spark):
     """A 32-dim corpus under the default dims=64 previously no-op'd the
     whole dedup (every row excluded by the wrong-length guard, empty
@@ -430,5 +276,3 @@ def test_semantic_dedup_raises_on_uniform_dims_mismatch(spark):
     )
     got = semantic_dedup(corrupt, k=2)
     assert got.count() == 2 and all(r.cluster is None for r in got.collect())
-
-

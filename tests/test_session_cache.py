@@ -70,7 +70,31 @@ def test_cache_entries_die_with_their_session(spark, sf_dir, cache, fill):
     assert ref() is None
 
 
-def test_persisted_similarity_frames_unpersist_with_their_session(spark, sf_dir):
+def _private_embeddings(sf_dir, tmp_path) -> str:
+    """A copy of the embeddings table that no other session has cached:
+    the cached similarity frames of one table are shared by every
+    session that holds them, so a release is checked on a table only
+    the test's own sessions use."""
+    d = tmp_path / "sf"
+    d.mkdir()
+    shutil.copy(f"{sf_dir}/embeddings.parquet", d / "embeddings.parquet")
+    return str(d)
+
+
+def _cached(jdf) -> bool:
+    level = jdf.storageLevel()
+    return level.useMemory() or level.useDisk()
+
+
+def _collect(spark, ref) -> None:
+    """Collect the session behind ``ref`` once its last name is gone."""
+    spark.newSession()
+    spark.createDataFrame([], "x int")
+    gc.collect()
+    assert ref() is None
+
+
+def test_persisted_similarity_frames_unpersist_with_their_session(spark, sf_dir, tmp_path):
     """The inverted lists and PQ index a session persisted are
     unpersisted once that session is collected: the registry frees the
     Python frames with the session, but the JVM cache manager is shared
@@ -80,6 +104,7 @@ def test_persisted_similarity_frames_unpersist_with_their_session(spark, sf_dir)
     release runs on a worker thread, so it is polled for."""
     import time
 
+    sf_dir = _private_embeddings(sf_dir, tmp_path)
     s2 = spark.newSession()
     ml.q_similarity_ivf_topk(s2, sf_dir)
     caches = s2.__dict__[_ATTR]
@@ -101,6 +126,73 @@ def test_persisted_similarity_frames_unpersist_with_their_session(spark, sf_dir)
     while any(cached(h) for h in handles) and time.time() < deadline:
         time.sleep(0.2)
     assert not any(cached(h) for h in handles)
+
+
+def test_releasing_a_session_keeps_a_live_siblings_similarity_frames(
+    spark, sf_dir, tmp_path
+):
+    """Two sessions that ran the IVF query share one cached copy of the
+    inverted lists and PQ index, because the JVM cache manager matches
+    cached data by plan.  Collecting one session must leave the other's
+    frames cached; collecting the last one releases them."""
+    import threading
+    import time
+
+    sf_dir = _private_embeddings(sf_dir, tmp_path)
+    a, b = spark.newSession(), spark.newSession()
+    ml.q_similarity_ivf_topk(a, sf_dir)
+    ml.q_similarity_ivf_topk(b, sf_dir)
+    caches = a.__dict__[_ATTR]
+    handles = [df._jdf for c in ("ivf_lists", "ivf_pq_index") for df in caches[c].values()]
+    assert len(handles) == 2 and all(_cached(h) for h in handles)
+
+    before = set(threading.enumerate())
+    ref = weakref.ref(b)
+    del b
+    _collect(spark, ref)
+    for thread in set(threading.enumerate()) - before:  # the release threads
+        thread.join(timeout=30)
+    assert all(_cached(h) for h in handles)  # a's frames survive b's release
+
+    ref = weakref.ref(a)
+    del a, caches
+    _collect(spark, ref)
+    deadline = time.time() + 30
+    while any(_cached(h) for h in handles) and time.time() < deadline:
+        time.sleep(0.2)
+    assert not any(_cached(h) for h in handles)
+
+
+def test_concurrent_releases_unpersist_the_shared_copy_once():
+    """Releases of one entry race on its live count from more threads
+    than cores through a shortened switch interval: the shared cached
+    copy is unpersisted exactly once, by the last release."""
+    import sys
+    import threading
+
+    class Handle:
+        calls = 0
+
+        def unpersist(self, blocking):
+            self.calls += 1
+
+    handles = [Handle() for _ in range(64)]
+    live = {("c", "k"): len(handles)}
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=ml._release, args=(h, live, ("c", "k"))) for h in handles
+        ]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+        assert not any(th.is_alive() for th in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert live == {}
+    assert sum(h.calls for h in handles) == 1
 
 
 def test_similarity_caches_follow_a_rewritten_embeddings_table(spark, sf_dir, tmp_path):

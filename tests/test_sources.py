@@ -75,7 +75,7 @@ def test_merge_upsert_failed_write_preserves_target(spark, tmp_path):
         merge_upsert(spark, target_path, poisoned, keys=["k"])
     got = {(r.k, r.v) for r in spark.read.parquet(target_path).collect()}
     assert got == {(1, "a"), (2, "b")}  # old target survives the crash
-    assert not os.path.exists(f"{target_path}__lock")  # lock released on failure
+    assert not os.path.exists(f"{target_path}__writer_lock")  # lock released on failure
     # and a subsequent good merge cleans up the stale staging dir and lands
     source = spark.createDataFrame([(2, "B"), (3, "c")], ["k", "v"])
     merge_upsert(spark, target_path, source, keys=["k"])
@@ -111,7 +111,7 @@ def test_merge_upsert_recovers_backup_after_rename_crash(spark, tmp_path):
     got = {(r.k, r.v) for r in spark.read.parquet(target_path).collect()}
     assert got == {(1, "a"), (2, "B"), (3, "c")}  # row 1 survived via backup
     assert not os.path.exists(f"{target_path}__backup")
-    assert not os.path.exists(f"{target_path}__lock")
+    assert not os.path.exists(f"{target_path}__writer_lock")
 
 
 def test_merge_upsert_stale_backup_beside_live_target(spark, tmp_path):
@@ -169,13 +169,13 @@ def test_merge_upsert_concurrent_one_wins_one_retries(spark, tmp_path):
         snap = {(r.k, r.v) for r in handles[tag].collect()}
         assert src_rows <= snap, f"merge {tag}'s snapshot lost its own rows: {snap}"
         handles[tag].unpersist()
-    assert not os.path.exists(f"{target_path}__lock")
+    assert not os.path.exists(f"{target_path}__writer_lock")
     assert not os.path.exists(f"{target_path}__backup")
     # fail-fast default unchanged: with the lock held and no retries, raise
-    open(f"{target_path}__lock", "w").close()
+    open(f"{target_path}__writer_lock", "w").close()
     with pytest.raises(Exception, match="lock"):
         merge_upsert(spark, target_path, src_a, keys=["k"])
-    os.remove(f"{target_path}__lock")
+    os.remove(f"{target_path}__writer_lock")
 
 
 def test_merge_upsert_transactional_capability_gate(spark, tmp_path):
@@ -198,22 +198,63 @@ def test_merge_upsert_transactional_capability_gate(spark, tmp_path):
 
 
 def test_merge_upsert_lock_rejects_concurrent_run(spark, tmp_path):
-    """The __lock marker makes a second concurrent merge fail fast
+    """The __writer_lock marker makes a second concurrent merge fail fast
     instead of interleaving renames with the first."""
     target_path = str(tmp_path / "tgt")
     write_parquet(spark.createDataFrame([(1, "a")], ["k", "v"]), target_path)
-    open(f"{target_path}__lock", "w").close()  # another writer holds it
+    open(f"{target_path}__writer_lock", "w").close()  # another writer holds it
 
     source = spark.createDataFrame([(2, "b")], ["k", "v"])
     with pytest.raises(IOError, match="lock"):
         merge_upsert(spark, target_path, source, keys=["k"])
     # target untouched, lock NOT stolen
     assert spark.read.parquet(target_path).count() == 1
-    assert os.path.exists(f"{target_path}__lock")
-    os.remove(f"{target_path}__lock")
+    assert os.path.exists(f"{target_path}__writer_lock")
+    os.remove(f"{target_path}__writer_lock")
     merge_upsert(spark, target_path, source, keys=["k"])  # lock released → works
     assert spark.read.parquet(target_path).count() == 2
-    assert not os.path.exists(f"{target_path}__lock")
+    assert not os.path.exists(f"{target_path}__writer_lock")
+
+
+def test_merge_upsert_foreign_writer_lock_names_break_writer_lock(spark, tmp_path):
+    """A merge takes the index store's writer lock on its target: a
+    foreign marker (a hard-killed holder) fails the merge fast with the
+    recovery to run, leaves the target untouched, and after
+    break_writer_lock the merge lands."""
+    from meta_morph_etl_databricks_spark.operators.index_store import break_writer_lock
+
+    target_path = str(tmp_path / "tgt")
+    write_parquet(spark.createDataFrame([(1, "a")], ["k", "v"]), target_path)
+    open(f"{target_path}__writer_lock", "w").close()
+
+    source = spark.createDataFrame([(1, "A"), (2, "b")], ["k", "v"])
+    with pytest.raises(IOError, match="break_writer_lock"):
+        merge_upsert(spark, target_path, source, keys=["k"])
+    assert {(r.k, r.v) for r in spark.read.parquet(target_path).collect()} == {(1, "a")}
+    assert not os.path.exists(f"{target_path}__staging")
+
+    assert break_writer_lock(spark, target_path)
+    merge_upsert(spark, target_path, source, keys=["k"]).unpersist()
+    got = {(r.k, r.v) for r in spark.read.parquet(target_path).collect()}
+    assert got == {(1, "A"), (2, "b")}
+    assert not os.path.exists(f"{target_path}__writer_lock")
+
+
+def test_partitioned_write_parquet_replaces_only_its_partitions(spark, tmp_path):
+    """write_parquet with partition_by overwrites only the partitions
+    the frame writes: re-writing one day of a two-day table keeps the
+    other day."""
+    path = str(tmp_path / "t")
+    two_days = spark.createDataFrame(
+        [(1, "2024-01-01"), (2, "2024-01-01"), (3, "2024-01-02")], "id long, day_dt string"
+    ).withColumn("day_dt", F.to_date("day_dt"))
+    write_parquet(two_days, path, partition_by=["day_dt"])
+    redo = spark.createDataFrame([(9, "2024-01-02")], "id long, day_dt string").withColumn(
+        "day_dt", F.to_date("day_dt")
+    )
+    write_parquet(redo, path, partition_by=["day_dt"])
+    got = {(r.id, str(r.day_dt)) for r in spark.read.parquet(path).collect()}
+    assert got == {(1, "2024-01-01"), (2, "2024-01-01"), (9, "2024-01-02")}
 
 
 def test_publish_partition_prunes(spark, tmp_path):

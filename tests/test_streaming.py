@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from meta_morph_etl_databricks_spark.operators import index_store as ix
 from meta_morph_etl_databricks_spark.sources.scans import read_parquet_table
 from meta_morph_etl_databricks_spark.streaming import (
     read_events_stream,
@@ -20,6 +21,9 @@ from meta_morph_etl_databricks_spark.streaming import (
     tumbling_type_counts,
     with_watermark,
 )
+
+DSCHEMA = "doc_id long, text string"
+ESCHEMA = "vec_id long, embedding array<double>"
 
 
 @pytest.fixture()
@@ -643,3 +647,67 @@ def test_stream_sketch_distinct_incremental_and_idempotent(spark, tmp_path):
     assert {(r.day, r.approx_distinct) for r in before} == {
         (r.day, r.approx_distinct) for r in after
     }
+
+
+def test_sinks_do_not_bootstrap_from_empty_or_corrupt_batch(spark, tmp_path):
+    """Kafka-style latest-offsets init fires an empty batch 0: the band
+    and embed sinks previously pinned n_buckets (and under
+    center='auto' a zero center) from it FOREVER (review finding).
+    Now: empty batch → no index, retry; all-corrupt embed batch →
+    pass-through accepted, retry; first valid batch bootstraps."""
+    from meta_morph_etl_databricks_spark.streaming.dedup import (
+        stream_incremental_dedup,
+        stream_incremental_embed_near_dup,
+    )
+
+    # --- band sink: empty batch 0 must not init the index
+    bsrc = tmp_path / "bsrc"
+    bsrc.mkdir()
+    bidx = str(tmp_path / "bidx")
+    spark.createDataFrame([], DSCHEMA).write.parquet(str(bsrc / "b0"))
+    stream = spark.readStream.schema(DSCHEMA).parquet(str(bsrc) + "/*")
+    q = stream_incremental_dedup(
+        stream, bidx, str(tmp_path / "bacc"), str(tmp_path / "bckpt")
+    )
+    q.awaitTermination(120)
+    assert ix.live_index(spark, bidx)[1] is None  # no premature bootstrap
+    spark.createDataFrame(
+        [(i, " ".join(f"b{i}w{j}" for j in range(30))) for i in range(5)], DSCHEMA
+    ).write.parquet(str(bsrc / "b1"))
+    stream = spark.readStream.schema(DSCHEMA).parquet(str(bsrc) + "/*")
+    q = stream_incremental_dedup(
+        stream, bidx, str(tmp_path / "bacc"), str(tmp_path / "bckpt")
+    )
+    q.awaitTermination(120)
+    assert ix.live_index(spark, bidx)[1] is not None  # sized from real data
+    assert spark.read.parquet(str(tmp_path / "bacc")).count() == 5
+
+    # --- embed sink: empty then all-corrupt then valid
+    esrc = tmp_path / "esrc"
+    esrc.mkdir()
+    eidx = str(tmp_path / "eidx")
+    eacc, eckpt = str(tmp_path / "eacc"), str(tmp_path / "eckpt")
+    spark.createDataFrame([], ESCHEMA).write.parquet(str(esrc / "b0"))
+    stream = spark.readStream.schema(ESCHEMA).parquet(str(esrc) + "/*")
+    stream_incremental_embed_near_dup(stream, eidx, eacc, eckpt, dims=8).awaitTermination(120)
+    assert ix.live_index(spark, eidx)[1] is None
+
+    corrupt = [(0, None), (1, [float("nan")] * 8), (2, [1.0, 2.0])]
+    spark.createDataFrame(corrupt, ESCHEMA).write.parquet(str(esrc / "b1"))
+    stream = spark.readStream.schema(ESCHEMA).parquet(str(esrc) + "/*")
+    stream_incremental_embed_near_dup(stream, eidx, eacc, eckpt, dims=8).awaitTermination(120)
+    assert ix.live_index(spark, eidx)[1] is None  # still no index...
+    assert spark.read.parquet(eacc).count() == 3  # ...corrupt passed through
+
+    import random
+
+    rng = random.Random(31)
+    spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(10, 16)], ESCHEMA
+    ).write.parquet(str(esrc / "b2"))
+    stream = spark.readStream.schema(ESCHEMA).parquet(str(esrc) + "/*")
+    stream_incremental_embed_near_dup(stream, eidx, eacc, eckpt, dims=8).awaitTermination(180)
+    meta = ix.live_index(spark, eidx)[1]
+    assert meta is not None
+    assert any(abs(c) > 0 for c in meta["center"])  # centered on REAL data
+    assert spark.read.parquet(eacc).count() == 9

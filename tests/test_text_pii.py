@@ -24,6 +24,8 @@ from meta_morph_etl_databricks_spark.operators.text import (
     redact_pii,
 )
 
+DSCHEMA = "doc_id long, text string"
+
 FIXTURE = [
     (1, "contact bob.smith+spam@mail.example.co.uk or +14155550123 today"),
     (2, "server 10.0.255.7 and 192.168.1.1 rebooted; ticket 555-123-4567"),
@@ -165,3 +167,50 @@ def test_token_with_replacement_metacharacters(spark, docs):
         ).collect()
     }
     assert out[4] == "$0\\email$ wrote to $0\\email$ from 8.8.8.8"
+
+
+def test_lang_id_single_language_markers(spark):
+    from meta_morph_etl_databricks_spark.operators.text import (
+        lang_id,
+        profile_documents,
+    )
+
+    docs = spark.createDataFrame(
+        [(0, "the cat and the hat"), (1, "zzz qqq")], DSCHEMA
+    )
+    got = {
+        r.doc_id: r.lang
+        for r in docs.select(
+            "doc_id", lang_id("text", {"en": ["the", "and"]}).alias("lang")
+        ).collect()
+    }
+    assert got == {0: "en", 1: None}
+    prof = profile_documents(docs, markers={"en": ["the", "and"]})
+    langs = {r.doc_id: r.detected_lang for r in prof.collect()}
+    assert langs == {0: "en", 1: None}
+
+
+def test_pii_empty_kinds_and_token_invariant(spark):
+    from meta_morph_etl_databricks_spark.operators.text import pii_counts, redact_pii
+
+    docs = spark.createDataFrame([(0, "mail me: a@b.com")], DSCHEMA)
+    # explicit empty selection redacts/counts NOTHING (was: everything)
+    out = docs.select(redact_pii("text", kinds=[]).alias("t")).first()["t"]
+    assert out == "mail me: a@b.com"
+    assert docs.select(pii_counts("text", kinds=[]).alias("p")).first()["p"] == ()
+    # a token that itself renders PII-shaped is rejected at the boundary
+    with pytest.raises(ValueError, match="token"):
+        redact_pii("text", token="<{kind}#4111111111111111>")
+
+
+def test_profile_null_text_is_uniformly_zero(spark):
+    """NULL-text rows previously profiled INCONSISTENTLY (n_tokens 0
+    but n_bpe_tokens NULL, review finding).  The adversarial contract
+    pins profile metrics non-NULL/bounded (total downstream ordering),
+    so the row is now uniformly zeros."""
+    from meta_morph_etl_databricks_spark.operators.text import profile_documents
+
+    docs = spark.createDataFrame([(0, None), (1, "two words")], DSCHEMA)
+    rows = {r.doc_id: (r.n_tokens, r.n_bpe_tokens) for r in profile_documents(docs).collect()}
+    assert rows[0] == (0, 0)  # self-consistent, non-NULL
+    assert rows[1][0] == 2
